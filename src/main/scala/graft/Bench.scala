@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: wall-clock per declared query on SPARK_GRAFT_SF_DIR.
   * A throwing query records -1.0 (never a fake elapsed time — VERDICT r1
@@ -50,91 +50,73 @@ object Bench {
       detailPath.replaceFirst("bench_detail(?=[^/]*$)", "bench_line")
     else detailPath + ".line"
 
-  /** Key selection shared by main() and ScaleGuardSpec: apply the ONLY
-    * include filter, then the EXCLUDE set. Unknown names in EITHER fail
-    * loudly — a typo that silently benched zero keys (or silently failed
-    * to exclude the exactness-tier diagnostic) would exit 0. */
+  /** Key selection shared by Bench, Verify and Diag: apply the include
+    * filter, then the exclude set. Unknown names in EITHER fail loudly —
+    * a typo that silently benched zero keys (or silently failed to
+    * exclude the exactness-tier diagnostic) would exit 0. */
   def selectKeys(all: Set[String], only: Option[Set[String]],
       exclude: Set[String]): Set[String] = {
     only.foreach { o =>
       val unknown = o -- all
       require(unknown.isEmpty,
-        s"GRAFT_BENCH_ONLY names unknown keys: ${unknown.mkString(", ")}")
+        s"key filter names unknown keys: ${unknown.mkString(", ")}")
     }
     val unknownEx = exclude -- all
     require(unknownEx.isEmpty,
-      s"GRAFT_BENCH_EXCLUDE names unknown keys: ${unknownEx.mkString(", ")}")
+      s"exclude list names unknown keys: ${unknownEx.mkString(", ")}")
     val selected = all.filter(n => only.forall(_.contains(n)) && !exclude(n))
-    // ONLY ∩ EXCLUDE can legally empty the selection with both sets valid
-    // (ADVICE r15) — a zero-key bench exiting 0 with a near-empty detail
-    // file contradicts the fail-loudly contract above.
-    require(selected.nonEmpty,
-      "GRAFT_BENCH_ONLY/GRAFT_BENCH_EXCLUDE select zero keys")
+    // ONLY ∩ EXCLUDE can legally empty the selection with both sets
+    // valid — a zero-key run exiting 0 with a near-empty artifact
+    // contradicts the fail-loudly contract above.
+    require(selected.nonEmpty, "key filter and exclude list select zero keys")
     selected
+  }
+
+  /** The warm-up Bench and Diag share, outside any timed region.
+    *
+    * First every key's codegen/JIT warms at the smallest SF: first-touch
+    * codegen costs seconds for the lambda-heavy queries and would
+    * otherwise be billed to whichever SF runs first.
+    *
+    * Then the train-once memos (BPE merges, PQ codebooks, coarse
+    * k-means) pre-warm at `sfDir`: training runs
+    * eagerly while the query DataFrame is being CONSTRUCTED, so building
+    * each query once here pays every cache miss outside the timed
+    * samples — the production train-once/search-many steady state. The
+    * timed region then measures search, and Bench's per-key train_sec
+    * proves the residual is ~0. Construction only (no execute):
+    * untrained keys just build a logical plan here.
+    *
+    * Returns the pre-warm's wall seconds, its training seconds and the
+    * per-phase training split (cumulative TrainClock counters diffed
+    * over the pre-warm window; phases under 0.5 ms dropped). */
+  def warm(spark: SparkSession,
+      keys: Seq[(String, (SparkSession, String) => DataFrame)],
+      sfDir: String): (Double, Double, Map[String, Double]) = {
+    val warmDir = "/root/testdata/sf0.001"
+    keys.foreach { case (_, fn) =>
+      try { fn(spark, warmDir).queryExecution.toRdd.count() }
+      catch { case _: Throwable => () }
+    }
+    val twarm0 = System.nanoTime()
+    val trainNanos0 = operators.PipelineOps.TrainClock.nanos
+    val trainPhases0 = operators.PipelineOps.TrainClock.phaseNanos
+    keys.foreach { case (_, fn) =>
+      try { fn(spark, sfDir) } catch { case _: Throwable => () }
+    }
+    val trainWarmSec = (System.nanoTime() - twarm0) / 1e9
+    val trainWarmTrainSec =
+      (operators.PipelineOps.TrainClock.nanos - trainNanos0) / 1e9
+    val trainWarmPhases = operators.PipelineOps.TrainClock.phaseNanos
+      .map { case (k, n) => k -> (n - trainPhases0.getOrElse(k, 0L)) / 1e9 }
+      .filter(_._2 > 0.0005)
+    (trainWarmSec, trainWarmTrainSec, trainWarmPhases)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // HotSpot never JIT-compiles methods over 8000 bytecode bytes
-      // (DontCompileHugeMethods), while Spark's default fallback only
-      // trips at 65535 — stages whose generated whole-stage method lands
-      // in between run as INTERPRETED BYTECODE: vec_ann_ivfpq's fused
-      // candidate-scoring stage cost 30 s at 100x grown vs 2.8 s with
-      // the fallback aligned to the JIT's real limit (r14 task 7
-      // bisection). 8000 makes Spark fall back to per-operator execution
-      // exactly where the JIT would refuse anyway — strictly
-      // faster-or-neutral, results unchanged (execution strategy only).
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      // Reduce-side parallelism must scale with DATA, not stay pinned at
-      // the core count: with AQE on, every shuffle starts at
-      // initialPartitionNum partitions and coalesces down to the advisory
-      // size from map output stats, so fixture-SF runs keep the same
-      // effective task counts as shuffle.partitions=cpus while a 10×+
-      // sweep gets enough reducers that per-task sort/agg memory stays
-      // bounded (the 10× sweep's text_ngram_jaccard 133 MB sort spill
-      // disappears). r16 (VERDICT r15 task 3): the ceiling is now DERIVED
-      // from the input parquet footprint / advisory (floor 8×cpus keeps
-      // every fixture-SF plan identical; cap 4096) instead of a fixed
-      // 8×cpus, which would have re-bound per-reducer bytes to data above
-      // ~1000× — see Sessions.initialPartitions.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Sessions.initialPartitions(sfDir, cpus.toInt,
-          sys.env.getOrElse("GRAFT_ADVISORY_MB", "16").toLong << 20).toString)
-      // AQE coalesces to this much COMPRESSED shuffle per reducer, but
-      // the reduce-side SORT holds 4-10x that in unsafe-row form
-      // (compressible wide rows like events props inflate most): at the
-      // default 64 MB the 300x grown probe coalesced the SMJ/as-of
-      // exchanges to 37 reducers whose in-memory sort footprint
-      // (~330-440 MB/task) exceeded the CONTENDED per-task share of
-      // unified memory — 19.2 GB pool / 32 active tasks fair-floors at
-      // ~300 MB — and join_sort_merge/join_asof paid the first sort
-      // spills since r10 (1.5 GB + 5.5 GB disk; results stayed exact —
-      // out-of-core sort degrades, never corrupts). 16 MB keeps the
-      // worst measured inflation under the contention floor through
-      // >=300x (re-measured: both keys spill-free, join_asof 26->17 s),
-      // and models a real cluster's per-slot memory better than the
-      // default sized for beefier executors. Fixture-SF plans are
-      // unchanged (their shuffles coalesce to 1-2 partitions either
-      // way). Above ~1000x the initialPartitionNum cap (8x cpus) binds
-      // before this does — raise both together on a real cluster.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("GRAFT_ADVISORY_MB", "16") + "m")
-      // Storage-pool floor 0.25 (r15): the probe bench runs 14 keys in one
-      // session; earlier keys' not-yet-GC'd broadcasts sit in the storage
-      // pool, and the default storageFraction=0.5 protects up to half of
-      // unified memory from execution eviction — join_asof's 300x sort
-      // spilled in-suite (1.1 GB) while running spill-free solo. 0.25
-      // caps the unevictable litter; broadcasts evict to disk harmlessly.
-      .config("spark.memory.storageFraction", "0.25")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Sessions.quietBenignWarnings()
+    val spark = Sessions.create(sfDir, cpus.toInt)
     // Native functions + rewrites active from the first warmup plan, so
     // every timed query runs the same plan it ran during warmup.
     plans.GraftFunctions.register(spark)
@@ -158,35 +140,8 @@ object Bench {
     val selected = selectKeys(SparkEntry.queries.keySet, only, exclude)
     val keys = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => selected(n) }
-    // Warm every selected query's codegen/JIT at the smallest SF outside
-    // the timed region: first-touch codegen costs seconds for the
-    // lambda-heavy queries and would otherwise be billed to whichever SF
-    // runs first.
-    val warmDir = "/root/testdata/sf0.001"
-    keys.foreach { case (_, fn) =>
-      try { fn(spark, warmDir).queryExecution.toRdd.count() }
-      catch { case _: Throwable => () }
-    }
-    // Pre-warm the train-once memos (BPE merges, PQ codebooks, coarse
-    // k-means) at the BENCH SF before the timed region (VERDICT r9 task
-    // 3): training runs eagerly while the query DataFrame is being
-    // CONSTRUCTED, so building each query once here pays every cache
-    // miss outside the timed samples — the production train-once/
-    // search-many steady state. The timed region then measures search,
-    // and per-key train_sec below proves the residual is ~0. Construction
-    // only (no execute): untrained keys just build a logical plan here.
-    val twarm0 = System.nanoTime()
-    val trainNanos0 = operators.PipelineOps.TrainClock.nanos
-    val trainPhases0 = operators.PipelineOps.TrainClock.phaseNanos
-    keys.foreach { case (_, fn) =>
-      try { fn(spark, sfDir) } catch { case _: Throwable => () }
-    }
-    val trainWarmSec = (System.nanoTime() - twarm0) / 1e9
-    val trainWarmTrainSec =
-      (operators.PipelineOps.TrainClock.nanos - trainNanos0) / 1e9
-    val trainWarmPhases = operators.PipelineOps.TrainClock.phaseNanos
-      .map { case (k, n) => k -> (n - trainPhases0.getOrElse(k, 0L)) / 1e9 }
-      .filter(_._2 > 0.0005)
+    val (trainWarmSec, trainWarmTrainSec, trainWarmPhases) =
+      warm(spark, keys, sfDir)
     // Per-query shuffle/spill accounting (written to bench_detail.json,
     // NOT the driver's stdout line): the scale story is shuffle bytes as
     // much as seconds.
@@ -207,20 +162,6 @@ object Bench {
         (shuffleWrite.get, shuffleRead.get, spilled.get)
     }
     spark.sparkContext.addSparkListener(metrics)
-    // Drain the listener bus before sampling counters so one query's bytes
-    // never bleed into the next entry. LiveListenerBus#waitUntilEmpty is
-    // private[spark] — reached reflectively; if the internal API moves, the
-    // fixed-sleep fallback makes attribution approximate (ADVICE r2).
-    def drainListeners(): Unit =
-      try {
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch {
-        // NonFatal only: an OOM or interrupt must surface, not degrade to
-        // a silent sleep (ADVICE r3)
-        case scala.util.control.NonFatal(_) => Thread.sleep(150)
-      }
     // Each query runs RUNS times and reports the MEDIAN (min/max recorded
     // in bench_detail.json): single-run numbers on this box swing up to
     // 5x per query (VERDICT r3 task 5), which made round-over-round
@@ -274,7 +215,7 @@ object Bench {
       // vec_ann_ivfpq pay 9.5 s suite-context vs 1.7 s isolated — every
       // new broadcast put had to disk-evict dead blocks first.
       Sessions.releaseKeyState(spark)
-      drainListeners()
+      Sessions.drainListeners(spark)
       val before = metrics.snapshot()
       val trainBefore = operators.PipelineOps.TrainClock.nanos
       // Plan vs exec split (VERDICT r6 task 8): toRdd pays analysis +
@@ -294,7 +235,7 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           false }
       val t2 = System.nanoTime()
-      drainListeners()
+      Sessions.drainListeners(spark)
       val after = metrics.snapshot()
       (if (ok) (t2 - t0) / 1e9 else -1.0,
         (after._1 - before._1, after._2 - before._2,

@@ -1,12 +1,104 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Session sizing + inter-key hygiene shared by the three mains
-  * (Bench / Verify / Explain). Each main keeps its own builder — the
-  * per-conf rationale comments at those sites are load-bearing — but the
-  * two DATA-dependent pieces live here so they can be spec-pinned once.
+/** The one session factory plus inter-key hygiene. Bench, Verify, Diag
+  * and the test suites all build their session through [[create]], so
+  * the load-bearing confs (and their rationale) live once, in [[confs]];
+  * the DATA-dependent sizing is factored out so specs can pin it.
   */
 object Sessions {
+  /** AQE advisory reducer size (see [[confs]]). */
+  private val AdvisoryMb = 16
+
+  /** Every conf a graft session runs with, for `cpus` local cores on the
+    * data under `sfDir`. */
+  def confs(sfDir: String, cpus: Int): Seq[(String, String)] = Seq(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    // HotSpot never JIT-compiles methods over 8000 bytecode bytes
+    // (DontCompileHugeMethods), while Spark's default fallback only
+    // trips at 65535 — stages whose generated whole-stage method lands
+    // in between run as INTERPRETED BYTECODE: vec_ann_ivfpq's fused
+    // candidate-scoring stage cost 30 s at 100x grown vs 2.8 s with
+    // the fallback aligned to the JIT's real limit (bisected). 8000
+    // makes Spark fall back to per-operator execution
+    // exactly where the JIT would refuse anyway — strictly
+    // faster-or-neutral, results unchanged (execution strategy only).
+    "spark.sql.codegen.hugeMethodLimit" -> "8000",
+    // Reduce-side parallelism must scale with DATA, not stay pinned at
+    // the core count: with AQE on, every shuffle starts at
+    // initialPartitionNum partitions and coalesces down to the advisory
+    // size from map output stats, so fixture-SF runs keep the same
+    // effective task counts as shuffle.partitions=cpus while a 10×+
+    // sweep gets enough reducers that per-task sort/agg memory stays
+    // bounded (the 10× sweep's text_ngram_jaccard 133 MB sort spill
+    // disappears). The ceiling is DERIVED from the input parquet
+    // footprint / advisory (floor 8×cpus keeps every fixture-SF plan
+    // identical; cap 4096): a fixed 8×cpus would re-bind per-reducer
+    // bytes to data above ~1000× — see [[initialPartitions]].
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+      initialPartitions(sfDir, cpus, AdvisoryMb.toLong << 20).toString,
+    // AQE coalesces to this much COMPRESSED shuffle per reducer, but
+    // the reduce-side SORT holds 4-10x that in unsafe-row form
+    // (compressible wide rows like events props inflate most): at the
+    // default 64 MB the 300x grown probe coalesced the SMJ/as-of
+    // exchanges to 37 reducers whose in-memory sort footprint
+    // (~330-440 MB/task) exceeded the CONTENDED per-task share of
+    // unified memory — 19.2 GB pool / 32 active tasks fair-floors at
+    // ~300 MB — and join_sort_merge/join_asof paid the first sort
+    // spills (1.5 GB + 5.5 GB disk; results stayed exact —
+    // out-of-core sort degrades, never corrupts). 16 MB keeps the
+    // worst measured inflation under the contention floor through
+    // >=300x (re-measured: both keys spill-free, join_asof 26->17 s),
+    // and models a real cluster's per-slot memory better than the
+    // default sized for beefier executors. Fixture-SF plans are
+    // unchanged (their shuffles coalesce to 1-2 partitions either
+    // way). Past the initialPartitionNum cap (4096) this no longer
+    // binds — raise both together on a real cluster.
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> s"${AdvisoryMb}m",
+    // Storage-pool floor 0.25: the probe bench runs 14 keys in one
+    // session; earlier keys' not-yet-GC'd broadcasts sit in the storage
+    // pool, and the default storageFraction=0.5 protects up to half of
+    // unified memory from execution eviction — join_asof's 300x sort
+    // spilled in-suite (1.1 GB) while running spill-free solo. 0.25
+    // caps the unevictable litter; broadcasts evict to disk harmlessly.
+    "spark.memory.storageFraction" -> "0.25",
+    // events.ts physical-type handling (µs timestamp vs legacy INT64
+    // nanos) lives in Tables.events, which branches on the resolved
+    // schema — no session-wide legacy conf needed here.
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false")
+
+  /** Build (or join — `getOrCreate` keeps an already-running session)
+    * the session with [[confs]], at WARN with the benign warnings
+    * quieted. Native functions are NOT registered here: each main does
+    * that itself, and the test suites register per spec. */
+  def create(sfDir: String, cpus: Int): SparkSession = {
+    val spark = confs(sfDir, cpus)
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    quietBenignWarnings()
+    spark
+  }
+
+  /** Drain the listener bus so every event of the work before the call
+    * has been delivered — counters sampled after it never miss a late
+    * stage or bleed one query's bytes into the next. LiveListenerBus
+    * #waitUntilEmpty is private[spark] — reached reflectively; if the
+    * internal API moves, the fixed-sleep fallback makes attribution
+    * approximate. */
+  def drainListeners(spark: SparkSession): Unit =
+    try {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    } catch {
+      // NonFatal only: an OOM or interrupt must surface, not degrade to
+      // a silent sleep
+      case scala.util.control.NonFatal(_) => Thread.sleep(150)
+    }
+
   /** Data-driven AQE start parallelism (r16, VERDICT r15 task 3).
     *
     * AQE coalesces every shuffle DOWN from
@@ -50,6 +142,25 @@ object Sessions {
     } else if (f.getName.endsWith(".parquet")) f.length
     else 0L
 
+  /** Silence two benign-but-flooding executor warnings: every audited
+    * unpartitioned window in the registry sits on a domain-bounded
+    * post-aggregate (PlanSpec's single-partition sweep is the
+    * structural guarantee), yet WindowExec warns per plan —
+    * hundreds of lines per Verify/test run that bury real warnings; the
+    * DistRank localCheckpoint unpersist warning is likewise by-design
+    * (each key rebuilds its own blocks). Log level only — no behavior
+    * change. Called by [[create]] after setLogLevel. */
+  def quietBenignWarnings(): Unit =
+    try {
+      org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.window.WindowExec",
+        org.apache.logging.log4j.Level.ERROR)
+      org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.rdd.MapPartitionsRDD",
+        org.apache.logging.log4j.Level.ERROR)
+    } catch { case scala.util.control.NonFatal(_) => () }
+
+
   /** Inter-key executor-state hygiene (r16, VERDICT r15 task 2).
     *
     * A 187-key suite leaves two kinds of litter in the block manager
@@ -72,26 +183,8 @@ object Sessions {
     *    accumulates enough to matter (anchor timings stay untouched).
     *
     * Runs OUTSIDE every timed region (Bench calls it before each
-    * sample's t0; Verify between key writes).
+    * sample's t0, Diag before each run; Verify between key writes).
     */
-  /** Silence two benign-but-flooding executor warnings (r17, VERDICT r16
-    * noise item): every audited unpartitioned window in the registry sits
-    * on a domain-bounded post-aggregate (PlanSpec's single-partition
-    * sweep is the structural guarantee), yet WindowExec warns per plan —
-    * hundreds of lines per Verify/test run that bury real warnings; the
-    * DistRank localCheckpoint unpersist warning is likewise by-design
-    * (each key rebuilds its own blocks). Log level only — no behavior
-    * change. Called by the mains after setLogLevel. */
-  def quietBenignWarnings(): Unit =
-    try {
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.execution.window.WindowExec",
-        org.apache.logging.log4j.Level.ERROR)
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.rdd.MapPartitionsRDD",
-        org.apache.logging.log4j.Level.ERROR)
-    } catch { case scala.util.control.NonFatal(_) => () }
-
   def releaseKeyState(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))

@@ -262,6 +262,19 @@ object Det {
   def dsumSnap(c: Column, scale: Int = 2): Column =
     sum(c.cast(DecimalType(28, scale))).cast("double")
 
+  /** Driver-side twin of [[dsumSnap]]'s per-row snap, for iterations
+    * that run on collected domain-sized data (graph_pagerank): the value
+    * Spark's cast(x AS DECIMAL(28, scale)) yields. Both routes take the
+    * double's shortest repr (Double.toString) and round it HALF_UP
+    * (away from zero on ties) to `scale`; a result past 28 digits fails
+    * like the ANSI cast's overflow instead of returning a near-answer. */
+  def snap(x: Double, scale: Int): java.math.BigDecimal = {
+    val d = java.math.BigDecimal.valueOf(x)
+      .setScale(scale, java.math.RoundingMode.HALF_UP)
+    require(d.precision <= 28, s"$x overflows DECIMAL(28, $scale)")
+    d
+  }
+
   /** [[dsum]] WITHOUT the final cast back to double — the result stays
     * the exact DECIMAL(38, s) sum. INTERNAL ACCUMULATION ONLY — rule D9
     * (SURVEY §2.0): a raw DECIMAL-typed column at the graded interface

@@ -1039,10 +1039,11 @@ object AnnFixed {
 
   /** The quality/lang-gated candidate pool (gates only — no dedup):
     * the stage `curateKept` and `pipeline_curate_incremental` share,
-    * projected to the six columns every consumer uses. Lazy — each
-    * consumer decides whether to pin it (`pipeline_curate_incremental`
-    * references it three ways and checkpoints; `curateKept` consumes it
-    * exactly once since the min_by canonicalization). */
+    * projected to the six columns every consumer uses. Lazy, and no
+    * consumer pins it: `pipeline_curate_incremental` references it three
+    * ways yet keeps it lazy (a localCheckpoint of it lost 15% at 30×
+    * grown — see the comment there), and `curateKept` consumes it
+    * exactly once since the min_by canonicalization. */
   private def curatePool(s: SparkSession, dir: String): DataFrame =
     gateQuality(Tables.table(s, dir, "documents"))
       .select(col("doc_id"), col("lang"), col("source"), col("text"),

@@ -97,6 +97,26 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(new java.math.BigDecimal(exact.doubleValue).compareTo(exact) != 0)
   }
 
+  test("Det.snap equals Spark's cast to DECIMAL(28,12) on ties, " +
+    "negatives, and tiny and large magnitudes") {
+    // graph_pagerank's driver-side iteration snaps with Det.snap where
+    // the retired plan cast in Spark — the two must agree value for value
+    val xs = Seq(
+      5e-13, -5e-13, 2.5e-12, -2.5e-12, // HALF_UP ties at the 13th digit
+      1.0000000000005, -1.0000000000005, 0.1234567890125, -0.1234567890125,
+      1.0 / 3, -1.0 / 7, 0.15 / 7 + 0.85 * (1.0 / 7), -0.0,
+      1e-13, -4.9e-13, Double.MinPositiveValue, -1e-300, // snap to zero
+      1234567890123456.7, -9.999999999999998e15, 123456789.123456789)
+    val cast = xs.toDF("x")
+      .select(col("x").cast(DecimalType(28, 12)).as("d")).collect()
+      .map(_.getDecimal(0))
+    xs.zip(cast).foreach { case (x, d) =>
+      assert(Det.snap(x, 12) === d, s"x = $x")
+    }
+    // past 28 digits the snap fails loudly instead of truncating
+    intercept[IllegalArgumentException](Det.snap(1e16, 12))
+  }
+
   test("graft_dot matches HOF semantics on nulls and unequal lengths") {
     graft.plans.GraftFunctions.register(spark)
     val schema = StructType(Seq(

@@ -4,22 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites (one JVM, one Spark context). */
+/** Shared session for all suites (one JVM, one Spark context), built
+  * with the mains' confs at 4 cores. GraftFunctions is NOT registered
+  * session-wide: the specs that need it register it themselves. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      // align codegen fallback with the JIT huge-method limit (see Bench)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-test")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
   val sf = "/root/testdata/sf0.001"
+  lazy val spark: SparkSession = Sessions.create(sf, 4)
 }
 
 /** Every registered query runs, is non-empty (R6), and re-runs identically

@@ -908,33 +908,17 @@ class PlanSpec extends AnyFunSuite {
     // sweep can never pass vacuously again (per-key would over-reach:
     // literal-only plans like graph_pagerank and mapPartitions keys
     // legitimately have no codegen stage).
-    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.SparkPlan
     plans.GraftFunctions.register(spark)
-    val LIMIT = 8000
+    val LIMIT = Diag.JitLimit
     def executedPhysical(df: org.apache.spark.sql.DataFrame): SparkPlan = {
       df.queryExecution.toRdd.count() // materialize every adaptive stage
       df.queryExecution.executedPlan
     }
-    // collect() does NOT descend into materialized QueryStageExec leaves
-    // (their subtree hangs off .plan, not .children) — a naive walk sees
-    // zero codegen stages on any AQE plan. Walk them explicitly.
-    def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          Seq(q.plan)
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case other => other.children
-      }
-      p +: kids.flatMap(allNodes)
-    }
+    // Diag.methodSizes walks into materialized QueryStageExec leaves —
+    // a naive collect() sees zero codegen stages on any AQE plan.
     def stageSizes(p: SparkPlan): Seq[(String, Int)] =
-      allNodes(p).collect { case w: WholeStageCodegenExec =>
-        val (_, code) = w.doCodeGen()
-        val (_, stats) = CodeGenerator.compile(code)
-        (w.child.nodeName, stats.maxMethodCodeSize)
-      }
+      Diag.methodSizes(p).map(s => (s.node, s.bytes))
     // Allowlist-or-split decision per hit: an entry needs a
     // justification for why the stage cannot or should not be narrowed
     // (and therefore deliberately runs per-operator).

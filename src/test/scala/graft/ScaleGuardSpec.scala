@@ -380,15 +380,13 @@ class ScaleGuardSpec extends AnyFunSuite {
     assert(Sessions.initialPartitions(sized(128), 32, adv) === 4096)
   }
 
-  test("bench env surface end-to-end: non-default advisory + validated " +
-      "exclude route to the filtered path and stamp _meta") {
-    // r16 (VERDICT r15 task 7): GRAFT_ADVISORY_MB and the exclude hooks
-    // were spec-covered only piecewise (selectKeys above, detailPathFor
-    // above), which is exactly how the r14 stale-artifact confusion
-    // slipped through — nothing ever ran the REAL main under the env and
-    // looked at the artifact it wrote. Run graft.Bench in a subprocess
-    // (fresh JVM: SparkSession.builder confs must actually take) with a
-    // non-default advisory, an ONLY list, and a validated EXCLUDE, in a
+  test("bench env surface end-to-end: validated exclude routes to the " +
+      "filtered path and stamps the session's confs in _meta") {
+    // The exclude hooks were spec-covered only piecewise (selectKeys
+    // above, detailPathFor above), which is exactly how a stale-artifact
+    // confusion once slipped through — nothing ever ran the REAL main
+    // under the env and looked at the artifact it wrote. Run graft.Bench in a subprocess (fresh JVM: session confs
+    // must actually take) with an ONLY list and a validated EXCLUDE, in a
     // temp cwd; assert the detail routes to bench_detail_partial.json
     // (filtered, never the tracked anchor) and _meta records the confs
     // the session really used.
@@ -407,7 +405,6 @@ class ScaleGuardSpec extends AnyFunSuite {
     val env = pb.environment()
     env.put("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     env.put("SPARK_GRAFT_CPUS", "4")
-    env.put("GRAFT_ADVISORY_MB", "24")
     env.put("GRAFT_BENCH_ONLY", "scan_parquet_count,project_arithmetic")
     env.put("GRAFT_BENCH_EXCLUDE", "project_arithmetic")
     env.remove("GRAFT_BENCH_DETAIL") // routing itself is under test
@@ -423,8 +420,8 @@ class ScaleGuardSpec extends AnyFunSuite {
         cwd.toFile.list().mkString(", "))
     val text = java.nio.file.Files.readString(detail)
     // _meta must record the conf the SESSION used (read back, not echoed)
-    assert(text.contains("\"advisory_mb\": 24"),
-      s"_meta must stamp advisory_mb=24; got: ${text.take(400)}")
+    assert(text.contains("\"advisory_mb\": 16"),
+      s"_meta must stamp advisory_mb=16; got: ${text.take(400)}")
     // sf0.001 footprint is far below 8*cpus*advisory -> the derived
     // initialPartitionNum sits at the 8*cpus floor = 32 for cpus=4
     assert(text.contains("\"initial_partitions\": 32"),
