@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Benchmark main: wall-clock per declared query on SPARK_GRAFT_SF_DIR.
   * A throwing query records -1.0 (never a fake elapsed time — VERDICT r1
   * "What's wrong" #2), so a crash is always distinguishable from a fast
-  * pass in BENCH_r*.json. */
+  * pass in archive/BENCH_r*.json. */
 object Bench {
   /** Detail-file routing (VERDICT r13 task 3), exposed for ScaleGuardSpec:
     * GRAFT_BENCH_DETAIL overrides outright; a key-filtered run parks in

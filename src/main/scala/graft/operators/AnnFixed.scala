@@ -459,24 +459,11 @@ object AnnFixed {
     // compares an identical double against zero, so the bucket JOIN of
     // the 100 TB near-dup path is bit-exact across engines.
     Q("vec_neardup_srp_fixed",
-      (s, dir) => {
-        val capped = srpCapped(s, dir)
-        val x = capped.select(col("band"), col("bsig"),
-          col("vec_id").as("a_id"), col("u").as("ua"))
-        val y = capped.select(col("band").as("y_band"),
-          col("bsig").as("y_bsig"), col("vec_id").as("b_id"),
-          col("u").as("ub"))
-        x.join(y, col("band") === col("y_band")
-            && col("bsig") === col("y_bsig")
-            && col("a_id") < col("b_id"))
-          .select(col("band"), col("a_id"), col("b_id"),
-            dot(col("ua"), col("ub")).as("cos_sim"))
-          .groupBy(col("a_id"), col("b_id"))
-          .agg(min(col("band")).cast("long").as("band"),
-            max(col("cos_sim")).as("cos_sim"))
-          .select(col("band"), col("a_id"), col("b_id"), col("cos_sim"))
-          .orderBy(col("a_id"), col("b_id"))
-      },
+      (s, dir) =>
+        NearDup.bestBand(NearDup.srpSelfPairs(srpCapped(s, dir)))
+          .select(col("band").cast("long").as("band"), col("a_id"),
+            col("b_id"), col("cos_sim"))
+          .orderBy(col("a_id"), col("b_id")),
       Some(sql(s"""WITH $sqlSrpCappedCtes,
         |pairs AS (SELECT x.band, x.vec_id AS a_id, y.vec_id AS b_id,
         |  ${sqlDot("x.u", "y.u")} AS cos_sim
@@ -502,19 +489,7 @@ object AnnFixed {
     // pairs to bucket-local work exactly as text_neardup_banded does —
     // never all-pairs.
     Q("pipeline_dedup_semantic",
-      (s, dir) => {
-        val docs = Tables.table(s, dir, "documents")
-        val exactCanonical = docs
-          .groupBy(sha2(col("text"), 256).as("h"))
-          .agg(min(col("doc_id")).as("doc_id"))
-          .select(col("doc_id"))
-        docs
-          .join(exactCanonical, Seq("doc_id"), "left_semi")
-          .join(srpNearDrops(s, dir), Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))
-          .orderBy(col("doc_id"))
-      },
+      (s, dir) => NearDup.keepSet(s, dir, srpNearDrops(s, dir)),
       Some(sql(s"""WITH $sqlSrpCappedCtes, $sqlSrpDropsCte,
         |exact_keep AS (SELECT min(doc_id) AS doc_id FROM documents
         |  GROUP BY sha256(text))
@@ -537,29 +512,11 @@ object AnnFixed {
     // stays corpus-wide.
     Q("pipeline_dedup_semantic_incremental",
       (s, dir) => {
-        val docs = Tables.table(s, dir, "documents")
         // source rides the banding (srpCappedWith) instead of a post-cap
         // vec_id enrichment join — see the srpCappedWith scaladoc
         val cs = srpCappedWith(s, dir, "source")
-        val xb = cs.filter(col("source") === "src1")
-          .select(col("band"), col("bsig"), col("vec_id").as("a_id"),
-            col("u").as("ua"))
-        val yc = cs.filter(col("source") =!= "src1")
-          .select(col("band").as("y_band"), col("bsig").as("y_bsig"),
-            col("vec_id").as("b_id"), col("u").as("ub"))
-        val nearDrops = xb.join(yc, col("band") === col("y_band")
-            && col("bsig") === col("y_bsig"))
-          .filter(dot(col("ua"), col("ub")) >= 0.35)
-          .select(col("a_id").as("doc_id")).distinct()
-        val corpusHashes = docs.filter(col("source") =!= "src1")
-          .select(sha2(col("text"), 256).as("h")).distinct()
-        docs.filter(col("source") === "src1")
-          .withColumn("h", sha2(col("text"), 256))
-          .join(corpusHashes, Seq("h"), "left_anti")
-          .join(nearDrops, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))
-          .orderBy(col("doc_id"))
+        NearDup.incremental(s, dir,
+          srpBatchDrops(cs, cs.filter(col("source") =!= "src1")))
       },
       Some(sql(s"""WITH $sqlSrpCappedCtes,
         |cs AS (SELECT c.*, d.source FROM capped c
@@ -738,18 +695,9 @@ object AnnFixed {
         val corpusHashes = cpool
           .select(sha2(col("text"), 256).as("h")).distinct()
         val cs = srpCappedWith(s, dir, "source")
-        val xb = cs.filter(col("source") === "src1")
-          .select(col("band"), col("bsig"), col("vec_id").as("a_id"),
-            col("u").as("ua"))
-        val yc = cs.filter(col("source") =!= "src1")
+        val nearDrops = srpBatchDrops(cs, cs.filter(col("source") =!= "src1")
           .join(cpool.select(col("doc_id").as("vec_id")),
-            Seq("vec_id"), "left_semi")
-          .select(col("band").as("y_band"), col("bsig").as("y_bsig"),
-            col("vec_id").as("b_id"), col("u").as("ub"))
-        val nearDrops = xb.join(yc, col("band") === col("y_band")
-            && col("bsig") === col("y_bsig"))
-          .filter(dot(col("ua"), col("ub")) >= 0.35)
-          .select(col("a_id").as("doc_id")).distinct()
+            Seq("vec_id"), "left_semi"))
         withSplit(batchCanonical
           .join(corpusHashes, Seq("h"), "left_anti")
           .join(nearDrops, Seq("doc_id"), "left_anti"))
@@ -799,16 +747,10 @@ object AnnFixed {
     Q("text_contamination_semantic",
       (s, dir) => {
         val cs = srpCappedWith(s, dir, "source")
-        val cand = cs.filter(col("source") =!= "src1")
-          .select(col("band"), col("bsig"), col("vec_id").as("doc_id"),
-            col("u").as("ua"))
-        val bench = cs.filter(col("source") === "src1")
-          .select(col("band").as("y_band"), col("bsig").as("y_bsig"),
-            col("vec_id").as("bench_id"), col("u").as("ub"))
-        cand.join(bench, col("band") === col("y_band")
-            && col("bsig") === col("y_bsig"))
-          .select(col("doc_id"), col("bench_id"),
-            dot(col("ua"), col("ub")).as("cos"))
+        NearDup.srpPairs(cs.filter(col("source") =!= "src1"),
+            cs.filter(col("source") === "src1"))
+          .select(col("a_id").as("doc_id"), col("b_id").as("bench_id"),
+            col("cos_sim").as("cos"))
           .groupBy(col("doc_id"), col("bench_id"))
           .agg(max(col("cos")).as("cos")) // dedupe multi-band collisions
           .groupBy(col("doc_id"))
@@ -920,6 +862,14 @@ object AnnFixed {
       sizeOf = Some(Tables.table(s, dir, "embeddings")))
   }
 
+  /** Corpus-count memo for the [[srpBits]] sizing count(), keyed by
+    * [[PipelineOps.planKey]], so the 7 SRP-banded keys don't each pay a
+    * count job per plan build within a session. */
+  private val countMemo = new PipelineOps.SessionMemo[String, Long]
+
+  private[operators] def countOf(e0: DataFrame): Long =
+    countMemo(e0.sparkSession, PipelineOps.planKey(e0))(e0.count())
+
   /** Frame-based body of [[srpCapped]], so property tests can drive the
     * production banding with PLANTED duplicates (the fixtures contain no
     * true near-dups — max bucket-pair cosine ≈ 0.51 — so without this
@@ -931,24 +881,6 @@ object AnnFixed {
     * k-means/PQ training collects) picks the per-band bit count, then
     * signatures are a map-side projection as before. At the shipped SFs
     * (n ≤ 5000) this resolves to the original 8 bits. */
-  /** Corpus-count memo for the [[srpBits]] sizing count() — the
-    * codebookCache pattern (canonicalized plan + backing files as key,
-    * WeakHashMap per session), so the 7 SRP-banded keys don't each pay a
-    * count job per plan build within a session. */
-  private val countCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]]())
-
-  private[operators] def countOf(e0: DataFrame): Long = {
-    val per = countCache.computeIfAbsent(e0.sparkSession,
-      _ => new java.util.concurrent.ConcurrentHashMap[
-        String, java.lang.Long]())
-    val key = e0.queryExecution.logical.canonicalized.toString +
-      "|" + e0.inputFiles.sorted.mkString(",")
-    per.computeIfAbsent(key, _ => java.lang.Long.valueOf(e0.count()))
-      .longValue()
-  }
-
   private[graft] def srpCappedOf(e0: DataFrame,
       carry: Seq[String] = Nil,
       sizeOf: Option[DataFrame] = None): DataFrame = {
@@ -973,16 +905,12 @@ object AnnFixed {
       when(dot(col("v"), typedLit(srpPlanes(b * 16 + i))) >= 0,
         lit(1 << i)).otherwise(lit(0))
     }.reduce(_ + _)
-    e.withColumn("s0", sig(0)).withColumn("s1", sig(1))
+    NearDup.capBuckets(e.withColumn("s0", sig(0)).withColumn("s1", sig(1))
       .select(col("vec_id") +: cc :+ col("u") :+ expr(
         "explode(array(struct(0 AS band, s0 AS bsig), " +
           "struct(1 AS band, s1 AS bsig)))").as("bs"): _*)
       .select(col("vec_id") +: cc :+ col("u") :+
-        col("bs.band").as("band") :+ col("bs.bsig").as("bsig"): _*)
-      .withColumn("bsz", count(lit(1)).over(
-        Window.partitionBy(col("band"), col("bsig"))))
-      .filter(col("bsz") <= 1000)
-      .drop("bsz")
+        col("bs.band").as("band") :+ col("bs.bsig").as("bsig"): _*))
   }
 
   /** Corpus-wide semantic near-dup DROP set: the larger doc_id of every
@@ -990,26 +918,20 @@ object AnnFixed {
     * `pipeline_dedup_semantic` and `pipeline_curate`. The 0.35 threshold
     * compares bit-identical fold doubles (the vec_dedup_threshold
     * precedent). */
-  private def srpNearDrops(s: SparkSession, dir: String): DataFrame = {
-    val capped = srpCapped(s, dir)
-    val x = capped.select(col("band"), col("bsig"),
-      col("vec_id").as("a_id"), col("u").as("ua"))
-    val y = capped.select(col("band").as("y_band"),
-      col("bsig").as("y_bsig"), col("vec_id").as("b_id"),
-      col("u").as("ub"))
-    x.join(y, col("band") === col("y_band")
-        && col("bsig") === col("y_bsig")
-        && col("a_id") < col("b_id"))
-      .filter(dot(col("ua"), col("ub")) >= 0.35)
+  private def srpNearDrops(s: SparkSession, dir: String): DataFrame =
+    NearDup.srpSelfPairs(srpCapped(s, dir))
+      .filter(col("cos_sim") >= 0.35)
       .select(col("b_id").as("doc_id")).distinct()
-  }
 
-  /** The curated keep-set shared by `pipeline_curate` and
-    * `pipeline_pretokenize`: quality gate (text_quality_score's exact
-    * integer arithmetic — no double ever compared to a boundary), lang
-    * gate, exact sha256 canonicalization, embedding-space near-dup drop
-    * ([[srpNearDrops]]), and the md5-derived train/val/test split.
-    * Carries (doc_id, lang, source, text, n_tokens, qscaled, split). */
+  /** Incremental semantic near-dup DROP set over a [[srpCappedWith]]
+    * `source` banding: the batch (src1) doc_ids with a cosine ≥ 0.35
+    * SRP-bucket pair among the `corpus` rows — batch × corpus pairs only,
+    * never corpus × corpus (the bucket cap stays corpus-wide). */
+  private def srpBatchDrops(cs: DataFrame, corpus: DataFrame): DataFrame =
+    NearDup.srpPairs(cs.filter(col("source") === "src1"), corpus)
+      .filter(col("cos_sim") >= 0.35)
+      .select(col("a_id").as("doc_id")).distinct()
+
   /** The quality/lang gate on an ARBITRARY documents frame — pure column
     * algebra (no aggregation), so it applies unchanged to a streaming
     * DataFrame; shared by [[curatePool]] and
@@ -1058,6 +980,12 @@ object AnnFixed {
         .when(col("bucket") === 1, "val")
         .otherwise("train"))
 
+  /** The curated keep-set shared by `pipeline_curate` and
+    * `pipeline_pretokenize`: quality gate (text_quality_score's exact
+    * integer arithmetic — no double ever compared to a boundary), lang
+    * gate, exact sha256 canonicalization, embedding-space near-dup drop
+    * ([[srpNearDrops]]), and the md5-derived train/val/test split.
+    * Carries (doc_id, lang, source, text, n_tokens, qscaled, split). */
   private def curateKept(s: SparkSession, dir: String): DataFrame = {
     val pool = curatePool(s, dir)
     // Exact canonicalization in ONE pool pass (r17, guide §2.3/§2.4):
@@ -1144,7 +1072,7 @@ object AnnFixed {
        |  SELECT vec_id, u, 1 AS band, ${sqlSrpSig(1)} AS bsig
        |  FROM e CROSS JOIN nb),
        |keep AS (SELECT band, bsig FROM sigs
-       |  GROUP BY band, bsig HAVING count(*) <= 1000),
+       |  GROUP BY band, bsig HAVING count(*) <= ${NearDup.Cap}),
        |capped AS (SELECT s.* FROM sigs s JOIN keep USING (band, bsig))"""
       .stripMargin
 

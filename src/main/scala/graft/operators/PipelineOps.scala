@@ -1531,22 +1531,7 @@ object PipelineOps {
     // quadratic, the composition a 100 TB corpus dedup actually runs.
     // Sketch-dependent → no oracle; keep-set invariants are unit-tested.
     Q("pipeline_dedup_keep",
-      (s, dir) => {
-        val docs = Tables.table(s, dir, "documents")
-        val exactCanonical = docs
-          .groupBy(sha2(col("text"), 256).as("h"))
-          .agg(min(col("doc_id")).as("doc_id"))
-          .select(col("doc_id"))
-        val nearDrops = TextOps.neardupCandidates(s, dir)
-          .filter(col("est_jaccard") >= 0.875)
-          .select(col("doc_b").as("doc_id"))
-          .distinct()
-        docs
-          .join(exactCanonical, Seq("doc_id"), "left_semi")
-          .join(nearDrops, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-          .orderBy(col("doc_id"))
-      },
+      (s, dir) => TextOps.minhash.keep(s, dir, minMatch = 14),
       None),
 
     // Incremental dedup — the highest-frequency production pattern
@@ -1563,26 +1548,7 @@ object PipelineOps {
     // join + id semi/anti joins — nothing quadratic, nothing collected.
     // Sketch-dependent → no oracle; keep-set invariants unit-tested.
     Q("pipeline_dedup_incremental",
-      (s, dir) => {
-        val docs = Tables.table(s, dir, "documents")
-        val batch = docs.filter(col("source") === "src1")
-        val corpus = docs.filter(col("source") =!= "src1")
-        val corpusHashes = corpus
-          .select(sha2(col("text"), 256).as("h")).distinct()
-        // strong (>= 14/16 minima) batch-x-corpus drops in ONE pass over
-        // the capped band buckets (r17): the old symmetric view expanded
-        // the full candidate-pair subtree twice (unionByName of both
-        // directions) and joined a corpus-id frame to keep cross-boundary
-        // pairs — see TextOps.neardupBatchDrops for the equivalence.
-        val nearDrops = TextOps.neardupBatchDrops(s, dir, minMatch = 14)
-        batch
-          .withColumn("h", sha2(col("text"), 256))
-          .join(corpusHashes, Seq("h"), "left_anti")
-          .join(nearDrops, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))
-          .orderBy(col("doc_id"))
-      },
+      (s, dir) => TextOps.minhash.incremental(s, dir, minMatch = 14),
       None),
 
     // Multimodal plumbing: documents as opaque binary + typed metadata.
@@ -1787,26 +1753,10 @@ object PipelineOps {
       |lbl AS (SELECT id AS doc_id, min(lab) AS cluster_id
       |        FROM reach GROUP BY id)""".stripMargin
 
-  /** Product-quantization codes over a (vec_id, embedding) frame — the
-    * compression companion to [[ivfSearch]]. Each of `m` subspaces trains
-    * a `k`-centroid codebook by the same deterministic k-means recipe
-    * (init = the first k vectors' subvectors by vec_id, `iters` Lloyd
-    * rounds of exact-decimal means — partition-order independent);
-    * assignment minimizes squared L2 via the identity
-    * argmin_c |x−c|² = argmin_c (|c|² − 2x·c), one codegen'd graft_dot
-    * pair per (vector, centroid), folded by a hash agg (min of a
-    * (cost, code) struct — no window sort). Output: one row per vector
-    * with `c0..c{m-1}` byte codes and `err0..err{m-1}` per-subspace
-    * squared reconstruction errors (per-row doubles from the same
-    * deterministic fold — no cross-row double accumulation anywhere).
-    * Codebooks are memoized like [[codebookCache]] (train once, search
-    * many); only m·k·(d/m) doubles ever reach the driver. */
-  /** Train-once memo for [[bpeMerges]] — the pqCache pattern: entries die
-    * with the session, keyed by the input dir. */
-  private val bpeCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String,
-        Seq[(Long, String, String, String, Long)]]]())
+  /** Train-once memo for [[bpeMerges]] and [[bpeByteMerges]], keyed by
+    * the input dir. */
+  private val bpeMemo =
+    new SessionMemo[String, Seq[(Long, String, String, String, Long)]]
 
   /** Word-type cap for BPE training — the frequency-weighted sample size
     * (VERDICT r12 task 2). Training collects at most this many word TYPES,
@@ -1825,7 +1775,7 @@ object PipelineOps {
 
   /** The 8-round BPE training behind `text_bpe_merges`, memoized per
     * (session, dir) so Verify/Bench/tests repeating the key pay training
-    * once (the codebookCache discipline). The symbol alphabet is the
+    * once (the [[SessionMemo]] discipline). The symbol alphabet is the
     * DOCUMENTED [a-z]+: words outside it are dropped before training
     * (inert on the fixtures — every token matches — but it makes the
     * lexicographic tie-break well-defined: Spark's orderBy compares UTF-8
@@ -1853,10 +1803,7 @@ object PipelineOps {
     * gate and the round-1 argmax specs pin them. */
   private[graft] def bpeMerges(s: SparkSession,
       dir: String): Seq[(Long, String, String, String, Long)] = {
-    val sessionCache = bpeCache.computeIfAbsent(s,
-      _ => new java.util.concurrent.ConcurrentHashMap[String,
-        Seq[(Long, String, String, String, Long)]]())
-    sessionCache.computeIfAbsent(dir, _ => TrainClock.timed("bpe_word") {
+    bpeMemo(s, dir)(TrainClock.timed("bpe_word") {
       // \A..\z whole-input anchors (ADVICE r7): Java's `$` also matches
       // before a trailing newline, while the preflight differential's
       // DuckDB/RE2 `$` is end-of-text only — "abc\n" must be dropped by
@@ -1903,11 +1850,7 @@ object PipelineOps {
     * identical. Same two-job + driver-local scale shape as [[bpeMerges]]. */
   private[graft] def bpeByteMerges(s: SparkSession,
       dir: String): Seq[(Long, String, String, String, Long)] = {
-    val sessionCache = bpeCache.computeIfAbsent(s,
-      _ => new java.util.concurrent.ConcurrentHashMap[String,
-        Seq[(Long, String, String, String, Long)]]())
-    sessionCache.computeIfAbsent(dir + "#bytes",
-        _ => TrainClock.timed("bpe_byte") {
+    bpeMemo(s, dir + "#bytes")(TrainClock.timed("bpe_byte") {
       // (b & 0xff).toString == Python's str(b) for unsigned UTF-8 bytes
       // == the old SQL conv(hex(...), 16, 10) decimal rendering.
       bpeTrainLocal(
@@ -2053,10 +1996,10 @@ object PipelineOps {
     merges.result()
   }
 
-  private val pqCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[
-        (String, Int, Int, Int), Seq[(Int, Int, Seq[Double])]]]())
+  /** Trained-codebook memo for [[pqCodebook]], keyed by (planKey,
+    * params). */
+  private val pqMemo =
+    new SessionMemo[(String, Int, Int, Int), Seq[(Int, Int, Seq[Double])]]
 
   /** Wall-clock spent inside train-once memo MISSES (BPE merge loops, PQ
     * codebooks, coarse k-means). Bench samples the counter around each
@@ -2127,12 +2070,7 @@ object PipelineOps {
     val s = e0.sparkSession
     graft.plans.GraftFunctions.register(s)
     val P53 = 9007199254740992.0 // 2^53
-    val sessionCache = pqCache.computeIfAbsent(s,
-      _ => new java.util.concurrent.ConcurrentHashMap[
-        (String, Int, Int, Int), Seq[(Int, Int, Seq[Double])]]())
-    val cacheKey = (planKey(e0), m, k, iters)
-    sessionCache.computeIfAbsent(cacheKey,
-        _ => TrainClock.timed("pq_codebook") {
+    pqMemo(s, (planKey(e0), m, k, iters))(TrainClock.timed("pq_codebook") {
       // Cap-bounded training subset (r16 — see [[trainSample]]): identity
       // at fixture SF; sizing count stays inside the memo+clock.
       // PERSIST the sampled subvector frame (r16, the trainCoarse
@@ -2236,6 +2174,20 @@ object PipelineOps {
       }: _*)
   }
 
+  /** Product-quantization codes over a (vec_id, embedding) frame — the
+    * compression companion to [[ivfSearch]]. Each of `m` subspaces trains
+    * a `k`-centroid codebook by the same deterministic k-means recipe
+    * (init = the first k vectors' subvectors by vec_id, `iters` Lloyd
+    * rounds of exact-decimal means — partition-order independent);
+    * assignment minimizes squared L2 via the identity
+    * argmin_c |x−c|² = argmin_c (|c|² − 2x·c), one codegen'd graft_dot
+    * pair per (vector, centroid), folded by a hash agg (min of a
+    * (cost, code) struct — no window sort). Output: one row per vector
+    * with `c0..c{m-1}` byte codes and `err0..err{m-1}` per-subspace
+    * squared reconstruction errors (per-row doubles from the same
+    * deterministic fold — no cross-row double accumulation anywhere).
+    * Codebooks are memoized by [[pqCodebook]] (train once, search
+    * many); only m·k·(d/m) doubles ever reach the driver. */
   private[graft] def pqCodes(e0: DataFrame, m: Int, k: Int,
       iters: Int): DataFrame = {
     val s = e0.sparkSession
@@ -2258,16 +2210,33 @@ object PipelineOps {
       .orderBy(col("vec_id"))
   }
 
-  /** Trained-codebook cache for [[ivfSearch]] (train-once/search-many).
-    * Outer map: WeakHashMap keyed by session, so a session's codebooks die
-    * with it (the old flat map keyed on identityHashCode leaked entries
-    * forever AND could alias a recycled identity hash — ADVICE r5). Inner
-    * key: the canonicalized plan's normalized tree STRING plus params.
-    * The string — not the plan object — is deliberate: a LogicalRelation
-    * retains its SparkSession, and a value→key strong reference would pin
-    * every WeakHashMap entry live, re-creating the leak. `canonicalized`
-    * normalizes expr IDs, so structurally equal frames render identically,
-    * and distinct trees render distinctly — unlike the previous 32-bit
+  /** A train-once/search-many memo: `apply(s, key)(train)` runs `train`
+    * once per (session, key) and serves the result after. Outer map:
+    * WeakHashMap keyed by session, so a session's entries die with it
+    * (the old flat map keyed on identityHashCode leaked entries forever
+    * AND could alias a recycled identity hash — ADVICE r5). Keys are
+    * strings (or tuples of them and params), never plan objects: a
+    * LogicalRelation retains its SparkSession, and a value→key strong
+    * reference would pin every WeakHashMap entry live, re-creating the
+    * leak — frames key on [[planKey]]. */
+  private[operators] final class SessionMemo[K, V] {
+    private val bySession = java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession,
+        java.util.concurrent.ConcurrentHashMap[K, V]]())
+    def apply(s: SparkSession, key: K)(train: => V): V =
+      bySession.computeIfAbsent(s,
+          _ => new java.util.concurrent.ConcurrentHashMap[K, V]())
+        .computeIfAbsent(key, _ => train)
+  }
+
+  /** Trained-codebook memo for [[ivfSearch]], keyed by (planKey, params). */
+  private val codebookMemo =
+    new SessionMemo[(String, Int, Int), Seq[(Long, Seq[Double])]]
+
+  /** Memo key of a frame: the canonicalized plan's normalized tree
+    * STRING plus its sorted backing files. `canonicalized` normalizes
+    * expr IDs, so structurally equal frames render identically, and
+    * distinct trees render distinctly — unlike the previous 32-bit
     * hashCode, which could silently serve a codebook trained on DIFFERENT
     * data after a collision.
     *
@@ -2275,18 +2244,10 @@ object PipelineOps {
     * caught by the nprobe recall sweep): a parquet LogicalRelation's
     * canonical form prints columns but no file path, so structurally
     * identical reads of sf0.001 and sf0.1 render the SAME string and the
-    * second search silently reuses the first dataset's codebook. Every
-    * cache key therefore also embeds [[planKey]]'s sorted
-    * `Dataset.inputFiles` — the public API that names the backing
-    * files. */
-  private val codebookCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[
-        (String, Int, Int), Seq[(Long, Seq[Double])]]]())
-
-  /** Canonicalized-plan + backing-file cache key for train-once memos —
-    * see [[codebookCache]] for why both halves are load-bearing. */
-  private def planKey(df: DataFrame): String =
+    * second search silently reuses the first dataset's codebook. The key
+    * therefore also embeds the sorted `Dataset.inputFiles` — the public
+    * API that names the backing files. */
+  private[operators] def planKey(df: DataFrame): String =
     df.queryExecution.logical.canonicalized.toString +
       "|" + df.inputFiles.sorted.mkString(",")
 
@@ -2396,12 +2357,8 @@ object PipelineOps {
     val s = e0.sparkSession
     val dotc = (a: Column, b: Column) => call_function("graft_dot", a, b)
     val P53 = 9007199254740992.0 // 2^53
-    val sessionCache = codebookCache.computeIfAbsent(s,
-      _ => new java.util.concurrent.ConcurrentHashMap[
-        (String, Int, Int), Seq[(Long, Seq[Double])]]())
-    val cacheKey = (planKey(e0), nlists, lloydIters)
-    sessionCache.computeIfAbsent(cacheKey,
-        _ => TrainClock.timed("kmeans_coarse") {
+    codebookMemo(s, (planKey(e0), nlists, lloydIters))(
+        TrainClock.timed("kmeans_coarse") {
       // inside the memo+clock: trainSample's sizing count() is training
       // work and must neither run on cache hits nor escape attribution.
       // PERSIST the materialized sample for the duration of training

@@ -16,11 +16,12 @@ import org.apache.spark.sql.functions._
   * Tokenization is whitespace `split` (the corpus has no punctuation).
   * TF-IDF is pure DataFrame algebra (two aggregations + a join + a window),
   * no MLlib. MinHash near-dup is the LSH-banded shape (VERDICT r1): shingle
-  * → k=16 minhashes → 8 bands × 2 rows → equi-join on (band, band-hash) —
-  * candidate generation is hash-partitioned and NEVER all-pairs, which is
-  * the property that survives 100 TB. Band buckets are the skew risk at
-  * scale: a degenerate shingle set (e.g. empty docs) collapses to one
-  * bucket — cap or salt oversized buckets before the pair join.
+  * → k=16 minhashes → 8 bands × 2 rows → pairs within a capped
+  * (band, band-hash) bucket ([[NearDup]]) — candidate generation is
+  * hash-partitioned and NEVER all-pairs, which is the property that
+  * survives 100 TB. Band buckets are the skew risk at scale: a degenerate
+  * shingle set (e.g. empty docs) collapses to one bucket, which the cap
+  * drops whole.
   */
 object TextOps {
   import Det._
@@ -53,84 +54,20 @@ object TextOps {
       .select(col("doc_id") +: cc :+ array(mhExprs: _*).as("mh"): _*)
   }
 
-  /** Capped LSH band buckets over [[sketches]]:
-    * (band, band_hash, ms = array<struct<doc_id [, carry…], mh>>) with
-    * 2 ≤ |ms| ≤ 1000. One hash aggregate replaces the r16 shape's
-    * sort+window+filter (run on BOTH sides of the pair self-join — AQE
-    * reused the band exchange but re-ran the cap above it per side) and
-    * the join itself: within-bucket pairs are enumerated from the member
-    * array (guide §2.3/§2.4 — the capped bucket bounds the array at 1000
-    * members / ≤½M pairs, so per-row memory is bounded at any corpus
-    * size). Size-1 buckets produce no pairs and are dropped before the
-    * explode; the ≤1000 cap is the same degenerate-bucket skew guard as
-    * before (bucket size counts ALL corpus rows, batch and corpus alike).
-    * collect_list order varies with partial-aggregation order, but every
-    * consumer folds the array into an order-invariant pair SET
-    * (least/greatest-normalized ids, symmetric minima counts), so
-    * results are deterministic. */
-  private def bandBuckets(s: SparkSession, dir: String,
-      carry: Seq[String] = Nil): DataFrame =
-    sketches(s, dir, carry)
+  /** The xxhash64 minhash family over [[sketches]]: 8 bands × 2 minima,
+    * each band's pair hashed to its bucket key; pairs match on the count
+    * of equal minima out of [[NUM_HASHES]]. */
+  private[operators] val minhash: NearDup.Family = NearDup.Family(
+    NUM_HASHES,
+    (s, dir, carry) => sketches(s, dir, carry)
       .select(col("doc_id") +: carry.map(col) :+ col("mh") :+ posexplode(expr(
         s"""transform(sequence(0, ${NUM_HASHES / BAND_ROWS - 1}),
            |  b -> xxhash64(b, element_at(mh, b * $BAND_ROWS + 1),
            |                element_at(mh, b * $BAND_ROWS + 2)))"""
-          .stripMargin)).as(Seq("band", "band_hash")): _*)
-      .groupBy(col("band"), col("band_hash"))
-      .agg(collect_list(
-        struct(col("doc_id") +: carry.map(col) :+ col("mh"): _*)).as("ms"))
-      .filter(size(col("ms")).between(2, 1000))
-
-  /** Shared pair-enumeration lambda: all unordered within-bucket pairs
-    * (positions i < j of the member array), id-normalized — `est` is the
-    * matching-minima COUNT expression over member structs `x`/`y`
-    * (integer; divided by [[NUM_HASHES]] at the emit site). */
-  private def bandPairsExpr(nHashes: Int, estCnt: String): String =
-    s"""flatten(transform(ms, (x, i) ->
-       |  transform(slice(ms, i + 2, size(ms)), y -> named_struct(
-       |    'doc_a', least(x.doc_id, y.doc_id),
-       |    'doc_b', greatest(x.doc_id, y.doc_id),
-       |    'est_jaccard', cast($estCnt as double) / $nHashes))))"""
-      .stripMargin
-
-  /** xxhash-sketch matching-minima count for [[bandPairsExpr]]. */
-  private val mhMatchCnt: String =
-    """aggregate(zip_with(x.mh, y.mh, (u, v) -> if(u = v, 1, 0)),
-      |  0, (acc, v) -> acc + v)""".stripMargin
-
-  /** Shared batch-drop lambda: for every strong within-bucket pair
-    * (≥ `minMatch` matching minima), emit the batch-side doc_id of a
-    * cross-boundary (batch × corpus) pair — nothing for batch×batch or
-    * corpus×corpus pairs. est ≥ m/n on the exact k/n double is exactly
-    * k ≥ m, so the integer compare matches the old double filter. */
-  private def batchDropsExpr(matchCnt: String, minMatch: Int,
-      batchSrc: String): String =
-    s"""flatten(transform(ms, (x, i) ->
-       |  flatten(transform(slice(ms, i + 2, size(ms)), y ->
-       |    IF(($matchCnt) >= $minMatch,
-       |      filter(array(
-       |        IF(x.source = '$batchSrc' AND y.source <> '$batchSrc',
-       |           x.doc_id, CAST(NULL AS BIGINT)),
-       |        IF(y.source = '$batchSrc' AND x.source <> '$batchSrc',
-       |           y.doc_id, CAST(NULL AS BIGINT))),
-       |        e -> e IS NOT NULL),
-       |      array())))))""".stripMargin
-
-  /** doc_ids of BATCH docs (source = `batchSrc`) forming a strong
-    * (≥ `minMatch` of [[NUM_HASHES]] minima) banded candidate pair with a
-    * corpus doc — the incremental-dedup drop set in ONE pass over the
-    * capped buckets. The r16 shape expanded the full candidate-pair
-    * subtree TWICE (a symmetric unionByName) and joined a corpus-id
-    * frame to keep cross-boundary pairs; here each bucket emits the
-    * batch-side ids of its strong cross-boundary pairs directly.
-    * Equivalence: the old symmetric view also carried ids of CORPUS docs
-    * paired with corpus docs — no-ops through the batch anti-join this
-    * feeds — and est ≥ m/n on the exact k/n double is exactly k ≥ m. */
-  private[operators] def neardupBatchDrops(s: SparkSession, dir: String,
-      minMatch: Int, batchSrc: String = "src1"): DataFrame =
-    bandBuckets(s, dir, carry = Seq("source")).select(explode(expr(
-      batchDropsExpr(mhMatchCnt, minMatch, batchSrc))).as("doc_id"))
-      .distinct()
+          .stripMargin)).as(Seq("band", "bkey")): _*),
+    (x, y) => aggregate(
+      zip_with(x("mh"), y("mh"), (u, v) => when(u === v, 1).otherwise(0)),
+      lit(0), _ + _))
 
   val qs: Seq[Q] = Seq(
     Q("text_wordcount",
@@ -391,7 +328,7 @@ object TextOps {
     // MinHash + banded LSH near-dup candidates. Hash-seed-dependent → no
     // oracle (D3); Jaccard-estimate property is ScalaCheck-tested.
     Q("text_minhash_neardup",
-      (s, dir) => neardupCandidates(s, dir)
+      (s, dir) => minhash.pairs(s, dir)
         .orderBy(col("doc_a"), col("doc_b")),
       None),
 
@@ -424,7 +361,7 @@ object TextOps {
     // it is hash-checked against DuckDB — the sketch JOIN is no longer
     // trust-the-tests. LSH threshold ≈ (1/4)^(1/2) = 0.5.
     Q("text_neardup_banded",
-      (s, dir) => cwBandPairs(s, dir)
+      (s, dir) => carterWegman.pairs(s, dir)
         .orderBy(col("doc_a"), col("doc_b")),
       Some(sql(s"""WITH $sqlCwSigCtes, $sqlCwPairCtes
         |SELECT doc_a, doc_b, est_jaccard FROM pairs
@@ -435,22 +372,7 @@ object TextOps {
     // twin of `pipeline_dedup_keep` (whose xxhash64 sketches keep it
     // rows-only by design). est >= 0.875 means >= 7 of 8 minima match.
     Q("pipeline_dedup_keep_banded",
-      (s, dir) => {
-        val docs = Tables.table(s, dir, "documents")
-        val exactCanonical = docs
-          .groupBy(sha2(col("text"), 256).as("h"))
-          .agg(min(col("doc_id")).as("doc_id"))
-          .select(col("doc_id"))
-        val nearDrops = cwBandPairs(s, dir)
-          .filter(col("est_jaccard") >= 0.875)
-          .select(col("doc_b").as("doc_id"))
-          .distinct()
-        docs
-          .join(exactCanonical, Seq("doc_id"), "left_semi")
-          .join(nearDrops, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-          .orderBy(col("doc_id"))
-      },
+      (s, dir) => carterWegman.keep(s, dir, minMatch = 7),
       Some(sql(s"""WITH $sqlCwSigCtes, $sqlCwPairCtes,
         |keep AS (
         |  SELECT min(doc_id) AS doc_id FROM documents GROUP BY sha256(text)),
@@ -480,24 +402,7 @@ object TextOps {
     // whole corpus (a bucket is degenerate regardless of which side its
     // members came from).
     Q("pipeline_dedup_incremental_banded",
-      (s, dir) => {
-        val docs = Tables.table(s, dir, "documents")
-        val batch = docs.filter(col("source") === "src1")
-        val corpusHashes = docs.filter(col("source") =!= "src1")
-          .select(sha2(col("text"), 256).as("h")).distinct()
-        // `source` rides the signature pipeline (see cwSignatures.carry)
-        // instead of a doc_id enrichment join (r16); the batch×corpus
-        // candidate join over capped bands is now the one-pass bucket
-        // drop extraction (r17 — see cwBatchDrops/bandBuckets).
-        val nearDrops = cwBatchDrops(s, dir, minMatch = 7)
-        batch
-          .withColumn("h", sha2(col("text"), 256))
-          .join(corpusHashes, Seq("h"), "left_anti")
-          .join(nearDrops, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))
-          .orderBy(col("doc_id"))
-      },
+      (s, dir) => carterWegman.incremental(s, dir, minMatch = 7),
       Some(sql(s"""WITH $sqlCwSigCtes, $sqlCwBandCtes,
         |ch AS (SELECT DISTINCT sha256(text) AS h FROM documents
         |  WHERE source <> 'src1'),
@@ -622,10 +527,6 @@ object TextOps {
   private def cwA(i: Int) = 1103515245L * (i + 1) % CW_P
   private def cwB(i: Int) = 12345L * (i + 1) % CW_P
 
-  /** (doc_id, mh0..mh7) — explode shingles once, project the base hash,
-    * 8 codegen'd min-aggregates (a per-row HOF would inline the hash into
-    * all 8 minima — the text_simhash lesson). Scalar columns, not an
-    * array: the driver's column hasher compares scalar cells. */
   /** Carter–Wegman minhash signatures per doc. `carry` names narrow doc
     * columns to thread THROUGH the shingle explode and the signature
     * aggregate (grouped alongside doc_id — functionally dependent, so
@@ -651,45 +552,18 @@ object TextOps {
     sh.groupBy(col("doc_id") +: cc: _*).agg(minCols.head, minCols.tail: _*)
   }
 
-  /** Capped CW band buckets: (band, bkey, ms = array<struct<doc_id
-    * [, carry…], mh0..mh7>>), 2 ≤ |ms| ≤ 1000 — the CW twin of
-    * [[bandBuckets]] (see its scaladoc for the r17 shape rationale and
-    * the order-invariance argument). */
-  private def cwBuckets(s: SparkSession, dir: String,
-      carry: Seq[String] = Nil): DataFrame = {
-    val sig = cwSignatures(s, dir, carry)
-    val bandStructs = (0 until 4).map(b =>
-      struct(lit(b).as("band"),
-        (col(s"mh${2 * b}") * CW_P + col(s"mh${2 * b + 1}")).as("bkey")))
-    sig.withColumn("bk", explode(array(bandStructs: _*)))
-      .groupBy(col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-      .agg(collect_list(struct(
-        col("doc_id") +: carry.map(col) ++:
-          (0 until 8).map(i => col(s"mh$i")): _*)).as("ms"))
-      .filter(size(col("ms")).between(2, 1000))
-  }
-
-  /** Matching-minima COUNT of two CW member structs `x`/`y` (of 8). */
-  private val cwMatchCnt: String =
-    (0 until 8).map(i => s"IF(x.mh$i = y.mh$i, 1, 0)").mkString(" + ")
-
-  /** Banded pair enumeration over [[cwBuckets]]:
-    * (doc_a, doc_b, est_jaccard), deduped. */
-  private[operators] def cwBandPairs(
-      s: SparkSession, dir: String): DataFrame =
-    cwBuckets(s, dir).select(
-      explode(expr(bandPairsExpr(8, cwMatchCnt))).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
-        col("p.est_jaccard").as("est_jaccard"))
-      .distinct()
-
-  /** CW twin of [[neardupBatchDrops]]: batch doc_ids in a ≥ `minMatch`-
-    * of-8 banded pair with a corpus doc, one pass over [[cwBuckets]]. */
-  private[operators] def cwBatchDrops(s: SparkSession, dir: String,
-      minMatch: Int, batchSrc: String = "src1"): DataFrame =
-    cwBuckets(s, dir, carry = Seq("source")).select(explode(expr(
-      batchDropsExpr(cwMatchCnt, minMatch, batchSrc))).as("doc_id"))
-      .distinct()
+  /** The Carter–Wegman family over [[cwSignatures]]: 4 bands × 2 rows,
+    * band key mh·p + mh (collision-free pairing below 2^62); pairs match
+    * on the count of equal minima out of 8. */
+  private val carterWegman: NearDup.Family = NearDup.Family(8,
+    (s, dir, carry) => {
+      val sig = cwSignatures(s, dir, carry)
+      sig.select(sig.columns.map(col) :+ posexplode(array((0 until 4).map(b =>
+        col(s"mh${2 * b}") * CW_P + col(s"mh${2 * b + 1}")): _*))
+        .as(Seq("band", "bkey")): _*)
+    },
+    (x, y) => (0 until 8).map(i =>
+      when(x(s"mh$i") === y(s"mh$i"), 1).otherwise(0)).reduce(_ + _))
 
   /** Oracle CTE twins of [[cwSignatures]] (`ws`, `sh`, `sig`). */
   private def sqlCwSigCtes: String =
@@ -709,7 +583,8 @@ object TextOps {
             .mkString(", ")}
        |  FROM sh GROUP BY doc_id)""".stripMargin
 
-  /** Oracle CTE twins of [[cwCappedBands]] (`bands`, `capped`). */
+  /** Oracle CTE twins of [[carterWegman]]'s capped bands (`bands`,
+    * `capped`). */
   private def sqlCwBandCtes: String =
     s"""bands AS (
        |  SELECT sig.*, b.band,
@@ -720,9 +595,9 @@ object TextOps {
        |capped AS (
        |  SELECT * FROM (
        |    SELECT *, count(*) OVER (PARTITION BY band, bkey) AS bsz
-       |    FROM bands) WHERE bsz <= 1000)""".stripMargin
+       |    FROM bands) WHERE bsz <= ${NearDup.Cap})""".stripMargin
 
-  /** Oracle CTE twins of [[cwBandPairs]] (adds `pairs`). */
+  /** Oracle CTE twins of [[carterWegman]]'s pairs (adds `pairs`). */
   private def sqlCwPairCtes: String =
     s"""$sqlCwBandCtes,
        |pairs AS (
@@ -733,22 +608,4 @@ object TextOps {
        |  FROM capped x JOIN capped y
        |    ON x.band = y.band AND x.bkey = y.bkey
        |       AND x.doc_id < y.doc_id)""".stripMargin
-
-  /** Banded-LSH near-dup candidate pairs with minhash-estimated Jaccard —
-    * shared by the `text_minhash_neardup` query and the composed
-    * `pipeline_dedup_keep`.
-    *
-    * The minhash array rides through the band explode so the pair join
-    * yields both sketches directly — 2 sketch pipelines instead of 4 and
-    * no post-candidate re-join (see PLANS.md). Skew guard: degenerate band
-    * buckets are dropped before the pair join — no-op on the fixtures,
-    * load-bearing at corpus scale.
-    */
-  private[operators] def neardupCandidates(
-      s: SparkSession, dir: String): DataFrame =
-    bandBuckets(s, dir).select(
-      explode(expr(bandPairsExpr(NUM_HASHES, mhMatchCnt))).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
-        col("p.est_jaccard").as("est_jaccard"))
-      .distinct()
 }

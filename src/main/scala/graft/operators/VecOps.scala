@@ -364,10 +364,9 @@ object VecOps {
     * hoisted per task — no per-row interpreted HOF), vectors are
     * unit-normalized once BEFORE the pair join so each candidate pair
     * costs a single fused-dot fold, and any (band, signature) bucket
-    * holding more than `cap` vectors is dropped entirely — mirroring
-    * `text_editdist_pairs`' 1000-doc bucket cap — so within-bucket
-    * all-pairs work is bounded by cap²/2 per bucket no matter how
-    * degenerate the data. Pairs colliding in several bands are deduped by
+    * holding more than `cap` vectors is dropped entirely
+    * ([[NearDup.capBuckets]]) — so within-bucket all-pairs work is
+    * bounded by cap²/2 per bucket no matter how degenerate the data. Pairs colliding in several bands are deduped by
     * the (a_id, b_id) groupBy (min band kept; cos_sim is identical per
     * pair, max is a deterministic pick).
     *
@@ -377,7 +376,7 @@ object VecOps {
     */
   private[graft] def neardupLshPairs(
       e: DataFrame, nBands: Int = 4, bitsPerBand: Int = 16,
-      cap: Int = 1000): DataFrame = {
+      cap: Int = NearDup.Cap): DataFrame = {
     val bands = e
       .select(col("vec_id"), embD(col("embedding")).as("v"))
       .withColumn("u", transform(col("v"),
@@ -385,19 +384,6 @@ object VecOps {
       .select(col("vec_id"), col("u"),
         posexplode(call_function("graft_srp_sig", col("v"),
           lit(nBands), lit(bitsPerBand))).as(Seq("band", "bsig")))
-    val capped = bands
-      .withColumn("bsz", count(lit(1)).over(
-        Window.partitionBy(col("band"), col("bsig"))))
-      .filter(col("bsz") <= cap)
-      .drop("bsz")
-    capped.as("x").join(capped.as("y"),
-        col("x.band") === col("y.band")
-          && col("x.bsig") === col("y.bsig")
-          && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.band").as("band"),
-        col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"),
-        dot(col("x.u"), col("y.u")).as("cos_sim"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(min(col("band")).as("band"), max(col("cos_sim")).as("cos_sim"))
+    NearDup.bestBand(NearDup.srpSelfPairs(NearDup.capBuckets(bands, cap)))
   }
 }

@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * join from going quadratic on degenerate data (VERDICT r3 task 1). */
 class LshSpec extends AnyFunSuite {
   import TestSpark._
+  import LshSpec.refVec
 
   private val NB = 4
   private val BITS = 16
@@ -28,9 +29,6 @@ class LshSpec extends AnyFunSuite {
     operators.VecOps.neardupLshPairs(
       vecs.toDF("vec_id", "embedding"), NB, BITS, cap)
   }
-
-  private def refVec(seed: Int): Seq[Float] =
-    (0 until 64).map(i => (SrpPlanes.component(seed + 100, i) * 0.4).toFloat)
 
   test("graft_srp_sig matches the SrpPlanes reference computation") {
     val v = refVec(1)
@@ -94,32 +92,24 @@ class LshSpec extends AnyFunSuite {
     // The fixtures contain no true near-dups (max bucket-pair cosine
     // ≈ 0.51), so pipeline_dedup_semantic's drop rule is only exercised
     // on near-random pairs by the oracle gate. Drive the PRODUCTION
-    // banding (AnnFixed.srpCappedOf — the exact frame the dedup keys
-    // join) with planted duplicates: a scaled copy has IDENTICAL sign
-    // bits in every band (sign is scale-invariant), so it must share
-    // both buckets and score cosine 1 — above any sane threshold.
+    // banding (AnnFixed.srpCappedOf) and bucket join
+    // (NearDup.srpSelfPairs) — the exact pairs the dedup keys filter —
+    // with planted duplicates: a scaled copy has IDENTICAL sign bits in
+    // every band (sign is scale-invariant), so it must share both
+    // buckets and score cosine 1 — above any sane threshold.
     import spark.implicits._
     val base = (0 until 30).map(id =>
       (id.toLong, (0 until 64).map(i =>
         (SrpPlanes.component(id + 500, i) * 0.4).toFloat)))
     val dup = (100L, base(3)._2.map(x => 2.0f * x)) // scaled copy of id 3
-    val capped = operators.AnnFixed.srpCappedOf(
-      (base :+ dup).toDF("vec_id", "embedding"))
-    val x = capped.select(col("band"), col("bsig"),
-      col("vec_id").as("a_id"), col("u").as("ua"))
-    val y = capped.select(col("band").as("yb"), col("bsig").as("ys"),
-      col("vec_id").as("b_id"), col("u").as("ub"))
-    val pairs = x.join(y, col("band") === col("yb")
-        && col("bsig") === col("ys") && col("a_id") < col("b_id"))
-      .select(col("band"), col("a_id"), col("b_id"),
-        call_function("graft_dot", col("ua"), col("ub")).as("cos"))
-      .collect()
+    val pairs = operators.NearDup.srpSelfPairs(operators.AnnFixed.srpCappedOf(
+      (base :+ dup).toDF("vec_id", "embedding"))).collect()
     val dupPairs = pairs.filter(r =>
       r.getAs[Long]("a_id") == 3L && r.getAs[Long]("b_id") == 100L)
     // identical sign bits ⇒ the pair collides in BOTH bands
     assert(dupPairs.map(_.getAs[Int]("band")).toSet === Set(0, 1),
       s"planted dup must collide in every band, got ${dupPairs.toSeq}")
-    dupPairs.foreach(r => assert(r.getAs[Double]("cos") > 0.999999))
+    dupPairs.foreach(r => assert(r.getAs[Double]("cos_sim") > 0.999999))
     // and a threshold drop at 0.35 would remove exactly the larger id
     assert(dupPairs.forall(_.getAs[Long]("b_id") == 100L))
   }
@@ -168,4 +158,10 @@ class LshSpec extends AnyFunSuite {
     val pts = Seq(1L, 100L, 16384L, 16385L, 32769L, 65537L, 1 << 25, 1L << 40)
     assert(pts.map(srpBits) === pts.map(srpBits).sorted)
   }
+}
+
+object LshSpec {
+  /** A deterministic 64-dim vector per seed, off the SRP plane family. */
+  def refVec(seed: Int): Seq[Float] =
+    (0 until 64).map(i => (SrpPlanes.component(seed + 100, i) * 0.4).toFloat)
 }

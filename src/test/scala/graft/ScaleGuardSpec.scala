@@ -19,26 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ScaleGuardSpec extends AnyFunSuite {
   import TestSpark._
+  import ScaleGuardSpec._
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
-
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("text", StringType, nullable = false),
-    StructField("lang", StringType, nullable = false),
-    StructField("source", StringType, nullable = false),
-    StructField("n_chars", LongType, nullable = false)))
-
-  private def writeDocs(dir: String, docs: Seq[(Long, String)]): Unit = {
-    val rows = docs.map { case (id, text) =>
-      Row(id, text, "en", if (id % 2 == 0) "src1" else "src2",
-        text.length.toLong)
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 4), docSchema)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-  }
 
   test("shingle-df cap bounds text_ngram_jaccard candidates under a stop-shingle flood") {
     // 1200 docs all opening with the same 3-word "stop-shingle" — the
@@ -97,10 +81,11 @@ class ScaleGuardSpec extends AnyFunSuite {
   test("banded-LSH bucket cap drops a degenerate minhash bucket, keeps planted pair") {
     // 1100 byte-identical docs: identical Carter–Wegman signatures →
     // identical (band, bkey) in ALL 4 bands → every flood bucket has
-    // 1100 > 1000 members and is dropped by cwCappedBands before the pair
-    // join (exact dedup owns byte-identical text; a 1100-doc bucket would
-    // otherwise contribute ~600k pairs PER BAND). The planted pair is two
-    // identical docs of a different text: bucket size 2, est_jaccard 1.0.
+    // 1100 > 1000 members and is dropped by the NearDup.Cap bucket cap
+    // before pairing (exact dedup owns byte-identical text; a 1100-doc
+    // bucket would otherwise contribute ~600k pairs PER BAND). The planted
+    // pair is two identical docs of a different text: bucket size 2,
+    // est_jaccard 1.0.
     val flood = (0L until 1100L).map(i =>
       i -> "the quick brown fox jumps over the lazy dog")
     val planted = Seq(
@@ -138,17 +123,10 @@ class ScaleGuardSpec extends AnyFunSuite {
     val dim = 64
     val floodVec = Array.tabulate(dim)(j => if (j == 0) 1.0f else 0.0f)
     val plantVec = Array.tabulate(dim)(j => if (j == 1) 1.0f else 0.0f)
-    val embSchema = StructType(Seq(
-      StructField("vec_id", LongType, nullable = false),
-      StructField("embedding", ArrayType(FloatType, containsNull = false),
-        nullable = false),
-      StructField("label", IntegerType, nullable = false)))
-    val rows = (0L until 1100L).map(i => Row(i, floodVec.toSeq, 0)) ++
-      Seq(Row(9001L, plantVec.toSeq, 1), Row(9002L, plantVec.toSeq, 1))
+    val rows = (0L until 1100L).map(i => (i, floodVec.toSeq, 0)) ++
+      Seq((9001L, plantVec.toSeq, 1), (9002L, plantVec.toSeq, 1))
     val dir = tmp("graft_sg_srp")
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 4), embSchema)
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    writeEmbeddings(dir, rows)
 
     val pairs = Registry.queries("vec_neardup_srp_fixed")(spark, dir)
       .collect()
@@ -489,4 +467,41 @@ class ScaleGuardSpec extends AnyFunSuite {
     assert(uncapped === 200L * 199L / 2 + 1,
       s"without the rank cap the df-200 shingle is quadratic (got $uncapped)")
   }
+}
+
+/** Planted-fixture writers, shared with [[NearDupPinSpec]]. */
+object ScaleGuardSpec {
+  import TestSpark._
+
+  private val docSchema = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("text", StringType, nullable = false),
+    StructField("lang", StringType, nullable = false),
+    StructField("source", StringType, nullable = false),
+    StructField("n_chars", LongType, nullable = false)))
+
+  private val embSchema = StructType(Seq(
+    StructField("vec_id", LongType, nullable = false),
+    StructField("embedding", ArrayType(FloatType, containsNull = false),
+      nullable = false),
+    StructField("label", IntegerType, nullable = false)))
+
+  /** `documents` under `dir`: even ids are source src1 (the incremental
+    * keys' batch), odd ids src2. */
+  def writeDocs(dir: String, docs: Seq[(Long, String)]): Unit = {
+    val rows = docs.map { case (id, text) =>
+      Row(id, text, "en", if (id % 2 == 0) "src1" else "src2",
+        text.length.toLong)
+    }
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 4), docSchema)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+  }
+
+  /** `embeddings` under `dir` from (vec_id, embedding, label) rows. */
+  def writeEmbeddings(dir: String, vecs: Seq[(Long, Seq[Float], Int)]): Unit =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        vecs.map { case (id, v, label) => Row(id, v, label) }, 4), embSchema)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 }

@@ -10,6 +10,7 @@ class SessionsSpec extends AnyFunSuite {
   private val pinned = Map(
     "spark.sql.shuffle.partitions" -> "4",
     "spark.sql.codegen.hugeMethodLimit" -> "8000",
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "32",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16m",
     "spark.memory.storageFraction" -> "0.25",
