@@ -337,6 +337,16 @@ object Det {
     * oracle_sql.json single-line-safe and diffs readable). */
   def sql(s: String): String = s.stripMargin.trim.replaceAll("\\s+", " ")
 
+  /** Native fused-loop dot of two numeric arrays (graft.plans.DotProduct;
+    * callers register it per session first) — bit-identical to the HOF
+    * `aggregate(zip_with(...))` fold and to [[sqlDot]]: every form folds
+    * left to right, and floats widen to double exactly. */
+  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+
+  /** DuckDB twin of [[dot]] for oracle SQL. */
+  def sqlDot(a: String, b: String): String =
+    s"list_reduce(list_transform(list_zip($a, $b), p -> p[1] * p[2]), (x, y) -> x + y)"
+
   /** Total-order a DOMAIN-BOUNDED result without a range exchange (r16,
     * guide §2.4): the final `orderBy` of a group-domain aggregate plans a
     * rangepartitioning exchange whose RangePartitioner pays a whole

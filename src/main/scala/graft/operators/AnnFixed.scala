@@ -5,53 +5,47 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Fixed-codebook ANN twins (VERDICT r6 task 1): the IVF / IVF-PQ *search
-  * algebra* — probe join, flat-LUT ADC scoring, shortlist, exact rerank —
-  * hash-checked against DuckDB.
+/** Fixed-codebook ANN twins, plus the fixed-plane SRP near-dup and curate
+  * keys built on the same normalized frame.
   *
-  * The production keys (`vec_ann_ivf`, `vec_ann_ivfpq` in
-  * [[PipelineOps]]) train their codebooks with k-means, whose centroids
-  * are engine-derived doubles → rows-only by design (D3). But given a
-  * FIXED codebook the entire search pipeline is deterministic: every
-  * score is a sequential fold over identical doubles (floats widen
-  * exactly; Spark's `aggregate`/`graft_dot` and DuckDB's `list_reduce`
-  * fold left-to-right; sqrt and division are IEEE-correctly-rounded), and
-  * every ranking tie-breaks on an integer id. So these keys embed the
-  * codebook as a shared integer FORMULA — the `scalar_trig` literal-table
-  * precedent (SURVEY §9), generated rather than spelled out because
-  * 4×64 + 16×16 literal doubles would be noise:
+  * The trained keys (`vec_ann_ivf`, `vec_ann_ivfpq`, `vec_pq_codes` in
+  * [[PipelineOps]]) learn their codebooks by k-means, whose centroids are
+  * engine-derived doubles, so they are rows-only by design (D3). Given a
+  * FIXED codebook the rest is deterministic: every score is a sequential
+  * fold over identical doubles (floats widen exactly; `graft_dot` and
+  * DuckDB's `list_reduce` fold left to right; sqrt and division are
+  * IEEE-correctly-rounded), and every ranking tie-breaks on an integer
+  * id. So the twins embed their codebooks as shared integer FORMULAS —
+  * the `scalar_trig` literal-table precedent (SURVEY §9):
   *
   *   coarse centroid l, component j (1-based):  (l·31 + j·17) mod 7 − 3
   *   PQ cell (sub s, code c), component j:   ((s·5 + c·3 + j·11) mod 7 − 3)/8
   *
-  * Small exact integers (and exact eighths — divisor is a power of two),
-  * identical in both formulations; coarse centroids are unit-normalized
-  * on both sides before use. The search runs over unit-normalized corpus
-  * vectors exactly like the trained keys, so a regression in the probe
-  * join, the LUT lookup arithmetic, the shortlist window, or the rerank
-  * join now fails the driver's hash gate instead of only AnnRecallSpec.
+  * Small exact integers (and exact eighths), identical in both
+  * formulations; coarse centroids are unit-normalized on both sides.
   *
-  * Scale shape is the trained keys': list assignment and PQ codes are
-  * ONE map-side projection over literal codebook arrays (no corpus
-  * shuffle anywhere — see [[PipelineOps]]'s nearestListMap rationale),
-  * the tiny probe/LUT frames broadcast, candidates are scored from m
-  * `element_at` lookups into one flat LUT array, and raw vectors are
-  * touched only for the ≤20 reranked rows per query.
+  * What is shared: for the ANN twins this file holds codebooks and
+  * oracle SQL only, no search or encode code. Each twin calls the body
+  * its trained key calls, with the literal codebooks in place of the
+  * trained ones:
+  *   - `vec_ann_ivf_fixed`, `pipeline_semantic_search` and
+  *     `pipeline_eval_recall` → [[PipelineOps.ivfTop3]] (probe window,
+  *     self-exclusion, exact top 3), as `vec_ann_ivf` does;
+  *   - `vec_ann_ivfpq_fixed` → [[PipelineOps.ivfpqTop3]] (LUT, ADC
+  *     shortlist at depth 20, exact rerank), as `vec_ann_ivfpq` does at
+  *     depth 128;
+  *   - `vec_pq_codes_fixed` → [[PipelineOps.pqEncode]] (codes and error
+  *     fold), as `vec_pq_codes` does.
+  * Under them sit [[PipelineOps.normFrame]], [[PipelineOps.nearestListMap]]
+  * and [[PipelineOps.pqCodeCols]]. So the DuckDB hash of a twin checks
+  * the trained key's search and encode code; only codebook training
+  * (`trainCoarse`, `pqCodebook`) stays outside the oracle, pinned by
+  * AnnPinSpec and graded for recall by AnnRecallSpec.
   */
 object AnnFixed {
   import Det._
 
-  private def dot(a: Column, b: Column): Column =
-    call_function("graft_dot", a, b)
-
-  private val sqlDot =
-    (a: String, b: String) =>
-      s"list_reduce(list_transform(list_zip($a, $b), p -> p[1] * p[2]), (x, y) -> x + y)"
-
-  /** (vec_id, u) via the production [[PipelineOps.normFrame]] — the
-    * fixed keys deliberately run the SAME helpers the trained keys run
-    * (normFrame / nearestListMap / pqCodeCols), so the oracle hash
-    * guards the production code path, not a parallel copy of it. */
+  /** (vec_id, u) of the embeddings via [[PipelineOps.normFrame]]. */
   private def normed(s: SparkSession, dir: String): DataFrame =
     PipelineOps.normFrame(
       Tables.table(s, dir, "embeddings")
@@ -64,30 +58,33 @@ object AnnFixed {
                  "embedding::DOUBLE[]")})) AS u
        |  FROM embeddings)"""
 
-  /** The 4 unit-normalized coarse centroids, computed DRIVER-SIDE from
-    * the integer formula: the fold runs left-to-right like graft_dot /
-    * list_reduce, and Math.sqrt / division are IEEE-correctly-rounded,
-    * so these doubles are bit-identical to both engines' in-plan
-    * normalization of the same integers. */
-  private val coarseCu: Seq[Seq[Double]] = (0 until 4).map { l =>
+  /** The 4 unit-normalized coarse centroids as (list_id, cu), computed
+    * DRIVER-SIDE from the integer formula: the fold runs left-to-right
+    * like graft_dot / list_reduce, and Math.sqrt / division are
+    * IEEE-correctly-rounded, so these doubles are bit-identical to both
+    * engines' in-plan normalization of the same integers. */
+  private val coarseCent: Seq[(Long, Seq[Double])] = (0 until 4).map { l =>
     val cv = (1 to 64).map(j => ((l * 31 + j * 17) % 7 - 3).toDouble)
     val n = math.sqrt(cv.foldLeft(0.0)((a, x) => a + x * x))
-    cv.map(_ / n)
+    (l.toLong, cv.map(_ / n))
   }
 
-  /** Same centroids as a 4-row frame, for the probe-selection window. */
-  private def coarseCb(s: SparkSession): DataFrame = {
-    import s.implicits._
-    coarseCu.zipWithIndex.map { case (cu, l) => (l.toLong, cu) }
-      .toDF("list_id", "cu")
-  }
+  /** PQ codebook (sub, code, cell) for 4 subspaces × 4 codes: exact
+    * integers over 8 (a power of two), bit-identical to the oracle's
+    * in-SQL formula. */
+  private val pqCb: Seq[(Int, Int, Seq[Double])] =
+    for (s0 <- 0 until 4; c <- 0 until 4) yield
+      (s0, c, (1 to 16).map(j => ((s0 * 5 + c * 3 + j * 11) % 7 - 3) / 8.0))
 
-  /** PQ codebook cells in (sub·4 + code) order: exact integers over 8
-    * (a power of two), bit-identical to the oracle's in-SQL formula. */
-  private val pqCells: Seq[Seq[Double]] =
-    (for (s0 <- 0 until 4; c <- 0 until 4) yield
-      (1 to 16).map(j =>
-        ((s0 * 5 + c * 3 + j * 11) % 7 - 3) / 8.0).toSeq).toSeq
+  /** The fixed keys' query set and probe depth. */
+  private val nQueries = 8
+  private val nprobe = 2
+
+  /** IVF-flat top-3 of the shared [[PipelineOps.ivfTop3]] body over the
+    * literal coarse codebook — `vec_ann_ivf_fixed`,
+    * `pipeline_semantic_search` and `pipeline_eval_recall`. */
+  private def ivfFixed(e: DataFrame): DataFrame =
+    PipelineOps.ivfTop3(e, coarseCent, nprobe, nQueries)
 
   /** 32 fixed SRP hyperplanes (2 bands × up to 16 bits — band `b` owns
     * planes b·16+i) for the hash-checked LSH twin: small exact integers
@@ -160,16 +157,6 @@ object AnnFixed {
        |  list_transform(cv, x -> x / sqrt(${sqlDot("cv", "cv")})) AS cu
        |  FROM cb)"""
 
-  /** Coarse centroids in [[PipelineOps.nearestListMap]]'s shape. */
-  private val coarseCent: Seq[(Long, Seq[Double])] =
-    coarseCu.zipWithIndex.map { case (cu, l) => (l.toLong, cu) }
-
-  /** Nearest coarse list per vector (argmax cosine, ties to the smallest
-    * list_id), u carried through for the scoring stage — the production
-    * map-side [[PipelineOps.nearestListMap]], fed the literal centroids. */
-  private def assign(e: DataFrame): DataFrame =
-    PipelineOps.nearestListMap(e, coarseCent)
-
   private val sqlAssign =
     s"""assign AS (SELECT vec_id, list_id, u FROM (
        |  SELECT e.vec_id, c.list_id, e.u,
@@ -177,49 +164,16 @@ object AnnFixed {
        |      ORDER BY ${sqlDot("e.u", "c.cu")} DESC, c.list_id ASC) AS rn
        |  FROM e CROSS JOIN cbn c) WHERE rn = 1)"""
 
-  /** Query set (first 8 by vec_id) and its nprobe=2 probed lists. */
-  private def probeOf(e: DataFrame, cb: DataFrame): (DataFrame, DataFrame) = {
-    val q = e.orderBy(col("vec_id")).limit(8)
-      .select(col("vec_id").as("q_id"), col("u").as("qu"))
-    val probe = q.crossJoin(broadcast(cb))
-      .withColumn("sim", dot(col("qu"), col("cu")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("sim").desc, col("list_id").asc)))
-      .filter(col("rn") <= 2)
-      .select(col("q_id"), col("list_id"))
-    (q, probe)
-  }
-
   private val sqlProbe =
     s"""q AS (SELECT vec_id AS q_id, u AS qu FROM e
-       |  ORDER BY vec_id LIMIT 8),
+       |  ORDER BY vec_id LIMIT $nQueries),
        |probe AS (SELECT q_id, list_id FROM (
        |  SELECT q.q_id, c.list_id,
        |    row_number() OVER (PARTITION BY q.q_id
        |      ORDER BY ${sqlDot("q.qu", "c.cu")} DESC, c.list_id ASC) AS rn
-       |  FROM q CROSS JOIN cbn c) WHERE rn <= 2)"""
+       |  FROM q CROSS JOIN cbn c) WHERE rn <= $nprobe)"""
 
-  /** IVF-flat top-3 with the fixed codebook (probe 2 of 4 lists, exact
-    * cosine over the probed lists, ids tie-break) — the search body
-    * shared by `vec_ann_ivf_fixed` and `pipeline_semantic_search`. */
-  private def ivfFixedTop3(s: SparkSession, dir: String): DataFrame = {
-    val e = normed(s, dir)
-    val a = assign(e)
-    val (q, probe) = probeOf(e, coarseCb(s))
-    val wTop = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    broadcast(probe).join(a, "list_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(q), "q_id")
-      .withColumn("cos_sim", dot(col("qu"), col("u")))
-      .withColumn("rn", row_number().over(wTop).cast("long"))
-      .filter(col("rn") <= 3)
-      .select(col("q_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        col("list_id").cast("long").as("list_id"), col("cos_sim"))
-  }
-
-  /** Oracle CTE twins of [[ivfFixedTop3]] (`scored`, `ranked`); requires
+  /** Oracle CTE twins of [[ivfFixed]] (`scored`, `ranked`); requires
     * the normed/codebook/assign/probe CTEs in scope. */
   private def sqlIvfTop3Ctes: String =
     s"""scored AS (
@@ -238,7 +192,7 @@ object AnnFixed {
     // IVF-flat with the fixed codebook: probe 2 of 4 lists, exact cosine
     // over the probed lists' vectors, top-3 per query.
     Q("vec_ann_ivf_fixed",
-      (s, dir) => Det.orderedDomain(ivfFixedTop3(s, dir),
+      (s, dir) => Det.orderedDomain(ivfFixed(normed(s, dir)),
         col("q_id"), col("rn")),
       Some(sql(s"""WITH $sqlNormed,
         |$sqlCoarseCb,
@@ -261,7 +215,7 @@ object AnnFixed {
         val docs = Tables.table(s, dir, "documents")
           .select(col("doc_id").as("neighbor_id"), col("lang"),
             col("source"), col("n_chars"))
-        broadcast(ivfFixedTop3(s, dir))
+        broadcast(ivfFixed(normed(s, dir)))
           .join(docs, "neighbor_id")
           .select(col("q_id"), col("rn"), col("neighbor_id"),
             col("cos_sim"), col("lang"), col("source"), col("n_chars"))
@@ -282,7 +236,7 @@ object AnnFixed {
     // trusting an index (AnnRecallSpec guards the TRAINED keys in
     // ScalaTest; this key puts the same evaluation ALGEBRA under the
     // driver's hash gate). Ground truth is the exact top-3 by unit-vector
-    // dot (identical ranking to cosine), the candidate is ivfFixedTop3,
+    // dot (identical ranking to cosine), the candidate is ivfFixed,
     // and recall@3 = |gt ∩ ivf| / 3 per query. Both sides are
     // deterministic (fixed codebook, id tie-breaks), so the overlap count
     // is an exact integer and the only float emit is one long/double
@@ -292,8 +246,7 @@ object AnnFixed {
     Q("pipeline_eval_recall",
       (s, dir) => {
         val e = normed(s, dir)
-        val q = e.orderBy(col("vec_id")).limit(8)
-          .select(col("vec_id").as("q_id"), col("u").as("qu"))
+        val q = PipelineOps.queryVecs(e, nQueries)
         val wq = Window.partitionBy(col("q_id"))
           .orderBy(col("score").desc, col("vec_id").asc)
         val gt = e.crossJoin(broadcast(q))
@@ -302,7 +255,7 @@ object AnnFixed {
           .withColumn("rn", row_number().over(wq))
           .filter(col("rn") <= 3)
           .select(col("q_id"), col("vec_id"))
-        val ivf = ivfFixedTop3(s, dir)
+        val ivf = ivfFixed(e)
           .select(col("q_id"), col("neighbor_id").as("vec_id"))
         val hits = gt.join(ivf, Seq("q_id", "vec_id"))
           .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
@@ -338,59 +291,9 @@ object AnnFixed {
     // in fixed left-to-right order) build the ADC shortlist, top-20 per
     // query reranked by exact cosine, top-3 emitted.
     Q("vec_ann_ivfpq_fixed",
-      (s, dir) => {
-        import s.implicits._
-        val e = normed(s, dir)
-        val (q, probe) = probeOf(e, coarseCb(s))
-        // coarse list + all 4 PQ codes in ONE map-side projection over
-        // the literal codebooks — the production nearestListMap +
-        // pqCodeCols pair, exactly as ivfpqSearch composes them, so the
-        // oracle hash pins those helpers' argmax/argmin algebra.
-        val pqCb = pqCells.zipWithIndex
-          .map { case (cv, i) => (i / 4, i % 4, cv) }
-        val a = PipelineOps.pqCodeCols(assign(e)
-            .select(col("vec_id"), col("list_id"),
-              col("u").as("embedding")),
-          pqCb, 4, 4)
-          .drop("embedding" +: (0 until 4).map(j => s"cost$j"): _*)
-        // per-query flat LUT: entry sub·4+code = qu_sub · cv
-        val pcb = pqCb.toDF("sub", "code", "cv")
-        val lutArr = q.crossJoin(broadcast(pcb))
-          .withColumn("idx", col("sub") * 4 + col("code"))
-          .withColumn("lutval", dot(expr("slice(qu, sub * 16 + 1, 16)"),
-            col("cv")))
-          .groupBy(col("q_id"))
-          .agg(expr("""transform(
-            |  array_sort(collect_list(struct(idx, lutval))),
-            |  x -> x.lutval)""".stripMargin).as("la"))
-        val shortlist = broadcast(probe).join(a, "list_id")
-          .filter(col("vec_id") =!= col("q_id"))
-          .join(broadcast(lutArr), "q_id")
-          // fused ADC score — same algebra as the oracle's unrolled
-          // list_extract chain (see plans.AdcScore; r14 task 7)
-          .withColumn("approx_sim", call_function("graft_adc", col("la"),
-            array((0 until 4).map(j => col(s"c$j")): _*), lit(4)))
-          .withColumn("arn", row_number().over(
-            Window.partitionBy(col("q_id"))
-              .orderBy(col("approx_sim").desc, col("vec_id").asc)))
-          .filter(col("arn") <= 20)
-          .select(col("q_id"), col("vec_id"), col("list_id"),
-            col("approx_sim"))
-        val wTop = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos_sim").desc, col("vec_id").asc)
-        // shortlist (≤20 rows/query) broadcast by construction, so the
-        // rerank join can never shuffle the corpus by vec_id (ADVICE r7)
-        broadcast(shortlist)
-          .join(e, "vec_id")
-          .join(broadcast(q), "q_id")
-          .withColumn("cos_sim", dot(col("qu"), col("u")))
-          .withColumn("rn", row_number().over(wTop).cast("long"))
-          .filter(col("rn") <= 3)
-          .select(col("q_id"), col("rn"), col("vec_id").as("neighbor_id"),
-            col("list_id").cast("long").as("list_id"), col("approx_sim"),
-            col("cos_sim"))
-          .transform(df => Det.orderedDomain(df, col("q_id"), col("rn")))
-      },
+      (s, dir) => PipelineOps.ivfpqTop3(normed(s, dir), coarseCent, pqCb,
+          nprobe, m = 4, k = 4, nQueries, rerank = 20)
+        .transform(df => Det.orderedDomain(df, col("q_id"), col("rn"))),
       Some(sql(s"""WITH $sqlNormed,
         |$sqlCoarseCb,
         |$sqlAssign,
@@ -776,30 +679,17 @@ object AnnFixed {
     // PQ codes + per-subspace reconstruction error with the FIXED literal
     // codebook (VERDICT r7 task 6) — the hash-checked twin of
     // vec_pq_codes, whose trained codebook keeps it rows-only. Runs the
-    // PRODUCTION pqCodeCols helper (argmin = array_position of array_min
-    // → smallest code among cost ties) and the production err fold
-    // err_j = max(|x_j|² + (|c|² − 2x_j·c), 0) over the raw
-    // (float-widened) subvectors — every cost is a fold over identical
-    // doubles, |c|² folded driver-side in graft_dot's left-to-right
-    // order. With this, the last ANN-family stage whose only signal was
-    // the trained output (codes + err) fails the driver's hash gate on
-    // regression instead of only AnnRecallSpec.
+    // trained key's encoder, PipelineOps.pqEncode: argmin = array_position
+    // of array_min → smallest code among cost ties, and the error fold
+    // err_j = max(|x_j|² + (|c|² − 2x_j·c), 0) over the raw (float-widened)
+    // subvectors — every cost is a fold over identical doubles, |c|²
+    // folded in graft_dot's left-to-right order.
     Q("vec_pq_codes_fixed",
       (s, dir) => {
         graft.plans.GraftFunctions.register(s)
-        val pqCb = pqCells.zipWithIndex
-          .map { case (cv, i) => (i / 4, i % 4, cv) }
-        val e0 = Tables.table(s, dir, "embeddings")
-          .select(col("vec_id"),
-            transform(col("embedding"), x => x.cast("double"))
-              .as("embedding"))
-        var out = PipelineOps.pqCodeCols(e0, pqCb, 4, 4)
-        for (j <- 0 until 4) {
-          val sv = expr(s"slice(embedding, $j * 16 + 1, 16)")
-          out = out.withColumn(s"err$j",
-            greatest(dot(sv, sv) + col(s"cost$j"), lit(0.0)))
-        }
-        out.select(col("vec_id") +: (0 until 4).flatMap(j =>
+        PipelineOps.pqEncode(Tables.table(s, dir, "embeddings")
+            .select(col("vec_id"), col("embedding")), pqCb, 4, 4)
+          .select(col("vec_id") +: (0 until 4).flatMap(j =>
             Seq(col(s"c$j").cast("long").as(s"c$j"), col(s"err$j"))): _*)
           .orderBy(col("vec_id"))
       },

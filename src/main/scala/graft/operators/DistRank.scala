@@ -231,47 +231,6 @@ object DistRank {
     Ranked(withCums.drop("__mono"), rows, sums.toMap, maxes.toMap)
   }
 
-  /** Rank the SAME frame along several independent total orders in ONE
-    * two-phase pass (one exchange + one checkpoint + one ≤P-row stats
-    * collect, however many axes — each separate [[withRank]] call costs a
-    * whole driver job, which at fixture scale is pure dispatch-floor wall;
-    * events_rfm's recency+monetary axes fused this way cut the key from
-    * three rank jobs to two).
-    *
-    * Shape: the frame is unioned once per axis with the axis index as the
-    * LEADING range key, so every axis-i row ranks before every axis-(i+1)
-    * row and rank-within-axis = global rank − i·n (n = rows per axis,
-    * read off the same stats collect). The per-axis ranks are then pivoted
-    * back onto the original row — `groupBy(key).agg(max(when(axis=i, …)))`
-    * — one hash exchange on the key domain, never a single partition; the
-    * non-key columns ride the pivot as `max` of identical copies.
-    *
-    * Each axis supplies `(skey, outCol)`: a sort column normalized to
-    * ASCENDING whose type is IDENTICAL across axes (the union must not
-    * coerce — callers encode descending order by negation, exact for
-    * finite doubles and in-range longs) and the output rank column name.
-    * Ties break on `key`, which must be unique per row — the same strict-
-    * total-order requirement every rank here has. Output is bit-identical
-    * to axes.size separate unpartitioned `row_number` windows **provided
-    * every axis sort key is NON-NULL** — enforced at runtime by a
-    * per-row raise_error guard, because one fused sort cannot honor
-    * per-axis null placement (`(-c).asc` puts NULLs FIRST while `c.desc`
-    * puts them LAST — the r12 ADVICE divergence). Callers with nullable
-    * keys encode the placement explicitly, e.g.
-    * `-coalesce(c, lit(Double.NegativeInfinity))` reproduces
-    * `c.desc_nulls_last` (all-NULL rows tie and fall to the `key`
-    * tie-break, same as both engines' window forms).
-    *
-    * The trade, stated honestly: vs axes.size CHAINED [[withRank]] calls
-    * this exchanges ~2× the bytes for this segment (the union carries
-    * axes copies of the row through the range exchange, and the pivot
-    * re-exchanges them) but halves the sequential barrier rounds and
-    * driver jobs, and materializes ONE checkpoint instead of axes. Right
-    * when the frame is a narrow aggregate (events_rfm's per-user rows)
-    * where latency, not bytes, dominates; for a wide frame, chain
-    * [[withRank]] instead. Non-key columns must be max-orderable types
-    * (the pivot takes max over identical copies).
-    */
   /** Per-group row_number (1-based within each `group` value over `order`)
     * plus optionally the group's row count — the 100 TB replacement for
     * `row_number().over(Window.partitionBy(group).orderBy(order))` when
@@ -422,6 +381,50 @@ object DistRank {
       .drop("__mono")
   }
 
+  /** Rank the SAME frame along several independent total orders in ONE
+    * two-phase pass (one exchange + one checkpoint + one ≤P-row stats
+    * collect, however many axes — each separate [[withRank]] call costs a
+    * whole driver job, which at fixture scale is pure dispatch-floor wall;
+    * events_rfm's recency+monetary axes fused this way cut the key from
+    * three rank jobs to two).
+    *
+    * Shape: the frame is unioned once per axis with the axis index as the
+    * LEADING range key, so every axis-i row ranks before every axis-(i+1)
+    * row and rank-within-axis = global rank − i·n (n = rows per axis,
+    * read off the same stats collect). The per-axis ranks are then pivoted
+    * back onto the original row — `groupBy(key).agg(max(when(axis=i, …)))`
+    * — one hash exchange on the key domain, never a single partition; the
+    * non-key columns ride the pivot as `max` of identical copies.
+    *
+    * Each axis supplies `(skey, outCol)`: a sort column normalized to
+    * ASCENDING whose type is IDENTICAL across axes (the union must not
+    * coerce — callers encode descending order by negation, exact for
+    * finite doubles and in-range longs) and the output rank column name.
+    * Ties break on `key`, which must be unique per row — the same strict-
+    * total-order requirement every rank here has; enforced at runtime by
+    * a raise_error in the pivot aggregate (every key group must hold
+    * exactly axes.size rows), so a duplicated key fails instead of
+    * max-merging ranks. Output is bit-identical
+    * to axes.size separate unpartitioned `row_number` windows **provided
+    * every axis sort key is NON-NULL** — enforced at runtime by a
+    * per-row raise_error guard, because one fused sort cannot honor
+    * per-axis null placement (`(-c).asc` puts NULLs FIRST while `c.desc`
+    * puts them LAST — the r12 ADVICE divergence). Callers with nullable
+    * keys encode the placement explicitly, e.g.
+    * `-coalesce(c, lit(Double.NegativeInfinity))` reproduces
+    * `c.desc_nulls_last` (all-NULL rows tie and fall to the `key`
+    * tie-break, same as both engines' window forms).
+    *
+    * The trade, stated honestly: vs axes.size CHAINED [[withRank]] calls
+    * this exchanges ~2× the bytes for this segment (the union carries
+    * axes copies of the row through the range exchange, and the pivot
+    * re-exchanges them) but halves the sequential barrier rounds and
+    * driver jobs, and materializes ONE checkpoint instead of axes. Right
+    * when the frame is a narrow aggregate (events_rfm's per-user rows)
+    * where latency, not bytes, dominates; for a wide frame, chain
+    * [[withRank]] instead. Non-key columns must be max-orderable types
+    * (the pivot takes max over identical copies).
+    */
   def withRanksPivoted(df: DataFrame, key: String,
       axes: Seq[(Column, String)]): DataFrame = {
     // Guardrails (r12 ADVICE): the reserved working names must not collide
@@ -453,21 +456,18 @@ object DistRank {
       s"rows is not a multiple of ${axes.size} axes")
     val n = r.rows / axes.size
     val attrs = df.columns.filterNot(_ == key)
+    // `key` must be unique per input row or the pivot max-merges ranks
+    // into silently wrong output: each key group must hold exactly one
+    // row per axis. The count rides the pivot aggregate itself and guards
+    // every rank column, so the check costs no job.
+    val unique = count(lit(1)) === lit(axes.size.toLong)
     val aggs = attrs.map(c => max(col(c)).as(c)) ++
       axes.zipWithIndex.map { case ((_, out), i) =>
-        max(when(col("__axis") === i, col("__g") - lit(i * n))).as(out)
+        when(unique, max(when(col("__axis") === i, col("__g") - lit(i * n))))
+          .otherwise(raise_error(lit(s"withRanksPivoted: key '$key' is " +
+            "not unique per row")))
+          .as(out)
       }
-    val out = r.df.groupBy(col(key)).agg(aggs.head, aggs.tail: _*)
-    // `key` must be unique per input row or the pivot max-merges ranks
-    // into silently wrong output. A distinct-count proof costs a job, so
-    // it runs only under the debug flag; production callers rely on the
-    // documented contract (events_rfm's key is a groupBy(user_id) output,
-    // unique by construction).
-    if (sys.env.get("GRAFT_RANK_DEBUG").contains("1")) {
-      val distinct = out.count()
-      require(distinct == n, s"withRanksPivoted: key '$key' is not unique " +
-        s"per row ($distinct distinct keys vs $n rows per axis)")
-    }
-    out
+    r.df.groupBy(col(key)).agg(aggs.head, aggs.tail: _*)
   }
 }

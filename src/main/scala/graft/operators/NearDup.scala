@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Det, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -129,7 +129,7 @@ object NearDup {
       col("vec_id").as("b_id"), col("u").as("ub"))
     x.join(y, col("band") === col("y_band") && col("bsig") === col("y_bsig"))
       .select(col("band"), col("a_id"), col("b_id"),
-        call_function("graft_dot", col("ua"), col("ub")).as("cos_sim"))
+        Det.dot(col("ua"), col("ub")).as("cos_sim"))
   }
 
   /** Each unordered pair of one capped frame, once per shared band:

@@ -472,27 +472,25 @@ object PipelineOps {
     // broadcast-join it, never re-scanning the corpus; the CM guarantee
     // (est ≥ true, est ≤ true + εN w.h.p.) is unit-tested.
     Q("text_countmin_topk",
-      (s, dir) => countMinEstimates(s, dir,
-        depth = s.conf.get("graft.cm.depth", "2").toInt,
-        width = s.conf.get("graft.cm.width", "4096").toInt)
+      (s, dir) => countMinEstimates(s, dir, CmDepth, CmWidth)
         .orderBy(col("cm_est").desc, col("word").asc)
         .limit(20),
       Some(sql(s"""WITH tokens AS (
         |  SELECT unnest(string_split(text, ' ')) AS word FROM documents),
         |counters AS (
-        |  SELECT 0 AS row_id, (${sqlWh("'0|' || word")} % 4096) AS bucket,
+        |  SELECT 0 AS row_id, (${sqlWh("'0|' || word")} % $CmWidth) AS bucket,
         |    count(*)::BIGINT AS c
         |  FROM tokens GROUP BY 2
         |  UNION ALL
-        |  SELECT 1, (${sqlWh("'1|' || word")} % 4096), count(*)::BIGINT
+        |  SELECT 1, (${sqlWh("'1|' || word")} % $CmWidth), count(*)::BIGINT
         |  FROM tokens GROUP BY 2),
         |words AS (
         |  SELECT word, count(*)::BIGINT AS true_cnt
         |  FROM tokens GROUP BY word),
         |wb AS (
         |  SELECT word, true_cnt,
-        |    (${sqlWh("'0|' || word")} % 4096) AS b0,
-        |    (${sqlWh("'1|' || word")} % 4096) AS b1
+        |    (${sqlWh("'0|' || word")} % $CmWidth) AS b0,
+        |    (${sqlWh("'1|' || word")} % $CmWidth) AS b1
         |  FROM words)
         |SELECT word, true_cnt, least(c0.c, c1.c) AS cm_est,
         |  least(c0.c, c1.c) - true_cnt AS overcount
@@ -1584,34 +1582,18 @@ object PipelineOps {
         |FROM documents ORDER BY doc_id"""))),
   )
 
-  /** IVF(-flat) approximate nearest-neighbor search over a
-    * (vec_id, embedding) frame — shared by `vec_ann_ivf` and
-    * AnnRecallSpec's trained-vs-untrained comparison.
-    *
-    * Codebook training is deterministic k-means: init = the first
-    * `nlists` vectors by vec_id (seed-free, reproducible on any cluster),
-    * then `lloydIters` Lloyd iterations. Assignment is an argmax over the
-    * broadcast codebook via one hash agg (max of a (sim, -list) struct —
-    * no window sort); new centroids are exact-decimal means (components
-    * scaled by 2^53 and summed as DECIMAL(38,0), so the result is
-    * partition-order independent), then unit-normalized. Only the tiny
-    * (nlists × dim) codebook is ever collected to the driver per
-    * iteration — the standard k-means pattern (MLlib does the same);
-    * vectors never leave the executors. Lists that lose all members
-    * simply drop out of the codebook.
-    *
-    * Search: every vector joins its nearest list (inverted file); a query
-    * probes its `nprobe` nearest lists and ranks only those candidates —
-    * the probe-bounded scan that makes IVF linear-in-candidates at 100 TB
-    * instead of linear-in-corpus.
-    */
+  /** `text_countmin_topk`'s sketch shape: [[CmDepth]] hash rows ×
+    * [[CmWidth]] counters. The width is interpolated into the oracle SQL;
+    * the depth is its two spelled-out hash rows. Constants (`final val`,
+    * inlined), so `qs` reads them before this object's body runs. */
+  private[graft] final val CmDepth = 2
+  private[graft] final val CmWidth = 4096
+
   /** Count-min estimates over the token stream at a given (depth, width)
-    * — the parameterized core of `text_countmin_topk` (conf keys
-    * `graft.cm.depth` / `graft.cm.width`, defaults 2 × 4096 — the
-    * declared oracle SQL is the default-parameter twin) and of the
-    * property test sweeping (d, w) to retest the domination bound
-    * (VERDICT r3 task 6). Returns (word, true_cnt, cm_est, overcount),
-    * unfiltered. The counter table is depth × width cells built in one
+    * — the parameterized core of `text_countmin_topk` (at [[CmDepth]] ×
+    * [[CmWidth]]) and of the property test sweeping (d, w) to retest the
+    * domination bound (VERDICT r3 task 6). Returns (word, true_cnt,
+    * cm_est, overcount), unfiltered. The counter table is depth × width cells built in one
     * pass and broadcast back — queries never rescan the corpus. */
   private[graft] def countMinEstimates(
       s: SparkSession, dir: String, depth: Int, width: Int): DataFrame = {
@@ -2047,16 +2029,15 @@ object PipelineOps {
       cb: Seq[(Int, Int, Seq[Double])]): DataFrame = {
     import s.implicits._
     cb.toDF("csub", "code", "cv")
-      .withColumn("cnorm2", call_function("graft_dot", col("cv"), col("cv")))
+      .withColumn("cnorm2", dot(col("cv"), col("cv")))
   }
 
   /** Nearest centroid per (vector, subspace) against the broadcast
     * codebook: min (cost, code) struct via hash agg, where
     * cost = |c|² − 2x·c (equi-minimal with |x−c|²). */
   private def pqAssign(sub: DataFrame, cbDf: DataFrame): DataFrame = {
-    val dotc = (a: Column, b: Column) => call_function("graft_dot", a, b)
     sub.join(broadcast(cbDf), col("sub") === col("csub"))
-      .withColumn("cost", col("cnorm2") - lit(2.0) * dotc(col("sv"), col("cv")))
+      .withColumn("cost", col("cnorm2") - lit(2.0) * dot(col("sv"), col("cv")))
       .groupBy(col("vec_id"), col("sub"))
       .agg(min(struct(col("cost"), col("code"))).as("a"))
       .select(col("vec_id"), col("sub"), col("a.code").as("code"),
@@ -2155,9 +2136,7 @@ object PipelineOps {
       val cells = bySub(j).sortBy(_._2)
       require(cells.map(_._2) == (0 until k),
         s"PQ codebook not dense in sub $j")
-      val sv = expr(
-        s"slice(embedding, $j * (size(embedding) DIV $m) + 1, " +
-          s"size(embedding) DIV $m)")
+      val sv = subvec("embedding", j, m)
       // ONE graft_pq_costs node per subspace (|c|²−2c·v over the literal
       // codebook) instead of k unrolled graft_dot cells — same doubles
       // (the expression folds |c|² left-to-right exactly as the driver
@@ -2174,40 +2153,46 @@ object PipelineOps {
       }: _*)
   }
 
+  /** Column `arr`'s `j`-th of `m` equal subvectors (`j` an int or a
+    * column expression). */
+  private def subvec(arr: String, j: Any, m: Int): Column =
+    expr(s"slice($arr, $j * (size($arr) DIV $m) + 1, size($arr) DIV $m)")
+
+  /** PQ encode body: (vec_id, c0, err0, …, c{m-1}, err{m-1}) of a
+    * (vec_id, embedding) frame under codebook `cb` — the codes of
+    * [[pqCodeCols]] and each subspace's squared reconstruction error
+    * |x − c|² = |x|² + (|c|² − 2x·c), clamped at 0, in ONE map-side
+    * projection; both terms are per-row folds. Shared by [[pqCodes]]
+    * (trained codebook) and `vec_pq_codes_fixed` (literal codebook), so
+    * the fixed twin's oracle hash checks the trained key's encoder. */
+  private[operators] def pqEncode(e0: DataFrame,
+      cb: Seq[(Int, Int, Seq[Double])], m: Int, k: Int): DataFrame =
+    pqCodeCols(e0.select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("embedding")),
+      cb, m, k)
+      .select(col("vec_id") +: (0 until m).flatMap { j =>
+        val sv = subvec("embedding", j, m)
+        Seq(col(s"c$j"),
+          greatest(dot(sv, sv) + col(s"cost$j"), lit(0.0)).as(s"err$j"))
+      }: _*)
+
   /** Product-quantization codes over a (vec_id, embedding) frame — the
     * compression companion to [[ivfSearch]]. Each of `m` subspaces trains
     * a `k`-centroid codebook by the same deterministic k-means recipe
     * (init = the first k vectors' subvectors by vec_id, `iters` Lloyd
     * rounds of exact-decimal means — partition-order independent);
     * assignment minimizes squared L2 via the identity
-    * argmin_c |x−c|² = argmin_c (|c|² − 2x·c), one codegen'd graft_dot
-    * pair per (vector, centroid), folded by a hash agg (min of a
-    * (cost, code) struct — no window sort). Output: one row per vector
-    * with `c0..c{m-1}` byte codes and `err0..err{m-1}` per-subspace
-    * squared reconstruction errors (per-row doubles from the same
-    * deterministic fold — no cross-row double accumulation anywhere).
-    * Codebooks are memoized by [[pqCodebook]] (train once, search
-    * many); only m·k·(d/m) doubles ever reach the driver. */
+    * argmin_c |x−c|² = argmin_c (|c|² − 2x·c). Output: [[pqEncode]]'s
+    * one row per vector with `c0..c{m-1}` byte codes and
+    * `err0..err{m-1}` per-subspace squared reconstruction errors
+    * (per-row doubles from the same deterministic fold — no cross-row
+    * double accumulation anywhere). Codebooks are memoized by
+    * [[pqCodebook]] (train once, search many); only m·k·(d/m) doubles
+    * ever reach the driver. */
   private[graft] def pqCodes(e0: DataFrame, m: Int, k: Int,
       iters: Int): DataFrame = {
-    val s = e0.sparkSession
-    graft.plans.GraftFunctions.register(s)
-    val dotc = (a: Column, b: Column) => call_function("graft_dot", a, b)
-    val cb = pqCodebook(e0, m, k, iters)
-    // single map-side projection: codes + per-subspace squared error
-    // |x − c|² = |x|² + (|c|² − 2x·c); both terms are per-row folds
-    var out = pqCodeCols(e0.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("embedding")),
-      cb, m, k)
-    for (j <- 0 until m) {
-      val sv = expr(s"slice(embedding, $j * (size(embedding) DIV $m) + 1," +
-        s" size(embedding) DIV $m)")
-      out = out.withColumn(s"err$j",
-        greatest(dotc(sv, sv) + col(s"cost$j"), lit(0.0)))
-    }
-    out.select(col("vec_id") +:
-        (0 until m).flatMap(j => Seq(col(s"c$j"), col(s"err$j"))): _*)
-      .orderBy(col("vec_id"))
+    graft.plans.GraftFunctions.register(e0.sparkSession)
+    pqEncode(e0, pqCodebook(e0, m, k, iters), m, k).orderBy(col("vec_id"))
   }
 
   /** A train-once/search-many memo: `apply(s, key)(train)` runs `train`
@@ -2256,7 +2241,6 @@ object PipelineOps {
     * fixed-codebook twins in [[AnnFixed]]. */
   private[operators] def normFrame(e0: DataFrame): DataFrame = {
     graft.plans.GraftFunctions.register(e0.sparkSession)
-    val dotc = (a: Column, b: Column) => call_function("graft_dot", a, b)
     // The norm is computed ONCE per row, OUTSIDE the transform lambda
     // (r14, VERDICT r13 task 7): an ArrayTransform lambda body is
     // evaluated per ELEMENT on the interpreted expression path — with
@@ -2271,7 +2255,7 @@ object PipelineOps {
     // semantic-dedup/search keys built on this frame.
     e0.select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
-      .withColumn("__n", sqrt(dotc(col("v"), col("v"))))
+      .withColumn("__n", sqrt(dot(col("v"), col("v"))))
       .withColumn("u", transform(col("v"), x => x / col("__n")))
       .select(col("vec_id"), col("u"))
   }
@@ -2355,7 +2339,6 @@ object PipelineOps {
   private[graft] def trainCoarse(e0: DataFrame, nlists: Int,
       lloydIters: Int): Seq[(Long, Seq[Double])] = {
     val s = e0.sparkSession
-    val dotc = (a: Column, b: Column) => call_function("graft_dot", a, b)
     val P53 = 9007199254740992.0 // 2^53
     codebookMemo(s, (planKey(e0), nlists, lloydIters))(
         TrainClock.timed("kmeans_coarse") {
@@ -2390,7 +2373,7 @@ object PipelineOps {
           .select(col("list_id"), expr("transform(pc, x -> x.c)").as("cv"))
           // norm outside the lambda (r14, see normFrame) — domain-sized
           // frame, fixed for consistency with the corpus-sized sites
-          .withColumn("__n", sqrt(dotc(col("cv"), col("cv"))))
+          .withColumn("__n", sqrt(dot(col("cv"), col("cv"))))
           .withColumn("cu", transform(col("cv"), x => x / col("__n")))
           .select(col("list_id"), col("cu"))
           .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
@@ -2401,40 +2384,82 @@ object PipelineOps {
     })
   }
 
-  private[graft] def ivfSearch(e0: DataFrame, nlists: Int, nprobe: Int,
-      lloydIters: Int, nQueries: Int): DataFrame = {
-    val s = e0.sparkSession
-    graft.plans.GraftFunctions.register(s)
-    val dotc = (a: Column, b: Column) => call_function("graft_dot", a, b)
-    val e = normFrame(e0)
-    val cent = trainCoarse(e0, nlists, lloydIters)
-
-    // map-side assignment carries u through, so the corpus is never
-    // shuffled: the probe join broadcasts the tiny probe side and the
-    // per-query top-k prunes map-side (WindowGroupLimit) before its
-    // k×queries-row exchange
-    val assign = nearestListMap(e, cent)
-    // query set = the first nQueries vectors BY ORDER of vec_id (never
-    // `vec_id < n`, which assumes dense 0-based ids — the PQ-init lesson)
-    val qProbe = e.orderBy(col("vec_id")).limit(nQueries)
+  /** The query set of every IVF search: the first `nQueries` vectors of
+    * a [[normFrame]] BY ORDER of vec_id (never `vec_id < n`, which
+    * assumes dense 0-based ids — the PQ-init lesson), as (q_id, qu). */
+  private[operators] def queryVecs(e: DataFrame, nQueries: Int): DataFrame =
+    e.orderBy(col("vec_id")).limit(nQueries)
       .select(col("vec_id").as("q_id"), col("u").as("qu"))
-      .crossJoin(broadcast(centFrameOf(s, cent)))
-      .withColumn("sim", dotc(col("qu"), col("cu")))
+
+  /** (q_id, qu, list_id): each query's `nprobe` nearest coarse lists by
+    * cosine, ties to the smallest list_id. */
+  private def probes(qs: DataFrame, cent: Seq[(Long, Seq[Double])],
+      nprobe: Int): DataFrame =
+    qs.crossJoin(broadcast(centFrameOf(qs.sparkSession, cent)))
+      .withColumn("sim", dot(col("qu"), col("cu")))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("q_id"))
           .orderBy(col("sim").desc, col("list_id").asc)))
       .filter(col("rn") <= nprobe)
       .select(col("q_id"), col("qu"), col("list_id"))
-    val wTop = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    broadcast(qProbe).join(assign, "list_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos_sim", dotc(col("qu"), col("u")))
-      .withColumn("rn", row_number().over(wTop).cast("long"))
+
+  /** Exact rerank: the top 3 candidates per query by cosine `qu`·`u`,
+    * ties to the smallest vec_id, as (q_id, rn, neighbor_id, list_id,
+    * carry…, cos_sim). */
+  private def top3(cand: DataFrame, carry: String*): DataFrame =
+    cand.withColumn("cos_sim", dot(col("qu"), col("u")))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("q_id"))
+          .orderBy(col("cos_sim").desc, col("vec_id").asc)).cast("long"))
       .filter(col("rn") <= 3)
-      .select(col("q_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        col("list_id").cast("long").as("list_id"), col("cos_sim"))
-      .transform(df => Det.orderedDomain(df, col("q_id"), col("rn")))
+      .select(Seq(col("q_id"), col("rn"), col("vec_id").as("neighbor_id"),
+        col("list_id").cast("long").as("list_id")) ++ carry.map(col) :+
+        col("cos_sim"): _*)
+
+  /** IVF-flat search body over a [[normFrame]] `e` and coarse codebook
+    * `cent`: every vector maps to its nearest list, each of the first
+    * `nQueries` vectors probes its `nprobe` nearest lists, and the probed
+    * candidates (the query itself excluded) rank by exact cosine — top 3
+    * per query, unordered. Shared by [[ivfSearch]] (trained codebook) and
+    * the fixed-codebook keys in [[AnnFixed]], whose oracle hash checks
+    * this body.
+    *
+    * Map-side assignment carries u through, so the corpus is never
+    * shuffled: the query vector rides the tiny broadcast probe rows, and
+    * the per-query top-k prunes map-side (WindowGroupLimit) before its
+    * k×queries-row exchange. */
+  private[operators] def ivfTop3(e: DataFrame,
+      cent: Seq[(Long, Seq[Double])], nprobe: Int,
+      nQueries: Int): DataFrame =
+    top3(broadcast(probes(queryVecs(e, nQueries), cent, nprobe))
+      .join(nearestListMap(e, cent), "list_id")
+      .filter(col("vec_id") =!= col("q_id")))
+
+  /** IVF(-flat) approximate nearest-neighbor search over a
+    * (vec_id, embedding) frame — shared by `vec_ann_ivf` and
+    * AnnRecallSpec's trained-vs-untrained comparison.
+    *
+    * Codebook training is deterministic k-means: init = the first
+    * `nlists` vectors by vec_id (seed-free, reproducible on any cluster),
+    * then `lloydIters` Lloyd iterations. Assignment is the map-side
+    * argmax of [[nearestListMap]]; new centroids are exact-decimal means
+    * (components scaled by 2^53 and summed as DECIMAL(38,0), so the
+    * result is partition-order independent), then unit-normalized. Only the tiny
+    * (nlists × dim) codebook is ever collected to the driver per
+    * iteration — the standard k-means pattern (MLlib does the same);
+    * vectors never leave the executors. Lists that lose all members
+    * simply drop out of the codebook.
+    *
+    * Search is [[ivfTop3]]: every vector joins its nearest list (inverted
+    * file); a query probes its `nprobe` nearest lists and ranks only
+    * those candidates — the probe-bounded scan that makes IVF
+    * linear-in-candidates at 100 TB instead of linear-in-corpus.
+    */
+  private[graft] def ivfSearch(e0: DataFrame, nlists: Int, nprobe: Int,
+      lloydIters: Int, nQueries: Int): DataFrame = {
+    graft.plans.GraftFunctions.register(e0.sparkSession)
+    ivfTop3(normFrame(e0), trainCoarse(e0, nlists, lloydIters), nprobe,
+      nQueries).transform(df => Det.orderedDomain(df, col("q_id"), col("rn")))
   }
 
   /** IVF-PQ search (Jégou et al., PAMI 2011): coarse IVF lists bound the
@@ -2447,25 +2472,39 @@ object PipelineOps {
     * cosine directly (no-residual IVFPQ — the FAISS
     * `encode_residual=false` variant; residual encoding would sharpen
     * approx scores but couples the two codebooks). approx_sim sums the m
-    * LUT entries in fixed expression order — deterministic. Recall vs
-    * the exact-ranked IVF-flat at identical (nlists, nprobe) is measured
-    * in AnnRecallSpec; approximation error is PQ's documented trade → no
-    * oracle (D3). */
+    * LUT entries in fixed expression order — deterministic. Trains both
+    * codebooks, then runs [[ivfpqTop3]]. Recall vs the exact-ranked
+    * IVF-flat at identical (nlists, nprobe) is measured in
+    * AnnRecallSpec; trained codebooks are engine-derived doubles → no
+    * oracle (D3), but `vec_ann_ivfpq_fixed`'s oracle checks the body. */
   private[graft] def ivfpqSearch(e0: DataFrame, nlists: Int, nprobe: Int,
       m: Int, k: Int, iters: Int, nQueries: Int,
       rerank: Int = 128): DataFrame = {
-    val s = e0.sparkSession
-    graft.plans.GraftFunctions.register(s)
-    val dotc = (a: Column, b: Column) => call_function("graft_dot", a, b)
+    graft.plans.GraftFunctions.register(e0.sparkSession)
     val e = normFrame(e0)
-    val cent = trainCoarse(e0, nlists, iters)
+    ivfpqTop3(e, trainCoarse(e0, nlists, iters),
+      pqCodebook(e.select(col("vec_id"), col("u").as("embedding")), m, k,
+        iters), nprobe, m, k, nQueries, rerank)
+      .transform(df => Det.orderedDomain(df, col("q_id"), col("rn")))
+  }
 
+  /** IVF-PQ search body over a [[normFrame]] `e`, coarse codebook `cent`
+    * and dense PQ codebook `pqCb` (m subspaces × k codes): probe as in
+    * [[ivfTop3]], score the probed candidates by ADC over a per-query
+    * lookup table, keep the top `rerank` per query, rerank those by exact
+    * cosine — top 3 per query, unordered, with (approx_sim, cos_sim).
+    * Shared by [[ivfpqSearch]] (trained codebooks, depth 128) and
+    * `vec_ann_ivfpq_fixed` (literal codebooks, depth 20), whose oracle
+    * hash checks this body. */
+  private[operators] def ivfpqTop3(e: DataFrame,
+      cent: Seq[(Long, Seq[Double])], pqCb: Seq[(Int, Int, Seq[Double])],
+      nprobe: Int, m: Int, k: Int, nQueries: Int,
+      rerank: Int): DataFrame = {
     // ONE map-side projection computes the coarse list AND the m PQ
     // codes per row (both codebooks are driver-side literals): the
     // corpus is never shuffled anywhere in this search — candidates
     // flow scan → broadcast-probe join → LUT lookups → map-side-pruned
     // shortlist window.
-    val eNorm = e.select(col("vec_id"), col("u").as("embedding"))
     // Codes pack into ONE array column at assignment (r15): relaying one
     // array through the scoring joins instead of m int columns — same
     // values, marginally less consume plumbing on the fallback path.
@@ -2484,42 +2523,25 @@ object PipelineOps {
     // frame materializes corpus-sized state.
     val assign = pqCodeCols(nearestListMap(e, cent)
         .select(col("vec_id"), col("list_id"), col("u").as("embedding")),
-      pqCodebook(eNorm, m, k, iters), m, k)
+      pqCb, m, k)
       .select(col("vec_id"), col("list_id"),
         array((0 until m).map(j => col(s"c$j")): _*).as("codes"))
-
-    val qs = e.orderBy(col("vec_id")).limit(nQueries)
-      .select(col("vec_id").as("q_id"), col("u").as("qu"))
-    // probe rows carry only (q_id, list_id): the 64-double query vector
-    // must NOT fan out over every candidate — it re-joins from the tiny
-    // broadcast qs frame for the <=20 reranked rows per query
-    val qProbe = qs.crossJoin(broadcast(centFrameOf(s, cent)))
-      .withColumn("sim", dotc(col("qu"), col("cu")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("sim").desc, col("list_id").asc)))
-      .filter(col("rn") <= nprobe)
-      .select(col("q_id"), col("list_id"))
-
+    val qs = queryVecs(e, nQueries)
+    // probe rows carry only (q_id, list_id): the query vector must NOT
+    // fan out over every candidate — it re-joins from the tiny broadcast
+    // qs frame for the reranked rows only
+    val qProbe = probes(qs, cent, nprobe).select(col("q_id"), col("list_id"))
     // per-query LUT: nQueries × m × k partial dot products — tiny, and
-    // the only place query subvectors meet centroids
-    val lut = qs.crossJoin(broadcast(pqCbFrame(s, pqCodebook(eNorm, m, k,
-        iters)).select(col("csub"), col("code"), col("cv"))))
-      .withColumn("lutval", dotc(expr(
-        s"slice(qu, csub * (size(qu) DIV $m) + 1, size(qu) DIV $m)"),
-        col("cv")))
-      .select(col("q_id"), col("csub"), col("code"), col("lutval"))
-
-    // One flat m·k LUT array per query (sorted by csub·k+code, so
-    // collect order cannot matter) — scoring is then ONE broadcast join
-    // plus m codegen'd element_at lookups, not m chained joins.
-    val lutArr = lut.groupBy(col("q_id"))
+    // the only place query subvectors meet centroids. One flat m·k array
+    // per query (sorted by csub·k+code, so collect order cannot matter):
+    // scoring is then ONE broadcast join plus one graft_adc loop, not m
+    // chained joins.
+    val lutArr = qs.crossJoin(broadcast(pqCbFrame(e.sparkSession, pqCb)))
+      .withColumn("lutval", dot(subvec("qu", "csub", m), col("cv")))
+      .groupBy(col("q_id"))
       .agg(expr(s"""transform(
         |  array_sort(collect_list(struct(csub * $k + code AS idx, lutval))),
         |  x -> x.lutval)""".stripMargin).as("lutarr"))
-    val cand = broadcast(qProbe).join(assign, "list_id")
-      .filter(col("vec_id") =!= col("q_id"))
-    val scored = cand.join(broadcast(lutArr), "q_id")
     // ADC shortlist → exact rerank (the production tail of IVF-PQ): the
     // LUT score is a shortlist builder, not the final ranking — the top
     // `rerank` approx candidates per query are reranked by exact cosine,
@@ -2534,9 +2556,11 @@ object PipelineOps {
     // fast execution path at m=8 (measured 25 s vs 1.5 s for the same
     // lookups behind a simple index on the 100×-grown candidate stream —
     // the whole 27 s "probe wall"); graft_adc is one small codegen'd
-    // loop, bit-identical (same j-ascending fold, same null semantics —
-    // see AdcScore's scaladoc; the fixed twin's oracle hash pins it).
-    val shortlist = scored
+    // loop, bit-identical to the oracle's unrolled list_extract chain
+    // (same j-ascending fold, same null semantics — see AdcScore).
+    val shortlist = broadcast(qProbe).join(assign, "list_id")
+      .filter(col("vec_id") =!= col("q_id"))
+      .join(broadcast(lutArr), "q_id")
       .withColumn("approx_sim", call_function("graft_adc", col("lutarr"),
         col("codes"), lit(k)))
       .withColumn("arn", row_number().over(
@@ -2545,22 +2569,13 @@ object PipelineOps {
       .filter(col("arn") <= rerank)
       .select(col("q_id"), col("vec_id"), col("list_id"),
         col("approx_sim"))
-    // broadcast the ≤20·nQueries-row shortlist by construction (ADVICE
-    // r7): without the hint the "corpus is never shuffled" contract held
-    // only because the fixture-scale corpus scan fell under the
-    // auto-broadcast threshold — at scale Spark could shuffle the whole
-    // corpus by vec_id here.
-    broadcast(shortlist)
+    // broadcast the ≤rerank·nQueries-row shortlist by construction
+    // (ADVICE r7): without the hint the "corpus is never shuffled"
+    // contract held only because the fixture-scale corpus scan fell under
+    // the auto-broadcast threshold — at scale Spark could shuffle the
+    // whole corpus by vec_id here.
+    top3(broadcast(shortlist)
       .join(e.select(col("vec_id"), col("u")), "vec_id")
-      .join(broadcast(qs), "q_id") // qu recovered for <=20 rows/query
-      .withColumn("cos_sim", dotc(col("qu"), col("u")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("cos_sim").desc, col("vec_id").asc)).cast("long"))
-      .filter(col("rn") <= 3)
-      .select(col("q_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        col("list_id").cast("long").as("list_id"), col("approx_sim"),
-        col("cos_sim"))
-      .transform(df => Det.orderedDomain(df, col("q_id"), col("rn")))
+      .join(broadcast(qs), "q_id"), "approx_sim")
   }
 }

@@ -27,16 +27,6 @@ object VecOps {
   /** embedding as array<double> (floats widen exactly; SURVEY §7.4 R4). */
   private def embD(c: Column): Column = transform(c, x => x.cast("double"))
 
-  /** Native fused-loop dot (graft.plans.DotProduct) — bit-identical to
-    * the HOF `aggregate(zip_with(...))` fold but a single codegen'd loop
-    * with no intermediate array. Callers register it per session first. */
-  private def dot(a: Column, b: Column): Column =
-    call_function("graft_dot", a, b)
-
-  private val sqlDot =
-    (a: String, b: String) =>
-      s"list_reduce(list_transform(list_zip($a, $b), p -> p[1] * p[2]), (x, y) -> x + y)"
-
   val qs: Seq[Q] = Seq(
     Q("vec_norms",
       (s, dir) => { graft.plans.GraftFunctions.register(s); Tables.table(s, dir, "embeddings") }

@@ -16,19 +16,10 @@ class NearDupPinSpec extends AnyFunSuite {
   import TestSpark._
   import ScaleGuardSpec.{writeDocs, writeEmbeddings}
   import LshSpec.refVec
+  import NearDupPinSpec.digest
 
   private val keys = Seq("text_minhash_neardup", "pipeline_dedup_keep",
     "pipeline_dedup_incremental", "vec_neardup_lsh")
-
-  /** (rows, sha-256 hex) of a key's output: each row is its cells joined
-    * by '|', the rendered rows sorted, then digested newline-terminated. */
-  private def digest(key: String, dir: String): (Long, String) = {
-    val rows = Registry.queries(key)(spark, dir).collect()
-      .map(_.toSeq.mkString("|")).sorted
-    val md = MessageDigest.getInstance("SHA-256")
-    rows.foreach(r => md.update((r + "\n").getBytes("UTF-8")))
-    (rows.length.toLong, md.digest().map(b => f"$b%02x").mkString)
-  }
 
   private def checkPins(dir: String,
       pins: Map[String, (Long, String)]): Unit = {
@@ -105,5 +96,17 @@ class NearDupPinSpec extends AnyFunSuite {
         "c8e6d8d4c5787af27bfb5a00045138b3465730d4d60476d22a0279096e6a9299"),
       "vec_neardup_lsh" -> (499516L,
         "9b0228cd974db9d3e301ec6ea05944bdcc5568985f24efe75950e6414dde5923")))
+  }
+}
+
+object NearDupPinSpec {
+  /** (rows, sha-256 hex) of a key's output: each row is its cells joined
+    * by '|', the rendered rows sorted, then digested newline-terminated. */
+  def digest(key: String, dir: String): (Long, String) = {
+    val rows = Registry.queries(key)(TestSpark.spark, dir).collect()
+      .map(_.toSeq.mkString("|")).sorted
+    val md = MessageDigest.getInstance("SHA-256")
+    rows.foreach(r => md.update((r + "\n").getBytes("UTF-8")))
+    (rows.length.toLong, md.digest().map(b => f"$b%02x").mkString)
   }
 }
