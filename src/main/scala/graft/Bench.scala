@@ -117,9 +117,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.create(sfDir, cpus.toInt)
-    // Native functions + rewrites active from the first warmup plan, so
-    // every timed query runs the same plan it ran during warmup.
-    plans.GraftFunctions.register(spark)
     // GRAFT_BENCH_ONLY=k1,k2 restricts to named keys for focused local
     // iteration. Unknown names fail loudly — a typo that silently benched
     // zero keys would exit 0 with an empty detail file. Parsed BEFORE the

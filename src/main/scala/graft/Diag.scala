@@ -222,7 +222,6 @@ object Diag {
     val keys = asked.filter(Bench.selectKeys(all, Some(asked.toSet), Set.empty))
     val spark = Sessions.create(sfDir,
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    plans.GraftFunctions.register(spark)
     try run(spark, keys, sfDir, runs, args.lift(3))
     finally spark.stop()
   }

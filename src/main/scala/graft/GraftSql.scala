@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SQL-first entry point: register every fixture table as a temp view
-  * (plus graft's native functions and optimizer rule) so a user can drive
+  * (plus graft's native extensions) so a user can drive
   * the whole engine through `spark.sql(...)` — the API surface for people
   * migrating SQL workloads rather than DataFrame code.
   *

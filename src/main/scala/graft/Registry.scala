@@ -24,11 +24,20 @@ object Registry {
       operators.MultiModal.qs ++
       functions.ExtOps.qs
 
+  /** Every key's build, each installing graft's native extensions
+    * ([[plans.GraftFunctions.register]]) on its session first: a key plans
+    * the same on a fresh session as after any other key, and every caller
+    * of the driver contract gets the native plans. */
   def queries: Map[String, (org.apache.spark.sql.SparkSession, String) =>
       org.apache.spark.sql.DataFrame] = {
     require(all.map(_.key).distinct.size == all.size,
       "duplicate query keys: " + all.map(_.key).diff(all.map(_.key).distinct))
-    all.map(q => q.key -> q.build).toMap
+    all.map { q =>
+      q.key -> ((s: org.apache.spark.sql.SparkSession, dir: String) => {
+        plans.GraftFunctions.register(s)
+        q.build(s, dir)
+      })
+    }.toMap
   }
 
   def oracleSql: Map[String, String] =

@@ -78,8 +78,8 @@ object Sessions {
 
   /** Build (or join — `getOrCreate` keeps an already-running session)
     * the session with [[confs]], at WARN with the benign warnings
-    * quieted. Native functions are NOT registered here: each main does
-    * that itself, and the test suites register per spec. */
+    * quieted. Native extensions are installed per build by
+    * [[Registry.queries]] (and by [[GraftSql.register]]), not here. */
   def create(sfDir: String, cpus: Int): SparkSession = {
     val spark = confs(sfDir, cpus)
       .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }

@@ -25,9 +25,6 @@ object Verify {
     val selected = Bench.selectKeys(SparkEntry.queries.keySet, only, exclude)
     val spark = Sessions.create(sfDir,
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    // Native functions + rewrites (graft_dot, TopKPerGroup) active for the
-    // whole run — plan choice must not depend on query iteration order.
-    plans.GraftFunctions.register(spark)
     new java.io.File(outDir).mkdirs()
     // Key-set manifest (VERDICT r8 missing #2): r08's fixture drift made 19
     // keys throw at plan time; the per-key catch below kept the dump alive

@@ -338,10 +338,15 @@ object Det {
   def sql(s: String): String = s.stripMargin.trim.replaceAll("\\s+", " ")
 
   /** Native fused-loop dot of two numeric arrays (graft.plans.DotProduct;
-    * callers register it per session first) — bit-identical to the HOF
-    * `aggregate(zip_with(...))` fold and to [[sqlDot]]: every form folds
-    * left to right, and floats widen to double exactly. */
+    * installed by [[Registry.queries]] before every build) — bit-identical
+    * to the HOF `aggregate(zip_with(...))` fold and to [[sqlDot]]: every
+    * form folds left to right, and floats widen to double exactly. */
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+
+  /** Exact float→double widening of an array column — the one spelling of
+    * the `transform` that `RewriteHofDotProduct` strips when it feeds
+    * [[dot]] directly. */
+  def widen(c: Column): Column = transform(c, x => x.cast("double"))
 
   /** DuckDB twin of [[dot]] for oracle SQL. */
   def sqlDot(a: String, b: String): String =

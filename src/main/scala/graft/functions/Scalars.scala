@@ -218,7 +218,7 @@ object Scalars {
 
     Q("scalar_array",
       (s, dir) => {
-        val embD = transform(col("embedding"), x => x.cast("double"))
+        val embD = Det.widen(col("embedding"))
         Tables.table(s, dir, "embeddings")
           .select(col("vec_id"),
             size(col("embedding")).cast("long").as("alen"),
@@ -242,7 +242,7 @@ object Scalars {
 
     Q("scalar_array_hof",
       (s, dir) => {
-        val embD = transform(col("embedding"), x => x.cast("double"))
+        val embD = Det.widen(col("embedding"))
         Tables.table(s, dir, "embeddings")
           .select(col("vec_id"),
             size(filter(embD, x => x > 0)).cast("long").as("n_pos"),

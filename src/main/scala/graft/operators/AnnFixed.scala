@@ -686,7 +686,6 @@ object AnnFixed {
     // folded in graft_dot's left-to-right order.
     Q("vec_pq_codes_fixed",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         PipelineOps.pqEncode(Tables.table(s, dir, "embeddings")
             .select(col("vec_id"), col("embedding")), pqCb, 4, 4)
           .select(col("vec_id") +: (0 until 4).flatMap(j =>
@@ -728,7 +727,6 @@ object AnnFixed {
     * shared by both self-join sides downstream, halving the corpus scans
     * vs a broadcast-keep formulation (measured r7). */
   private def srpCapped(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     srpCappedOf(Tables.table(s, dir, "embeddings"))
   }
 
@@ -744,7 +742,6 @@ object AnnFixed {
     * sides downstream, exactly like the full variants. */
   private def srpCappedWith(s: SparkSession, dir: String,
       cols: String*): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val docCols = Tables.table(s, dir, "documents")
       .select(col("doc_id").as("vec_id") +: cols.map(col): _*)
     srpCappedOf(Tables.table(s, dir, "embeddings")
@@ -774,7 +771,6 @@ object AnnFixed {
   private[graft] def srpCappedOf(e0: DataFrame,
       carry: Seq[String] = Nil,
       sizeOf: Option[DataFrame] = None): DataFrame = {
-    graft.plans.GraftFunctions.register(e0.sparkSession)
     val cc = carry.map(col)
     // width sizing counts the BARE corpus frame when the input is an
     // enrichment join (srpCappedWith): the join is 1:1 so the count is
@@ -783,7 +779,7 @@ object AnnFixed {
     val bits = srpBits(countOf(sizeOf.getOrElse(e0)))
     val e = e0
       .select(col("vec_id") +: cc :+
-        transform(col("embedding"), x => x.cast("double")).as("v"): _*)
+        Det.widen(col("embedding")).as("v"): _*)
       // norm OUTSIDE the lambda (r14): a transform lambda body runs on
       // the interpreted path PER ELEMENT — sqrt(dot) inside meant d
       // interpreted d-dim dots per row across all 7 SRP-banded corpus

@@ -2019,7 +2019,7 @@ object PipelineOps {
   /** (vec_id, sub, sv): each vector exploded into its m subvectors. */
   private def subFrame(e0: DataFrame, m: Int): DataFrame = e0
     .select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("v"))
+      Det.widen(col("embedding")).as("v"))
     .select(col("vec_id"), posexplode(expr(
       s"""transform(sequence(0, $m - 1),
          |  j -> slice(v, j * (size(v) DIV $m) + 1, size(v) DIV $m))"""
@@ -2049,7 +2049,6 @@ object PipelineOps {
   private[graft] def pqCodebook(e0: DataFrame, m: Int, k: Int,
       iters: Int): Seq[(Int, Int, Seq[Double])] = {
     val s = e0.sparkSession
-    graft.plans.GraftFunctions.register(s)
     val P53 = 9007199254740992.0 // 2^53
     pqMemo(s, (planKey(e0), m, k, iters))(TrainClock.timed("pq_codebook") {
       // Cap-bounded training subset (r16 — see [[trainSample]]): identity
@@ -2168,7 +2167,7 @@ object PipelineOps {
   private[operators] def pqEncode(e0: DataFrame,
       cb: Seq[(Int, Int, Seq[Double])], m: Int, k: Int): DataFrame =
     pqCodeCols(e0.select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("embedding")),
+        Det.widen(col("embedding")).as("embedding")),
       cb, m, k)
       .select(col("vec_id") +: (0 until m).flatMap { j =>
         val sv = subvec("embedding", j, m)
@@ -2191,7 +2190,6 @@ object PipelineOps {
     * ever reach the driver. */
   private[graft] def pqCodes(e0: DataFrame, m: Int, k: Int,
       iters: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(e0.sparkSession)
     pqEncode(e0, pqCodebook(e0, m, k, iters), m, k).orderBy(col("vec_id"))
   }
 
@@ -2240,7 +2238,6 @@ object PipelineOps {
     * plain dot product downstream. Shared by the IVF family and the
     * fixed-codebook twins in [[AnnFixed]]. */
   private[operators] def normFrame(e0: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(e0.sparkSession)
     // The norm is computed ONCE per row, OUTSIDE the transform lambda
     // (r14, VERDICT r13 task 7): an ArrayTransform lambda body is
     // evaluated per ELEMENT on the interpreted expression path — with
@@ -2254,7 +2251,7 @@ object PipelineOps {
     // same order — just not re-evaluated), pinned by the hash-checked
     // semantic-dedup/search keys built on this frame.
     e0.select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
+        Det.widen(col("embedding")).as("v"))
       .withColumn("__n", sqrt(dot(col("v"), col("v"))))
       .withColumn("u", transform(col("v"), x => x / col("__n")))
       .select(col("vec_id"), col("u"))
@@ -2457,7 +2454,6 @@ object PipelineOps {
     */
   private[graft] def ivfSearch(e0: DataFrame, nlists: Int, nprobe: Int,
       lloydIters: Int, nQueries: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(e0.sparkSession)
     ivfTop3(normFrame(e0), trainCoarse(e0, nlists, lloydIters), nprobe,
       nQueries).transform(df => Det.orderedDomain(df, col("q_id"), col("rn")))
   }
@@ -2480,7 +2476,6 @@ object PipelineOps {
   private[graft] def ivfpqSearch(e0: DataFrame, nlists: Int, nprobe: Int,
       m: Int, k: Int, iters: Int, nQueries: Int,
       rerank: Int = 128): DataFrame = {
-    graft.plans.GraftFunctions.register(e0.sparkSession)
     val e = normFrame(e0)
     ivfpqTop3(e, trainCoarse(e0, nlists, iters),
       pqCodebook(e.select(col("vec_id"), col("u").as("embedding")), m, k,

@@ -25,16 +25,14 @@ object VecOps {
   import Det._
 
   /** embedding as array<double> (floats widen exactly; SURVEY §7.4 R4). */
-  private def embD(c: Column): Column = transform(c, x => x.cast("double"))
-
   val qs: Seq[Q] = Seq(
     Q("vec_norms",
-      (s, dir) => { graft.plans.GraftFunctions.register(s); Tables.table(s, dir, "embeddings") }
+      (s, dir) => Tables.table(s, dir, "embeddings")
         .select(col("vec_id"), col("label").cast("long").as("label"),
           // raw float arrays feed the native dot directly (exact widening,
           // no HOF cast projection → stays in whole-stage codegen)
           sqrt(dot(col("embedding"), col("embedding"))).as("l2_norm"),
-          aggregate(embD(col("embedding")), lit(0.0), (a, x) => a + x)
+          aggregate(Det.widen(col("embedding")), lit(0.0), (a, x) => a + x)
             .as("comp_sum"))
         .orderBy(col("vec_id")),
       Some(sql(s"""SELECT vec_id, label::BIGINT AS label,
@@ -46,7 +44,6 @@ object VecOps {
     // Cosine of every vector against the vec_id=0 anchor, top 10.
     Q("vec_cosine_pairs",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val e = Tables.table(s, dir, "embeddings")
         val anchor = e.filter(col("vec_id") === 0)
           .select(col("embedding").as("av"))
@@ -78,9 +75,9 @@ object VecOps {
     // pos)` and folds identically.
     Q("vec_knn_per_label",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val e = Tables.table(s, dir, "embeddings")
-          .select(col("vec_id"), col("label"), embD(col("embedding")).as("v"))
+          .select(col("vec_id"), col("label"),
+            Det.widen(col("embedding")).as("v"))
         // Exact cross-row mean of float-derived comps: comp·2^53 is an
         // exact INTEGER double for every practical float (float mantissa
         // 24 bits), so the decimal cast has no rounding boundary at all —
@@ -151,7 +148,6 @@ object VecOps {
     // vec_ann_ivf and vec_neardup_lsh are its sublinear companions.
     Q("vec_ann_brute",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val e = Tables.table(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding").as("v"))
         // first 8 BY ORDER of vec_id, never `vec_id < n` (dense-id
@@ -217,10 +213,10 @@ object VecOps {
     // whose natural blocks exceed the cap.
     Q("vec_dedup_threshold",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val cap = 1000
         val e0 = Tables.table(s, dir, "embeddings")
-          .select(col("vec_id"), col("label"), embD(col("embedding")).as("v"))
+          .select(col("vec_id"), col("label"),
+            Det.widen(col("embedding")).as("v"))
         val e = e0
           .withColumn("rn", row_number().over(org.apache.spark.sql
             .expressions.Window.partitionBy(col("label"))
@@ -263,7 +259,6 @@ object VecOps {
     // bucket-cap bounds and near-dup recall are unit-tested instead).
     Q("vec_neardup_lsh",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         neardupLshPairs(
           Tables.table(s, dir, "embeddings").select(
             col("vec_id"), col("embedding")))
@@ -282,7 +277,7 @@ object VecOps {
     // nullif guard on both sides. Narrow single-scan projection.
     Q("vec_quantize_int8",
       (s, dir) => Tables.table(s, dir, "embeddings")
-        .withColumn("v", embD(col("embedding")))
+        .withColumn("v", Det.widen(col("embedding")))
         .withColumn("maxabs", array_max(transform(col("v"), x => abs(x))))
         .withColumn("qscale", lit(127.0) / nullif(col("maxabs"), lit(0.0)))
         .withColumn("q", transform(col("v"),
@@ -329,7 +324,6 @@ object VecOps {
     // already ships. Single-scan, no shuffle.
     Q("vec_matryoshka_prefix",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         def pnorm(d: Int) =
           sqrt(dot(slice(col("embedding"), 1, d),
             slice(col("embedding"), 1, d))).as(s"l2_d$d")
@@ -368,7 +362,7 @@ object VecOps {
       e: DataFrame, nBands: Int = 4, bitsPerBand: Int = 16,
       cap: Int = NearDup.Cap): DataFrame = {
     val bands = e
-      .select(col("vec_id"), embD(col("embedding")).as("v"))
+      .select(col("vec_id"), Det.widen(col("embedding")).as("v"))
       .withColumn("u", transform(col("v"),
         x => x / sqrt(dot(col("v"), col("v")))))
       .select(col("vec_id"), col("u"),

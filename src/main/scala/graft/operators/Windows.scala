@@ -261,7 +261,6 @@ object Windows {
     // declarative, results bit-identical (PlanSpec proves both).
     Q("topk_per_group",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val w = Window.partitionBy(col("o_custkey"))
           .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
         Tables.table(s, dir, "orders")

@@ -1,13 +1,12 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
 /** Native fused dot product over two array<double> columns.
   *
@@ -99,98 +98,51 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration of graft's native functions.
-  *
-  * Two paths: `GraftExtensions` for `spark.sql.extensions=`
-  * `graft.plans.GraftExtensions` at session build time, and
-  * [[GraftFunctions.register]] for an already-running session (idempotent;
-  * what [[graft.Registry]] queries use since they receive a live session).
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.dotDescriptor)
-    ext.injectFunction(GraftFunctions.matvecDescriptor)
-    ext.injectFunction(GraftFunctions.pqCostsDescriptor)
-    ext.injectFunction(GraftFunctions.srpDescriptor)
-    ext.injectFunction(GraftFunctions.adcDescriptor)
-    ext.injectOptimizerRule(_ => RewriteHofDotProduct)
-    ext.injectOptimizerRule(_ => RewriteTopKPerGroup)
-    ext.injectPlannerStrategy(_ => TopKStrategy)
-  }
-}
-
+/** The one install point for graft's native extensions: the five native
+  * functions, the two optimizer rules and the [[TopKStrategy]] planner
+  * strategy, added to an already-running session. Idempotent, so callers
+  * install before every build: [[graft.Registry.queries]] wraps each
+  * key's build with it and [[graft.GraftSql.register]] calls it for the
+  * SQL facade. The rules run last (`experimental.extraOptimizations`),
+  * after Spark's own `InferWindowGroupLimit`, so [[RewriteTopKPerGroup]]
+  * sees the `WindowGroupLimit` it rewrites. */
 object GraftFunctions {
-  private[plans] val dotDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1)))
+  private type Descriptor =
+    (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  private[plans] val matvecDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_matvec"),
-      new ExpressionInfo(classOf[MatVecDots].getName, "graft_matvec"),
-      (children: Seq[Expression]) => MatVecDots(children(0), children(1)))
+  private def descriptor(name: String, cls: Class[_])(
+      build: Seq[Expression] => Expression): Descriptor =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
 
-  private[plans] val pqCostsDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_pq_costs"),
-      new ExpressionInfo(classOf[PqCosts].getName, "graft_pq_costs"),
-      (children: Seq[Expression]) => PqCosts(children(0), children(1)))
+  private def litInt(fn: String, what: String)(e: Expression): Int = e match {
+    case Literal(v: Int, IntegerType) => v
+    case _ => throw new IllegalArgumentException(
+      s"$fn: $what must be an integer literal, got $e")
+  }
 
-  private[plans] val adcDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_adc"),
-      new ExpressionInfo(classOf[AdcScore].getName, "graft_adc"),
-      (children: Seq[Expression]) => {
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        import org.apache.spark.sql.types.IntegerType
-        val k = children(2) match {
-          case Literal(v: Int, IntegerType) => v
-          case e => throw new IllegalArgumentException(
-            s"graft_adc: k must be an integer literal, got $e")
-        }
-        AdcScore(children(0), children(1), k)
-      })
-
-  private[plans] val srpDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_srp_sig"),
-      new ExpressionInfo(classOf[SrpSignature].getName, "graft_srp_sig"),
-      (children: Seq[Expression]) => {
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        import org.apache.spark.sql.types.IntegerType
-        def litInt(e: Expression, what: String): Int = e match {
-          case Literal(v: Int, IntegerType) => v
-          case _ => throw new IllegalArgumentException(
-            s"graft_srp_sig: $what must be an integer literal, got $e")
-        }
-        SrpSignature(children(0), litInt(children(1), "nBands"),
-          litInt(children(2), "bitsPerBand"))
-      })
+  // vals, not defs: re-registering stores an equal (info, builder) pair,
+  // so Spark logs no "replaced a previously registered function" warning.
+  private val descriptors: Seq[Descriptor] = Seq(
+    descriptor("graft_dot", classOf[DotProduct])(c => DotProduct(c(0), c(1))),
+    descriptor("graft_matvec", classOf[MatVecDots])(
+      c => MatVecDots(c(0), c(1))),
+    descriptor("graft_pq_costs", classOf[PqCosts])(c => PqCosts(c(0), c(1))),
+    descriptor("graft_adc", classOf[AdcScore])(
+      c => AdcScore(c(0), c(1), litInt("graft_adc", "k")(c(2)))),
+    descriptor("graft_srp_sig", classOf[SrpSignature])(c =>
+      SrpSignature(c(0), litInt("graft_srp_sig", "nBands")(c(1)),
+        litInt("graft_srp_sig", "bitsPerBand")(c(2)))))
 
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      dotDescriptor._1, dotDescriptor._2, dotDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      matvecDescriptor._1, matvecDescriptor._2, matvecDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      pqCostsDescriptor._1, pqCostsDescriptor._2, pqCostsDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      srpDescriptor._1, srpDescriptor._2, srpDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      adcDescriptor._1, adcDescriptor._2, adcDescriptor._3)
-    // Running-session path for the optimizer rules and planner strategy
-    // (extensions can only be injected at session build time;
-    // experimental.extraOptimizations/extraStrategies work post-hoc).
-    if (!spark.experimental.extraOptimizations.contains(RewriteHofDotProduct))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteHofDotProduct
-    if (!spark.experimental.extraOptimizations.contains(RewriteTopKPerGroup))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteTopKPerGroup
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
+    descriptors.foreach { case (id, info, build) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
+    }
+    val exp = spark.experimental
+    Seq(RewriteHofDotProduct, RewriteTopKPerGroup).foreach { rule =>
+      if (!exp.extraOptimizations.contains(rule))
+        exp.extraOptimizations = exp.extraOptimizations :+ rule
+    }
+    if (!exp.extraStrategies.contains(TopKStrategy))
+      exp.extraStrategies = exp.extraStrategies :+ TopKStrategy
   }
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
   * the same left-to-right order, so the rewrite is value-preserving down
   * to the last bit — users keep writing the idiomatic declarative form and
   * the engine picks the fast path (SURVEY §4.3 escalation done as a
-  * `Rule[LogicalPlan]` + `SparkSessionExtensions` injection).
+  * `Rule[LogicalPlan]` installed by [[GraftFunctions.register]]).
   *
   * A second pattern strips exact-widening casts: `graft_dot` over
   * `transform(v, x -> cast(x as double))` of a float array reads the float

@@ -60,28 +60,17 @@ case class TopKPerGroup(
   * the heap's), matching partition/order specs on both nodes. */
 object RewriteTopKPerGroup extends Rule[LogicalPlan] {
 
-  /** The raw optimized shape the native operator serves. */
-  private[plans] object Shape {
-    def unapply(plan: LogicalPlan): Option[
-        (Seq[Expression], Seq[SortOrder], Int, Attribute, LogicalPlan)] =
-      plan match {
-        case Window(
-            Seq(alias @ Alias(WindowExpression(RowNumber(), _), _)),
-            part, order,
-            WindowGroupLimit(lPart, lOrder, _: RowNumber, k, child), _)
-          if part.length == lPart.length &&
-            part.zip(lPart).forall { case (a, b) => a.semanticEquals(b) } &&
-            order.length == lOrder.length &&
-            order.zip(lOrder).forall { case (a, b) => a.semanticEquals(b) } =>
-          Some((part, order, k, alias.toAttribute, child))
-        case _ => None
-      }
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case Shape(part, order, k, rankAttr, child)
-        if TopKPlanGuard.useNative(child) =>
-      TopKPerGroup(part, order, k, rankAttr, child)
+    case Window(
+        Seq(alias @ Alias(WindowExpression(RowNumber(), _), _)),
+        part, order,
+        WindowGroupLimit(lPart, lOrder, _: RowNumber, k, child), _)
+      if part.length == lPart.length &&
+        part.zip(lPart).forall { case (a, b) => a.semanticEquals(b) } &&
+        order.length == lOrder.length &&
+        order.zip(lOrder).forall { case (a, b) => a.semanticEquals(b) } &&
+        TopKPlanGuard.useNative(child) =>
+      TopKPerGroup(part, order, k, alias.toAttribute, child)
   }
 }
 
@@ -91,8 +80,9 @@ object RewriteTopKPerGroup extends Rule[LogicalPlan] {
   * Retained bytes per reduce partition are bounded by the child's total
   * bytes over the shuffle partition count (the partial phase only shrinks
   * the exchange), so when that estimate exceeds
-  * `graft.topk.maxFinalBytesPerPartition` (default 1 GiB) the rewrite and
-  * the strategy both decline and the stock sort-spill
+  * `graft.topk.maxFinalBytesPerPartition` (default 1 GiB) the rewrite
+  * declines — it is the only way a plan reaches [[TopKStrategy]], so the
+  * guard decides once — and the stock sort-spill
   * `WindowGroupLimit + Window` path plans instead — degraded throughput,
   * never an OOM. Leaf relations without real statistics default to
   * `spark.sql.defaultSizeInBytes` = Long.Max, which also falls back (safe
@@ -110,18 +100,6 @@ private[plans] object TopKPlanGuard {
 object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerGroup(part, order, k, rankAttr, child) =>
-      TopKFinalExec(part, order, k, rankAttr,
-        TopKPartialExec(part, order, k, planLater(child))) :: Nil
-    // The injectOptimizerRule extension point runs in the operator-
-    // optimization batch, BEFORE Spark's own InferWindowGroupLimit has
-    // created the WindowGroupLimit node — so on the
-    // spark.sql.extensions=GraftExtensions path the rewrite above never
-    // sees its pattern. Strategies always see the fully optimized plan,
-    // so the raw pair is matched here too; the logical-node path remains
-    // for the running-session route (experimental.extraOptimizations runs
-    // last) where the swap is visible in the optimized plan.
-    case RewriteTopKPerGroup.Shape(part, order, k, rankAttr, child)
-        if TopKPlanGuard.useNative(child) =>
       TopKFinalExec(part, order, k, rankAttr,
         TopKPartialExec(part, order, k, planLater(child))) :: Nil
     case _ => Nil

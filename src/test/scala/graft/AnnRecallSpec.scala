@@ -12,7 +12,6 @@ class AnnRecallSpec extends AnyFunSuite {
   import TestSpark._
 
   test("vec_ann_ivf recall@3 vs brute force beats chance on sf0.001") {
-    graft.plans.GraftFunctions.register(spark)
     val ann = Registry.queries("vec_ann_ivf")(spark, sf)
       .select(col("q_id"), col("neighbor_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -46,7 +45,6 @@ class AnnRecallSpec extends AnyFunSuite {
   }
 
   test("Lloyd training beats the untrained codebook on clustered data") {
-    graft.plans.GraftFunctions.register(spark)
     import spark.implicits._
     // 8 well-separated clusters: center c has a distinct dominant axis;
     // members are deterministic small perturbations of their center.
@@ -106,7 +104,6 @@ class AnnRecallSpec extends AnyFunSuite {
   }
 
   test("IVF-PQ tracks exact-ranked IVF-flat at the same probes") {
-    graft.plans.GraftFunctions.register(spark)
     val pq = Registry.queries("vec_ann_ivfpq")(spark, sf).collect()
     // shape: 3 neighbors per query, self excluded, approx_sim ~ cosine
     assert(pq.groupBy(_.getAs[Long]("q_id")).forall(_._2.length == 3))
@@ -144,7 +141,6 @@ class AnnRecallSpec extends AnyFunSuite {
     // neighbor can only be displaced by another true neighbor); IVF-PQ
     // can dip a whisker when a larger candidate pool displaces a true
     // neighbor from the ADC top-20 shortlist, so it gets a small epsilon.
-    graft.plans.GraftFunctions.register(spark)
     val sfBig = "/root/testdata/sf0.1"
     val e0 = Tables.table(spark, sfBig, "embeddings")
       .select(col("vec_id"), col("embedding"))
@@ -185,7 +181,6 @@ class AnnRecallSpec extends AnyFunSuite {
   }
 
   test("PQ codes: in range, complete, and Lloyd training cuts distortion") {
-    graft.plans.GraftFunctions.register(spark)
     val rows = Registry.queries("vec_pq_codes")(spark, sf).collect()
     val n = Tables.table(spark, sf, "embeddings").count()
     assert(rows.length.toLong === n, "one code row per vector")
@@ -213,7 +208,6 @@ class AnnRecallSpec extends AnyFunSuite {
   }
 
   test("PQ codebook stays dense on sparse offset ids and empty clusters") {
-    graft.plans.GraftFunctions.register(spark)
     // 3 vectors with sparse, offset ids: the old init (vec_id < k) would
     // seed 0 centroids here, and with k=16 > 3 vectors most clusters
     // receive no assignments — a codebook hole would shift every later

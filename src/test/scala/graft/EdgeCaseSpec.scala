@@ -118,7 +118,6 @@ class EdgeCaseSpec extends AnyFunSuite {
   }
 
   test("graft_dot matches HOF semantics on nulls and unequal lengths") {
-    graft.plans.GraftFunctions.register(spark)
     val schema = StructType(Seq(
       StructField("a", ArrayType(DoubleType)),
       StructField("b", ArrayType(DoubleType))))
@@ -146,7 +145,6 @@ class EdgeCaseSpec extends AnyFunSuite {
   }
 
   test("graft_dot rejects non-array arguments with a typed error") {
-    graft.plans.GraftFunctions.register(spark)
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       Tables.table(spark, sf, "embeddings")
         .select(call_function("graft_dot", col("vec_id"), col("embedding")))
@@ -269,7 +267,6 @@ class EdgeCaseSpec extends AnyFunSuite {
   }
 
   test("nearestListMap honors sparse list ids and smallest-id tie-break") {
-    graft.plans.GraftFunctions.register(spark)
     // Lloyd rounds can drop an unassigned list, so ids may be sparse
     // (0, 2, 5): the argmax POSITION must map through the id table —
     // the fixtures never exercise this, so pin it directly.
@@ -291,7 +288,6 @@ class EdgeCaseSpec extends AnyFunSuite {
   }
 
   test("codebook cache never aliases across input datasets (r8)") {
-    graft.plans.GraftFunctions.register(spark)
     // A parquet LogicalRelation's CANONICALIZED plan prints columns but
     // no file path, so structurally identical reads of two SF dirs render
     // the same string — the train-once memo must still train separately

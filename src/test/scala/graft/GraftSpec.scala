@@ -5,11 +5,16 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM, one Spark context), built
-  * with the mains' confs at 4 cores. GraftFunctions is NOT registered
-  * session-wide: the specs that need it register it themselves. */
+  * with the mains' confs at 4 cores and graft's native extensions
+  * installed once, so specs that build outside [[Registry.queries]] see
+  * the same session the registry's builds do. */
 object TestSpark {
   val sf = "/root/testdata/sf0.001"
-  lazy val spark: SparkSession = Sessions.create(sf, 4)
+  lazy val spark: SparkSession = {
+    val s = Sessions.create(sf, 4)
+    plans.GraftFunctions.register(s)
+    s
+  }
 }
 
 /** Every registered query runs, is non-empty (R6), and re-runs identically
@@ -158,6 +163,31 @@ class RegistrySpec extends AnyFunSuite {
       assert(r.getAs[Double]("avg_disc") >= 0
         && r.getAs[Double]("avg_disc") <= 1)
     }
+  }
+
+  test("every key plans the same on a fresh session as on TestSpark") {
+    // A key's plan must not depend on what ran before it: the driver
+    // builds keys through SparkEntry.queries on its own session, in its
+    // own order. A fresh newSession() has builtin functions only and no
+    // extra optimizer rules or strategies, so any key that plans
+    // differently there relies on an earlier key's side effects. Plans
+    // only: nothing is executed beyond what the builds themselves run.
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val helper = new AdaptiveSparkPlanHelper {}
+    val counted = Set("TopKFinal", "WindowGroupLimit", "graft_dot",
+      "graft_matvec", "graft_pq_costs", "graft_adc", "graft_srp_sig")
+    def shape(s: SparkSession, key: String): Map[String, Int] = {
+      val plan = Registry.queries(key)(s, sf).queryExecution.executedPlan
+      val nodes = helper.collectWithSubqueries(plan) { case p => p }
+      val names = nodes.map(_.nodeName) ++
+        nodes.flatMap(_.expressions.flatMap(_.collect { case e => e.prettyName }))
+      names.filter(counted).groupBy(identity).map { case (n, v) => n -> v.size }
+    }
+    val differing = Registry.all.map(_.key).flatMap { key =>
+      val (fresh, shared) = (shape(spark.newSession(), key), shape(spark, key))
+      if (fresh == shared) None else Some(s"$key: fresh $fresh vs shared $shared")
+    }
+    if (differing.nonEmpty) fail(differing.mkString("\n"))
   }
 }
 

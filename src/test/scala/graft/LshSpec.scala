@@ -15,7 +15,6 @@ class LshSpec extends AnyFunSuite {
   private val BITS = 16
 
   private def sigDf(vecs: Seq[(Long, Seq[Float])]) = {
-    graft.plans.GraftFunctions.register(spark)
     import spark.implicits._
     vecs.toDF("vec_id", "embedding")
       .select(col("vec_id"),
@@ -24,7 +23,6 @@ class LshSpec extends AnyFunSuite {
   }
 
   private def pairsOf(vecs: Seq[(Long, Seq[Float])], cap: Int) = {
-    graft.plans.GraftFunctions.register(spark)
     import spark.implicits._
     operators.VecOps.neardupLshPairs(
       vecs.toDF("vec_id", "embedding"), NB, BITS, cap)
@@ -59,7 +57,6 @@ class LshSpec extends AnyFunSuite {
   }
 
   test("graft_srp_sig null semantics: null element poisons the signature") {
-    graft.plans.GraftFunctions.register(spark)
     val df = spark.sql(
       s"""SELECT graft_srp_sig(array(CAST(1.0 AS DOUBLE), NULL), $NB, $BITS)
          |  AS sigs""".stripMargin)

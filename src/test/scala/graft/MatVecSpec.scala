@@ -12,7 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class MatVecSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
-  plans.GraftFunctions.register(spark)
 
   private val mat = Seq(
     Seq(1.0, 2.0, 3.0),

@@ -122,7 +122,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   // Runs `f` with the graft TopK rewrite/strategy stripped from the shared
-  // session, restoring them afterwards (register() is idempotent).
+  // session, restoring them afterwards. Builds inside `f` must not go
+  // through Registry.queries, which installs them again.
   private def withoutNativeTopK[T](f: => T): T = {
     val exp = spark.experimental
     val (prevO, prevS) = (exp.extraOptimizations, exp.extraStrategies)
@@ -250,7 +251,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("GLOBAL (unpartitioned) top-k gathers all tuples before the final heap") {
-    graft.plans.GraftFunctions.register(spark)
     def globalTopK() = {
       val w = org.apache.spark.sql.expressions.Window
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
@@ -268,21 +268,6 @@ class PlanSpec extends AnyFunSuite {
     assert(rows.map(_.getAs[Long]("rn")) === Seq(1L, 2L, 3L))
   }
 
-  test("TopKStrategy plans the raw optimized shape (extensions path)") {
-    // On the spark.sql.extensions path the injected optimizer rule runs
-    // before InferWindowGroupLimit, so the strategy must recognize the
-    // raw Window+WindowGroupLimit pair without the custom logical node.
-    val optimized = withoutNativeTopK { stockTopK().queryExecution.optimizedPlan }
-    // the planner applies strategies per node — hand it the Window node
-    val windows = optimized.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
-    }
-    assert(windows.nonEmpty, "precondition: stock plan keeps the Window node")
-    val planned = graft.plans.TopKStrategy(windows.head)
-    assert(planned.exists(_.toString.contains("TopKFinal")),
-      s"strategy must match the raw shape:\n${windows.head}")
-  }
-
   test("salted join shuffles on the salted key (ShuffledHashJoin)") {
     val df = Registry.queries("join_skew_salted")(spark, sf)
     val p = df.queryExecution.executedPlan.toString
@@ -291,9 +276,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("native TopKPerGroup also serves the dedup-latest (k=1) shape") {
-    graft.plans.GraftFunctions.register(spark)
+    // the key's raw build: Registry.queries would reinstall the strategy
     val stockRows = withoutNativeTopK {
-      Registry.queries("events_dedup_latest")(spark, sf).collect().toSeq
+      Registry.all.find(_.key == "events_dedup_latest").get.build(spark, sf)
+        .collect().toSeq
     }
     val native = Registry.queries("events_dedup_latest")(spark, sf)
     assert(native.queryExecution.executedPlan.toString.contains("TopKFinal"))
@@ -301,7 +287,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("ANN search never shuffles the corpus (map-side assignment)") {
-    graft.plans.GraftFunctions.register(spark)
     // The round-7 contract: nearest-list assignment is a projection over
     // literal centroids, so no exchange may partition on vec_id (the old
     // crossJoin+groupBy assignment exchanged one row per corpus vector),
@@ -405,7 +390,6 @@ class PlanSpec extends AnyFunSuite {
     // on the probe/shortlist side. If any of these joins were relying on
     // the planner's size estimate, this run would degrade to a sort-merge
     // join that shuffles the corpus by vec_id — the 100 TB failure mode.
-    graft.plans.GraftFunctions.register(spark)
     val conf = "spark.sql.autoBroadcastJoinThreshold"
     val saved = spark.conf.get(conf)
     try {
@@ -425,7 +409,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("vec_pq_codes is a single map-side projection (no joins/exchWide)") {
-    graft.plans.GraftFunctions.register(spark)
     val p = Registry.queries("vec_pq_codes")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!p.contains("hashpartitioning"), p.take(3000))
@@ -433,7 +416,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("vec_pq_codes_fixed keeps the map-side shape (sort is the only exchange)") {
-    graft.plans.GraftFunctions.register(spark)
     val p = Registry.queries("vec_pq_codes_fixed")(spark, sf)
       .queryExecution.executedPlan.toString
     // literal codebook ⇒ codes/errs are projections; only the output
@@ -443,7 +425,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("curate/semantic-dedup: no cartesian products, lang gate pushed to scan") {
-    graft.plans.GraftFunctions.register(spark)
     for (key <- Seq("pipeline_curate", "pipeline_dedup_semantic",
         "pipeline_dedup_semantic_incremental")) {
       val p = Registry.queries(key)(spark, sf)
@@ -462,7 +443,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("native graft_dot equals the HOF fold bit-for-bit") {
-    graft.plans.GraftFunctions.register(spark)
     val df = Tables.table(spark, sf, "embeddings")
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("v"))
@@ -474,7 +454,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("native graft_dot on raw float arrays stays in codegen (HOFs do not)") {
-    graft.plans.GraftFunctions.register(spark)
     val native = Tables.table(spark, sf, "embeddings")
       .select(call_function("graft_dot", col("embedding"), col("embedding"))
         .as("d"))
@@ -758,7 +737,6 @@ class PlanSpec extends AnyFunSuite {
     // any plan is built; register here too so the audited plans match the
     // production ones regardless of test ordering (an unregistered run
     // plans WindowExec where production plans TopKPartial/TopKFinal).
-    plans.GraftFunctions.register(spark)
     // Every fixture column whose value domain is a small constant set —
     // grows with NOTHING (not corpus volume, not calendar time). Keep in
     // sync with TESTDATA.md; names are unambiguous across tables.
@@ -909,7 +887,6 @@ class PlanSpec extends AnyFunSuite {
     // literal-only plans like graph_pagerank and mapPartitions keys
     // legitimately have no codegen stage).
     import org.apache.spark.sql.execution.SparkPlan
-    plans.GraftFunctions.register(spark)
     val LIMIT = Diag.JitLimit
     def executedPhysical(df: org.apache.spark.sql.DataFrame): SparkPlan = {
       df.queryExecution.toRdd.count() // materialize every adaptive stage

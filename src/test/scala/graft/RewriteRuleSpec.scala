@@ -17,7 +17,6 @@ class RewriteRuleSpec extends AnyFunSuite {
       .as("dot"))
 
   test("HOF dot idiom is rewritten to the native DotProduct") {
-    graft.plans.GraftFunctions.register(spark)
     val optimized = hofDot.queryExecution.optimizedPlan.toString
     assert(optimized.contains("graft_dot"), optimized.take(1500))
     // The widening-cast strip fires only when the transform is inline in
@@ -35,7 +34,6 @@ class RewriteRuleSpec extends AnyFunSuite {
   }
 
   test("rewrite is value-preserving bit-for-bit") {
-    graft.plans.GraftFunctions.register(spark)
     val rewritten = hofDot.collect().map(r => r.getLong(0) -> r.getDouble(1))
       .toMap
     // reference values computed with the rule disabled
@@ -50,7 +48,6 @@ class RewriteRuleSpec extends AnyFunSuite {
   }
 
   test("rule does not fire on non-dot folds (sum, sumsq)") {
-    graft.plans.GraftFunctions.register(spark)
     val df = Registry.queries("scalar_array_hof")(spark, sf)
     val optimized = df.queryExecution.optimizedPlan.toString
     assert(!optimized.contains("graft_dot"))

@@ -204,7 +204,6 @@ class ScaleGuardSpec extends AnyFunSuite {
     // engages the native heap operator, a 40× larger synthetic orders
     // table DECLINES under the same budget because its measured
     // stats/partition estimate crosses it (the production OOM valve).
-    graft.plans.GraftFunctions.register(spark)
     val dir = tmp("graft_sg_topk")
     val oSchema = StructType(Seq(
       StructField("o_orderkey", LongType, nullable = false),
