@@ -224,7 +224,7 @@ EXEMPT_UNROUNDED = {
     "vec_knn_per_label",   # fold over exact-decimal centroid components
     "vec_dedup_threshold", # fold of pre-normalized components
     "vec_ann_ivf_fixed",   # folds/sqrt over normalized vectors + an
-                           # exact-integer-formula codebook (AnnFixed)
+                           # exact-integer-formula codebook (Ann)
     "vec_ann_ivfpq_fixed", # same class; LUT sums in fixed l-to-r order
     "vec_neardup_srp_fixed",  # sign bits + folds over literal planes
     "pipeline_dedup_semantic",  # same SRP folds; 0.35 threshold compares
@@ -286,7 +286,7 @@ def audit(con, oracle):
     return fails
 
 
-# Mirror of PipelineOps.BPE_MAX_TYPES: the engine trains on the top-K
+# Mirror of Bpe.BPE_MAX_TYPES: the engine trains on the top-K
 # word types by (freq DESC, word ASC) — the deterministic
 # frequency-weighted sample (r13 scale shape). Every fixture/grown
 # vocabulary sits far below the cap, so the replay is over the full

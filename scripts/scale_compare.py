@@ -169,7 +169,7 @@ GROWN_OK = {
 
 # Exactness-tier budget — RETIRED in r16 (VERDICT r15 task 6). Its only
 # member, text_ngram_jaccard, was re-scoped with a per-shingle rank-64
-# candidate cap (PipelineOps.scala, oracle-mirrored): candidates are now
+# candidate cap (Dedup.scala, oracle-mirrored): candidates are now
 # C(64,2)-bounded per shingle and linear in distinct shingles, so the key
 # rejoined the generic gate (GROWN_OK cap-onset entry above) at every SF
 # and the >=100x sweep exclusions in scale_sweep.sh were removed. The

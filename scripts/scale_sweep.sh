@@ -35,7 +35,7 @@ if [ "$DETAIL" = "bench_detail.json" ]; then
 fi
 
 # Exactness-tier enforcement — RETIRED in r16 (VERDICT r15 task 6): the
-# per-shingle rank-64 candidate cap (PipelineOps text_ngram_jaccard,
+# per-shingle rank-64 candidate cap (Dedup text_ngram_jaccard,
 # oracle-mirrored) bounds the diagnostic's pairs at C(64,2) per shingle,
 # so the key is gate-includable at every SF and the >=100x auto-excludes
 # that used to live here are gone. The GRAFT_BENCH_EXCLUDE /

@@ -17,8 +17,11 @@ object Registry {
       operators.GraphOps.qs ++
       operators.TextOps.qs ++
       operators.VecOps.qs ++
-      operators.AnnFixed.qs ++
+      operators.Ann.qs ++
+      operators.Curate.qs ++
       operators.PipelineOps.qs ++
+      operators.Dedup.qs ++
+      operators.Bpe.qs ++
       operators.TypedOps.qs ++
       operators.Layouts.qs ++
       operators.MultiModal.qs ++

@@ -369,7 +369,7 @@ object Det {
 
 /** Write-once-then-read temp-parquet materialization, shared by every
   * operator that produces a dataset once per (application, input dir) and
-  * then only reads it (Layouts.partitionedDocs, PipelineOps
+  * then only reads it (Layouts.partitionedDocs, Dedup
   * .dedupClusterLabels). Holding the rule once matters: the two sites
   * had independently copied it, and both carried the same latent bug —
   * sanitizing the dir with `[^A-Za-z0-9] -> _` alone lets distinct dirs

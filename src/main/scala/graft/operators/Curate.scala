@@ -5,86 +5,21 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Fixed-codebook ANN twins, plus the fixed-plane SRP near-dup and curate
-  * keys built on the same normalized frame.
+/** Training-data curation over documents and their embeddings: the
+  * fixed-plane SRP banding (the hash-checked semantic near-dup candidate
+  * layer, built on literal hyperplanes), the quality/lang gate, and the
+  * keys composed from them — `vec_neardup_srp_fixed`, semantic dedup
+  * (full and incremental), curation (full and incremental),
+  * pretokenization, and n-gram and semantic benchmark decontamination.
   *
-  * The trained keys (`vec_ann_ivf`, `vec_ann_ivfpq`, `vec_pq_codes` in
-  * [[PipelineOps]]) learn their codebooks by k-means, whose centroids are
-  * engine-derived doubles, so they are rows-only by design (D3). Given a
-  * FIXED codebook the rest is deterministic: every score is a sequential
-  * fold over identical doubles (floats widen exactly; `graft_dot` and
-  * DuckDB's `list_reduce` fold left to right; sqrt and division are
-  * IEEE-correctly-rounded), and every ranking tie-breaks on an integer
-  * id. So the twins embed their codebooks as shared integer FORMULAS —
-  * the `scalar_trig` literal-table precedent (SURVEY §9):
-  *
-  *   coarse centroid l, component j (1-based):  (l·31 + j·17) mod 7 − 3
-  *   PQ cell (sub s, code c), component j:   ((s·5 + c·3 + j·11) mod 7 − 3)/8
-  *
-  * Small exact integers (and exact eighths), identical in both
-  * formulations; coarse centroids are unit-normalized on both sides.
-  *
-  * What is shared: for the ANN twins this file holds codebooks and
-  * oracle SQL only, no search or encode code. Each twin calls the body
-  * its trained key calls, with the literal codebooks in place of the
-  * trained ones:
-  *   - `vec_ann_ivf_fixed`, `pipeline_semantic_search` and
-  *     `pipeline_eval_recall` → [[PipelineOps.ivfTop3]] (probe window,
-  *     self-exclusion, exact top 3), as `vec_ann_ivf` does;
-  *   - `vec_ann_ivfpq_fixed` → [[PipelineOps.ivfpqTop3]] (LUT, ADC
-  *     shortlist at depth 20, exact rerank), as `vec_ann_ivfpq` does at
-  *     depth 128;
-  *   - `vec_pq_codes_fixed` → [[PipelineOps.pqEncode]] (codes and error
-  *     fold), as `vec_pq_codes` does.
-  * Under them sit [[PipelineOps.normFrame]], [[PipelineOps.nearestListMap]]
-  * and [[PipelineOps.pqCodeCols]]. So the DuckDB hash of a twin checks
-  * the trained key's search and encode code; only codebook training
-  * (`trainCoarse`, `pqCodebook`) stays outside the oracle, pinned by
-  * AnnPinSpec and graded for recall by AnnRecallSpec.
+  * Sign bits and cosines are left-to-right folds over identical doubles
+  * in both engines, and every threshold compares such a double or an
+  * exact integer, so each key here is hash-checked by its oracle SQL.
+  * Candidate pairs only ever come from capped (band, signature) buckets
+  * ([[NearDup]]), never all-pairs.
   */
-object AnnFixed {
+object Curate {
   import Det._
-
-  /** (vec_id, u) of the embeddings via [[PipelineOps.normFrame]]. */
-  private def normed(s: SparkSession, dir: String): DataFrame =
-    PipelineOps.normFrame(
-      Tables.table(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding")))
-
-  private val sqlNormed =
-    s"""e AS (SELECT vec_id,
-       |  list_transform(embedding::DOUBLE[],
-       |    x -> x / sqrt(${sqlDot("embedding::DOUBLE[]",
-                 "embedding::DOUBLE[]")})) AS u
-       |  FROM embeddings)"""
-
-  /** The 4 unit-normalized coarse centroids as (list_id, cu), computed
-    * DRIVER-SIDE from the integer formula: the fold runs left-to-right
-    * like graft_dot / list_reduce, and Math.sqrt / division are
-    * IEEE-correctly-rounded, so these doubles are bit-identical to both
-    * engines' in-plan normalization of the same integers. */
-  private val coarseCent: Seq[(Long, Seq[Double])] = (0 until 4).map { l =>
-    val cv = (1 to 64).map(j => ((l * 31 + j * 17) % 7 - 3).toDouble)
-    val n = math.sqrt(cv.foldLeft(0.0)((a, x) => a + x * x))
-    (l.toLong, cv.map(_ / n))
-  }
-
-  /** PQ codebook (sub, code, cell) for 4 subspaces × 4 codes: exact
-    * integers over 8 (a power of two), bit-identical to the oracle's
-    * in-SQL formula. */
-  private val pqCb: Seq[(Int, Int, Seq[Double])] =
-    for (s0 <- 0 until 4; c <- 0 until 4) yield
-      (s0, c, (1 to 16).map(j => ((s0 * 5 + c * 3 + j * 11) % 7 - 3) / 8.0))
-
-  /** The fixed keys' query set and probe depth. */
-  private val nQueries = 8
-  private val nprobe = 2
-
-  /** IVF-flat top-3 of the shared [[PipelineOps.ivfTop3]] body over the
-    * literal coarse codebook — `vec_ann_ivf_fixed`,
-    * `pipeline_semantic_search` and `pipeline_eval_recall`. */
-  private def ivfFixed(e: DataFrame): DataFrame =
-    PipelineOps.ivfTop3(e, coarseCent, nprobe, nQueries)
 
   /** 32 fixed SRP hyperplanes (2 bands × up to 16 bits — band `b` owns
     * planes b·16+i) for the hash-checked LSH twin: small exact integers
@@ -148,207 +83,7 @@ object AnnFixed {
       |  FROM (SELECT (count(*) - 1) // 8 AS m FROM embeddings))"""
       .stripMargin
 
-  private val sqlCoarseCb =
-    s"""cb AS (SELECT l AS list_id,
-       |  list_transform(generate_series(1, 64),
-       |    j -> ((l * 31 + j * 17) % 7 - 3)::DOUBLE) AS cv
-       |  FROM generate_series(0, 3) t(l)),
-       |cbn AS (SELECT list_id,
-       |  list_transform(cv, x -> x / sqrt(${sqlDot("cv", "cv")})) AS cu
-       |  FROM cb)"""
-
-  private val sqlAssign =
-    s"""assign AS (SELECT vec_id, list_id, u FROM (
-       |  SELECT e.vec_id, c.list_id, e.u,
-       |    row_number() OVER (PARTITION BY e.vec_id
-       |      ORDER BY ${sqlDot("e.u", "c.cu")} DESC, c.list_id ASC) AS rn
-       |  FROM e CROSS JOIN cbn c) WHERE rn = 1)"""
-
-  private val sqlProbe =
-    s"""q AS (SELECT vec_id AS q_id, u AS qu FROM e
-       |  ORDER BY vec_id LIMIT $nQueries),
-       |probe AS (SELECT q_id, list_id FROM (
-       |  SELECT q.q_id, c.list_id,
-       |    row_number() OVER (PARTITION BY q.q_id
-       |      ORDER BY ${sqlDot("q.qu", "c.cu")} DESC, c.list_id ASC) AS rn
-       |  FROM q CROSS JOIN cbn c) WHERE rn <= $nprobe)"""
-
-  /** Oracle CTE twins of [[ivfFixed]] (`scored`, `ranked`); requires
-    * the normed/codebook/assign/probe CTEs in scope. */
-  private def sqlIvfTop3Ctes: String =
-    s"""scored AS (
-       |  SELECT p.q_id, a.vec_id, a.list_id,
-       |    ${sqlDot("q.qu", "a.u")} AS cos_sim
-       |  FROM probe p JOIN assign a USING (list_id)
-       |  JOIN q ON q.q_id = p.q_id
-       |  WHERE a.vec_id <> p.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, list_id, cos_sim,
-       |    row_number() OVER (PARTITION BY q_id
-       |      ORDER BY cos_sim DESC, vec_id ASC) AS rn
-       |  FROM scored)""".stripMargin
-
   val qs: Seq[Q] = Seq(
-    // IVF-flat with the fixed codebook: probe 2 of 4 lists, exact cosine
-    // over the probed lists' vectors, top-3 per query.
-    Q("vec_ann_ivf_fixed",
-      (s, dir) => Det.orderedDomain(ivfFixed(normed(s, dir)),
-        col("q_id"), col("rn")),
-      Some(sql(s"""WITH $sqlNormed,
-        |$sqlCoarseCb,
-        |$sqlAssign,
-        |$sqlProbe,
-        |$sqlIvfTop3Ctes
-        |SELECT q_id, rn::BIGINT AS rn, vec_id AS neighbor_id,
-        |  list_id::BIGINT AS list_id, cos_sim
-        |FROM ranked WHERE rn <= 3 ORDER BY q_id, rn"""))),
-
-    // Semantic RETRIEVAL over documents (r8): the ANN search composed
-    // with its payload join — the read path of a RAG/doc-search system,
-    // and the reason the engine stores doc_id = vec_id. The tiny top-3
-    // result (24 rows) broadcasts against the documents scan, so
-    // retrieval adds ONE metadata scan and zero shuffles beyond the
-    // search itself; at 100 TB the payload fetch is a broadcast-hash
-    // probe of the result into the (column-pruned) documents table.
-    Q("pipeline_semantic_search",
-      (s, dir) => {
-        val docs = Tables.table(s, dir, "documents")
-          .select(col("doc_id").as("neighbor_id"), col("lang"),
-            col("source"), col("n_chars"))
-        broadcast(ivfFixed(normed(s, dir)))
-          .join(docs, "neighbor_id")
-          .select(col("q_id"), col("rn"), col("neighbor_id"),
-            col("cos_sim"), col("lang"), col("source"), col("n_chars"))
-          .transform(df => Det.orderedDomain(df, col("q_id"), col("rn")))
-      },
-      Some(sql(s"""WITH $sqlNormed,
-        |$sqlCoarseCb,
-        |$sqlAssign,
-        |$sqlProbe,
-        |$sqlIvfTop3Ctes
-        |SELECT r.q_id, r.rn::BIGINT AS rn, r.vec_id AS neighbor_id,
-        |  r.cos_sim, d.lang, d.source, d.n_chars
-        |FROM ranked r JOIN documents d ON d.doc_id = r.vec_id
-        |WHERE r.rn <= 3 ORDER BY r.q_id, rn"""))),
-
-    // Offline recall@3 evaluation of the IVF search against brute-force
-    // ground truth — the eval job every ANN deployment runs before
-    // trusting an index (AnnRecallSpec guards the TRAINED keys in
-    // ScalaTest; this key puts the same evaluation ALGEBRA under the
-    // driver's hash gate). Ground truth is the exact top-3 by unit-vector
-    // dot (identical ranking to cosine), the candidate is ivfFixed,
-    // and recall@3 = |gt ∩ ivf| / 3 per query. Both sides are
-    // deterministic (fixed codebook, id tie-breaks), so the overlap count
-    // is an exact integer and the only float emit is one long/double
-    // division. Cost shape: evaluating two methods inherently pays each
-    // method's corpus pass (one brute scoring scan + one assignment
-    // scan); the overlap join is 24×24 rows — broadcast, domain-sized.
-    Q("pipeline_eval_recall",
-      (s, dir) => {
-        val e = normed(s, dir)
-        val q = PipelineOps.queryVecs(e, nQueries)
-        val wq = Window.partitionBy(col("q_id"))
-          .orderBy(col("score").desc, col("vec_id").asc)
-        val gt = e.crossJoin(broadcast(q))
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("score", dot(col("qu"), col("u")))
-          .withColumn("rn", row_number().over(wq))
-          .filter(col("rn") <= 3)
-          .select(col("q_id"), col("vec_id"))
-        val ivf = ivfFixed(e)
-          .select(col("q_id"), col("neighbor_id").as("vec_id"))
-        val hits = gt.join(ivf, Seq("q_id", "vec_id"))
-          .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
-        q.select(col("q_id")).join(broadcast(hits), Seq("q_id"), "left")
-          .select(col("q_id"),
-            coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-            round(coalesce(col("n_hits"), lit(0L)).cast("double")
-              / lit(3.0).cast("double"), 6).as("recall_r6"))
-          .transform(df => Det.orderedDomain(df, col("q_id")))
-      },
-      Some(sql(s"""WITH $sqlNormed,
-        |$sqlCoarseCb,
-        |$sqlAssign,
-        |$sqlProbe,
-        |$sqlIvfTop3Ctes,
-        |gt AS (SELECT q_id, vec_id FROM (
-        |  SELECT q.q_id, e2.vec_id,
-        |    row_number() OVER (PARTITION BY q.q_id
-        |      ORDER BY ${sqlDot("q.qu", "e2.u")} DESC, e2.vec_id ASC) AS rn
-        |  FROM e e2 CROSS JOIN q WHERE e2.vec_id <> q.q_id) WHERE rn <= 3),
-        |hits AS (
-        |  SELECT g.q_id, count(*)::BIGINT AS n_hits
-        |  FROM gt g JOIN ranked i
-        |    ON i.q_id = g.q_id AND i.vec_id = g.vec_id AND i.rn <= 3
-        |  GROUP BY g.q_id)
-        |SELECT q.q_id, coalesce(h.n_hits, 0)::BIGINT AS n_hits,
-        |  round(CAST(coalesce(h.n_hits, 0) AS DOUBLE)
-        |    / CAST(3 AS DOUBLE), 6) AS recall_r6
-        |FROM q LEFT JOIN hits h USING (q_id) ORDER BY q_id"""))),
-
-    // IVF-PQ with both codebooks fixed: coarse probe bounds candidates,
-    // 4×4 PQ codes + a per-query flat LUT (sorted by sub·k+code, summed
-    // in fixed left-to-right order) build the ADC shortlist, top-20 per
-    // query reranked by exact cosine, top-3 emitted.
-    Q("vec_ann_ivfpq_fixed",
-      (s, dir) => PipelineOps.ivfpqTop3(normed(s, dir), coarseCent, pqCb,
-          nprobe, m = 4, k = 4, nQueries, rerank = 20)
-        .transform(df => Det.orderedDomain(df, col("q_id"), col("rn"))),
-      Some(sql(s"""WITH $sqlNormed,
-        |$sqlCoarseCb,
-        |$sqlAssign,
-        |$sqlProbe,
-        |pcb AS (SELECT s AS sub, c AS code,
-        |  list_transform(generate_series(1, 16),
-        |    j -> ((s * 5 + c * 3 + j * 11) % 7 - 3) / 8.0) AS cv
-        |  FROM generate_series(0, 3) ts(s)
-        |  CROSS JOIN generate_series(0, 3) tc(c)),
-        |sub AS (SELECT vec_id, s AS sub,
-        |  list_slice(u, s * 16 + 1, s * 16 + 16) AS sv
-        |  FROM e CROSS JOIN generate_series(0, 3) t(s)),
-        |costs AS (SELECT v.vec_id, v.sub, p.code,
-        |  ${sqlDot("p.cv", "p.cv")} - 2.0 * ${sqlDot("v.sv", "p.cv")}
-        |    AS cost
-        |  FROM sub v JOIN pcb p USING (sub)),
-        |codesl AS (SELECT vec_id, sub, code FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-        |    ORDER BY cost ASC, code ASC) AS rn FROM costs) WHERE rn = 1),
-        |codes AS (SELECT vec_id,
-        |  max(CASE WHEN sub = 0 THEN code END) AS c0,
-        |  max(CASE WHEN sub = 1 THEN code END) AS c1,
-        |  max(CASE WHEN sub = 2 THEN code END) AS c2,
-        |  max(CASE WHEN sub = 3 THEN code END) AS c3
-        |  FROM codesl GROUP BY vec_id),
-        |lut AS (SELECT q.q_id, p.sub * 4 + p.code AS idx,
-        |  ${sqlDot(
-             "list_slice(q.qu, p.sub * 16 + 1, p.sub * 16 + 16)", "p.cv")}
-        |    AS lutval
-        |  FROM q CROSS JOIN pcb p),
-        |lutarr AS (SELECT q_id, list(lutval ORDER BY idx) AS la
-        |  FROM lut GROUP BY q_id),
-        |scored AS (SELECT p.q_id, a.vec_id, a.list_id,
-        |  list_extract(la, 0 * 4 + c0 + 1) + list_extract(la, 1 * 4 + c1 + 1)
-        |  + list_extract(la, 2 * 4 + c2 + 1)
-        |  + list_extract(la, 3 * 4 + c3 + 1) AS approx_sim
-        |  FROM probe p JOIN assign a USING (list_id)
-        |  JOIN codes c ON c.vec_id = a.vec_id
-        |  JOIN lutarr l ON l.q_id = p.q_id
-        |  WHERE a.vec_id <> p.q_id),
-        |shortlist AS (SELECT q_id, vec_id, list_id, approx_sim FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY q_id
-        |    ORDER BY approx_sim DESC, vec_id ASC) AS arn
-        |  FROM scored) WHERE arn <= 20),
-        |rerank AS (SELECT s.q_id, s.vec_id, s.list_id, s.approx_sim,
-        |  ${sqlDot("q.qu", "e.u")} AS cos_sim
-        |  FROM shortlist s JOIN e ON e.vec_id = s.vec_id
-        |  JOIN q ON q.q_id = s.q_id),
-        |ranked AS (SELECT *, row_number() OVER (PARTITION BY q_id
-        |    ORDER BY cos_sim DESC, vec_id ASC) AS rn
-        |  FROM rerank)
-        |SELECT q_id, rn::BIGINT AS rn, vec_id AS neighbor_id,
-        |  list_id::BIGINT AS list_id, approx_sim, cos_sim
-        |FROM ranked WHERE rn <= 3 ORDER BY q_id, rn"""))),
-
     // Fixed-plane SRP-banded LSH near-dup pairs (the hash-checked twin
     // of vec_neardup_lsh, whose graft_srp_sig planes are engine-only):
     // 2 bands × srpBits(n) sign bits from the literal hyperplanes —
@@ -502,7 +237,7 @@ object AnnFixed {
           .localCheckpoint()
         val tokens = kept.select(col("doc_id"),
           posexplode(split(col("text"), " ")).as(Seq("pos", "word")))
-        val vocab = PipelineOps.vocabOfCounts(
+        val vocab = Bpe.vocabOfCounts(
           tokens.groupBy(col("word")).agg(count(lit(1)).as("cnt"))
             .localCheckpoint())
         val chunks = tokens.join(broadcast(vocab), "word")
@@ -637,6 +372,64 @@ object AnnFixed {
         |ANTI JOIN idrops USING (doc_id)
         |ORDER BY doc_id"""))),
 
+    // Benchmark decontamination: for every candidate training doc, how
+    // many of its distinct 5-gram shingles appear in the held-out
+    // "benchmark" set (docs from source='src1' stand in for the eval
+    // suite). The canonical pre-training hygiene pass: shingle-level
+    // n-gram overlap against the benchmark shingle dictionary via an
+    // equi-join — the benchmark dictionary is small and broadcastable at
+    // any corpus scale; candidate shingles stream past it. Left join so
+    // clean docs emit 0.
+    Q("text_contamination_ngrams",
+      (s, dir) => {
+        val docs = Tables.table(s, dir, "documents")
+        // raw (non-distinct) shingle stream — each branch dedups at its
+        // own granularity so the benchmark side pays one shuffle, not two
+        def shingles(d: org.apache.spark.sql.DataFrame) = d
+          .withColumn("w", split(col("text"), " "))
+          .filter(size(col("w")) >= 5)
+          .select(col("doc_id"), explode(expr(
+            """transform(sequence(1, size(w) - 4),
+              |  i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1),
+              |    element_at(w, i + 2), element_at(w, i + 3),
+              |    element_at(w, i + 4)))""".stripMargin)).as("sh"))
+        val bench = shingles(docs.filter(col("source") === "src1"))
+          .select(col("sh")).distinct()
+          .withColumn("hit", lit(1))
+        // single pass over the candidate shingles: total and contaminated
+        // counts from one broadcast left join (count(hit) skips nulls)
+        shingles(docs.filter(col("source") =!= "src1")).distinct()
+          .join(broadcast(bench), Seq("sh"), "left")
+          .groupBy(col("doc_id"))
+          .agg(count(lit(1)).as("n_shingles"),
+            count(col("hit")).as("n_contaminated"))
+          .withColumn("contamination_ratio",
+            col("n_contaminated").cast("double") / col("n_shingles"))
+          .orderBy(col("doc_id"))
+      },
+      Some(sql("""WITH sh AS (
+        |  SELECT DISTINCT doc_id, source,
+        |    ws[k] || ' ' || ws[k+1] || ' ' || ws[k+2] || ' ' || ws[k+3]
+        |      || ' ' || ws[k+4] AS sh
+        |  FROM (SELECT doc_id, source, ws,
+        |          unnest(generate_series(1, len(ws) - 4)) AS k
+        |        FROM (SELECT doc_id, source, string_split(text, ' ') AS ws
+        |              FROM documents)
+        |        WHERE len(ws) >= 5)),
+        |bench AS (SELECT DISTINCT sh FROM sh WHERE source = 'src1'),
+        |cand AS (SELECT doc_id, sh FROM sh WHERE source <> 'src1'),
+        |hits AS (
+        |  SELECT doc_id, count(*)::BIGINT AS n_contaminated
+        |  FROM cand SEMI JOIN bench USING (sh) GROUP BY doc_id),
+        |tot AS (SELECT doc_id, count(*)::BIGINT AS n_shingles
+        |        FROM cand GROUP BY doc_id)
+        |SELECT doc_id, n_shingles,
+        |  coalesce(n_contaminated, 0)::BIGINT AS n_contaminated,
+        |  (coalesce(n_contaminated, 0)::DOUBLE / n_shingles)
+        |    AS contamination_ratio
+        |FROM tot LEFT JOIN hits USING (doc_id)
+        |ORDER BY doc_id"""))),
+
     // Embedding-space benchmark decontamination (r8) — the semantic twin
     // of text_contamination_ngrams: n-gram overlap catches verbatim
     // leakage, but a paraphrased benchmark item only collides in
@@ -675,47 +468,6 @@ object AnnFixed {
         |  max(cos) AS max_bench_cos,
         |  (max(cos) >= 0.35) AS contaminated
         |FROM pairs GROUP BY doc_id ORDER BY doc_id"""))),
-
-    // PQ codes + per-subspace reconstruction error with the FIXED literal
-    // codebook (VERDICT r7 task 6) — the hash-checked twin of
-    // vec_pq_codes, whose trained codebook keeps it rows-only. Runs the
-    // trained key's encoder, PipelineOps.pqEncode: argmin = array_position
-    // of array_min → smallest code among cost ties, and the error fold
-    // err_j = max(|x_j|² + (|c|² − 2x_j·c), 0) over the raw (float-widened)
-    // subvectors — every cost is a fold over identical doubles, |c|²
-    // folded in graft_dot's left-to-right order.
-    Q("vec_pq_codes_fixed",
-      (s, dir) => {
-        PipelineOps.pqEncode(Tables.table(s, dir, "embeddings")
-            .select(col("vec_id"), col("embedding")), pqCb, 4, 4)
-          .select(col("vec_id") +: (0 until 4).flatMap(j =>
-            Seq(col(s"c$j").cast("long").as(s"c$j"), col(s"err$j"))): _*)
-          .orderBy(col("vec_id"))
-      },
-      Some(sql(s"""WITH ed AS (SELECT vec_id, embedding::DOUBLE[] AS v
-        |  FROM embeddings),
-        |pcb AS (SELECT s AS sub, c AS code,
-        |  list_transform(generate_series(1, 16),
-        |    j -> ((s * 5 + c * 3 + j * 11) % 7 - 3) / 8.0) AS cv
-        |  FROM generate_series(0, 3) ts(s)
-        |  CROSS JOIN generate_series(0, 3) tc(c)),
-        |sub AS (SELECT vec_id, s AS sub,
-        |  list_slice(v, s * 16 + 1, s * 16 + 16) AS sv
-        |  FROM ed CROSS JOIN generate_series(0, 3) t(s)),
-        |costs AS (SELECT v.vec_id, v.sub, p.code,
-        |  ${sqlDot("p.cv", "p.cv")} - 2.0 * ${sqlDot("v.sv", "p.cv")}
-        |    AS cost,
-        |  ${sqlDot("v.sv", "v.sv")} AS svn2
-        |  FROM sub v JOIN pcb p USING (sub)),
-        |best AS (SELECT vec_id, sub, code, cost, svn2 FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-        |    ORDER BY cost ASC, code ASC) AS rn FROM costs) WHERE rn = 1)
-        |SELECT vec_id,
-        |  ${(0 until 4).map(j =>
-             s"max(CASE WHEN sub = $j THEN code END)::BIGINT AS c$j, " +
-               s"max(CASE WHEN sub = $j THEN greatest(svn2 + cost, 0.0) " +
-               s"END) AS err$j").mkString(", ")}
-        |FROM best GROUP BY vec_id ORDER BY vec_id"""))),
   )
 
   /** (vec_id, u, band, bsig) rows of the fixed-plane SRP banding,
@@ -749,14 +501,6 @@ object AnnFixed {
       sizeOf = Some(Tables.table(s, dir, "embeddings")))
   }
 
-  /** Corpus-count memo for the [[srpBits]] sizing count(), keyed by
-    * [[PipelineOps.planKey]], so the 7 SRP-banded keys don't each pay a
-    * count job per plan build within a session. */
-  private val countMemo = new PipelineOps.SessionMemo[String, Long]
-
-  private[operators] def countOf(e0: DataFrame): Long =
-    countMemo(e0.sparkSession, PipelineOps.planKey(e0))(e0.count())
-
   /** Frame-based body of [[srpCapped]], so property tests can drive the
     * production banding with PLANTED duplicates (the fixtures contain no
     * true near-dups — max bucket-pair cosine ≈ 0.51 — so without this
@@ -776,7 +520,7 @@ object AnnFixed {
     // enrichment join (srpCappedWith): the join is 1:1 so the count is
     // identical, but the bare plan hits the same countOf memo entry as
     // the un-carried keys — no extra count job, identical bits
-    val bits = srpBits(countOf(sizeOf.getOrElse(e0)))
+    val bits = srpBits(PipelineOps.countOf(sizeOf.getOrElse(e0)))
     val e = e0
       .select(col("vec_id") +: cc :+
         Det.widen(col("embedding")).as("v"): _*)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Distributed global row_number — the 100 TB replacement for
   * `row_number().over(Window.orderBy(...))`, whose unpartitioned window is
   * a single-task global sort (the r11 VERDICT's two `weak` sites: the
-  * full-vocabulary rank in [[PipelineOps.vocabOf]] and events_rfm's three
+  * full-vocabulary rank in [[Bpe.vocabOf]] and events_rfm's three
   * ntile axes — both domains grow with the corpus).
   *
   * Two-phase recipe (the classic zipWithIndex shape, kept in DataFrame

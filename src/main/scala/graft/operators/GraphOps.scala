@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * behavioural-analytics user reaches for once funnels and Markov
   * matrices exist (SURVEY §2.1-H's natural extension; the dedup keys
   * already do connected components implicitly via iterative min-label in
-  * [[PipelineOps]]'s cluster canonicalization).
+  * [[Dedup]]'s cluster canonicalization).
   *
   * The graph is DERIVED, not stored: nodes are the event_type domain,
   * edges are per-user consecutive-event transitions weighted by count —

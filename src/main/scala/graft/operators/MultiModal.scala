@@ -45,6 +45,38 @@ object MultiModal {
   }
 
   val qs: Seq[Q] = Seq(
+    // Multimodal plumbing: documents as opaque binary + typed metadata.
+    // The "decode" (width/height/frames) is a deterministic STUB derived
+    // from the content hash — codec libs are not in this container; a real
+    // deployment swaps the stub for mapPartitions over the codec while the
+    // schema/partitioning/metadata shape stays identical.
+    Q("mm_binary_meta",
+      (s, dir) => Tables.table(s, dir, "documents")
+        .withColumn("bin", col("text").cast("binary"))
+        .withColumn("wh", expr(PipelineOps.whExpr("text")))
+        .select(col("doc_id"),
+          length(col("bin")).cast("long").as("n_bytes"),
+          hex(expr("substring(bin, 1, 8)")).as("first8_hex"),
+          sha2(col("bin"), 256).as("content_sha256"),
+          when(pmod(col("wh"), lit(3)) === 0, "image")
+            .when(pmod(col("wh"), lit(3)) === 1, "audio")
+            .otherwise("video").as("kind"),
+          (lit(32L) + pmod(col("wh"), lit(480))).as("meta_width"),
+          (lit(32L) + pmod(expr("wh DIV 480"), lit(480))).as("meta_height"),
+          (lit(1L) + pmod(col("wh"), lit(30))).as("meta_frames"))
+        .orderBy(col("doc_id")),
+      Some(Det.sql(s"""SELECT doc_id,
+        |octet_length(encode(text))::BIGINT AS n_bytes,
+        |hex(encode(substring(text, 1, 8))) AS first8_hex,
+        |sha256(text) AS content_sha256,
+        |CASE WHEN ${PipelineOps.sqlWh("text")} % 3 = 0 THEN 'image'
+        |     WHEN ${PipelineOps.sqlWh("text")} % 3 = 1 THEN 'audio'
+        |     ELSE 'video' END AS kind,
+        |32 + ${PipelineOps.sqlWh("text")} % 480 AS meta_width,
+        |32 + (${PipelineOps.sqlWh("text")} // 480) % 480 AS meta_height,
+        |1 + ${PipelineOps.sqlWh("text")} % 30 AS meta_frames
+        |FROM documents ORDER BY doc_id"""))),
+
     // Transform planning over decoded metadata: aspect-preserving resize
     // to fit 224×224 and uniform 8-frame sampling — pure integer
     // arithmetic (exact in both engines), downstream of the (stubbed)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * families), and the two compositions the dedup keys are built from —
   * the full-corpus keep-set and the incremental batch admission. The
   * per-family signatures (xxhash64 sketches and Carter–Wegman minima in
-  * [[TextOps]], fixed-plane SRP in [[AnnFixed]], `graft_srp_sig` in
+  * [[TextOps]], fixed-plane SRP in [[Curate]], `graft_srp_sig` in
   * [[VecOps]]) and every DuckDB oracle CTE stay with their families; the
   * CTEs interpolate [[Cap]].
   *

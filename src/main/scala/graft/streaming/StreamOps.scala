@@ -590,7 +590,7 @@ object StreamOps {
   /** Streaming corpus admission — the readStream twin of
     * `pipeline_curate`'s gate + exact-dedup stages: the shared
     * quality/lang gate (pure column algebra, identical to the batch
-    * key via [[graft.operators.AnnFixed.gateQuality]]) followed by
+    * key via [[graft.operators.Curate.gateQuality]]) followed by
     * first-arrival exact dedup on the content hash. No watermark on
     * the dedup state: the admission history IS the product (the
     * curated-corpus seen-set of pipeline_dedup_incremental); a
@@ -599,7 +599,7 @@ object StreamOps {
     * the batch gate + min-doc_id keep-set under an ordered replay.
     */
   def admitDocuments(docs: DataFrame): DataFrame =
-    graft.operators.AnnFixed.gateQuality(docs)
+    graft.operators.Curate.gateQuality(docs)
       .withColumn("content_sha256", sha2(col("text"), 256))
       .dropDuplicates("content_sha256")
       .select(col("doc_id"), col("lang"), col("source"),

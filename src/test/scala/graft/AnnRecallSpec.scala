@@ -69,7 +69,7 @@ class AnnRecallSpec extends AnyFunSuite {
     val df = vecs.toDF("vec_id", "embedding")
 
     def recallOf(iters: Int): Double = {
-      val ann = operators.PipelineOps
+      val ann = operators.Ann
         .ivfSearch(df, nlists = 8, nprobe = 1, lloydIters = iters,
           nQueries = 20)
         .select(col("q_id"), col("neighbor_id")).collect()
@@ -120,7 +120,7 @@ class AnnRecallSpec extends AnyFunSuite {
     // gaps between ranks ~1/sqrt(64) — the worst case for any
     // quantizer), so demand strong agreement, not identity: measured
     // 0.68 with 8x16 codes + exact rerank of the top-20 shortlist.
-    val flat = operators.PipelineOps.ivfSearch(
+    val flat = operators.Ann.ivfSearch(
       Tables.table(spark, sf, "embeddings")
         .select(col("vec_id"), col("embedding")),
       nlists = 16, nprobe = 3, lloydIters = 2, nQueries = 20)
@@ -165,9 +165,9 @@ class AnnRecallSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
       .intersect(brute).size.toDouble / brute.size
     val probes = Seq(1, 2, 4, 8)
-    val ivf = probes.map(p => recallOf(operators.PipelineOps.ivfSearch(
+    val ivf = probes.map(p => recallOf(operators.Ann.ivfSearch(
       e0, nlists = 16, nprobe = p, lloydIters = 2, nQueries = 20)))
-    val pq = probes.map(p => recallOf(operators.PipelineOps.ivfpqSearch(
+    val pq = probes.map(p => recallOf(operators.Ann.ivfpqSearch(
       e0, nlists = 16, nprobe = p, m = 8, k = 16, iters = 2,
       nQueries = 20)))
     info(s"IVF recall@3 by nprobe ${probes.zip(ivf)}")
@@ -192,7 +192,7 @@ class AnnRecallSpec extends AnyFunSuite {
       }
     }
     def meanErr(iters: Int): Double = {
-      val rs = operators.PipelineOps.pqCodes(
+      val rs = operators.Ann.pqCodes(
         Tables.table(spark, sf, "embeddings")
           .select(col("vec_id"), col("embedding")),
         m = 4, k = 16, iters = iters).collect()
@@ -215,12 +215,12 @@ class AnnRecallSpec extends AnyFunSuite {
     val tiny = Tables.table(spark, sf, "embeddings")
       .select((col("vec_id") * 7 + 1000).as("vec_id"), col("embedding"))
       .orderBy(col("vec_id")).limit(3)
-    val cb = operators.PipelineOps.pqCodebook(tiny, m = 4, k = 16,
+    val cb = operators.Ann.pqCodebook(tiny, m = 4, k = 16,
       iters = 2)
     assert(cb.map(t => (t._1, t._2)).toSet ===
       (for (sub <- 0 until 4; c <- 0 until 16) yield (sub, c)).toSet,
       "codebook must stay dense in (sub, code)")
-    val codes = operators.PipelineOps.pqCodes(tiny, m = 4, k = 16,
+    val codes = operators.Ann.pqCodes(tiny, m = 4, k = 16,
       iters = 2).collect()
     assert(codes.length === 3)
     codes.foreach(r => (0 until 4).foreach { j =>

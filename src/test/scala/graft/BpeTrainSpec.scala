@@ -2,14 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[graft.operators.PipelineOps.bpeTrainLocal]] — the r13 scale-shaped
+/** [[graft.operators.Bpe.bpeTrainLocal]] — the r13 scale-shaped
   * BPE trainer (VERDICT r12 task 2) — must be bit-identical to the naive
   * greedy specification (recount every pair every round; argmax by freq
   * desc then lexicographically smallest (l, r); greedy leftmost
   * non-overlapping rewrite) at ANY round count, and the full trainer must
   * not scale Spark jobs with R. */
 class BpeTrainSpec extends AnyFunSuite {
-  import operators.PipelineOps.{bpeTrainLocal, bpeMerges, BPE_MAX_TYPES}
+  import operators.Bpe.{bpeTrainLocal, bpeMerges, BPE_MAX_TYPES}
 
   /** The naive reference: the exact algorithm of preflight.py's bpe_ref,
     * re-derived independently (full recount per round — O(R·dict), the
@@ -174,6 +174,6 @@ class BpeTrainSpec extends AnyFunSuite {
       java.nio.file.Paths.get("scripts/preflight.py")),
       java.nio.charset.StandardCharsets.UTF_8)
     assert(py.contains("BPE_MAX_TYPES = 1 << 20") && BPE_MAX_TYPES == (1 << 20),
-      "BPE_MAX_TYPES drifted between PipelineOps and scripts/preflight.py")
+      "BPE_MAX_TYPES drifted between Bpe and scripts/preflight.py")
   }
 }

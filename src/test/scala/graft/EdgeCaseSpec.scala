@@ -281,7 +281,7 @@ class EdgeCaseSpec extends AnyFunSuite {
       (13L, Seq(1.0, 1.0, 0.0))   // exact tie 0 vs 2 → smallest id (0)
     ).toDF("vec_id", "u")
       .withColumn("u", expr("transform(u, x -> cast(x as double))"))
-    val got = graft.operators.PipelineOps.nearestListMap(e, cent)
+    val got = graft.operators.Ann.nearestListMap(e, cent)
       .select("vec_id", "list_id").orderBy("vec_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got === Seq(10L -> 0L, 11L -> 2L, 12L -> 5L, 13L -> 0L))
@@ -300,9 +300,9 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(small.queryExecution.logical.canonicalized.toString ===
       big.queryExecution.logical.canonicalized.toString,
       "precondition: canonical plans alias (else this test is vacuous)")
-    val cbSmall = graft.operators.PipelineOps
+    val cbSmall = graft.operators.Ann
       .trainCoarse(small, nlists = 4, lloydIters = 1)
-    val cbBig = graft.operators.PipelineOps
+    val cbBig = graft.operators.Ann
       .trainCoarse(big, nlists = 4, lloydIters = 1)
     assert(cbSmall !== cbBig,
       "distinct datasets must train distinct codebooks")

@@ -89,7 +89,7 @@ class LshSpec extends AnyFunSuite {
     // The fixtures contain no true near-dups (max bucket-pair cosine
     // ≈ 0.51), so pipeline_dedup_semantic's drop rule is only exercised
     // on near-random pairs by the oracle gate. Drive the PRODUCTION
-    // banding (AnnFixed.srpCappedOf) and bucket join
+    // banding (Curate.srpCappedOf) and bucket join
     // (NearDup.srpSelfPairs) — the exact pairs the dedup keys filter —
     // with planted duplicates: a scaled copy has IDENTICAL sign bits in
     // every band (sign is scale-invariant), so it must share both
@@ -99,7 +99,7 @@ class LshSpec extends AnyFunSuite {
       (id.toLong, (0 until 64).map(i =>
         (SrpPlanes.component(id + 500, i) * 0.4).toFloat)))
     val dup = (100L, base(3)._2.map(x => 2.0f * x)) // scaled copy of id 3
-    val pairs = operators.NearDup.srpSelfPairs(operators.AnnFixed.srpCappedOf(
+    val pairs = operators.NearDup.srpSelfPairs(operators.Curate.srpCappedOf(
       (base :+ dup).toDF("vec_id", "embedding"))).collect()
     val dupPairs = pairs.filter(r =>
       r.getAs[Long]("a_id") == 3L && r.getAs[Long]("b_id") == 100L)
@@ -124,7 +124,7 @@ class LshSpec extends AnyFunSuite {
     // The original %9 formula repeats with period 9 (its j-coefficient
     // collapses mod 9): the old band 1 shared 7 of its 8 planes with
     // band 0. The extended family must not regress to that.
-    val planes = operators.AnnFixed.srpPlanes
+    val planes = operators.Curate.srpPlanes
     assert(planes.length === 32)
     assert(planes.map(_.toList).distinct.length === 32,
       "hyperplanes must be pairwise distinct")
@@ -142,7 +142,7 @@ class LshSpec extends AnyFunSuite {
   }
 
   test("srpBits: occupancy-adaptive width ladder, clamped to [8, 16]") {
-    import operators.AnnFixed.srpBits
+    import operators.Curate.srpBits
     assert(srpBits(0) === 8)
     assert(srpBits(500) === 8)      // sf0.01 embeddings
     assert(srpBits(2000) === 8)     // sf0.1 embeddings — shipped unchanged

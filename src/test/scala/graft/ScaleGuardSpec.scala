@@ -27,7 +27,7 @@ class ScaleGuardSpec extends AnyFunSuite {
   test("shingle-df cap bounds text_ngram_jaccard candidates under a stop-shingle flood") {
     // 1200 docs all opening with the same 3-word "stop-shingle" — the
     // adversarial shape of boilerplate headers at corpus scale. Shared
-    // shingle df = 1200 > the 1000 cap (PipelineOps text_ngram_jaccard),
+    // shingle df = 1200 > the 1000 cap (Dedup text_ngram_jaccard),
     // so uncapped candidate generation would enumerate C(1200,2) pairs
     // from that one shingle alone. Every other flood shingle is unique.
     val flood = (0L until 1200L).map(i =>

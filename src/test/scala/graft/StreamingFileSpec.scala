@@ -265,7 +265,7 @@ class StreamingFileSpec extends AnyFunSuite {
       // content hash, covering exactly the gated hash set.
       val streamedRows = spark.table("admit")
         .select("content_sha256").collect().map(_.getString(0)).toSeq
-      val batch = graft.operators.AnnFixed.gateQuality(docs)
+      val batch = graft.operators.Curate.gateQuality(docs)
         .select(sha2(col("text"), 256).as("h"))
         .distinct().collect().map(_.getString(0)).toSet
       assert(streamedRows.nonEmpty)
@@ -324,7 +324,7 @@ class StreamingFileSpec extends AnyFunSuite {
     // (ADVICE r9).
     val afterHashes = spark.read.parquet(out)
       .select("content_sha256").collect().map(_.getString(0)).toSeq
-    val batch = graft.operators.AnnFixed.gateQuality(docs)
+    val batch = graft.operators.Curate.gateQuality(docs)
       .select(sha2(col("text"), 256).as("h"))
       .distinct().collect().map(_.getString(0)).toSet
     assert(afterHashes.size === afterHashes.toSet.size,
@@ -397,7 +397,7 @@ class StreamingFileSpec extends AnyFunSuite {
     // admit: final content set == batch gate's hash set, each exactly once
     val afterHashes = spark.read.parquet(out)
       .select("content_sha256").collect().map(_.getString(0)).toSeq
-    val batchTruth = graft.operators.AnnFixed.gateQuality(docs)
+    val batchTruth = graft.operators.Curate.gateQuality(docs)
       .select(sha2(col("text"), 256).as("h"))
       .distinct().collect().map(_.getString(0)).toSet
     assert(afterHashes.size === afterHashes.toSet.size,

@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class TokenizeRoundtripSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def vocab = graft.operators.PipelineOps.vocabOf(
-    graft.operators.PipelineOps.tokensOf(spark, sf))
+  private def vocab = graft.operators.Bpe.vocabOf(
+    graft.operators.Bpe.tokensOf(spark, sf))
 
   test("text_tokenize_ids decodes back to the original text") {
     val ids = Registry.queries("text_tokenize_ids")(spark, sf)
@@ -47,7 +47,7 @@ class TokenizeRoundtripSpec extends AnyFunSuite {
           .as("joined_csv"))
     val bad = reassembled.join(ids, "doc_id")
       .filter(col("total_len") =!= col("n_tokens")
-        || col("max_len") > graft.operators.PipelineOps.CHUNK_LEN
+        || col("max_len") > graft.operators.Bpe.CHUNK_LEN
         || col("joined_csv") =!= col("ids_csv"))
       .count()
     assert(bad === 0)
