@@ -16,20 +16,11 @@ object Bench {
   def detailPathFor(envDetail: Option[String], filtered: Boolean,
       sfDir: String): String =
     envDetail.getOrElse {
-      // Canonicalize before the anchor compare (ADVICE r14): a trailing
-      // slash, relative path, or symlink to the anchor SF must still route
-      // to the tracked bench_detail.json — a literal string compare would
-      // silently park an anchor run in bench_detail_sf0.1.json and leave
-      // the tracked file stale (fail-safe direction, but easy to miss).
-      // Canonicalize BOTH sides (ADVICE r15): if a component of the anchor
-      // path is itself a symlink, getCanonicalPath resolves it on the left
-      // and a raw-literal right side would fail the compare — the exact
-      // staleness the canonicalization was meant to fix.
-      def canonOf(p: String): String =
-        try new java.io.File(p).getCanonicalPath
-        catch { case _: java.io.IOException => p }
+      // Canonicalize BOTH sides before the anchor compare: a trailing
+      // slash, relative path or symlink (on either side) to the anchor SF
+      // must still route to the tracked bench_detail.json.
       if (filtered) "bench_detail_partial.json"
-      else if (canonOf(sfDir) == canonOf("/root/testdata/sf0.1"))
+      else if (Tables.canon(sfDir) == Tables.canon("/root/testdata/sf0.1"))
         "bench_detail.json"
       else {
         val sfName = new java.io.File(sfDir).getName

@@ -40,7 +40,9 @@ object Tables {
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
 
-  private def canon(p: String): String =
+  /** Canonical form of a path, or the path itself when it cannot be
+    * resolved. */
+  private[graft] def canon(p: String): String =
     try new java.io.File(p).getCanonicalPath
     catch { case _: java.io.IOException => p }
 
@@ -348,9 +350,30 @@ object Det {
     * [[dot]] directly. */
   def widen(c: Column): Column = transform(c, x => x.cast("double"))
 
+  /** Unit-normalize a double array (cosine becomes a plain [[dot]]). The
+    * norm is evaluated per element inside the lambda; computing it in a
+    * separate projection does not help, as CollapseProject inlines it. */
+  def unitVec(v: Column): Column = transform(v, x => x / sqrt(dot(v, v)))
+
+  /** 2^53: a float-derived double times this is an exact integer. */
+  final val P53 = 9007199254740992.0
+
+  /** Exact group mean of float-derived doubles: x·[[P53]] is an integer,
+    * so the DECIMAL(38,0) sum never rounds and the mean is independent of
+    * partitioning and row order (a double `avg` is not). For |x| < 1 it
+    * stays below 2^53, where Spark's shortest-repr decimal cast equals
+    * DuckDB's binary-value cast (a fixed-scale snap does not). */
+  def exactMean(c: Column): Column =
+    sum((c * P53).cast(DecimalType(38, 0))).cast("double") / P53 /
+      count(lit(1))
+
   /** DuckDB twin of [[dot]] for oracle SQL. */
   def sqlDot(a: String, b: String): String =
     s"list_reduce(list_transform(list_zip($a, $b), p -> p[1] * p[2]), (x, y) -> x + y)"
+
+  /** DuckDB twin of [[unitVec]] for oracle SQL. */
+  def sqlUnitVec(v: String): String =
+    s"list_transform($v, x -> x / sqrt(${sqlDot(v, v)}))"
 
   /** Total-order a DOMAIN-BOUNDED result without a range exchange (r16,
     * guide §2.4): the final `orderBy` of a group-domain aggregate plans a
@@ -387,14 +410,18 @@ object Materialize {
   private val written =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
+  /** md5 digest (12 hex) of the RAW dir string: the collision-proof part
+    * of a dir-derived path or table name (also Layouts' bucket tables). */
+  def digest(dir: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
+
   def once(s: SparkSession, cacheName: String, dir: String)(
       write: String => Unit): DataFrame = {
     val safeDir = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
     val appId = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9-]", "_")
     val path = System.getProperty("java.io.tmpdir") +
-      s"/graft_rt_${cacheName}_${safeDir}_${digest}_$appId"
+      s"/graft_rt_${cacheName}_${safeDir}_${digest(dir)}_$appId"
     written.computeIfAbsent(path, _ => {
       write(path)
       java.lang.Boolean.TRUE

@@ -7,11 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** Approximate nearest-neighbor search: the trained IVF, PQ and IVF-PQ
   * keys, their fixed-codebook twins, and the search, encode and training
-  * bodies both share.
-  *
-  * Literature: IVF coarse quantization follows the inverted-file shape of
-  * Sivic & Zisserman (ICCV 2003) / Jégou et al. (PAMI 2011); product
-  * quantization is Jégou et al. (PAMI 2011).
+  * bodies both share. IVF follows the inverted-file shape of Sivic &
+  * Zisserman (ICCV 2003); PQ and IVF-PQ are Jégou et al. (PAMI 2011).
   *
   * The trained keys (`vec_ann_ivf`, `vec_ann_ivfpq`, `vec_pq_codes`)
   * learn their codebooks by deterministic k-means (first-k init,
@@ -52,17 +49,16 @@ object Ann {
   import Det._
   import PipelineOps.{SessionMemo, TrainClock, countOf, planKey}
 
+  /** (vec_id, embedding) of the embeddings table. */
+  private def embeddings(s: SparkSession, dir: String): DataFrame =
+    Tables.table(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+
   /** (vec_id, u) of the embeddings via [[normFrame]]. */
   private def normed(s: SparkSession, dir: String): DataFrame =
-    normFrame(
-      Tables.table(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding")))
+    normFrame(embeddings(s, dir))
 
   private val sqlNormed =
-    s"""e AS (SELECT vec_id,
-       |  list_transform(embedding::DOUBLE[],
-       |    x -> x / sqrt(${sqlDot("embedding::DOUBLE[]",
-                 "embedding::DOUBLE[]")})) AS u
+    s"""e AS (SELECT vec_id, ${sqlUnitVec("embedding::DOUBLE[]")} AS u
        |  FROM embeddings)"""
 
   /** The 4 unit-normalized coarse centroids as (list_id, cu), computed
@@ -98,9 +94,15 @@ object Ann {
        |  list_transform(generate_series(1, 64),
        |    j -> ((l * 31 + j * 17) % 7 - 3)::DOUBLE) AS cv
        |  FROM generate_series(0, 3) t(l)),
-       |cbn AS (SELECT list_id,
-       |  list_transform(cv, x -> x / sqrt(${sqlDot("cv", "cv")})) AS cu
-       |  FROM cb)"""
+       |cbn AS (SELECT list_id, ${sqlUnitVec("cv")} AS cu FROM cb)"""
+
+  /** Oracle CTE `pcb(sub, code, cv)`: the [[pqCb]] formula. */
+  private val sqlPqCb =
+    """pcb AS (SELECT s AS sub, c AS code,
+      |  list_transform(generate_series(1, 16),
+      |    j -> ((s * 5 + c * 3 + j * 11) % 7 - 3) / 8.0) AS cv
+      |  FROM generate_series(0, 3) ts(s)
+      |  CROSS JOIN generate_series(0, 3) tc(c))"""
 
   private val sqlAssign =
     s"""assign AS (SELECT vec_id, list_id, u FROM (
@@ -117,6 +119,11 @@ object Ann {
        |    row_number() OVER (PARTITION BY q.q_id
        |      ORDER BY ${sqlDot("q.qu", "c.cu")} DESC, c.list_id ASC) AS rn
        |  FROM q CROSS JOIN cbn c) WHERE rn <= $nprobe)"""
+
+  /** The oracle CTEs every fixed-codebook IVF key starts from: `e`,
+    * `cb`/`cbn`, `assign`, `q` and `probe`. */
+  private val sqlProbeCtes =
+    Seq(sqlNormed, sqlCoarseCb, sqlAssign, sqlProbe).mkString(",\n")
 
   /** Oracle CTE twins of [[ivfFixed]] (`scored`, `ranked`); requires
     * the normed/codebook/assign/probe CTEs in scope. */
@@ -149,8 +156,7 @@ object Ann {
     // candidate scan) is what matters at 100 TB.
     Q("vec_ann_ivf",
       (s, dir) => ivfSearch(
-        Tables.table(s, dir, "embeddings").select(
-          col("vec_id"), col("embedding")),
+        embeddings(s, dir),
         nlists = 16, nprobe = 3, lloydIters = 3, nQueries = 20),
       None),
 
@@ -167,8 +173,7 @@ object Ann {
     // (D3); determinism is by the same argument as vec_ann_ivf.
     Q("vec_pq_codes",
       (s, dir) => pqCodes(
-        Tables.table(s, dir, "embeddings").select(
-          col("vec_id"), col("embedding")),
+        embeddings(s, dir),
         m = 4, k = 16, iters = 2),
       None),
 
@@ -179,8 +184,7 @@ object Ann {
     // same (nlists, nprobe) is measured in AnnRecallSpec.
     Q("vec_ann_ivfpq",
       (s, dir) => ivfpqSearch(
-        Tables.table(s, dir, "embeddings").select(
-          col("vec_id"), col("embedding")),
+        embeddings(s, dir),
         nlists = 16, nprobe = 3, m = 8, k = 16, iters = 2, nQueries = 20),
       None),
 
@@ -189,10 +193,7 @@ object Ann {
     Q("vec_ann_ivf_fixed",
       (s, dir) => Det.orderedDomain(ivfFixed(normed(s, dir)),
         col("q_id"), col("rn")),
-      Some(sql(s"""WITH $sqlNormed,
-        |$sqlCoarseCb,
-        |$sqlAssign,
-        |$sqlProbe,
+      Some(sql(s"""WITH $sqlProbeCtes,
         |$sqlIvfTop3Ctes
         |SELECT q_id, rn::BIGINT AS rn, vec_id AS neighbor_id,
         |  list_id::BIGINT AS list_id, cos_sim
@@ -216,10 +217,7 @@ object Ann {
             col("cos_sim"), col("lang"), col("source"), col("n_chars"))
           .transform(df => Det.orderedDomain(df, col("q_id"), col("rn")))
       },
-      Some(sql(s"""WITH $sqlNormed,
-        |$sqlCoarseCb,
-        |$sqlAssign,
-        |$sqlProbe,
+      Some(sql(s"""WITH $sqlProbeCtes,
         |$sqlIvfTop3Ctes
         |SELECT r.q_id, r.rn::BIGINT AS rn, r.vec_id AS neighbor_id,
         |  r.cos_sim, d.lang, d.source, d.n_chars
@@ -261,10 +259,7 @@ object Ann {
               / lit(3.0).cast("double"), 6).as("recall_r6"))
           .transform(df => Det.orderedDomain(df, col("q_id")))
       },
-      Some(sql(s"""WITH $sqlNormed,
-        |$sqlCoarseCb,
-        |$sqlAssign,
-        |$sqlProbe,
+      Some(sql(s"""WITH $sqlProbeCtes,
         |$sqlIvfTop3Ctes,
         |gt AS (SELECT q_id, vec_id FROM (
         |  SELECT q.q_id, e2.vec_id,
@@ -289,15 +284,8 @@ object Ann {
       (s, dir) => ivfpqTop3(normed(s, dir), coarseCent, pqCb,
           nprobe, m = 4, k = 4, nQueries, rerank = 20)
         .transform(df => Det.orderedDomain(df, col("q_id"), col("rn"))),
-      Some(sql(s"""WITH $sqlNormed,
-        |$sqlCoarseCb,
-        |$sqlAssign,
-        |$sqlProbe,
-        |pcb AS (SELECT s AS sub, c AS code,
-        |  list_transform(generate_series(1, 16),
-        |    j -> ((s * 5 + c * 3 + j * 11) % 7 - 3) / 8.0) AS cv
-        |  FROM generate_series(0, 3) ts(s)
-        |  CROSS JOIN generate_series(0, 3) tc(c)),
+      Some(sql(s"""WITH $sqlProbeCtes,
+        |$sqlPqCb,
         |sub AS (SELECT vec_id, s AS sub,
         |  list_slice(u, s * 16 + 1, s * 16 + 16) AS sv
         |  FROM e CROSS JOIN generate_series(0, 3) t(s)),
@@ -354,19 +342,14 @@ object Ann {
     // folded in graft_dot's left-to-right order.
     Q("vec_pq_codes_fixed",
       (s, dir) => {
-        pqEncode(Tables.table(s, dir, "embeddings")
-            .select(col("vec_id"), col("embedding")), pqCb, 4, 4)
+        pqEncode(embeddings(s, dir), pqCb, 4, 4)
           .select(col("vec_id") +: (0 until 4).flatMap(j =>
             Seq(col(s"c$j").cast("long").as(s"c$j"), col(s"err$j"))): _*)
           .orderBy(col("vec_id"))
       },
       Some(sql(s"""WITH ed AS (SELECT vec_id, embedding::DOUBLE[] AS v
         |  FROM embeddings),
-        |pcb AS (SELECT s AS sub, c AS code,
-        |  list_transform(generate_series(1, 16),
-        |    j -> ((s * 5 + c * 3 + j * 11) % 7 - 3) / 8.0) AS cv
-        |  FROM generate_series(0, 3) ts(s)
-        |  CROSS JOIN generate_series(0, 3) tc(c)),
+        |$sqlPqCb,
         |sub AS (SELECT vec_id, s AS sub,
         |  list_slice(v, s * 16 + 1, s * 16 + 16) AS sv
         |  FROM ed CROSS JOIN generate_series(0, 3) t(s)),
@@ -424,7 +407,6 @@ object Ann {
   private[graft] def pqCodebook(e0: DataFrame, m: Int, k: Int,
       iters: Int): Seq[(Int, Int, Seq[Double])] = {
     val s = e0.sparkSession
-    val P53 = 9007199254740992.0 // 2^53
     pqMemo(s, (planKey(e0), m, k, iters))(TrainClock.timed("pq_codebook") {
       // Cap-bounded training subset (r16 — see [[trainSample]]): identity
       // at fixture SF; sizing count stays inside the memo+clock.
@@ -460,9 +442,7 @@ object Ann {
           .select(col("sub"), col("code"),
             posexplode(col("sv")).as(Seq("pos", "x")))
           .groupBy(col("sub"), col("code"), col("pos"))
-          .agg((sum((col("x") * P53).cast(
-            org.apache.spark.sql.types.DecimalType(38, 0)))
-            .cast("double") / P53 / count(lit(1))).as("x"))
+          .agg(exactMean(col("x")).as("x"))
           .groupBy(col("sub"), col("code"))
           .agg(array_sort(collect_list(struct(col("pos"), col("x"))))
             .as("px"))
@@ -564,36 +544,19 @@ object Ann {
     * [[pqCodebook]] (train once, search many); only m·k·(d/m) doubles
     * ever reach the driver. */
   private[graft] def pqCodes(e0: DataFrame, m: Int, k: Int,
-      iters: Int): DataFrame = {
+      iters: Int): DataFrame =
     pqEncode(e0, pqCodebook(e0, m, k, iters), m, k).orderBy(col("vec_id"))
-  }
 
   /** Trained-codebook memo for [[ivfSearch]], keyed by (planKey, params). */
   private val codebookMemo =
     new SessionMemo[(String, Int, Int), Seq[(Long, Seq[Double])]]
 
-  /** (vec_id, u): unit-normalized double vectors — cosine becomes a
-    * plain dot product downstream. Shared by the IVF family and the
-    * fixed-codebook twins. */
-  private[operators] def normFrame(e0: DataFrame): DataFrame = {
-    // The norm is computed ONCE per row, OUTSIDE the transform lambda
-    // (r14, VERDICT r13 task 7): an ArrayTransform lambda body is
-    // evaluated per ELEMENT on the interpreted expression path — with
-    // `sqrt(dot(v,v))` inside the lambda, a 64-dim row paid 64
-    // interpreted 64-dim dots, ~456 executor-CPU-seconds per run at
-    // 100× grown (the whole 27 s vec_ann_ivfpq "probe wall" the r13
-    // VERDICT flagged; Explain's stage-time attribution named the
-    // broadcast-materialization stage). Factored out, the dot runs once
-    // per row inside whole-stage codegen and only the trivial division
-    // stays in the lambda. Doubles are bit-identical (same expressions,
-    // same order — just not re-evaluated), pinned by the hash-checked
-    // semantic-dedup/search keys built on this frame.
-    e0.select(col("vec_id"),
-        Det.widen(col("embedding")).as("v"))
-      .withColumn("__n", sqrt(dot(col("v"), col("v"))))
-      .withColumn("u", transform(col("v"), x => x / col("__n")))
-      .select(col("vec_id"), col("u"))
-  }
+  /** (vec_id, u): [[Det.unitVec]]-normalized double vectors — cosine
+    * becomes a plain dot product downstream. Shared by the IVF family and
+    * the fixed-codebook twins. */
+  private[operators] def normFrame(e0: DataFrame): DataFrame =
+    e0.select(col("vec_id"), Det.widen(col("embedding")).as("v"))
+      .select(col("vec_id"), unitVec(col("v")).as("u"))
 
   private def centFrameOf(s: SparkSession,
       cent: Seq[(Long, Seq[Double])]): DataFrame = {
@@ -674,7 +637,6 @@ object Ann {
   private[graft] def trainCoarse(e0: DataFrame, nlists: Int,
       lloydIters: Int): Seq[(Long, Seq[Double])] = {
     val s = e0.sparkSession
-    val P53 = 9007199254740992.0 // 2^53
     codebookMemo(s, (planKey(e0), nlists, lloydIters))(
         TrainClock.timed("kmeans_coarse") {
       // inside the memo+clock: trainSample's sizing count() is training
@@ -699,18 +661,12 @@ object Ann {
         c = nearestListMap(e, c)
           .select(col("list_id"), posexplode(col("u")).as(Seq("pos", "c")))
           .groupBy(col("list_id"), col("pos"))
-          .agg((sum((col("c") * P53).cast(
-            org.apache.spark.sql.types.DecimalType(38, 0)))
-            .cast("double") / P53 / count(lit(1))).as("c"))
+          .agg(exactMean(col("c")).as("c"))
           .groupBy(col("list_id"))
           .agg(array_sort(collect_list(struct(col("pos"), col("c"))))
             .as("pc"))
           .select(col("list_id"), expr("transform(pc, x -> x.c)").as("cv"))
-          // norm outside the lambda (r14, see normFrame) — domain-sized
-          // frame, fixed for consistency with the corpus-sized sites
-          .withColumn("__n", sqrt(dot(col("cv"), col("cv"))))
-          .withColumn("cu", transform(col("cv"), x => x / col("__n")))
-          .select(col("list_id"), col("cu"))
+          .select(col("list_id"), unitVec(col("cv")).as("cu"))
           .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
           .sortBy(_._1)
       }
@@ -791,10 +747,9 @@ object Ann {
     * linear-in-candidates at 100 TB instead of linear-in-corpus.
     */
   private[graft] def ivfSearch(e0: DataFrame, nlists: Int, nprobe: Int,
-      lloydIters: Int, nQueries: Int): DataFrame = {
+      lloydIters: Int, nQueries: Int): DataFrame =
     ivfTop3(normFrame(e0), trainCoarse(e0, nlists, lloydIters), nprobe,
       nQueries).transform(df => Det.orderedDomain(df, col("q_id"), col("rn")))
-  }
 
   /** IVF-PQ search (Jégou et al., PAMI 2011): coarse IVF lists bound the
     * candidate set, PQ codes stand in for the vectors — candidates are

@@ -94,12 +94,7 @@ object Bpe {
     // round-1 against an independently computed char-bigram argmax,
     // merged = left||right, and the applied-merge bookkeeping.
     Q("text_bpe_merges",
-      (s, dir) => {
-        import s.implicits._
-        bpeMerges(s, dir)
-          .toDF("rank", "left", "right", "merged", "pair_freq")
-          .orderBy(col("rank"))
-      },
+      (s, dir) => mergeTable(s, bpeMerges(s, dir)),
       None),
 
     // Byte-level BPE merge-table training (VERDICT r7 task 5) — the
@@ -109,12 +104,7 @@ object Bpe {
     // the independent pure-Python byte-BPE differential in
     // scripts/preflight.py (all 8 merge rounds must match).
     Q("text_bpe_bytes",
-      (s, dir) => {
-        import s.implicits._
-        bpeByteMerges(s, dir)
-          .toDF("rank", "left", "right", "merged", "pair_freq")
-          .orderBy(col("rank"))
-      },
+      (s, dir) => mergeTable(s, bpeByteMerges(s, dir)),
       None),
 
     // BPE ENCODE — the apply half of the tokenizer (train builds the
@@ -138,20 +128,8 @@ object Bpe {
     // rule's constituents were merged before it during training, so
     // rank-order replay and rank-priority merging coincide.
     Q("text_bpe_encode",
-      (s, dir) => {
-        val merges = bpeMerges(s, dir).map(m => (m._2, m._3))
-        tokensOf(s, dir)
-          .filter(col("word").rlike("\\A[a-z]+\\z"))
-          .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-          .withColumn("syms", trim(applyMerges(
-            concat(lit(" "), concat_ws(" ",
-              expr("filter(split(word, ''), x -> x <> '')")), lit(" ")),
-            merges)))
-          .select(col("word"), col("freq"),
-            size(split(col("syms"), " ")).cast("long").as("n_syms"),
-            col("syms"))
-          .orderBy(col("word"))
-      },
+      (s, dir) => bpeEncode(azWords(s, dir), charSyms,
+        bpeMerges(s, dir).map(m => (m._2, m._3))),
       None),
 
     // The BPE apply algebra hash-checked (r8): same fold as
@@ -165,19 +143,7 @@ object Bpe {
     // replace is identical in Java and RE2 for a literal pattern, so
     // every intermediate string is equal cross-engine.
     Q("text_bpe_encode_fixed",
-      (s, dir) => {
-        tokensOf(s, dir)
-          .filter(col("word").rlike("\\A[a-z]+\\z"))
-          .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-          .withColumn("syms", trim(applyMerges(
-            concat(lit(" "), concat_ws(" ",
-              expr("filter(split(word, ''), x -> x <> '')")), lit(" ")),
-            FIXED_MERGES)))
-          .select(col("word"), col("freq"),
-            size(split(col("syms"), " ")).cast("long").as("n_syms"),
-            col("syms"))
-          .orderBy(col("word"))
-      },
+      (s, dir) => bpeEncode(azWords(s, dir), charSyms, FIXED_MERGES),
       Some(sql(s"""WITH v AS (
         |  SELECT word, count(*)::BIGINT AS freq FROM (
         |    SELECT unnest(string_split(text, ' ')) AS word
@@ -205,21 +171,11 @@ object Bpe {
     // InvariantSpec. Same 100 TB shape as the word-level encode: one
     // vocab-sized groupBy, then documents broadcast-join their words.
     Q("text_bpe_encode_bytes",
-      (s, dir) => {
-        val merges = bpeByteMerges(s, dir).map(m => (m._2, m._3))
-        tokensOf(s, dir)
-          .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-          .withColumn("syms", trim(applyMerges(
-            concat(lit(" "), concat_ws(" ", expr(
-              """transform(sequence(1, octet_length(word)),
-                |  i -> conv(substring(hex(encode(word, 'UTF-8')),
-                |            2 * i - 1, 2), 16, 10))""".stripMargin)),
-              lit(" ")), merges, _ + "." + _)))
-          .select(col("word"), col("freq"),
-            size(split(col("syms"), " ")).cast("long").as("n_syms"),
-            col("syms"))
-          .orderBy(col("word"))
-      },
+      (s, dir) => bpeEncode(tokensOf(s, dir), expr(
+          """transform(sequence(1, octet_length(word)),
+            |  i -> conv(substring(hex(encode(word, 'UTF-8')),
+            |            2 * i - 1, 2), 16, 10))""".stripMargin),
+        bpeByteMerges(s, dir).map(m => (m._2, m._3)), _ + "." + _),
       None),
 
     // Sequence packing: each document's token-id sequence split into
@@ -339,16 +295,13 @@ object Bpe {
     * head — TakeOrdered top-[[BPE_MAX_TYPES]] by (freq DESC, word ASC),
     * a distributed per-partition top-K merge, never a full sort. */
   private def bpeDict(s: SparkSession, dir: String,
-      azOnly: Boolean): Seq[(String, Long)] = {
-    val toks = tokensOf(s, dir)
-    val filtered = if (azOnly) toks.filter(col("word").rlike("\\A[a-z]+\\z"))
-      else toks
-    filtered.groupBy(col("word")).agg(count(lit(1)).as("freq"))
+      azOnly: Boolean): Seq[(String, Long)] =
+    (if (azOnly) azWords(s, dir) else tokensOf(s, dir))
+      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("word").asc)
       .limit(BPE_MAX_TYPES)
       .collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
-  }
 
   /** Byte-level BPE training behind `text_bpe_bytes` (VERDICT r7 task 5):
     * the same greedy merge semantics as [[bpeMerges]], but the initial
@@ -387,6 +340,35 @@ object Bpe {
   private def FIXED_MERGES: Seq[(String, String)] = Seq(
     ("t", "h"), ("th", "e"), ("i", "n"), ("a", "n"), ("e", "r"),
     ("o", "n"), ("r", "e"), ("a", "t"))
+
+  /** A trained merge table as the merge keys' rank-ordered frame. */
+  private def mergeTable(s: SparkSession,
+      merges: Seq[(Long, String, String, String, Long)]): DataFrame = {
+    import s.implicits._
+    merges.toDF("rank", "left", "right", "merged", "pair_freq")
+      .orderBy(col("rank"))
+  }
+
+  /** The documented [a-z]+ word alphabet of the char-level BPE keys. */
+  private def azWords(s: SparkSession, dir: String): DataFrame =
+    tokensOf(s, dir).filter(col("word").rlike("\\A[a-z]+\\z"))
+
+  /** A word's chars, the char-level keys' initial symbols. */
+  private def charSyms: Column = expr("filter(split(word, ''), x -> x <> '')")
+
+  /** The three encode keys' body: per distinct word of `words`, (word,
+    * freq, n_syms, syms), where `syms` is `sym0` (the word's initial
+    * symbols) space-joined with `merges` applied in rank order. */
+  private def bpeEncode(words: DataFrame, sym0: Column,
+      merges: Seq[(String, String)],
+      mergeSym: (String, String) => String = _ + _): DataFrame =
+    words.groupBy(col("word")).agg(count(lit(1)).as("freq"))
+      .withColumn("syms", trim(applyMerges(
+        concat(lit(" "), concat_ws(" ", sym0), lit(" ")), merges, mergeSym)))
+      .select(col("word"), col("freq"),
+        size(split(col("syms"), " ")).cast("long").as("n_syms"),
+        col("syms"))
+      .orderBy(col("word"))
 
   /** Apply `merges` in rank order to a space-joined, space-padded symbol
     * string: per rule, double every gap, replace the literal ' l  r '

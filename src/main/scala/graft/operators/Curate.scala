@@ -13,10 +13,8 @@ import org.apache.spark.sql.functions._
   * pretokenization, and n-gram and semantic benchmark decontamination.
   *
   * Sign bits and cosines are left-to-right folds over identical doubles
-  * in both engines, and every threshold compares such a double or an
-  * exact integer, so each key here is hash-checked by its oracle SQL.
-  * Candidate pairs only ever come from capped (band, signature) buckets
-  * ([[NearDup]]), never all-pairs.
+  * in both engines and every threshold compares such a double or an
+  * exact integer, so each key is hash-checked by its oracle SQL.
   */
 object Curate {
   import Det._
@@ -157,13 +155,8 @@ object Curate {
           srpBatchDrops(cs, cs.filter(col("source") =!= "src1")))
       },
       Some(sql(s"""WITH $sqlSrpCappedCtes,
-        |cs AS (SELECT c.*, d.source FROM capped c
-        |  JOIN documents d ON d.doc_id = c.vec_id),
-        |drops AS (SELECT DISTINCT x.vec_id AS doc_id
-        |  FROM cs x JOIN cs y
-        |  ON x.band = y.band AND x.bsig = y.bsig
-        |  WHERE x.source = 'src1' AND y.source <> 'src1'
-        |    AND ${sqlDot("x.u", "y.u")} >= 0.35),
+        |$sqlSourcedCte,
+        |${sqlBatchDropsCte("drops")},
         |ch AS (SELECT DISTINCT sha256(text) AS h FROM documents
         |  WHERE source <> 'src1'),
         |b AS (SELECT doc_id, lang, source, n_chars, sha256(text) AS h
@@ -185,12 +178,7 @@ object Curate {
     // banded join — no stage is all-pairs and nothing shuffles the
     // corpus more than once.
     Q("pipeline_curate",
-      (s, dir) => curateKept(s, dir)
-        .select(col("doc_id"), col("lang"), col("source"), col("split"),
-          col("n_tokens"),
-          (col("qscaled").cast("double") / lit(1000000.0))
-            .as("quality_r6"))
-        .orderBy(col("doc_id")),
+      (s, dir) => curated(curateKept(s, dir)),
       Some(sql(s"""WITH $sqlSrpCappedCtes, $sqlSrpDropsCte,
         |$sqlCurateKeptCtes
         |SELECT doc_id, lang, source, split, n_tokens,
@@ -336,14 +324,9 @@ object Curate {
         val nearDrops = srpBatchDrops(cs, cs.filter(col("source") =!= "src1")
           .join(cpool.select(col("doc_id").as("vec_id")),
             Seq("vec_id"), "left_semi"))
-        withSplit(batchCanonical
+        curated(withSplit(batchCanonical
           .join(corpusHashes, Seq("h"), "left_anti")
-          .join(nearDrops, Seq("doc_id"), "left_anti"))
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("split"), col("n_tokens"),
-            (col("qscaled").cast("double") / lit(1000000.0))
-              .as("quality_r6"))
-          .orderBy(col("doc_id"))
+          .join(nearDrops, Seq("doc_id"), "left_anti")))
       },
       Some(sql(s"""WITH $sqlSrpCappedCtes,
         |$sqlCuratePoolCtes,
@@ -352,14 +335,9 @@ object Curate {
         |bkeep AS (SELECT min(doc_id) AS doc_id FROM bpool
         |  GROUP BY sha256(text)),
         |chash AS (SELECT DISTINCT sha256(text) AS h FROM cpool),
-        |cs AS (SELECT c.*, d.source FROM capped c
-        |  JOIN documents d ON d.doc_id = c.vec_id),
-        |idrops AS (SELECT DISTINCT x.vec_id AS doc_id
-        |  FROM cs x JOIN cs y
-        |  ON x.band = y.band AND x.bsig = y.bsig
-        |  WHERE x.source = 'src1' AND y.source <> 'src1'
-        |    AND y.vec_id IN (SELECT doc_id FROM cpool)
-        |    AND ${sqlDot("x.u", "y.u")} >= 0.35),
+        |$sqlSourcedCte,
+        |${sqlBatchDropsCte("idrops",
+             "AND y.vec_id IN (SELECT doc_id FROM cpool)")},
         |bb AS (SELECT doc_id, lang, source, n_tokens, qscaled,
         |  sha256(text) AS h FROM bpool)
         |SELECT doc_id, lang, source,
@@ -456,8 +434,7 @@ object Curate {
           .orderBy(col("doc_id"))
       },
       Some(sql(s"""WITH $sqlSrpCappedCtes,
-        |cs AS (SELECT c.*, d.source FROM capped c
-        |  JOIN documents d ON d.doc_id = c.vec_id),
+        |$sqlSourcedCte,
         |pairs AS (SELECT x.vec_id AS doc_id, y.vec_id AS bench_id,
         |  max(${sqlDot("x.u", "y.u")}) AS cos
         |  FROM cs x JOIN cs y
@@ -478,9 +455,8 @@ object Curate {
     * scale-invariant); the window-count cap's (band, bsig) exchange is
     * shared by both self-join sides downstream, halving the corpus scans
     * vs a broadcast-keep formulation (measured r7). */
-  private def srpCapped(s: SparkSession, dir: String): DataFrame = {
+  private def srpCapped(s: SparkSession, dir: String): DataFrame =
     srpCappedOf(Tables.table(s, dir, "embeddings"))
-  }
 
   /** [[srpCapped]] with narrow document columns attached BEFORE banding
     * (r16): the incremental keys need `source` next to each banded row,
@@ -524,13 +500,7 @@ object Curate {
     val e = e0
       .select(col("vec_id") +: cc :+
         Det.widen(col("embedding")).as("v"): _*)
-      // norm OUTSIDE the lambda (r14): a transform lambda body runs on
-      // the interpreted path PER ELEMENT — sqrt(dot) inside meant d
-      // interpreted d-dim dots per row across all 7 SRP-banded corpus
-      // keys (see normFrame's note). Bit-identical doubles.
-      .withColumn("__n", sqrt(dot(col("v"), col("v"))))
-      .withColumn("u", transform(col("v"), x => x / col("__n")))
-      .drop("__n")
+      .withColumn("u", unitVec(col("v")))
     def sig(b: Int): Column = (0 until bits).map { i =>
       when(dot(col("v"), typedLit(srpPlanes(b * 16 + i))) >= 0,
         lit(1 << i)).otherwise(lit(0))
@@ -610,6 +580,13 @@ object Curate {
         .when(col("bucket") === 1, "val")
         .otherwise("train"))
 
+  /** The curate keys' output rows, quality as the exact 6dp double. */
+  private def curated(d: DataFrame): DataFrame = d
+    .select(col("doc_id"), col("lang"), col("source"), col("split"),
+      col("n_tokens"),
+      (col("qscaled").cast("double") / lit(1000000.0)).as("quality_r6"))
+    .orderBy(col("doc_id"))
+
   /** The curated keep-set shared by `pipeline_curate` and
     * `pipeline_pretokenize`: quality gate (text_quality_score's exact
     * integer arithmetic — no double ever compared to a boundary), lang
@@ -677,6 +654,23 @@ object Curate {
        |  JOIN exact_keep USING (doc_id)
        |  ANTI JOIN drops USING (doc_id))""".stripMargin
 
+  /** Oracle CTE `cs`: the [[srpCappedWith]] `source` banding; requires
+    * [[sqlSrpCappedCtes]] in scope. */
+  private def sqlSourcedCte: String =
+    """cs AS (SELECT c.*, d.source FROM capped c
+      |  JOIN documents d ON d.doc_id = c.vec_id)""".stripMargin
+
+  /** Oracle CTE twin of [[srpBatchDrops]], named `name`: batch doc_ids
+    * with a cosine ≥ 0.35 bucket pair among the corpus rows of `cs` that
+    * also meet `corpusCond`; requires [[sqlSourcedCte]] in scope. */
+  private def sqlBatchDropsCte(name: String, corpusCond: String = "")
+      : String =
+    s"""$name AS (SELECT DISTINCT x.vec_id AS doc_id
+       |  FROM cs x JOIN cs y
+       |  ON x.band = y.band AND x.bsig = y.bsig
+       |  WHERE x.source = 'src1' AND y.source <> 'src1'
+       |    $corpusCond AND ${sqlDot("x.u", "y.u")} >= 0.35)""".stripMargin
+
   /** Oracle CTE twin of [[srpNearDrops]] (`drops`); requires
     * [[sqlSrpCappedCtes]] in scope. */
   private def sqlSrpDropsCte: String =
@@ -691,9 +685,7 @@ object Curate {
   private def sqlSrpCappedCtes: String =
     s"""$sqlSrpBitsCte,
        |e AS (SELECT vec_id, embedding::DOUBLE[] AS v,
-       |  list_transform(embedding::DOUBLE[],
-       |    x -> x / sqrt(${sqlDot("embedding::DOUBLE[]",
-              "embedding::DOUBLE[]")})) AS u
+       |  ${sqlUnitVec("embedding::DOUBLE[]")} AS u
        |  FROM embeddings),
        |sigs AS (
        |  SELECT vec_id, u, 0 AS band, ${sqlSrpSig(0)} AS bsig

@@ -15,10 +15,7 @@ import org.apache.spark.sql.functions._
   *    are generated per shingle bucket, never all-pairs (frequency-capped
   *    at scale to bound hot shingles);
   *  - `text_editdist_pairs` blocks by (lang, length bucket) and verifies
-  *    inside each capped block — cheap blocking, expensive verify;
-  *  - cluster labels come from min-label propagation over star edges,
-  *    written once per (application, dir) and then only read
-  *    ([[dedupClusterLabels]]).
+  *    inside each capped block — cheap blocking, expensive verify.
   */
 object Dedup {
   import Det._
@@ -85,15 +82,10 @@ object Dedup {
         |FROM n LEFT JOIN k USING (doc_id) ORDER BY doc_id"""))),
 
     // Near-dup cluster assignment: connected components over the dedup
-    // candidate graph, Pregel-style min-label propagation. Edges are
-    // star edges to each bucket's min doc (doc → min of its sha256
-    // bucket, doc → min of its opening-3-token bucket) — LINEAR in corpus
-    // size, never all-pairs-within-bucket; components then merge docs
-    // transitively linked through either key (in production the same
-    // machinery runs over MinHash/SimHash candidate pairs). The driver
-    // loop is superstep-style: each iteration is one shuffle round, the
-    // convergence check reads back a single decimal sum, and labels only
-    // ever decrease so the sum strictly decreases until fixpoint; the
+    // candidate graph (sha256 and opening-3-token buckets), labelled by
+    // [[dedupClusterLabels]]' min-label propagation; components merge
+    // docs transitively linked through either key (in production the
+    // same machinery runs over MinHash/SimHash candidate pairs). The
     // oracle computes the same closure with a recursive CTE.
     Q("text_dedup_cluster",
       (s, dir) => {

@@ -107,9 +107,7 @@ object Layouts {
         // (application, dir): first build writes, every later build only
         // reads the catalog tables. The JOIN still computes from the
         // bucket files on every run — nothing result-shaped is cached.
-        val digest = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).take(6)
-          .map("%02x".format(_)).mkString
+        val digest = graft.Materialize.digest(dir)
         val custTab = s"graft_cust_bucketed_$digest"
         val ordTab = s"graft_ord_bucketed_$digest"
         val memoKey = s.sparkContext.applicationId + "_" + digest

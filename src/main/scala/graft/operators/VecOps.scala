@@ -4,7 +4,6 @@ import graft.{Det, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** §2.1-J — vector / similarity-search operators over `embeddings`
   * (SURVEY.md:277-282; north-star "similarity search").
@@ -78,18 +77,12 @@ object VecOps {
         val e = Tables.table(s, dir, "embeddings")
           .select(col("vec_id"), col("label"),
             Det.widen(col("embedding")).as("v"))
-        // Exact cross-row mean of float-derived comps: comp·2^53 is an
-        // exact INTEGER double for every practical float (float mantissa
-        // 24 bits), so the decimal cast has no rounding boundary at all —
-        // unlike a fixed-scale snap, where a float whose shortest decimal
-        // repr ends in '5' at the snap digit rounds differently in Spark
-        // (shortest-repr) vs DuckDB (binary value); that bit us at sf0.1.
-        val P53 = 9007199254740992.0 // 2^53
+        // exact cross-row mean of float-derived comps (Det.exactMean;
+        // a fixed-scale decimal snap diverged cross-engine at sf0.1)
         val cent = e
           .select(col("label"), posexplode(col("v")).as(Seq("pos", "comp")))
           .groupBy(col("label"), col("pos"))
-          .agg((sum((col("comp") * P53).cast(DecimalType(38, 0)))
-            .cast("double") / P53 / count(lit(1))).as("ccomp"))
+          .agg(exactMean(col("comp")).as("ccomp"))
           .groupBy(col("label"))
           .agg(array_sort(collect_list(struct(col("pos"), col("ccomp"))))
             .as("pc"))
@@ -222,8 +215,7 @@ object VecOps {
             .expressions.Window.partitionBy(col("label"))
             .orderBy(col("vec_id"))))
           .filter(col("rn") <= cap).drop("rn")
-          .withColumn("n", sqrt(dot(col("v"), col("v"))))
-          .withColumn("u", transform(col("v"), x => x / col("n")))
+          .withColumn("u", unitVec(col("v")))
         val a = e.select(col("vec_id").as("a_id"), col("label"),
           col("u").as("ua"))
         val b = e.select(col("vec_id").as("b_id"),
@@ -241,9 +233,7 @@ object VecOps {
         |  QUALIFY row_number() OVER (PARTITION BY label ORDER BY vec_id)
         |    <= 1000),
         |e AS (SELECT vec_id, label,
-        |  list_transform(embedding::DOUBLE[],
-        |    x -> x / sqrt(${sqlDot("embedding::DOUBLE[]",
-                "embedding::DOUBLE[]")})) AS u
+        |  ${sqlUnitVec("embedding::DOUBLE[]")} AS u
         |  FROM capped)
         |SELECT a.label::BIGINT AS label, a.vec_id AS a_id,
         |  b.vec_id AS b_id, ${sqlDot("a.u", "b.u")} AS cos_sim
@@ -363,8 +353,7 @@ object VecOps {
       cap: Int = NearDup.Cap): DataFrame = {
     val bands = e
       .select(col("vec_id"), Det.widen(col("embedding")).as("v"))
-      .withColumn("u", transform(col("v"),
-        x => x / sqrt(dot(col("v"), col("v")))))
+      .withColumn("u", unitVec(col("v")))
       .select(col("vec_id"), col("u"),
         posexplode(call_function("graft_srp_sig", col("v"),
           lit(nBands), lit(bitsPerBand))).as(Seq("band", "bsig")))
