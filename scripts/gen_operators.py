@@ -36,21 +36,21 @@ with open("OPERATORS.md", "w") as out:
     out.write("""
 ## Streaming surface (not registry keys — Verify/t2 is batch-only)
 
-`graft.streaming.StreamOps` entry points, each checked against its batch
-twin by StreamingSpec (MemoryStream) and StreamingFileSpec (parquet file
-source, sf0.01). Contracts that matter beyond the Scaladoc:
+`graft.streaming.StreamOps` entry points, exercised by StreamingSpec
+(MemoryStream) and StreamingFileSpec (parquet file source, sf0.01).
+RegistrySpec checks that this table lists exactly the public `def`s of
+`StreamOps.scala`. Contracts that matter beyond the Scaladoc:
 
 | entry point | batch twin | contract |
 |---|---|---|
 | `tumblingCounts` | `events_tumbling_window` | exact-cents sums; 2 h watermark |
+| `slidingCounts` | `events_sliding_window` | **exact on out-of-order input**: append mode emits a window once the watermark passes its end, so any disorder within `horizon` yields the batch output |
 | `sessionCounts` | `events_sessionization` | `session_window` gap algebra |
-| `sessionizeWithState` | `events_sessionization` | O(1) state/user; a late event > gap BEFORE the open session diverges from the batch global sort |
-| `sessionizeWithTimers` | `events_sessionization` | event-time timers close idle sessions at watermark; same late-event caveat |
-| `sessionizeBuffered` | `events_sessionization` | **exact on out-of-order input**: events buffer until the watermark passes their session's gap deadline, so output equals the batch gap algebra for any disorder within the watermark delay; state = watermark horizon per user (vs the O(1)-state timer variant) |
-| `funnelFirstCompletion` | `events_funnel` | **in-order input precondition**: the hit latch fires the first micro-batch `v<c<p` holds and is never retracted, so an out-of-order late stage event (e.g. a click replayed with an earlier ts) can invalidate the batch funnel after the streamed hit was emitted — equality with the batch key is promised only for event-time-ordered arrival; use `funnelWatermarked` when the source can reorder stages |
+| `sessionizeBuffered` | `events_sessionization` | **exact on out-of-order input**: events buffer until the watermark passes their session's gap deadline, so output equals the batch gap algebra for any disorder within the watermark delay (in-order arrival included); state = watermark horizon per user |
 | `funnelWatermarked` | `events_funnel` | **exact on out-of-order input**: the verdict is decided by an event-time timer at the first purchase's ceiling-ms, final once the watermark passes it (watermark-delay emission latency) |
 | `dedupById` | `events_dedup_latest` family | state bounded by the watermark horizon |
 | `attributionPairs` | `events_attribution` | watermarked stream-stream interval join |
 | `latestPerKey` | `events_dedup_latest` | update-mode CDC keep-latest |
+| `admitDocuments` | `pipeline_curate` gate + exact dedup | shared quality/lang gate, then first-arrival dedup on the content hash: one admission per gated hash; no watermark, the seen-set is the admission history |
 """)
 print(f"{len(entries)} keys -> OPERATORS.md")

@@ -38,9 +38,7 @@ fi
 # per-shingle rank-64 candidate cap (Dedup text_ngram_jaccard,
 # oracle-mirrored) bounds the diagnostic's pairs at C(64,2) per shingle,
 # so the key is gate-includable at every SF and the >=100x auto-excludes
-# that used to live here are gone. The GRAFT_BENCH_EXCLUDE /
-# GRAFT_VERIFY_EXCLUDE hooks themselves remain (env-driven, validated,
-# spec-covered in ScaleGuardSpec) for ad-hoc sweep filtering.
+# that used to live here are gone.
 
 rm -rf "$DST" "$OUT"
 python3 scripts/scale_up.py "$SRC" "$DST" "$REP" $GROWFLAG

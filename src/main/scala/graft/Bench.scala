@@ -41,25 +41,18 @@ object Bench {
       detailPath.replaceFirst("bench_detail(?=[^/]*$)", "bench_line")
     else detailPath + ".line"
 
-  /** Key selection shared by Bench, Verify and Diag: apply the include
-    * filter, then the exclude set. Unknown names in EITHER fail loudly —
-    * a typo that silently benched zero keys (or silently failed to
-    * exclude the exactness-tier diagnostic) would exit 0. */
-  def selectKeys(all: Set[String], only: Option[Set[String]],
-      exclude: Set[String]): Set[String] = {
+  /** Key selection shared by Bench, Verify and Diag: the include filter,
+    * if any. Unknown names fail loudly, and so does a filter that selects
+    * zero keys — a run of nothing would exit 0 with a near-empty
+    * artifact. */
+  def selectKeys(all: Set[String], only: Option[Set[String]]): Set[String] = {
     only.foreach { o =>
       val unknown = o -- all
       require(unknown.isEmpty,
         s"key filter names unknown keys: ${unknown.mkString(", ")}")
     }
-    val unknownEx = exclude -- all
-    require(unknownEx.isEmpty,
-      s"exclude list names unknown keys: ${unknownEx.mkString(", ")}")
-    val selected = all.filter(n => only.forall(_.contains(n)) && !exclude(n))
-    // ONLY ∩ EXCLUDE can legally empty the selection with both sets
-    // valid — a zero-key run exiting 0 with a near-empty artifact
-    // contradicts the fail-loudly contract above.
-    require(selected.nonEmpty, "key filter and exclude list select zero keys")
+    val selected = all.filter(n => only.forall(_.contains(n)))
+    require(selected.nonEmpty, "key filter selects zero keys")
     selected
   }
 
@@ -115,17 +108,7 @@ object Bench {
     // other 170+ queries it will never time.
     val only = sys.env.get("GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // GRAFT_BENCH_EXCLUDE=k1,k2 drops named keys from the run (r15,
-    // VERDICT r14 task 5): the exactness-tier decision — grown sweeps at
-    // >=100x exclude text_ngram_jaccard (28% of suite wall x RUNS passes;
-    // its exactness role is served at <=30x) — is enforced by
-    // scale_sweep.sh through this hook. Typos fail loudly, same as ONLY,
-    // and an excluded run counts as filtered for detail-path routing (a
-    // partial suite must never be mistaken for the tracked anchor).
-    val exclude = sys.env.get("GRAFT_BENCH_EXCLUDE")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val selected = selectKeys(SparkEntry.queries.keySet, only, exclude)
+    val selected = selectKeys(SparkEntry.queries.keySet, only)
     val keys = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => selected(n) }
     val (trainWarmSec, trainWarmTrainSec, trainWarmPhases) =
@@ -133,22 +116,7 @@ object Bench {
     // Per-query shuffle/spill accounting (written to bench_detail.json,
     // NOT the driver's stdout line): the scale story is shuffle bytes as
     // much as seconds.
-    val metrics = new org.apache.spark.scheduler.SparkListener {
-      val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-      val shuffleRead = new java.util.concurrent.atomic.AtomicLong
-      val spilled = new java.util.concurrent.atomic.AtomicLong
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) {
-          shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          spilled.addAndGet(m.diskBytesSpilled)
-        }
-      }
-      def snapshot(): (Long, Long, Long) =
-        (shuffleWrite.get, shuffleRead.get, spilled.get)
-    }
+    val metrics = new StageLog
     spark.sparkContext.addSparkListener(metrics)
     // Each query runs RUNS times and reports the MEDIAN (min/max recorded
     // in bench_detail.json): single-run numbers on this box swing up to
@@ -166,8 +134,7 @@ object Bench {
     // whose median is inflated was stalled, not regressed.
     val RUNS = 3
     val detailPath = detailPathFor(
-      sys.env.get("GRAFT_BENCH_DETAIL"), only.nonEmpty || exclude.nonEmpty,
-      sfDir)
+      sys.env.get("GRAFT_BENCH_DETAIL"), only.nonEmpty, sfDir)
     // Dispatch-floor calibration probes (r15, VERDICT r14 task 4): this
     // host's task-dispatch floor has moved three times across reboots
     // (BASELINE.md discontinuities #1-#3), each time invalidating
@@ -204,7 +171,8 @@ object Bench {
       // new broadcast put had to disk-evict dead blocks first.
       Sessions.releaseKeyState(spark)
       Sessions.drainListeners(spark)
-      val before = metrics.snapshot()
+      metrics.clearStages() // Bench reads only the running byte totals
+      val before = metrics.bytes
       val trainBefore = operators.PipelineOps.TrainClock.nanos
       // Plan vs exec split (VERDICT r6 task 8): toRdd pays analysis +
       // optimization + physical planning + codegen; count() pays the
@@ -224,7 +192,7 @@ object Bench {
           false }
       val t2 = System.nanoTime()
       Sessions.drainListeners(spark)
-      val after = metrics.snapshot()
+      val after = metrics.bytes
       (if (ok) (t2 - t0) / 1e9 else -1.0,
         (after._1 - before._1, after._2 - before._2,
           after._3 - before._3),

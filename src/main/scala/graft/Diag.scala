@@ -1,10 +1,6 @@
 package graft
 import java.util.Locale
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{FormattedMode, SparkPlan,
@@ -81,37 +77,6 @@ object Diag {
         w.child.treeString)
     }
 
-  /** One listener feeds both the per-sample job/stage/task counters and
-    * the per-stage tables. */
-  private final class StageLog extends SparkListener {
-    val jobs, stages, tasks = new AtomicLong
-    val runTimes = new ConcurrentLinkedQueue[(Long, String)]
-    val spills = new ConcurrentLinkedQueue[String]
-    def counts: (Long, Long, Long) = (jobs.get, stages.get, tasks.get)
-    override def onJobStart(j: SparkListenerJobStart): Unit =
-      jobs.incrementAndGet()
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val si = sc.stageInfo
-      stages.incrementAndGet()
-      tasks.addAndGet(si.numTasks)
-      val m = si.taskMetrics
-      if (m != null) {
-        runTimes.add((m.executorRunTime,
-          f"  stage ${si.stageId}%4d [${si.name.take(70)}] " +
-          f"tasks=${si.numTasks} runTime=${m.executorRunTime / 1000.0}%.2f s " +
-          f"cpuTime=${m.executorCpuTime / 1e9}%.2f s " +
-          f"input=${m.inputMetrics.bytesRead / 1048576.0}%.1f MB"))
-        if (m.diskBytesSpilled > 0 || m.memoryBytesSpilled > 0)
-          spills.add(
-            f"  stage ${si.stageId}%4d [${si.name.take(60)}] " +
-            f"tasks=${si.numTasks} " +
-            f"spillDisk=${m.diskBytesSpilled / 1048576.0}%.1f MB " +
-            f"spillMem=${m.memoryBytesSpilled / 1048576.0}%.1f MB " +
-            f"shufWrite=${m.shuffleWriteMetrics.bytesWritten / 1048576.0}%.1f MB")
-      }
-    }
-  }
-
   /** The plan report of one execution of `df` (see the header). */
   private def planReport(key: String, sfDir: String, df: DataFrame): String = {
     val formatted = df.queryExecution.explainString(FormattedMode)
@@ -182,7 +147,7 @@ object Diag {
     try qs.flatMap { case (k, fn) =>
       println(s"=== $k @ $sfDir")
       Sessions.drainListeners(spark)
-      log.runTimes.clear(); log.spills.clear()
+      log.clearStages()
       val report = planReport(k, sfDir, fn(spark, sfDir))
       planDir match {
         case Some(d) =>
@@ -219,7 +184,7 @@ object Diag {
     val asked =
       if (args(0) == "all") all.toSeq.sorted
       else args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct
-    val keys = asked.filter(Bench.selectKeys(all, Some(asked.toSet), Set.empty))
+    val keys = asked.filter(Bench.selectKeys(all, Some(asked.toSet)))
     val spark = Sessions.create(sfDir,
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     try run(spark, keys, sfDir, runs, args.lift(3))

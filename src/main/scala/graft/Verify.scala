@@ -10,19 +10,10 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // GRAFT_VERIFY_EXCLUDE=k1,k2 (r15, VERDICT r14 task 5): the
-    // exactness-tier decision caps text_ngram_jaccard's tier at ~100x
-    // (its 300x shuffle projection exceeds this host's disk), so sweeps
-    // above that must drop the key WITHOUT enumerating the other 186 —
-    // scale_sweep.sh sets this env. Excluded runs are marked filtered in
-    // keys.json, exactly like an explicit include filter.
-    val exclude = sys.env.get("GRAFT_VERIFY_EXCLUDE")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    // Typos in either list, or a filter and an exclude that intersect to
-    // zero keys, fail loudly: a dump of nothing exiting 0 would read
-    // downstream as a (vacuously) clean run.
-    val selected = Bench.selectKeys(SparkEntry.queries.keySet, only, exclude)
+    // A typo in the filter, or a filter that selects zero keys, fails
+    // loudly: a dump of nothing exiting 0 would read downstream as a
+    // (vacuously) clean run.
+    val selected = Bench.selectKeys(SparkEntry.queries.keySet, only)
     val spark = Sessions.create(sfDir,
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     new java.io.File(outDir).mkdirs()
@@ -70,7 +61,7 @@ object Verify {
       s"""{"registry": ${arr(SparkEntry.queries.keys.toSeq.sorted)},""" +
         s""" "attempted": ${arr(attempted)},""" +
         s""" "failed": ${arr(failed.toSeq.sorted)},""" +
-        s""" "filtered": ${only.nonEmpty || exclude.nonEmpty}}""")
+        s""" "filtered": ${only.nonEmpty}}""")
     spark.stop()
     // Exit 0 even with failures so a partial dump still reaches the
     // driver's compare (partial grades beat none); the manifest makes the

@@ -17,21 +17,12 @@ final case class Ev(event_id: Long, ts_us: Long, user_id: Long,
 final case class LatestEv(user_id: Long, event_type: String,
     event_id: Long, ts_us: Long, value: Double)
 
-/** Open-session state for the custom sessionizer: value is accumulated in
-  * exact integer cents (the streaming analogue of Det.dsum). */
-final case class OpenSession(start_us: Long, last_us: Long, ev_cnt: Long,
-    sum_cents: Long)
-
-/** A closed session emitted by [[StreamOps.sessionizeWithState]]. */
+/** A closed session emitted by [[StreamOps.sessionizeBuffered]]. */
 final case class ClosedSession(user_id: Long, start_us: Long,
     span_us: Long, ev_cnt: Long, sum_value: Double)
 
-/** Per-user funnel progress for [[FunnelProcessor]]: earliest µs seen per
-  * stage (`Long.MaxValue` = stage unseen) plus a fired-once latch. */
-final case class FunnelState(v_us: Long, c_us: Long, p_us: Long,
-    emitted: Boolean)
-
-/** A completed view→click→purchase funnel emitted by [[FunnelProcessor]]. */
+/** A completed view→click→purchase funnel emitted by
+  * [[WatermarkFunnelProcessor]]. */
 final case class FunnelHit(user_id: Long, v_us: Long, c_us: Long, p_us: Long)
 
 /** Per-user funnel progress for [[WatermarkFunnelProcessor]]: earliest µs
@@ -42,95 +33,9 @@ final case class FunnelStateT(v_us: Long, c_us: Long, p_us: Long,
     decided: Boolean, deadline_ms: Long)
 
 /** Event row with a real event-time column, for watermark-driven
-  * operators ([[TimerSessionProcessor]]). */
+  * operators ([[BufferedSessionProcessor]], [[WatermarkFunnelProcessor]]). */
 final case class EvT(event_id: Long, ts_us: Long, user_id: Long,
     event_type: String, value: Double, ts_t: java.sql.Timestamp)
-
-/** Open-session state for the timer-driven sessionizer: [[OpenSession]]
-  * plus the registered close deadline (event-time ms). */
-final case class OpenSessionT(start_us: Long, last_us: Long, ev_cnt: Long,
-    sum_cents: Long, deadline_ms: Long)
-
-/** Gap-based sessionizer on `transformWithState` with EVENT-TIME TIMERS —
-  * the production shape [[StreamOps.sessionizeWithState]]'s Scaladoc
-  * promises: a session with no successor event closes when the WATERMARK
-  * passes its gap deadline (`handleExpiredTimer`), not via sentinel
-  * flushes. Each batch re-registers the key's one timer at
-  * `last_us + gap`; a timer whose expiry no longer matches the state's
-  * deadline is stale (the session it guarded was already closed by a
-  * later event) and is ignored.
-  *
-  * Scale notes: one ValueState + one pending timer per ACTIVE user —
-  * state is bounded by concurrent sessions, not stream length; expired
-  * keys clear their state, so an idle user costs nothing.
-  */
-final class TimerSessionProcessor(gapMinutes: Int)
-    extends StatefulProcessor[Long, EvT, ClosedSession] {
-  private val gapUs = gapMinutes * 60L * 1000000L
-  @transient private var st: ValueState[OpenSessionT] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[OpenSessionT]("open",
-      Encoders.product[OpenSessionT], TTLConfig.NONE)
-
-  private def close(s: OpenSessionT, uid: Long): ClosedSession =
-    ClosedSession(uid, s.start_us, s.last_us - s.start_us, s.ev_cnt,
-      s.sum_cents / 100.0)
-
-  override def handleInputRows(uid: Long, rows: Iterator[EvT],
-      tv: TimerValues): Iterator[ClosedSession] = {
-    val closed = Seq.newBuilder[ClosedSession]
-    var open = if (st.exists()) Some(st.get()) else None
-    val prevDeadline = open.map(_.deadline_ms)
-    // deadline is CEILING-ms of last + gap: floor truncation would let
-    // the timer fire up to 999 µs before the inclusive gap boundary the
-    // merge branch honors, splitting a boundary event into a new session
-    def deadline(lastUs: Long): Long = (lastUs + gapUs + 999) / 1000
-    rows.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-      val cents = math.round(e.value * 100)
-      open match {
-        case Some(s) if e.ts_us - s.last_us <= gapUs =>
-          // a late-but-within-gap event must never REWIND the session:
-          // extend the bounds (min start, max last) instead. (A late
-          // event more than gap BEFORE the open session still diverges
-          // from the batch global sort — the price of O(1) state.)
-          val lastU = math.max(s.last_us, e.ts_us)
-          open = Some(OpenSessionT(math.min(s.start_us, e.ts_us), lastU,
-            s.ev_cnt + 1, s.sum_cents + cents, deadline(lastU)))
-        case Some(s) =>
-          closed += close(s, uid) // gap exceeded in-stream: close now
-          open = Some(OpenSessionT(e.ts_us, e.ts_us, 1, cents,
-            deadline(e.ts_us)))
-        case None =>
-          open = Some(OpenSessionT(e.ts_us, e.ts_us, 1, cents,
-            deadline(e.ts_us)))
-      }
-    }
-    open.foreach { s =>
-      st.update(s)
-      if (!prevDeadline.contains(s.deadline_ms)) {
-        prevDeadline.foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(s.deadline_ms)
-      }
-    }
-    closed.result().iterator
-  }
-
-  override def handleExpiredTimer(uid: Long, tv: TimerValues,
-      info: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-      : Iterator[ClosedSession] = {
-    if (st.exists()) {
-      val s = st.get()
-      // only the timer matching the CURRENT deadline closes the session;
-      // earlier-registered timers are stale survivors of in-stream closes
-      if (s.deadline_ms == info.getExpiryTimeInMs) {
-        st.clear()
-        return Iterator.single(close(s, uid))
-      }
-    }
-    Iterator.empty
-  }
-}
 
 /** A buffered event awaiting session finalization in
   * [[BufferedSessionProcessor]]: exact epoch-µs, the id tiebreak, and the
@@ -142,10 +47,10 @@ final case class BufEv(ts_us: Long, event_id: Long, cents: Long)
   * deadline — at which point no admissible future event can extend, merge
   * into, or precede it, so the emitted session equals the batch gap
   * algebra over the time-sorted stream EXACTLY, for any disorder within
-  * the watermark delay. This removes [[TimerSessionProcessor]]'s
-  * documented divergence on events arriving > gap before the open session
-  * (its price for O(1) state): here the whole not-yet-final suffix stays
-  * buffered and is re-sorted on each reconcile.
+  * the watermark delay — including an event that arrives more than a gap
+  * BEFORE a pending session: the whole not-yet-final suffix stays
+  * buffered and is re-sorted on each reconcile. In-order arrival is the
+  * zero-disorder case of the same contract.
   *
   * Finality argument: a session with last event `b` is final once the
   * watermark W ≥ ceil-ms(b + gap). Any event the engine still admits has
@@ -159,8 +64,7 @@ final case class BufEv(ts_us: Long, event_id: Long, cents: Long)
   * user — bounded by disorder tolerance × event rate, NOT stream length
   * (the horizon, not the corpus, sizes RocksDB at 100 TB). Each
   * reconcile re-reads and sorts one user's buffer: the cost of exact
-  * out-of-order semantics vs [[TimerSessionProcessor]]'s O(1) state —
-  * pick per pipeline, both are registered surface.
+  * out-of-order semantics.
   */
 final class BufferedSessionProcessor(gapMinutes: Int)
     extends StatefulProcessor[Long, EvT, ClosedSession] {
@@ -175,8 +79,10 @@ final class BufferedSessionProcessor(gapMinutes: Int)
       Encoders.scalaLong, TTLConfig.NONE)
   }
 
-  /** Ceiling-ms close deadline (see [[TimerSessionProcessor]]: floor would
-    * fire up to 999 µs before the inclusive gap boundary). */
+  /** Close deadline: the CEILING ms of `last + gap`. Timers are
+    * ms-granular; a floor deadline could fire up to 999 µs before the
+    * inclusive gap boundary and finalize a session that an event at
+    * exactly `last + gap` still belongs to. */
   private def deadline(lastUs: Long): Long = (lastUs + gapUs + 999) / 1000
 
   /** Sort the buffer, emit every watermark-final session, retain the rest,
@@ -230,62 +136,14 @@ final class BufferedSessionProcessor(gapMinutes: Int)
     reconcile(uid, tv.getCurrentWatermarkInMs())
 }
 
-/** Spark-4 `transformWithState` funnel detector — the streaming twin of the
-  * batch `events_funnel` key (first-view < first-click < first-purchase,
-  * strict). State is one [[FunnelState]] per user in the RocksDB state
-  * store; each hit is emitted exactly once, the micro-batch the ordering
-  * first holds. On in-order replay the per-stage minima are fixed as soon
-  * as each stage is first seen, so the emitted set equals the batch
-  * filter's — covered by StreamingSpec.
-  *
-  * Scale notes: state is O(distinct users) × 25 bytes, keyed by the
-  * shuffle hash of user_id; a production deployment adds a TTL so
-  * abandoned funnels age out (TTLConfig.NONE here keeps the twin exact).
-  */
-final class FunnelProcessor extends StatefulProcessor[Long, Ev, FunnelHit] {
-  @transient private var st: ValueState[FunnelState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[FunnelState]("funnel",
-      Encoders.product[FunnelState], TTLConfig.NONE)
-
-  override def handleInputRows(uid: Long, rows: Iterator[Ev],
-      tv: TimerValues): Iterator[FunnelHit] = {
-    val init = if (st.exists()) st.get()
-      else FunnelState(Long.MaxValue, Long.MaxValue, Long.MaxValue,
-        emitted = false)
-    var s = init
-    rows.foreach { e =>
-      e.event_type match {
-        case "view"     => if (e.ts_us < s.v_us) s = s.copy(v_us = e.ts_us)
-        case "click"    => if (e.ts_us < s.c_us) s = s.copy(c_us = e.ts_us)
-        case "purchase" => if (e.ts_us < s.p_us) s = s.copy(p_us = e.ts_us)
-        case _          => ()
-      }
-    }
-    // p_us must be a REAL purchase: against the MaxValue "unseen" sentinel
-    // `c_us < p_us` is vacuously true and the latch would fire on v<c
-    // alone, emitting a hit whose purchase never happened (caught by the
-    // sf0.01 file-source replay — users whose purchase arrives long after
-    // their first view<click). v/c need no guard: v_us < c_us is false
-    // unless both are real.
-    val fires = !s.emitted && s.p_us != Long.MaxValue &&
-      s.v_us < s.c_us && s.c_us < s.p_us
-    if (fires) s = s.copy(emitted = true)
-    if (s != init) st.update(s)
-    if (fires) Iterator.single(FunnelHit(uid, s.v_us, s.c_us, s.p_us))
-    else Iterator.empty
-  }
-}
-
-/** Out-of-order-tolerant funnel detector (VERDICT r7 task 4): the same
-  * first-view < first-click < first-purchase predicate as
-  * [[FunnelProcessor]], but the verdict is WATERMARK-DELAYED instead of
-  * fired the first micro-batch the ordering holds. [[FunnelProcessor]]'s
-  * latch is wrong under disorder: it fires on the current minima, and a
-  * late-arriving earlier click can invalidate an already-emitted hit
-  * (batch truth says miss, the stream said hit — unretractable in append
-  * mode).
+/** Out-of-order-tolerant funnel detector on `transformWithState` — the
+  * streaming twin of the batch `events_funnel` key (first-view <
+  * first-click < first-purchase, strict). The verdict is
+  * WATERMARK-DELAYED: a latch fired the first micro-batch the ordering
+  * holds would be wrong under disorder, since it fires on the current
+  * minima and a late-arriving earlier click can invalidate an
+  * already-emitted hit (batch truth says miss, the stream said hit —
+  * unretractable in append mode).
   *
   * This processor instead registers an event-time timer at the first
   * purchase's ceiling-ms whenever the min purchase changes, and decides
@@ -330,8 +188,8 @@ final class WatermarkFunnelProcessor
       }
     }
     if (s.p_us != Long.MaxValue) {
-      // ceiling-ms (the TimerSessionProcessor lesson): the timer must
-      // not fire while an event at exactly p_us could still arrive
+      // ceiling-ms: timers are ms-granular, and a floor deadline could
+      // fire while an event at exactly p_us can still arrive
       val d = (s.p_us + 999) / 1000
       if (d != s.deadline_ms) {
         if (s.deadline_ms != 0L) getHandle.deleteTimer(s.deadline_ms)
@@ -366,12 +224,15 @@ final class WatermarkFunnelProcessor
   * streaming session semantics differ from the batch gap-algebra on late
   * data. They share the same column contract as their batch twins, so a
   * caller can swap `spark.read` for `spark.readStream` and keep the rest
-  * of the pipeline. Consistency with the batch twins on in-order input is
-  * covered by StreamingSpec (MemoryStream → memory sink).
+  * of the pipeline. Consistency with the batch twins is covered by
+  * StreamingSpec (MemoryStream → memory sink) and StreamingFileSpec
+  * (parquet file source), on scrambled replays for the out-of-order-exact
+  * operators.
   *
-  * Scale notes: all three are single-shuffle stateful aggregations keyed
-  * by (window×type) / (user, session) / (user, type); state size is
-  * O(active keys), watermarks bound it in event time.
+  * Scale notes: each stateful operator shuffles once on its state key,
+  * and its state is O(active keys). A watermark bounds that in event time
+  * everywhere except `latestPerKey` (one row per (user, type)) and
+  * `admitDocuments` (the seen-set is the admission history itself).
   */
 object StreamOps {
 
@@ -418,50 +279,6 @@ object StreamOps {
         .as("sum_value"))
       .select(col("user_id"), Det.second(col("sw.start")).as("session_start"),
         col("ev_cnt"), col("sum_value"))
-
-  /** Gap-based sessionization with fully custom state
-    * (`flatMapGroupsWithState`) — unlike `session_window` this controls
-    * exactly what is kept per key (O(1): the one open session) and what is
-    * emitted (each session the moment a later event closes it).
-    *
-    * Events may arrive unordered within a micro-batch (sorted here); a
-    * production deployment adds `GroupStateTimeout.EventTimeTimeout` +
-    * watermark to flush sessions that never see a successor event — the
-    * tests flush with a sentinel instead, keeping the operator logic
-    * timeout-free and deterministic.
-    */
-  def sessionizeWithState(events: Dataset[Ev],
-      gapMinutes: Int = 30): Dataset[ClosedSession] = {
-    import events.sparkSession.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[OpenSession, ClosedSession](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) {
-        (uid: Long, batch: Iterator[Ev], state: GroupState[OpenSession]) =>
-          val closed = Seq.newBuilder[ClosedSession]
-          var open = state.getOption
-          batch.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-            val cents = math.round(e.value * 100)
-            open match {
-              case Some(s) if e.ts_us - s.last_us <= gapUs =>
-                // extend, never rewind, on a late-but-within-gap event
-                open = Some(OpenSession(math.min(s.start_us, e.ts_us),
-                  math.max(s.last_us, e.ts_us),
-                  s.ev_cnt + 1, s.sum_cents + cents))
-              case Some(s) =>
-                closed += ClosedSession(uid, s.start_us,
-                  s.last_us - s.start_us, s.ev_cnt, s.sum_cents / 100.0)
-                open = Some(OpenSession(e.ts_us, e.ts_us, 1, cents))
-              case None =>
-                open = Some(OpenSession(e.ts_us, e.ts_us, 1, cents))
-            }
-          }
-          open.foreach(state.update)
-          closed.result().iterator
-      }
-  }
 
   /** Exactly-once dedup by event_id with bounded state:
     * `dropDuplicatesWithinWatermark` keeps each seen id only until the
@@ -511,18 +328,6 @@ object StreamOps {
         col("view_id"), col("view_us"))
   }
 
-  /** First-completion funnel per user via Spark 4's `transformWithState`
-    * (RocksDB state store required) — see [[FunnelProcessor]]. The
-    * LOW-LATENCY variant: fires the micro-batch the ordering first holds,
-    * correct only for in-order arrival; use [[funnelWatermarked]] when
-    * the source can deliver stages out of order. */
-  def funnelFirstCompletion(events: Dataset[Ev]): Dataset[FunnelHit] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new FunnelProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
-
   /** Out-of-order-tolerant funnel via event-time timers (RocksDB state
     * store required) — see [[WatermarkFunnelProcessor]]. The input must
     * carry a watermark on `ts_t`; each user's verdict is emitted when the
@@ -533,19 +338,6 @@ object StreamOps {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
       .transformWithState(new WatermarkFunnelProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** Watermark-driven sessionization via `transformWithState` event-time
-    * timers (RocksDB state store required) — see
-    * [[TimerSessionProcessor]]. The input must carry a watermark on
-    * `ts_t`; sessions with no successor close when the watermark passes
-    * `last event + gap`. */
-  def sessionizeWithTimers(events: Dataset[EvT],
-      gapMinutes: Int = 30): Dataset[ClosedSession] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new TimerSessionProcessor(gapMinutes),
         TimeMode.EventTime(), OutputMode.Append())
   }
 

@@ -37,26 +37,40 @@ class RegistrySpec extends AnyFunSuite {
       d.listFiles.toSeq.flatMap(f =>
         if (f.isDirectory) files(f)
         else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    def linesOf(f: java.io.File): List[String] = {
+      val in = scala.io.Source.fromFile(f, "UTF-8")
+      try in.getLines().toList finally in.close()
+    }
     val rel = root.toPath
     val sites = files(src).sortBy(_.getPath).flatMap { f =>
-      val lines = scala.io.Source.fromFile(f, "UTF-8")
-      try lines.getLines().zipWithIndex.flatMap { case (l, i) =>
+      linesOf(f).zipWithIndex.flatMap { case (l, i) =>
         """Q\("([a-z0-9_]+)"""".r.findFirstMatchIn(l)
           .map(m => m.group(1) -> s"${rel.relativize(f.toPath)}:${i + 1}")
-      }.toList finally lines.close()
+      }
     }.groupBy(_._1).map { case (k, v) => k -> v.head._2 }
     val row = """\| `([a-z0-9_]+)` \| `([^`]+)` \| (✅|⛔ \(tests\)) \|""".r
-    val doc = scala.io.Source.fromFile(new java.io.File(root, "OPERATORS.md"),
-      "UTF-8")
-    val rows = try doc.getLines().collect {
+    val doc = linesOf(new java.io.File(root, "OPERATORS.md"))
+    val rows = doc.collect {
       case row(k, loc, mark) => k -> (loc, mark == "✅")
-    }.toList finally doc.close()
+    }
     assert(rows.map(_._1).toSet === Registry.queries.keySet)
     val oracle = Registry.oracleSql.keySet
     rows.foreach { case (k, (loc, hasOracle)) =>
       assert(loc === sites(k), s"$k: OPERATORS.md says $loc")
       assert(hasOracle === oracle(k), s"$k: oracle mark is stale")
     }
+    // the streaming table lists exactly StreamOps' public entry points
+    // (processor methods are `override`/`private`, so the bare two-space
+    // `def` is the object's public surface)
+    val entry = """\| `(\w+)` \|.*""".r
+    val streamRows = doc.dropWhile(!_.startsWith("## Streaming surface"))
+      .collect { case entry(n) => n }
+    val publicDef = """  def (\w+).*""".r
+    val streamDefs = linesOf(new java.io.File(src, "streaming/StreamOps.scala"))
+      .collect { case publicDef(n) => n }
+    assert(streamDefs.nonEmpty)
+    assert(streamRows.sorted === streamDefs.sorted,
+      "OPERATORS.md streaming table is stale")
   }
 
   Registry.all.foreach { q =>

@@ -303,27 +303,18 @@ class ScaleGuardSpec extends AnyFunSuite {
     }
   }
 
-  test("bench key selection: EXCLUDE drops keys, typos in ONLY/EXCLUDE " +
-      "fail loudly") {
-    // r15 (VERDICT r14 task 5): scale_sweep.sh enforces the exactness-tier
-    // decision through GRAFT_BENCH_EXCLUDE — prove the hook actually drops
-    // the key and that a misspelled exclusion cannot silently no-op (which
-    // would quietly put the 31 GB diagnostic back into a 100x sweep).
+  test("bench key selection: typos and empty ONLY filters fail loudly") {
+    // a misspelled or empty filter must not silently run zero keys and
+    // exit 0 with a near-empty artifact
     import graft.Bench.selectKeys
     val all = Set("a", "b", "text_ngram_jaccard")
-    assert(selectKeys(all, None, Set.empty) === all)
-    assert(selectKeys(all, None, Set("text_ngram_jaccard")) === Set("a", "b"))
-    assert(selectKeys(all, Some(Set("a", "b")), Set("b")) === Set("a"))
+    assert(selectKeys(all, None) === all)
+    assert(selectKeys(all, Some(Set("a", "b"))) === Set("a", "b"))
     intercept[IllegalArgumentException] {
-      selectKeys(all, None, Set("text_ngram_jacard")) // typo
+      selectKeys(all, Some(Set("a", "text_ngram_jacard"))) // typo
     }
     intercept[IllegalArgumentException] {
-      selectKeys(all, Some(Set("nope")), Set.empty)
-    }
-    // ONLY ∩ EXCLUDE = ∅ with both sets individually valid (ADVICE r15):
-    // a zero-key bench must fail loudly, not exit 0 with an empty detail
-    intercept[IllegalArgumentException] {
-      selectKeys(all, Some(Set("a")), Set("a"))
+      selectKeys(all, Some(Set.empty))
     }
   }
 
@@ -357,14 +348,14 @@ class ScaleGuardSpec extends AnyFunSuite {
     assert(Sessions.initialPartitions(sized(128), 32, adv) === 4096)
   }
 
-  test("bench env surface end-to-end: validated exclude routes to the " +
-      "filtered path and stamps the session's confs in _meta") {
-    // The exclude hooks were spec-covered only piecewise (selectKeys
-    // above, detailPathFor above), which is exactly how a stale-artifact
-    // confusion once slipped through — nothing ever ran the REAL main
-    // under the env and looked at the artifact it wrote. Run graft.Bench in a subprocess (fresh JVM: session confs
-    // must actually take) with an ONLY list and a validated EXCLUDE, in a
-    // temp cwd; assert the detail routes to bench_detail_partial.json
+  test("bench env end-to-end: ONLY routes to the filtered path; _meta " +
+      "stamps confs") {
+    // selectKeys and detailPathFor are covered above piecewise, which is
+    // exactly how a stale-artifact confusion once slipped through —
+    // nothing ever ran the REAL main under the env and looked at the
+    // artifact it wrote. Run graft.Bench in a subprocess (fresh JVM:
+    // session confs must actually take) with an ONLY list, in a temp
+    // cwd; assert the detail routes to bench_detail_partial.json
     // (filtered, never the tracked anchor) and _meta records the confs
     // the session really used.
     val cwd = java.nio.file.Files.createTempDirectory("graft_benchenv")
@@ -382,8 +373,7 @@ class ScaleGuardSpec extends AnyFunSuite {
     val env = pb.environment()
     env.put("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     env.put("SPARK_GRAFT_CPUS", "4")
-    env.put("GRAFT_BENCH_ONLY", "scan_parquet_count,project_arithmetic")
-    env.put("GRAFT_BENCH_EXCLUDE", "project_arithmetic")
+    env.put("GRAFT_BENCH_ONLY", "scan_parquet_count")
     env.remove("GRAFT_BENCH_DETAIL") // routing itself is under test
     val p = pb.start()
     val outLog = new String(p.getInputStream.readAllBytes, "UTF-8")
@@ -406,7 +396,7 @@ class ScaleGuardSpec extends AnyFunSuite {
     assert(text.contains("\"scan_parquet_count\""),
       "the ONLY-selected key must be benched")
     assert(!text.contains("\"project_arithmetic\""),
-      "the EXCLUDEd key must not appear in the artifact")
+      "a key outside ONLY must not appear in the artifact")
   }
 
   test("per-shingle rank cap bounds mid-df jaccard candidates; planted " +

@@ -60,8 +60,8 @@ object StreamTestUtil {
   * directory → transform → sink, i.e. the deployment shape of the
   * streaming twins (MemoryStream covers semantics; these cover the
   * source/sink/checkpoint/RocksDB-timer machinery against real
-  * parquet-derived input — VERDICT r6 task 6 runs the timer sessionizer
-  * and the funnel detector on the sf0.01 event fixture). */
+  * parquet-derived input: the sessionizer and the funnel detector run on
+  * the sf0.01 event fixture, in order and scrambled). */
 class StreamingFileSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -128,12 +128,14 @@ class StreamingFileSpec extends AnyFunSuite {
       val ev = Tables.table(spark, sf001, "events")
         .select("event_id", "ts_us", "user_id", "event_type", "value")
         .withColumn("ts_t", timestamp_micros(col("ts_us")))
-      // in-order replay (the documented equivalence precondition): files
-      // arrive in event-time order, one micro-batch each
+      // in-order replay: files arrive in event-time order, one
+      // micro-batch each; with a 1-hour watermark sessions are
+      // finalized mid-stream while each user's unfinished suffix stays
+      // buffered
       val rows = ev.orderBy("ts_us", "event_id").collect().toSeq
       val maxUs = rows.map(_.getLong(1)).max
       appendFile(src, rows.take(2000), ev.schema)
-      val q = StreamOps.sessionizeWithTimers(
+      val q = StreamOps.sessionizeBuffered(
         spark.readStream.schema(ev.schema).parquet(src)
           .withWatermark("ts_t", "1 hour").as[EvT])
         .writeStream.format("memory").queryName("file_tws")
@@ -144,6 +146,8 @@ class StreamingFileSpec extends AnyFunSuite {
           appendFile(src, chunk, ev.schema)
           q.processAllAvailable()
         }
+        assert(spark.table("file_tws").count() > 0,
+          "the watermark must finalize sessions before the sentinels")
         // two far-future sentinel files: the first advances the global
         // watermark past every open deadline, the second triggers the
         // batch in which those timers fire (the MemoryStream twin's trick,
@@ -166,14 +170,15 @@ class StreamingFileSpec extends AnyFunSuite {
       val src = s"$base/src"
       val ev = Tables.table(spark, sf001, "events")
         .select("event_id", "ts_us", "user_id", "event_type", "value")
-      // in-order replay: FunnelProcessor's emitted set equals the batch
-      // filter's only when stages arrive in event-time order (the latch
-      // fires on the first batch the ordering holds — see its Scaladoc
-      // and the OPERATORS.md streaming-surface note)
+        .withColumn("ts_t", timestamp_micros(col("ts_us")))
+      // in-order replay: files arrive in event-time order, one micro-batch
+      // each; with a 1-hour watermark verdicts are decided mid-stream
       val rows = ev.orderBy("ts_us", "event_id").collect().toSeq
+      val maxUs = rows.map(_.getLong(1)).max
       appendFile(src, rows.take(2000), ev.schema)
-      val q = StreamOps.funnelFirstCompletion(
-        spark.readStream.schema(ev.schema).parquet(src).as[Ev])
+      val q = StreamOps.funnelWatermarked(
+        spark.readStream.schema(ev.schema).parquet(src)
+          .withWatermark("ts_t", "1 hour").as[EvT])
         .writeStream.format("memory").queryName("file_funnel")
         .outputMode("append").start()
       try {
@@ -182,7 +187,17 @@ class StreamingFileSpec extends AnyFunSuite {
           appendFile(src, chunk, ev.schema)
           q.processAllAvailable()
         }
+        // two far-future sentinel files: the first advances the watermark
+        // past every pending purchase deadline, the second triggers the
+        // batch in which those timers fire
+        Seq(10L, 20L).zipWithIndex.foreach { case (d, i) =>
+          val us = maxUs + d * 86400L * 1000000L
+          appendFile(src, Seq(Row(-1L - i, us, -1L, "sentinel", 0.0,
+            new java.sql.Timestamp(us / 1000))), ev.schema)
+          q.processAllAvailable()
+        }
         val streamed = spark.table("file_funnel")
+          .filter(col("user_id") >= 0)
           .orderBy("user_id").collect().toSeq
         val batch = Registry.queries("events_funnel")(spark, sf001)
           .select("user_id", "v_us", "c_us", "p_us")

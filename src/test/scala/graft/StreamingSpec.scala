@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{Ev, StreamOps}
+import graft.streaming.{Ev, EvT, StreamOps}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,6 +18,10 @@ class StreamingSpec extends AnyFunSuite {
         r.getString(3), r.getDouble(4)))
       .toSeq
   }
+
+  /** `e` with its event-time column, for the watermark-driven operators. */
+  private def timed(e: Ev): EvT = EvT(e.event_id, e.ts_us, e.user_id,
+    e.event_type, e.value, new java.sql.Timestamp(e.ts_us / 1000))
 
   test("streaming tumbling window matches batch events_tumbling_window") {
     implicit val sqlCtx = spark.sqlContext
@@ -55,33 +59,6 @@ class StreamingSpec extends AnyFunSuite {
       // Session event counts must total the input size.
       assert(sessions.agg(sum("ev_cnt")).head.getLong(0)
         === eventRows().size)
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState sessionizer matches batch sessionization") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    // stream arrival order = event-time order; a far-future sentinel per
-    // user closes every real session (production would use an
-    // EventTimeTimeout instead)
-    val rows = eventRows().sortBy(e => (e.ts_us, e.event_id))
-    val maxUs = rows.map(_.ts_us).max
-    val sentinels = rows.map(_.user_id).distinct.map(u =>
-      Ev(-1L, maxUs + 10L * 86400L * 1000000L, u, "sentinel", 0.0))
-    val stream = MemoryStream[Ev]
-    val q = graft.streaming.StreamOps.sessionizeWithState(stream.toDS())
-      .writeStream.format("memory").queryName("fmgws_test")
-      .outputMode("append").start()
-    try {
-      rows.grouped(300).foreach { chunk =>
-        stream.addData(chunk)
-        q.processAllAvailable()
-      }
-      stream.addData(sentinels)
-      q.processAllAvailable()
-      // batch truth shared with the file-source suite
-      StreamTestUtil.assertSessionsMatchBatch(spark, sf,
-        spark.table("fmgws_test"))
     } finally q.stop()
   }
 
@@ -146,16 +123,27 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     StreamTestUtil.withRocksDb(spark) {
       val rows = eventRows().sortBy(e => (e.ts_us, e.event_id))
-      val stream = MemoryStream[Ev]
-      val q = StreamOps.funnelFirstCompletion(stream.toDS())
+      val maxUs = rows.map(_.ts_us).max
+      val stream = MemoryStream[EvT]
+      val q = StreamOps.funnelWatermarked(
+        stream.toDS().withWatermark("ts_t", "1 hour").as[EvT])
         .writeStream.format("memory").queryName("funnel_test")
         .outputMode("append").start()
       try {
         rows.grouped(500).foreach { chunk =>
-          stream.addData(chunk)
+          stream.addData(chunk.map(timed))
+          q.processAllAvailable()
+        }
+        // two far-future sentinel events for a synthetic user: the first
+        // advances the global watermark past every pending purchase
+        // deadline, the second triggers the batch in which those timers fire
+        Seq(10L, 20L).zipWithIndex.foreach { case (d, i) =>
+          stream.addData(Seq(timed(Ev(-1L - i,
+            maxUs + d * 86400L * 1000000L, -1L, "sentinel", 0.0))))
           q.processAllAvailable()
         }
         val streamed = spark.table("funnel_test")
+          .filter(col("user_id") >= 0)
           .orderBy("user_id").collect().toSeq
         val batch = Registry.queries("events_funnel")(spark, sf)
           .select("user_id", "v_us", "c_us", "p_us")
@@ -169,28 +157,29 @@ class StreamingSpec extends AnyFunSuite {
   test("transformWithState timer sessionizer matches batch sessionization") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    import graft.streaming.EvT
     StreamTestUtil.withRocksDb(spark) {
+      // in-order replay with a 1-hour watermark: sessions are finalized
+      // mid-stream as the watermark passes their gap deadlines, while
+      // each user's unfinished suffix stays buffered
       val rows = eventRows().sortBy(e => (e.ts_us, e.event_id))
-      def toT(e: graft.streaming.Ev): EvT = EvT(e.event_id, e.ts_us,
-        e.user_id, e.event_type, e.value,
-        new java.sql.Timestamp(e.ts_us / 1000))
       val maxUs = rows.map(_.ts_us).max
       val stream = MemoryStream[EvT]
-      val q = graft.streaming.StreamOps.sessionizeWithTimers(
+      val q = StreamOps.sessionizeBuffered(
         stream.toDS().withWatermark("ts_t", "1 hour").as[EvT])
         .writeStream.format("memory").queryName("tws_session_test")
         .outputMode("append").start()
       try {
         rows.grouped(400).foreach { chunk =>
-          stream.addData(chunk.map(toT))
+          stream.addData(chunk.map(timed))
           q.processAllAvailable()
         }
+        assert(spark.table("tws_session_test").count() > 0,
+          "the watermark must finalize sessions before the sentinels")
         // two far-future sentinel events for a synthetic user: the first
         // advances the global watermark past every open deadline, the
         // second triggers the batch in which those timers fire
         Seq(10L, 20L).zipWithIndex.foreach { case (d, i) =>
-          stream.addData(Seq(toT(graft.streaming.Ev(-1L - i,
+          stream.addData(Seq(timed(Ev(-1L - i,
             maxUs + d * 86400L * 1000000L, -1L, "sentinel", 0.0))))
           q.processAllAvailable()
         }
