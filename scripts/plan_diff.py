@@ -14,10 +14,11 @@ nodes, ...), every `graft_*` native function call, and the in-lambda
 unit-normalize `/ SQRT(graft_dot(`, which is evaluated per array element.
 It prints every key whose counts differ, with the counts on both sides,
 and lists keys present on one side only. Expression IDs, plan IDs, stage
-and codegen IDs, lambda variable names and application IDs are
-normalized first, so two runs of the same code compare equal; the
-summary also counts keys whose normalized plan text differs while every
-count is equal.
+and codegen IDs, lambda variable names, application IDs and the
+`java.io.tmpdir` prefix of the `graft_rt_` paths keys write at build
+time are normalized first, so two runs of the same code compare equal
+under any tmpdir; the summary also counts keys whose normalized plan
+text differs while every count is equal.
 
 Exit status: 0 when no key differs in any count and both sides hold the
 same keys, 1 otherwise.
@@ -40,7 +41,7 @@ NORMALIZE = [
     (re.compile(r"\$\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+"), "$$Lambda"),
     (re.compile(r"\$@[0-9a-f]+"), "$@N"),            # object identities
     (re.compile(r"RDD\[\d+\] at (\w+) at \w+\.scala:\d+"), r"RDD[N] at \1"),
-    (re.compile(r"file:[^\s,]*spark-warehouse[^\s,]*"), "file:WAREHOUSE"),
+    (re.compile(r"[^\s,\[\]]*/graft_rt_"), "TMPDIR/graft_rt_"),  # tmpdir
 ]
 
 # a tree line of the formatted initial plan: "   :  +- * Project (12)"
@@ -143,6 +144,7 @@ AdaptiveSparkPlan (6)
 
 
 (1) Scan parquet
+Location: InMemoryFileIndex [file:/tmp/graft_rt_part__sf_0123456789ab_local-1700000000001]
 Output [2]: [v#12, transform(v#12, lambdafunction((lambda x_7#13 / SQRT(graft_dot(v#12, v#12))), lambda x_7#13, false)) AS u#14]
 
 === k AQE-final executed plan
@@ -167,7 +169,9 @@ def selftest():
     """A renumbered copy must compare equal; a doctored one must not."""
     renumbered = (SAMPLE.replace("#12", "#912").replace("x_7#13", "x_41#55")
                   .replace("plan_id=77", "plan_id=3").replace("*(2)", "*(5)")
-                  .replace("Stage 1", "Stage 4"))
+                  .replace("Stage 1", "Stage 4")
+                  .replace("file:/tmp/", "file:/var/run/w2/tmp/")
+                  .replace("local-1700000000001", "local-1700000000777"))
     doctored = SAMPLE.replace(
         "   +- Exchange (4)\n",
         "   +- Exchange (4)\n      +- Exchange (7)\n").replace(
@@ -197,6 +201,10 @@ def selftest():
         sink = open(os.devnull, "w")
         if compare(dirs["a"], dirs["renum"], sink) != 0:
             print("selftest FAIL: renumbered IDs read as a plan change")
+            ok = False
+        if sections(SAMPLE) != sections(renumbered):
+            print("selftest FAIL: renumbered IDs or another tmpdir left "
+                  "the plan text changed")
             ok = False
         if compare(dirs["a"], dirs["doctored"], sink) != 1:
             print("selftest FAIL: the doctored plan was not flagged")

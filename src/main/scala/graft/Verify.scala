@@ -1,8 +1,17 @@
 package graft
-import java.nio.file.{Files, Paths}
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import scala.collection.immutable.{ListMap, TreeMap}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  private val json = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** Writes `value` (Scala maps, seqs, strings, booleans) to `path` as
+    * JSON; Jackson escapes every control character in SQL text. */
+  def writeJson(path: String, value: Any): Unit =
+    json.writeValue(new java.io.File(path), value)
+
   def main(args: Array[String]): Unit = {
     // Optional 3rd arg: comma-separated key filter for fast local smokes
     // (`runMain graft.Verify <sf> <out> key1,key2`). The driver always
@@ -37,31 +46,17 @@ object Verify {
       // its broadcasts (r16, VERDICT r15 task 2 — see Sessions).
       Sessions.releaseKeyState(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    def arr(xs: Seq[String]): String = xs.map(q).mkString("[", ",", "]")
+    writeJson(s"$outDir/oracle_sql.json",
+      TreeMap(SparkEntry.oracleSql.toSeq: _*))
     // "filtered" records whether a key filter was explicitly passed, so
     // preflight can distinguish a legitimate local smoke from a full run
     // that silently dropped registry keys (ADVICE r9: deriving "full run"
     // from attempted==registry made the never-attempted hard-fail dead code).
-    Files.writeString(Paths.get(s"$outDir/keys.json"),
-      s"""{"registry": ${arr(SparkEntry.queries.keys.toSeq.sorted)},""" +
-        s""" "attempted": ${arr(attempted)},""" +
-        s""" "failed": ${arr(failed.toSeq.sorted)},""" +
-        s""" "filtered": ${only.nonEmpty}}""")
+    writeJson(s"$outDir/keys.json", ListMap(
+      "registry" -> SparkEntry.queries.keys.toSeq.sorted,
+      "attempted" -> attempted,
+      "failed" -> failed.toSeq.sorted,
+      "filtered" -> only.nonEmpty))
     spark.stop()
     // Exit 0 even with failures so a partial dump still reaches the
     // driver's compare (partial grades beat none); the manifest makes the

@@ -390,45 +390,60 @@ object Det {
     df.coalesce(1).sortWithinPartitions(cols: _*)
 }
 
-/** Write-once-then-read temp-parquet materialization, shared by every
-  * operator that produces a dataset once per (application, input dir) and
-  * then only reads it (Layouts.partitionedDocs, Dedup
-  * .dedupClusterLabels). Holding the rule once matters: the two sites
-  * had independently copied it, and both carried the same latent bug —
-  * sanitizing the dir with `[^A-Za-z0-9] -> _` alone lets distinct dirs
-  * (`/a/sf-1` vs `/a/sf_1`) collide on one path, silently serving the
-  * first dataset for the second. The path now also embeds an md5 digest
-  * of the RAW dir string, which cannot collide under sanitization.
+/** The one home for build-time storage: every path a key writes at
+  * build time comes from [[path]], and every write that happens once per
+  * (application, input dir) goes through [[written]]'s memo. Callers:
+  * Layouts.partitionedDocs, Dedup.dedupClusterLabels, the bucketed
+  * tables of join_bucketed_colocated (external catalog tables at these
+  * paths), and the Scans round-trips, which rewrite their path on every
+  * build because the write is the operator under test.
   *
-  * Write discipline (ADVICE r5): the path is recorded via
-  * computeIfAbsent only AFTER the write succeeds — a throw leaves no
-  * entry and the next call retries; a racing session blocks on the bin
-  * lock until the writer finishes. No session-bound object is cached (a
-  * cached DataFrame would pin its SparkSession).
+  * Path rule: `java.io.tmpdir/graft_rt_<name>_<safeDir>_<digest>_<appId>`.
+  * Sanitizing the dir with `[^A-Za-z0-9] -> _` alone lets distinct dirs
+  * (`/a/sf-1` vs `/a/sf_1`) collide, and so does `dir.hashCode`
+  * (`/x/Aa` vs `/x/BB`); the md5 digest of the RAW dir string cannot.
+  * The application id keeps concurrent JVMs on the same dir apart.
+  *
+  * Write discipline: the path is recorded via computeIfAbsent only AFTER
+  * the write succeeds — a throw leaves no entry and the next call
+  * retries; a racing session blocks on the bin lock until the writer
+  * finishes. No session-bound object is cached (a cached DataFrame would
+  * pin its SparkSession).
   */
 object Materialize {
-  private val written =
+  private val done =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** md5 digest (12 hex) of the RAW dir string: the collision-proof part
-    * of a dir-derived path or table name (also Layouts' bucket tables). */
+    * of a dir-derived path or table name. */
   def digest(dir: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
 
-  def once(s: SparkSession, cacheName: String, dir: String)(
-      write: String => Unit): DataFrame = {
+  /** The application-scoped path of dataset `name` built from `dir`. */
+  def path(s: SparkSession, name: String, dir: String): String = {
     val safeDir = dir.replaceAll("[^A-Za-z0-9]", "_")
     val appId = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9-]", "_")
-    val path = System.getProperty("java.io.tmpdir") +
-      s"/graft_rt_${cacheName}_${safeDir}_${digest(dir)}_$appId"
-    written.computeIfAbsent(path, _ => {
-      write(path)
+    System.getProperty("java.io.tmpdir") +
+      s"/graft_rt_${name}_${safeDir}_${digest(dir)}_$appId"
+  }
+
+  /** Runs `write` at [[path]] once per path and returns the path. */
+  def written(s: SparkSession, name: String, dir: String)(
+      write: String => Unit): String = {
+    val p = path(s, name, dir)
+    done.computeIfAbsent(p, _ => {
+      write(p)
       java.lang.Boolean.TRUE
     })
+    p
+  }
+
+  /** [[written]] for a parquet dataset, read back. */
+  def once(s: SparkSession, name: String, dir: String)(
+      write: String => Unit): DataFrame =
     // Same footer-skip as Tables.readParquet: the materialized dataset is
     // re-read on every consumer build, but its schema never changes after
     // the write (the path is app-scoped and write-once).
-    Tables.readParquet(s, path)
-  }
+    Tables.readParquet(s, written(s, name, dir)(write))
 }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * or scan → sort) with Parquet column pruning and row-group predicate
   * pushdown doing the heavy lifting — at 100 TB the shuffle-free `count` and
   * the pushed filter are exactly the plans a 1000-executor cluster wants.
-  * The roundtrip sources write to a JVM-local temp dir; on a cluster the
-  * path would be object storage, the code shape is identical.
+  * The roundtrip sources write to a [[graft.Materialize]] path; on a
+  * cluster the path would be object storage, the code shape is identical.
   */
 object Scans {
   import Det._
@@ -48,14 +48,13 @@ object Scans {
     // round-trip must reproduce the source table exactly, so the oracle is
     // simply `SELECT … FROM nation` — DuckDB never sees the temp files, it
     // sees the content they must preserve. Self-equality unit tests in
-    // GraftSpec remain as the fast local check.
+    // GraftSpec remain as the fast local check. The path is
+    // Materialize's (per application and dir) and rewritten on every
+    // build: the write is the operator under test.
     Q("source_csv_roundtrip",
       (s, dir) => {
         val nation = Tables.table(s, dir, "nation")
-        // fixed per-(sf,format) path: repeated builds overwrite instead
-        // of accumulating temp copies across bench/verify runs
-        val path = System.getProperty("java.io.tmpdir") +
-          s"/graft_rt_csv_${dir.hashCode}"
+        val path = graft.Materialize.path(s, "csv", dir)
         nation.write.mode("overwrite").option("header", "true").csv(path)
         s.read.schema(nation.schema).option("header", "true").csv(path)
           .orderBy(col("n_nationkey"))
@@ -66,10 +65,7 @@ object Scans {
     Q("source_json_roundtrip",
       (s, dir) => {
         val nation = Tables.table(s, dir, "nation")
-        // fixed per-(sf,format) path: repeated builds overwrite instead
-        // of accumulating temp copies across bench/verify runs
-        val path = System.getProperty("java.io.tmpdir") +
-          s"/graft_rt_json_${dir.hashCode}"
+        val path = graft.Materialize.path(s, "json", dir)
         nation.write.mode("overwrite").json(path)
         s.read.schema(nation.schema).json(path)
           .orderBy(col("n_nationkey"))
@@ -80,10 +76,7 @@ object Scans {
     Q("source_orc_roundtrip",
       (s, dir) => {
         val nation = Tables.table(s, dir, "nation")
-        // fixed per-(sf,format) path: repeated builds overwrite instead
-        // of accumulating temp copies across bench/verify runs
-        val path = System.getProperty("java.io.tmpdir") +
-          s"/graft_rt_orc_${dir.hashCode}"
+        val path = graft.Materialize.path(s, "orc", dir)
         nation.write.mode("overwrite").orc(path)
         s.read.schema(nation.schema).orc(path)
           .orderBy(col("n_nationkey"))

@@ -387,8 +387,9 @@ object StreamOps {
     * the dedup state: the admission history IS the product (the
     * curated-corpus seen-set of pipeline_dedup_incremental); a
     * deployment compacts it periodically against the materialized
-    * corpus. StreamingFileSpec proves the admitted doc_id set equals
-    * the batch gate + min-doc_id keep-set under an ordered replay.
+    * corpus. StreamingFileSpec checks one admission per gated content
+    * hash, covering exactly the batch gate's hash set (which doc_id wins
+    * among duplicates in one micro-batch is not fixed).
     */
   def admitDocuments(docs: DataFrame): DataFrame =
     graft.operators.Curate.gateQuality(docs)

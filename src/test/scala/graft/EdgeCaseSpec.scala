@@ -264,6 +264,80 @@ class EdgeCaseSpec extends AnyFunSuite {
       fail("second call for an already-written dir must not re-write")
     }
     assert(a2.select("id").head.getLong(0) === 1L)
+    // '/x/Aa' and '/x/BB' share a String.hashCode, which was the whole
+    // dir part of the old round-trip paths; the path rule keeps them apart
+    assert("/x/Aa".hashCode === "/x/BB".hashCode)
+    assert(Materialize.path(spark, "csv", "/x/Aa") !==
+      Materialize.path(spark, "csv", "/x/BB"))
+  }
+
+  test("bucketed join tables are external graft_rt_ dirs, written once") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import org.apache.spark.sql.catalyst.catalog.CatalogTableType
+    def mtimes(root: Path): Map[Path, Long] =
+      if (!Files.exists(root)) Map.empty
+      else {
+        val walk = Files.walk(root)
+        try walk.iterator().asScala
+          .map(p => p -> Files.getLastModifiedTime(p).toMillis).toMap
+        finally walk.close()
+      }
+    // a dir new to this application (so the first build must write),
+    // holding copies of the two tables the key reads
+    val dir = Files.createTempDirectory("graft_bucket_src")
+    Seq("customer", "orders").foreach(t => Files.copy(
+      Paths.get(s"$sf/$t.parquet"), dir.resolve(s"$t.parquet")))
+    val warehouse = Paths.get(java.net.URI.create(
+      spark.conf.get("spark.sql.warehouse.dir")).getPath)
+    val warehouseBefore = mtimes(warehouse)
+    val abbrevs = Seq("cust", "ord")
+    val names = abbrevs
+      .map(a => s"graft_${a}_bucketed_${Materialize.digest(dir.toString)}")
+    val paths = abbrevs.map(a =>
+      Paths.get(Materialize.path(spark, s"${a}_bucketed", dir.toString)))
+    def build() = Registry.queries("join_bucketed_colocated")(
+      spark, dir.toString).collect().toSeq
+    try {
+      val first = build()
+      val locs = names.map { n =>
+        val t = spark.sessionState.catalog.getTableMetadata(TableIdentifier(n))
+        assert(t.tableType === CatalogTableType.EXTERNAL, n)
+        Paths.get(t.location)
+      }
+      assert(locs === paths)
+      locs.foreach(l => assert(l.getFileName.toString.startsWith("graft_rt_")))
+      assert(locs.forall(l => mtimes(l).size > 1), "bucket files written")
+      def newest = locs.map(l => mtimes(l).values.max)
+      val written = newest
+      assert(build() === first)
+      assert(newest === written, "the second build wrote nothing")
+      assert(mtimes(warehouse) === warehouseBefore)
+    } finally {
+      names.foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
+      (paths :+ dir).filter(Files.exists(_)).foreach { root =>
+        val walk = Files.walk(root)
+        try walk.iterator().asScala.toSeq.reverse.foreach(Files.delete)
+        finally walk.close()
+      }
+    }
+  }
+
+  test("Verify's JSON round-trips SQL with control characters") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    import scala.jdk.CollectionConverters._
+    val sql = "SELECT 'a\tb\rc' AS \"q\", '\\' || '\u0001' AS x"
+    assert(sql.exists(_ < ' ') && sql.contains('"') && sql.contains('\\'))
+    val f = java.nio.file.Files.createTempFile("graft_oracle", ".json")
+    try {
+      Verify.writeJson(f.toString, Map("k" -> sql))
+      // no raw control character: Python's strict json.load rejects them
+      assert(!java.nio.file.Files.readString(f).exists(_ < ' '))
+      val back = new ObjectMapper()
+        .readValue(f.toFile, classOf[java.util.Map[String, String]])
+      assert(back.asScala.toMap === Map("k" -> sql))
+    } finally java.nio.file.Files.delete(f)
   }
 
   test("nearestListMap honors sparse list ids and smallest-id tie-break") {

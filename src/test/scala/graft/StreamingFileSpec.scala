@@ -219,9 +219,10 @@ class StreamingFileSpec extends AnyFunSuite {
       // (event_id % 7, event_id) is uncorrelated with event time, so
       // every micro-batch spans the whole fixture and sessions routinely
       // receive events out of order — including the "> gap BEFORE the
-      // open session" case the O(1)-state sessionizers document as
-      // divergent. The 40-day delay exceeds the fixture span: nothing is
-      // dropped, so batch equivalence must be EXACT.
+      // open session" case. sessionizeBuffered's watermark contract: any
+      // disorder within the delay is exact, and the 40-day delay exceeds
+      // the fixture span, so nothing is dropped and batch equivalence
+      // must be EXACT.
       val rows = ev.collect().toSeq
         .sortBy(r => (r.getLong(0) % 7, r.getLong(0)))
       val maxUs = rows.map(_.getLong(1)).max
@@ -254,9 +255,8 @@ class StreamingFileSpec extends AnyFunSuite {
   test("streaming corpus admission matches the batch gate+dedup keep-set") {
     // StreamOps.admitDocuments = the pipeline_curate quality/lang gate
     // (shared column algebra) + first-arrival exact dedup. Replayed in
-    // doc_id order, "first arrival" coincides with the batch keep rule
-    // (min doc_id per content hash), so the admitted set must be EXACTLY
-    // the batch gate + min-doc_id keep-set.
+    // doc_id order, the stream must admit exactly one row per gated
+    // content hash, covering exactly the batch gate's hash set.
     val base = java.nio.file.Files.createTempDirectory("graft_admit")
     val src = s"$base/src"
     val docs = Tables.table(spark, sf001, "documents")
@@ -479,10 +479,11 @@ class StreamingFileSpec extends AnyFunSuite {
       // deterministic SCRAMBLE: ordering by (event_id % 7, event_id) is
       // uncorrelated with event time, so every micro-batch carries events
       // from the whole fixture span and stages routinely arrive out of
-      // order — the exact precondition FunnelProcessor's latch cannot
-      // survive (VERDICT r7 task 4). The 40-day watermark delay exceeds
-      // the fixture's ~30-day span, so no scrambled row is ever dropped
-      // and batch equivalence must be EXACT.
+      // order. funnelWatermarked's watermark contract: a verdict is final
+      // once the watermark passes the first purchase, exact for any
+      // disorder within the delay. The 40-day delay exceeds the fixture's
+      // ~30-day span, so no scrambled row is ever dropped and batch
+      // equivalence must be EXACT.
       val rows = ev.collect().toSeq
         .sortBy(r => (r.getLong(0) % 7, r.getLong(0)))
       val maxUs = rows.map(_.getLong(1)).max

@@ -199,8 +199,9 @@ class StreamingSpec extends AnyFunSuite {
         EvT(id, us, 7L, "view", v, new java.sql.Timestamp(us / 1000))
       // e1 and e2 are EXACTLY gap apart (inclusive boundary: same
       // session); e3 exceeds the gap by 1 µs (new session). Delivered
-      // fully REVERSED, one micro-batch each — the arrival pattern the
-      // O(1)-state sessionizers document as divergent.
+      // fully REVERSED, one micro-batch each — disorder that
+      // sessionizeBuffered's watermark contract (exact within the delay)
+      // must absorb.
       val t1 = 1000000L
       val e1 = ev(1, t1, 1.0)
       val e2 = ev(2, t1 + gapUs, 2.0)
