@@ -31,6 +31,8 @@ python3 scripts/bench_budgets.py bench_detail.json
 # (GRAFT_BENCH_BASE, e.g. the previous round's tracked bench_detail.json
 # restored via `git show`).
 python3 scripts/bench_compare.py --selftest bench_detail.json
+# the per-key plan-count diff behind refactor claims: selftest only here
+python3 scripts/plan_diff.py --selftest
 if [[ -n "${GRAFT_BENCH_BASE:-}" ]]; then
   python3 scripts/bench_compare.py "$GRAFT_BENCH_BASE" bench_detail.json
 fi

@@ -795,18 +795,15 @@ object Ann {
     // shortlist window.
     // Codes pack into ONE array column at assignment (r15): relaying one
     // array through the scoring joins instead of m int columns — same
-    // values, marginally less consume plumbing on the fallback path.
-    // NOTE this does NOT bring the scoring stage's whole-stage method
-    // under the 8000-byte JIT limit (it reads 8339 either way), because
-    // the assign expressions themselves — graft_matvec coarse assignment
+    // values, marginally less consume plumbing.
+    // The assign expressions themselves — graft_matvec coarse assignment
     // + m graft_pq_costs kernels + 2m argmin builtins — are FUSED into
     // the same zero-shuffle stage as the two broadcast joins and
-    // graft_adc. That stage is deliberately allowlisted in PlanSpec's
-    // codegen-fallback audit: with hugeMethodLimit=8000 it runs
-    // per-operator (each operator still drives codegen'd, JIT-able
-    // UnsafeProjections — the r14 bisection measured 2.84 s at 100×
-    // grown for this shape vs 30 s interpreted), and every split
-    // alternative is worse at scale — an exchange would shuffle the
+    // graft_adc. Each native kernel emits one call into graft.plans.
+    // Kernels, not an inline loop, so that stage's whole-stage method
+    // reads 6405 bytes at m=8, k=16, under the 8000-byte JIT limit that
+    // PlanSpec's codegen-fallback audit enforces. Splitting the stage
+    // instead would be worse at scale — an exchange would shuffle the
     // corpus the design exists to never shuffle, and caching the assign
     // frame materializes corpus-sized state.
     val assign = pqCodeCols(nearestListMap(e, cent)

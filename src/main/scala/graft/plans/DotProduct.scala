@@ -12,8 +12,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   *
   * The HOF formulation (`aggregate(zip_with(a, b, *), 0.0, +)`) materializes
   * an intermediate products array per row; this expression is a single
-  * codegen'd loop — no allocation, stays inside WholeStageCodegen. The
-  * summation is the same left-to-right fold, so results are bit-identical
+  * loop ([[Kernels.dot]], called by both eval paths) — no allocation,
+  * stays inside WholeStageCodegen. The summation is the same
+  * left-to-right fold, so results are bit-identical
   * to the HOF version (and to DuckDB's list_reduce twin) and it can be
   * swapped into oracle-checked queries freely (SURVEY §4.3 escalation b).
   */
@@ -48,50 +49,21 @@ case class DotProduct(left: Expression, right: Expression)
   // the + fold to NULL — so unequal lengths or any null element → NULL.
   override def nullable: Boolean = true
 
+  @transient private lazy val isNullOut = new Array[Boolean](1)
+
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val (lf, rf) = (isFloat(left), isFloat(right))
-    val n = x.numElements()
-    if (y.numElements() != n) return null
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      s += xv * yv
-      i += 1
-    }
-    s
+    val s = Kernels.dot(a.asInstanceOf[ArrayData], isFloat(left),
+      b.asInstanceOf[ArrayData], isFloat(right), isNullOut)
+    if (isNullOut(0)) null else s
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val getL =
-        if (isFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      val getR =
-        if (isFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |int $n = $a.numElements();
-         |double $s = 0.0;
-         |if ($b.numElements() != $n) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) {
-         |      ${ev.isNull} = true;
-         |      break;
-         |    }
-         |    $s += $getL * $getR;
-         |  }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val isNull = Kernels.nullFlag(ctx)
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      |${ev.value} = graft.plans.Kernels.dot(
+      |  $a, ${isFloat(left)}, $b, ${isFloat(right)}, $isNull);
+      |${ev.isNull} = $isNull[0];""".stripMargin)
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -107,7 +79,7 @@ case class DotProduct(left: Expression, right: Expression)
   * after Spark's own `InferWindowGroupLimit`, so [[RewriteTopKPerGroup]]
   * sees the `WindowGroupLimit` it rewrites. */
 object GraftFunctions {
-  private type Descriptor =
+  private[graft] type Descriptor =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
   private def descriptor(name: String, cls: Class[_])(
@@ -122,7 +94,7 @@ object GraftFunctions {
 
   // vals, not defs: re-registering stores an equal (info, builder) pair,
   // so Spark logs no "replaced a previously registered function" warning.
-  private val descriptors: Seq[Descriptor] = Seq(
+  private[graft] val descriptors: Seq[Descriptor] = Seq(
     descriptor("graft_dot", classOf[DotProduct])(c => DotProduct(c(0), c(1))),
     descriptor("graft_matvec", classOf[MatVecDots])(
       c => MatVecDots(c(0), c(1))),

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Shared shape of the matrix × vector kernels: `left` is an
@@ -50,61 +50,16 @@ abstract class MatVecKernel extends BinaryExpression {
   override def nullable: Boolean = true
   protected def isFloatVec: Boolean = vecElemType.contains(FloatType)
 
-  /** Per-row result given (row, vector, length); implementations fold
-    * left-to-right. Returns null for the null-element case. */
-  protected def evalRow(row: ArrayData, v: ArrayData, n: Int): Any
+  /** False for `graft_matvec` (row·v), true for `graft_pq_costs`
+    * (|row|² − 2·row·v); [[Kernels.matVec]] folds both. */
+  protected def costs: Boolean
 
-  override def nullSafeEval(m: Any, vv: Any): Any = {
-    val mat = m.asInstanceOf[ArrayData]
-    val v = vv.asInstanceOf[ArrayData]
-    val n = v.numElements()
-    val k = mat.numElements()
-    val out = new Array[Any](k)
-    var i = 0
-    while (i < k) {
-      out(i) =
-        if (mat.isNullAt(i)) null
-        else {
-          val row = mat.getArray(i)
-          if (row.numElements() != n) null else evalRow(row, v, n)
-        }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** Generated inner-loop body computing `$acc` for one row `$row`;
-    * must `break` out via `$nullFlag = true` on a null element. */
-  protected def genRowLoop(ctx: CodegenContext, row: String, vec: String,
-      n: String, acc: String, nullFlag: String): String
+  override def nullSafeEval(m: Any, v: Any): Any = Kernels.matVec(
+    m.asInstanceOf[ArrayData], v.asInstanceOf[ArrayData], isFloatVec, costs)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (m, v) => {
-      val k = ctx.freshName("k")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val row = ctx.freshName("row")
-      val acc = ctx.freshName("acc")
-      val cellNull = ctx.freshName("cellNull")
-      val out = ctx.freshName("out")
-      val gad = classOf[GenericArrayData].getName
-      s"""
-         |int $k = $m.numElements();
-         |int $n = $v.numElements();
-         |Object[] $out = new Object[$k];
-         |for (int $i = 0; $i < $k; $i++) {
-         |  if ($m.isNullAt($i)) { $out[$i] = null; continue; }
-         |  org.apache.spark.sql.catalyst.util.ArrayData $row =
-         |    $m.getArray($i);
-         |  if ($row.numElements() != $n) { $out[$i] = null; continue; }
-         |  double $acc = 0.0;
-         |  boolean $cellNull = false;
-         |  ${genRowLoop(ctx, row, v, n, acc, cellNull)}
-         |  $out[$i] = $cellNull ? null : java.lang.Double.valueOf($acc);
-         |}
-         |${ev.value} = new $gad($out);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (m, v) =>
+      s"${ev.value} = graft.plans.Kernels.matVec($m, $v, $isFloatVec, $costs);")
 }
 
 /** `graft_matvec(M, v)` — array of row·v dot products, one
@@ -114,34 +69,7 @@ case class MatVecDots(left: Expression, right: Expression)
     extends MatVecKernel {
   override def prettyName: String = "graft_matvec"
 
-  override protected def evalRow(row: ArrayData, v: ArrayData,
-      n: Int): Any = {
-    var s = 0.0
-    var j = 0
-    while (j < n) {
-      if (row.isNullAt(j) || v.isNullAt(j)) return null
-      val x = if (isFloatVec) v.getFloat(j).toDouble else v.getDouble(j)
-      s += row.getDouble(j) * x
-      j += 1
-    }
-    s
-  }
-
-  override protected def genRowLoop(ctx: CodegenContext, row: String,
-      vec: String, n: String, acc: String, nullFlag: String): String = {
-    val j = ctx.freshName("j")
-    val getV =
-      if (isFloatVec) s"(double) $vec.getFloat($j)"
-      else s"$vec.getDouble($j)"
-    s"""
-       |for (int $j = 0; $j < $n; $j++) {
-       |  if ($row.isNullAt($j) || $vec.isNullAt($j)) {
-       |    $nullFlag = true; break;
-       |  }
-       |  $acc += $row.getDouble($j) * $getV;
-       |}
-     """.stripMargin
-  }
+  override protected def costs: Boolean = false
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -158,45 +86,7 @@ case class PqCosts(left: Expression, right: Expression)
     extends MatVecKernel {
   override def prettyName: String = "graft_pq_costs"
 
-  override protected def evalRow(row: ArrayData, v: ArrayData,
-      n: Int): Any = {
-    var dot = 0.0
-    var cn2 = 0.0
-    var j = 0
-    while (j < n) {
-      if (row.isNullAt(j) || v.isNullAt(j)) return null
-      val c = row.getDouble(j)
-      val x = if (isFloatVec) v.getFloat(j).toDouble else v.getDouble(j)
-      dot += c * x
-      cn2 += c * c
-      j += 1
-    }
-    cn2 - 2.0 * dot
-  }
-
-  override protected def genRowLoop(ctx: CodegenContext, row: String,
-      vec: String, n: String, acc: String, nullFlag: String): String = {
-    val j = ctx.freshName("j")
-    val dot = ctx.freshName("dot")
-    val cn2 = ctx.freshName("cn2")
-    val c = ctx.freshName("c")
-    val getV =
-      if (isFloatVec) s"(double) $vec.getFloat($j)"
-      else s"$vec.getDouble($j)"
-    s"""
-       |double $dot = 0.0;
-       |double $cn2 = 0.0;
-       |for (int $j = 0; $j < $n; $j++) {
-       |  if ($row.isNullAt($j) || $vec.isNullAt($j)) {
-       |    $nullFlag = true; break;
-       |  }
-       |  double $c = $row.getDouble($j);
-       |  $dot += $c * $getV;
-       |  $cn2 += $c * $c;
-       |}
-       |$acc = $cn2 - 2.0 * $dot;
-     """.stripMargin
-  }
+  override protected def costs: Boolean = true
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -244,45 +134,20 @@ case class AdcScore(left: Expression, right: Expression, k: Int)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
+  @transient private lazy val isNullOut = new Array[Boolean](1)
+
   override def nullSafeEval(l: Any, c: Any): Any = {
-    val lut = l.asInstanceOf[ArrayData]
-    val codes = c.asInstanceOf[ArrayData]
-    val m = codes.numElements()
-    val n = lut.numElements()
-    var acc = 0.0
-    var j = 0
-    while (j < m) {
-      if (codes.isNullAt(j)) return null
-      val idx = j * k + codes.getInt(j)
-      if (idx < 0 || idx >= n || lut.isNullAt(idx)) return null
-      acc += lut.getDouble(idx)
-      j += 1
-    }
-    acc
+    val acc = Kernels.adc(l.asInstanceOf[ArrayData],
+      c.asInstanceOf[ArrayData], k, isNullOut)
+    if (isNullOut(0)) null else acc
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (lut, codes) => {
-      val m = ctx.freshName("m")
-      val n = ctx.freshName("n")
-      val j = ctx.freshName("j")
-      val idx = ctx.freshName("idx")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $m = $codes.numElements();
-         |int $n = $lut.numElements();
-         |double $acc = 0.0;
-         |for (int $j = 0; $j < $m; $j++) {
-         |  if ($codes.isNullAt($j)) { ${ev.isNull} = true; break; }
-         |  int $idx = $j * $k + $codes.getInt($j);
-         |  if ($idx < 0 || $idx >= $n || $lut.isNullAt($idx)) {
-         |    ${ev.isNull} = true; break;
-         |  }
-         |  $acc += $lut.getDouble($idx);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val isNull = Kernels.nullFlag(ctx)
+    nullSafeCodeGen(ctx, ev, (lut, codes) => s"""
+      |${ev.value} = graft.plans.Kernels.adc($lut, $codes, $k, $isNull);
+      |${ev.isNull} = $isNull[0];""".stripMargin)
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

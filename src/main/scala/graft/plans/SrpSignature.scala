@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** Deterministic pseudo-random hyperplanes for sign-random-projection LSH
@@ -12,9 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   *
   * Plane `p` component `i` is a splitmix64-mixed function of (p, i) mapped
   * to [-1, 1) — no RNG state, so every executor, every engine, every run
-  * derives the identical plane matrix from nothing but the indices. A
-  * top-level object gets Java static forwarders, so generated code calls
-  * `graft.plans.SrpPlanes.matrix(...)` directly.
+  * derives the identical plane matrix from nothing but the indices.
   */
 object SrpPlanes {
   /** splitmix64 finalizer over the packed (p, i) index → [-1, 1). */
@@ -27,19 +25,26 @@ object SrpPlanes {
     (z >>> 11).toDouble / 4503599627370496.0 - 1.0
   }
 
+  private val memo =
+    new java.util.concurrent.ConcurrentHashMap[java.lang.Long, Array[Double]]()
+
   /** Row-major plane matrix: `m(p * dim + i) = component(p, i)`. Built once
-    * per task (cached in codegen mutable state / the interpreted eval's
-    * transient cache) so the per-row hot loop is pure array arithmetic. */
-  def matrix(nPlanes: Int, dim: Int): Array[Double] = {
-    val m = new Array[Double](nPlanes * dim)
-    var p = 0
-    while (p < nPlanes) {
-      var i = 0
-      while (i < dim) { m(p * dim + i) = component(p, i); i += 1 }
-      p += 1
-    }
-    m
-  }
+    * per (nPlanes, dim) per JVM and then shared by every caller and thread
+    * through a concurrent memo, so [[Kernels.srpSig]]'s per-row loop is
+    * pure array arithmetic. Callers must only read it. The memo keeps one
+    * matrix per distinct (nPlanes, dim) asked for: the registry's few band
+    * shapes times the vector dims the data holds. */
+  def matrix(nPlanes: Int, dim: Int): Array[Double] =
+    memo.computeIfAbsent((nPlanes.toLong << 32) | dim, _ => {
+      val m = new Array[Double](nPlanes * dim)
+      var p = 0
+      while (p < nPlanes) {
+        var i = 0
+        while (i < dim) { m(p * dim + i) = component(p, i); i += 1 }
+        p += 1
+      }
+      m
+    })
 }
 
 /** Banded SRP-LSH signature: `graft_srp_sig(vec, nBands, bitsPerBand)` →
@@ -50,17 +55,16 @@ object SrpPlanes {
   * P(band match) = (1 - θ/π)^bits, so multi-bit bands keep random pairs
   * apart (2^-bits per band on orthogonal data) while banding preserves
   * recall on near-duplicates. Replaces the r3 interpreted nested-HOF
-  * formulation (VERDICT r3 "What's wrong" #2): one codegen'd fused loop,
-  * plane matrix hoisted out of the row loop, stays inside
-  * whole-stage codegen like [[DotProduct]].
+  * formulation (VERDICT r3 "What's wrong" #2): one fused loop
+  * ([[Kernels.srpSig]], called by both eval paths), plane matrix hoisted
+  * out of the row loop, stays inside whole-stage codegen like
+  * [[DotProduct]].
   *
   * Null semantics match [[DotProduct]]: null array or any null element →
   * NULL signature (the row simply never enters an LSH bucket).
   */
 case class SrpSignature(child: Expression, nBands: Int, bitsPerBand: Int)
     extends UnaryExpression {
-
-  private def nPlanes: Int = nBands * bitsPerBand
 
   private def elemType: Option[DataType] = child.dataType match {
     case ArrayType(DoubleType, _) => Some(DoubleType)
@@ -85,94 +89,14 @@ case class SrpSignature(child: Expression, nBands: Int, bitsPerBand: Int)
 
   private def isFloat: Boolean = elemType.contains(FloatType)
 
-  // interpreted-eval plane cache (tests / fallback; codegen has its own)
-  @transient private var evalPlanes: Array[Double] = _
-  @transient private var evalDim: Int = 0
+  override def nullSafeEval(input: Any): Any = Kernels.srpSig(
+    input.asInstanceOf[ArrayData], isFloat, nBands, bitsPerBand)
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = v.numElements()
-    if (evalPlanes == null || evalDim < n) {
-      evalPlanes = SrpPlanes.matrix(nPlanes, n)
-      evalDim = n
-    }
-    val acc = new Array[Double](nPlanes)
-    var i = 0
-    while (i < n) {
-      if (v.isNullAt(i)) return null
-      val xv = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
-      var p = 0
-      while (p < nPlanes) {
-        acc(p) += xv * evalPlanes(p * evalDim + i)
-        p += 1
-      }
-      i += 1
-    }
-    val sigs = new Array[Long](nBands)
-    var b = 0
-    while (b < nBands) {
-      var sg = 0L
-      var t = 0
-      while (t < bitsPerBand) {
-        sg = (sg << 1) | (if (acc(b * bitsPerBand + t) >= 0.0) 1L else 0L)
-        t += 1
-      }
-      sigs(b) = sg
-      b += 1
-    }
-    new GenericArrayData(sigs)
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planes = ctx.addMutableState("double[]", "srpPlanes")
-    val planesDim = ctx.addMutableState("int", "srpPlanesDim")
-    val acc = ctx.addMutableState("double[]", "srpAcc",
-      v => s"$v = new double[$nPlanes];")
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val p = ctx.freshName("p")
-      val b = ctx.freshName("b")
-      val t = ctx.freshName("t")
-      val xv = ctx.freshName("xv")
-      val sg = ctx.freshName("sg")
-      val sigs = ctx.freshName("sigs")
-      val poison = ctx.freshName("poison")
-      val get =
-        if (isFloat) s"(double) $c.getFloat($i)" else s"$c.getDouble($i)"
-      s"""
-         |int $n = $c.numElements();
-         |boolean $poison = false;
-         |if ($planes == null || $planesDim < $n) {
-         |  $planes = graft.plans.SrpPlanes.matrix($nPlanes, $n);
-         |  $planesDim = $n;
-         |}
-         |java.util.Arrays.fill($acc, 0.0);
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($c.isNullAt($i)) { $poison = true; break; }
-         |  double $xv = $get;
-         |  for (int $p = 0; $p < $nPlanes; $p++) {
-         |    $acc[$p] += $xv * $planes[$p * $planesDim + $i];
-         |  }
-         |}
-         |if ($poison) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long[] $sigs = new long[$nBands];
-         |  for (int $b = 0; $b < $nBands; $b++) {
-         |    long $sg = 0L;
-         |    for (int $t = 0; $t < $bitsPerBand; $t++) {
-         |      $sg = ($sg << 1) |
-         |        ($acc[$b * $bitsPerBand + $t] >= 0.0 ? 1L : 0L);
-         |    }
-         |    $sigs[$b] = $sg;
-         |  }
-         |  ${ev.value} =
-         |    new org.apache.spark.sql.catalyst.util.GenericArrayData($sigs);
-         |}
-       """.stripMargin
-    })
-  }
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"""
+      |${ev.value} = graft.plans.Kernels.srpSig(
+      |  $c, $isFloat, $nBands, $bitsPerBand);
+      |${ev.isNull} = ${ev.value} == null;""".stripMargin)
 
   override protected def withNewChildInternal(
       newChild: Expression): Expression = copy(child = newChild)

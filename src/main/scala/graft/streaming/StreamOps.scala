@@ -132,8 +132,12 @@ final class BufferedSessionProcessor(gapMinutes: Int)
 
   override def handleExpiredTimer(uid: Long, tv: TimerValues,
       info: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-      : Iterator[ClosedSession] =
+      : Iterator[ClosedSession] = {
+    // Spark has already dropped the firing timer: forget it, so reconcile
+    // does not try to delete it a second time
+    if (dl.exists() && dl.get() == info.getExpiryTimeInMs) dl.clear()
     reconcile(uid, tv.getCurrentWatermarkInMs())
+  }
 }
 
 /** Out-of-order-tolerant funnel detector on `transformWithState` — the

@@ -255,20 +255,26 @@ class EdgeCaseSpec extends AnyFunSuite {
     def write(v: Long)(path: String): Unit =
       Seq((v, s"dir$v")).toDF("id", "tag")
         .write.mode("overwrite").parquet(path)
-    val a = Materialize.once(spark, "edgecase", "/x/sf-1")(write(1L))
-    val b = Materialize.once(spark, "edgecase", "/x/sf_1")(write(2L))
-    assert(a.select("tag").head.getString(0) === "dir1")
-    assert(b.select("tag").head.getString(0) === "dir2")
-    // and the memo returns the SAME dataset on re-entry, not a rewrite
-    val a2 = Materialize.once(spark, "edgecase", "/x/sf-1") { _ =>
-      fail("second call for an already-written dir must not re-write")
+    val dirs = Seq("/x/sf-1", "/x/sf_1")
+    try {
+      val a = Materialize.once(spark, "edgecase", "/x/sf-1")(write(1L))
+      val b = Materialize.once(spark, "edgecase", "/x/sf_1")(write(2L))
+      assert(a.select("tag").head.getString(0) === "dir1")
+      assert(b.select("tag").head.getString(0) === "dir2")
+      // and the memo returns the SAME dataset on re-entry, not a rewrite
+      val a2 = Materialize.once(spark, "edgecase", "/x/sf-1") { _ =>
+        fail("second call for an already-written dir must not re-write")
+      }
+      assert(a2.select("id").head.getLong(0) === 1L)
+      // '/x/Aa' and '/x/BB' share a String.hashCode, which was the whole
+      // dir part of the old round-trip paths; the path rule keeps them apart
+      assert("/x/Aa".hashCode === "/x/BB".hashCode)
+      assert(Materialize.path(spark, "csv", "/x/Aa") !==
+        Materialize.path(spark, "csv", "/x/BB"))
+    } finally dirs.foreach { d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(Materialize.path(spark, "edgecase", d)))
     }
-    assert(a2.select("id").head.getLong(0) === 1L)
-    // '/x/Aa' and '/x/BB' share a String.hashCode, which was the whole
-    // dir part of the old round-trip paths; the path rule keeps them apart
-    assert("/x/Aa".hashCode === "/x/BB".hashCode)
-    assert(Materialize.path(spark, "csv", "/x/Aa") !==
-      Materialize.path(spark, "csv", "/x/BB"))
   }
 
   test("bucketed join tables are external graft_rt_ dirs, written once") {

@@ -6,9 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the graft_matvec / graft_pq_costs kernels (plans/MatVec.scala)
   * against the unrolled graft_dot composition they replaced: same
-  * doubles bit-for-bit, same null-element semantics, both eval paths
-  * (interpreted + codegen). The fixed-twin oracle hashes pin the same
-  * algebra end-to-end; this spec localizes a failure to the kernel. */
+  * doubles bit-for-bit, same null-element semantics. The `Seq.toDF`
+  * frames are folded to a LocalRelation before any code is generated, so
+  * those tests run interpreted eval only; the null-semantics test's RDD
+  * frame runs generated code. KernelSweepSpec compares the two eval paths
+  * of every kernel. The fixed-twin oracle hashes pin the same algebra
+  * end-to-end; this spec localizes a failure to the kernel. */
 class MatVecSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -70,22 +73,5 @@ class MatVecSpec extends AnyFunSuite {
         s"row $i col $c: expected ${mat.size} null elements, got $arr")
     }
     assert(out(2).isNullAt(0) && out(2).isNullAt(1))
-  }
-
-  test("kernels agree between codegen and interpreted eval") {
-    val df = Seq(Seq(0.3, -1.7, 2.9), Seq(1.5, 2.5, -3.5)).toDF("v")
-      .select(call_function("graft_matvec", typedLit(mat), col("v"))
-        .as("d"),
-        call_function("graft_pq_costs", typedLit(mat), col("v")).as("c"))
-    val withCodegen = df.collect().toSeq
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
-      val interpreted = df.collect().toSeq
-      assert(withCodegen === interpreted)
-    } finally {
-      spark.conf.unset("spark.sql.codegen.wholeStage")
-      spark.conf.unset("spark.sql.codegen.factoryMode")
-    }
   }
 }

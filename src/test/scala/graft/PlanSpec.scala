@@ -899,18 +899,7 @@ class PlanSpec extends AnyFunSuite {
     // Allowlist-or-split decision per hit: an entry needs a
     // justification for why the stage cannot or should not be narrowed
     // (and therefore deliberately runs per-operator).
-    val allow: Map[String, String] = Map(
-      "vec_ann_ivfpq" -> ("the trained search's single zero-shuffle " +
-        "stage fuses coarse assignment (graft_matvec) + m graft_pq_costs " +
-        "kernels + 2m argmins + two broadcast joins + graft_adc = 8339 " +
-        "bytes at m=8,k=16 — 4% over the JIT limit. Splitting requires " +
-        "an exchange (shuffling the corpus the design never shuffles) " +
-        "or caching corpus-sized assign state; per-operator fallback " +
-        "keeps every kernel in its own small JIT-able method and " +
-        "measured 2.84 s at 100x grown (r14 bisection; 30 s when the " +
-        "same stage ran as one interpreted method — the failure mode " +
-        "this audit exists to catch is the INTERPRETED one, fallback " +
-        "is the fix working as designed)"))
+    val allow: Map[String, String] = Map.empty
     var stagesSeen = 0
     val offending = Registry.all.flatMap { q =>
       val all = stageSizes(executedPhysical(q.build(spark, sf)))

@@ -1,6 +1,10 @@
 package graft
 
 import graft.streaming.{Ev, EvT, StreamOps}
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,6 +26,23 @@ class StreamingSpec extends AnyFunSuite {
   /** `e` with its event-time column, for the watermark-driven operators. */
   private def timed(e: Ev): EvT = EvT(e.event_id, e.ts_us, e.user_id,
     e.event_type, e.value, new java.sql.Timestamp(e.ts_us / 1000))
+
+  /** Runs `body` and returns every message logged in the JVM meanwhile
+    * (executors run in-process under `local[N]`). */
+  private def loggedDuring(body: => Unit): Seq[String] = {
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(e.getMessage.getFormattedMessage)
+    }
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    capture.start()
+    root.addAppender(capture)
+    try body
+    finally { root.removeAppender(capture); capture.stop() }
+    lines.toArray(Array.empty[String]).toSeq
+  }
 
   test("streaming tumbling window matches batch events_tumbling_window") {
     implicit val sqlCtx = spark.sqlContext
@@ -157,7 +178,7 @@ class StreamingSpec extends AnyFunSuite {
   test("transformWithState timer sessionizer matches batch sessionization") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    StreamTestUtil.withRocksDb(spark) {
+    val log = loggedDuring(StreamTestUtil.withRocksDb(spark) {
       // in-order replay with a 1-hour watermark: sessions are finalized
       // mid-stream as the watermark passes their gap deadlines, while
       // each user's unfinished suffix stays buffered
@@ -186,7 +207,11 @@ class StreamingSpec extends AnyFunSuite {
         StreamTestUtil.assertSessionsMatchBatch(spark, sf,
           spark.table("tws_session_test"))
       } finally q.stop()
-    }
+    })
+    // a fired timer is already gone: deleting it again logs a WARN per key
+    val stale = log.filter(_.contains("Failed to delete timer"))
+    assert(stale.isEmpty,
+      s"${stale.size} stale timer deletes, e.g. ${stale.headOption}")
   }
 
   test("buffered sessionizer: inclusive gap boundary under reversed arrival") {
