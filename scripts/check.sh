@@ -33,6 +33,8 @@ python3 scripts/bench_budgets.py bench_detail.json
 python3 scripts/bench_compare.py --selftest bench_detail.json
 # the per-key plan-count diff behind refactor claims: selftest only here
 python3 scripts/plan_diff.py --selftest
+# the benchmark's parent/change verdicts (perfbench/, read only here)
+python3 perfbench/compare.py --selftest
 if [[ -n "${GRAFT_BENCH_BASE:-}" ]]; then
   python3 scripts/bench_compare.py "$GRAFT_BENCH_BASE" bench_detail.json
 fi

@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.{FormattedMode, SparkPlan,
   WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.SortAggregateExec
 
 /** Diagnostic main: where did a key's time go, and which plan ran?
   *
@@ -19,9 +20,11 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   *
   *  - one execution whose plan report — the formatted initial plan, the
   *    AQE-final executed plan, every whole-stage codegen stage's max
-  *    method bytecode size and the subtree of any stage over the JIT
-  *    limit — is written to `<planDir>/<key>.txt`, or printed when no
-  *    planDir is given;
+  *    method bytecode size, the subtree of any stage over the JIT limit
+  *    and every sort-based aggregate of the final plan with its keys and
+  *    functions (an aggregate whose buffer is not fixed-width sorts its
+  *    whole input) — is written to `<planDir>/<key>.txt`, or printed when
+  *    no planDir is given;
   *  - `runs` samples, each printed as one JSON line that splits the wall
   *    into the phases that can actually be attributed under AQE (Bench's
   *    toRdd "plan" time silently contains most of the execution, because
@@ -101,6 +104,11 @@ object Diag {
     sizes.filter(_.bytes > JitLimit).foreach { s =>
       out ++= s"--- OVER-limit stage *(${s.id}) subtree:\n" +
         s.tree.linesIterator.take(14).map("  " + _ + "\n").mkString
+    }
+    allNodes(fin).collect { case a: SortAggregateExec => a }.foreach { a =>
+      out ++= s"--- SortAggregate: keys [${a.groupingExpressions
+        .mkString(", ")}] functions [${a.aggregateExpressions
+        .mkString(", ")}]\n"
     }
     out.result()
   }

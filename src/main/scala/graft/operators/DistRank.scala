@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed global row_number — the 100 TB replacement for
   * `row_number().over(Window.orderBy(...))`, whose unpartitioned window is
@@ -26,28 +26,35 @@ import org.apache.spark.sql.functions._
   *     split to the 16 MB advisory that keeps reduce-side sorts
   *     spill-free (same protection as before, now data-derived);
   *  2. stamp `monotonically_increasing_id()` (partitionId·2³³ + local
-  *     ordinal) and `localCheckpoint()` — the checkpoint pins ONE physical
+  *     ordinal), plus any partition-local column (the in-partition lag
+  *     predecessor of [[withGroupLag]], the in-partition running sums of
+  *     [[withRankAndCum]]) in one scan of each partition in its sort
+  *     order, and `localCheckpoint()` — the checkpoint pins ONE physical
   *     partitioning, because RangePartitioner samples its bounds (a
   *     re-executed subtree could re-sample differently, and the offsets
   *     collected in step 3 must describe the exact partitioning the final
-  *     plan reads);
+  *     plan reads), and it stores the partition-local columns, so no
+  *     later stage recomputes them;
   *  3. collect the ≤P per-partition row counts (and optional column sums /
   *     maxes / group runs / boundary rows) — P is the post-coalesce
   *     partition count, i.e. task-count-sized, never corpus-sized — in
   *     ONE narrow mapPartitions pass over the checkpointed blocks (r16:
   *     the old `groupBy(pid).agg(...).collect()` paid a whole extra
   *     shuffle + AQE stage per rank for the same ≤P rows), and broadcast
-  *     them back as a literal pid→offset map:
-  *     rank = offset(pid) + local ordinal + 1, pure map-side arithmetic.
+  *     them back as literal pid→offset / pid→boundary maps:
+  *     rank = offset(pid) + local ordinal + 1, running sum = offset(pid) +
+  *     in-partition sum, lag = in-partition predecessor or, on a
+  *     partition's first row, the previous partition's last row — pure
+  *     map-side arithmetic, no exchange after the sort.
   *
   * The output is bit-identical to the unpartitioned `row_number` whenever
   * `order` is a strict total order (callers tie-break to uniqueness, same
   * requirement the single-task form already had for determinism): range
   * boundaries may fall anywhere without changing any rank, so AQE/sample
-  * variance cannot perturb results. Running sums (`cum`) additionally get
-  * one hash exchange on the partition id — P groups, still never a single
-  * partition. DistRankSpec pins equivalence against the window form;
-  * PlanSpec pins the no-`SinglePartition` shape of every consumer.
+  * variance cannot perturb results. DistRankSpec pins equivalence against
+  * the window form and that the lag and running-sum frames plan no window
+  * and no exchange over the pinned blocks; PlanSpec pins the
+  * no-`SinglePartition` shape of every consumer.
   *
   * The eager checkpoint+collect during construction follows the
   * graph_pagerank / bpeMerges precedent; Bench times builders inside the
@@ -79,11 +86,14 @@ object DistRank {
       groups: Array[(String, Long)],
       lastGroup: String, lastSet: Boolean, lastVal: Long)
 
-  /** Range-sort `df` on `order` and pin the partitioning. The exchange is
-    * the planner's own (AQE-coalescible — see the class doc, step 1). */
-  private def sortedFrame(df: DataFrame, order: Seq[Column]): DataFrame =
-    df.orderBy(order: _*)
-      .withColumn("__mono", monotonically_increasing_id())
+  /** Range-sort `df` on `order`, stamp `__mono`, apply the
+    * partition-local `stamp` (see [[scanLocal]]) and pin the
+    * partitioning. The exchange is the planner's own (AQE-coalescible —
+    * see the class doc, step 1). */
+  private def sortedFrame(df: DataFrame, order: Seq[Column],
+      stamp: DataFrame => DataFrame = identity): DataFrame =
+    stamp(df.orderBy(order: _*)
+      .withColumn("__mono", monotonically_increasing_id()))
       // LAZY output checkpoint: the stats pass right below is the first
       // action, so one job pays shuffle + sort + mono-id + block storage
       // + the stats scan together (an eager checkpoint would spend a
@@ -92,6 +102,28 @@ object DistRank {
       // every consumer reads the same pinned partitioning — the
       // determinism argument is unchanged.
       .localCheckpoint(eager = false)
+
+  /** `df` plus nullable LONG columns `out`, filled by ONE pass over each
+    * partition in its sort order: `newStep()` makes a partition's state,
+    * and the step maps a row's values of `in` to its values of `out`.
+    * Applied inside [[sortedFrame]] before the checkpoint, so the values
+    * are computed once and stored with the pinned blocks. */
+  private def scanLocal(df: DataFrame, in: Seq[Column], out: Seq[String])(
+      newStep: () => Seq[Any] => Seq[Any]): DataFrame = {
+    val base = df.columns.length
+    val withIn = in.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
+      d.withColumn(s"__in$i", c)
+    }
+    val schema = StructType(df.schema.fields ++
+      out.map(StructField(_, LongType, nullable = true)))
+    withIn.mapPartitions { it =>
+      val step = newStep()
+      it.map { r =>
+        val v = r.toSeq
+        Row.fromSeq(v.take(base) ++ step(v.drop(base)))
+      }
+    }(Encoders.row(schema))
+  }
 
   /** One narrow scan of the checkpointed blocks collecting, per nonempty
     * partition: row count, per-`cumSrcs` non-null sums, per-`maxCols`
@@ -179,7 +211,12 @@ object DistRank {
 
   /** As [[withRank]], plus for each `(src, dst)` in `cum` a running sum of
     * long column `src` over the same total order, emitted as `dst`, plus
-    * the grand max of each long column in `maxCols`. */
+    * the grand max of each long column in `maxCols`. The running sum is
+    * the partition's own prefix sum, stamped by the scan that runs before
+    * the checkpoint, plus the sum of the earlier partitions from the stats
+    * collect — no window and no exchange after the sort. It keeps the rules
+    * of the per-partition `sum` window it replaces: NULL until the
+    * partition's first non-null `src`, and a long overflow raises. */
   def withRankAndCum(df: DataFrame, order: Seq[Column], rankCol: String,
       cum: Seq[(String, String)], maxCols: Seq[String] = Nil): Ranked = {
     val pid = shiftright(col("__mono"), 33)
@@ -194,7 +231,21 @@ object DistRank {
     // expensive should pass an already-checkpointed frame (events_rfm's
     // chained ranks do exactly that — rank 2 reads rank 1's pinned
     // blocks).
-    val sorted = sortedFrame(df, order)
+    val localCum = cum.indices.map(i => s"__cum$i")
+    val sorted = sortedFrame(df, order, d =>
+      if (cum.isEmpty) d
+      else scanLocal(d, cum.map(c => col(c._1)), localCum) { () =>
+        val acc = new Array[Long](cum.size)
+        val seen = new Array[Boolean](cum.size)
+        vs => vs.indices.map { i =>
+          if (vs(i) != null) {
+            val v = vs(i).asInstanceOf[Long]
+            acc(i) = if (seen(i)) Math.addExact(acc(i), v) else v
+            seen(i) = true
+          }
+          if (seen(i)) acc(i) else null
+        }
+      })
     val stats = collectPartStats(sorted, cum.map(_._1), maxCols, None, None)
     var rows = 0L
     val sums = scala.collection.mutable.Map(cum.map(_._1 -> 0L): _*)
@@ -217,18 +268,12 @@ object DistRank {
     val local = col("__mono").bitwiseAND(lit(LOCAL_MASK))
     val ranked = sorted.withColumn(rankCol,
       off(rankOff.result()) + local + lit(1L))
-    val withCums =
-      if (cum.isEmpty) ranked
-      else {
-        // P-group exchange on the partition id — the running sum's only
-        // shuffle; within a group, __mono ascending IS the sorted order.
-        val w = Window.partitionBy(pid).orderBy(col("__mono"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        cum.foldLeft(ranked) { case (acc, (src, dst)) =>
-          acc.withColumn(dst, off(cumOff(src).result()) + sum(col(src)).over(w))
-        }
-      }
-    Ranked(withCums.drop("__mono"), rows, sums.toMap, maxes.toMap)
+    val withCums = cum.zip(localCum).foldLeft(ranked) {
+      case (acc, ((src, dst), c)) =>
+        acc.withColumn(dst, off(cumOff(src).result()) + col(c))
+    }
+    Ranked(withCums.drop("__mono" +: localCum: _*), rows, sums.toMap,
+      maxes.toMap)
   }
 
   /** Per-group row_number (1-based within each `group` value over `order`)
@@ -300,28 +345,28 @@ object DistRank {
     * replacement for `lag(c).over(Window.partitionBy(group).orderBy(...))`
     * on a domain-bounded `group` (see [[withGroupRank]] for why that window
     * caps parallelism at the key domain). Rides the same range-partitioned
-    * global sort on (group +: order): within a physical partition the lag
-    * is a plain window over the partition id (P groups, parallel); the ≤P
-    * boundary rows (local ordinal 0) read their predecessor from a
-    * pid→(last group, last value) literal map — the per-partition LAST
-    * row rides the same ≤P-row single-pass stats scan as
-    * [[withRankAndCum]] (within-partition iteration order is the pinned
-    * sort order, so "last seen" equals the old max_by over the mono id).
-    * A lag is NULL when the predecessor row (in-partition or across the
-    * boundary) belongs to a different group, or the row is globally
-    * first — exactly the window form's semantics.
+    * global sort on (group +: order): within a physical partition each
+    * row's predecessor is stamped by the scan that runs before the
+    * checkpoint (the partition is contiguous and sorted, so the previous
+    * row in it IS the predecessor — no window, no exchange on the
+    * partition id); the ≤P boundary rows (local ordinal 0) read their
+    * predecessor from a pid→(last group, last value) literal map — the
+    * per-partition LAST row rides the same ≤P-row single-pass stats scan
+    * as [[withRankAndCum]]. A lag is NULL when the predecessor row
+    * (in-partition or across the boundary) belongs to a different group
+    * (compared by string form, as the boundary map is keyed), or the row
+    * is globally first — exactly the window form's semantics.
     *
     * Types are pinned by the literal maps: `group` must be STRING-typed
     * and `lagSrc` LONG-typed (the two callers' shapes: event_type / epoch
     * µs). Same strict-total-order + non-null-group contract as
-    * [[withGroupRank]]. The returned frame keeps the (group +: order)
-    * range-sorted partitioning, so a downstream re-sort on the same keys
-    * is a no-op exchange.
+    * [[withGroupRank]].
     */
   def withGroupLag(df: DataFrame, group: Column, order: Seq[Column],
       lagSrc: String, lagDst: String): DataFrame = {
-    require(!df.columns.contains("__mono"),
-      "withGroupLag: input must not contain reserved column __mono")
+    val reserved = Set("__mono", "__plag")
+    require(!df.columns.exists(reserved), s"withGroupLag: input must not " +
+      s"contain reserved columns ${reserved.mkString("/")}")
     // Type contract enforced at the call site (ADVICE r14): the boundary
     // maps are Map[Long, String] / Map[Long, Long] literals, so an INT
     // lagSrc or a non-string-castable group used to surface as an opaque
@@ -353,7 +398,19 @@ object DistRank {
     val guarded = when(group.isNull, raise_error(lit(
       "withGroupLag: NULL group key — group must be non-null")))
       .otherwise(group)
-    val sorted = sortedFrame(df, guarded.asc +: order)
+    val sorted = sortedFrame(df, guarded.asc +: order, d =>
+      scanLocal(d, Seq(group.cast("string"), col(lagSrc)), Seq("__plag")) {
+        () =>
+          var prevG: String = null
+          var prevV: Any = null
+          vs => {
+            val g = vs(0).asInstanceOf[String]
+            val out = if (g == prevG) prevV else null
+            prevG = g
+            prevV = vs(1)
+            Seq(out)
+          }
+      })
     // ≤P results (task-count-sized): each nonempty partition's LAST
     // (group, lagSrc) pair, keyed by pid — the boundary predecessors —
     // from the same single-pass stats scan every rank uses (r16: this was
@@ -367,7 +424,6 @@ object DistRank {
         if (prev.lastSet) prevVal += cur.pid -> prev.lastVal
       case _ => () // 0 or 1 nonempty partitions: no boundaries to patch
     }
-    val w = Window.partitionBy(pid).orderBy(col("__mono"))
     val local = col("__mono").bitwiseAND(lit(LOCAL_MASK))
     // element_at on a map literal returns NULL for absent keys — the
     // globally-first partition has no predecessor entry, so its boundary
@@ -375,10 +431,9 @@ object DistRank {
     val pg = element_at(typedLit(prevGrp.result()), pid)
     val pv = element_at(typedLit(prevVal.result()), pid)
     sorted.withColumn(lagDst,
-      when(local > lit(0L),
-        when(lag(group, 1).over(w) === group, lag(col(lagSrc), 1).over(w)))
+      when(local > lit(0L), col("__plag"))
       .otherwise(when(pg === group.cast("string"), pv)))
-      .drop("__mono")
+      .drop("__mono", "__plag")
   }
 
   /** Rank the SAME frame along several independent total orders in ONE

@@ -467,14 +467,15 @@ object EventOps {
     // domain (5 tasks each sorting ~20 TB at target scale; 19.0 s at 100×
     // grown vs 1.01 s at sf0.1). Both passes now ride DistRank's
     // range-partitioned global sort on (event_type, …) instead: the lag
-    // via [[DistRank.withGroupLag]] (P-way partition-local lag + a ≤P-row
-    // boundary map), the discrete percentiles via
+    // via [[DistRank.withGroupLag]] (partition-local lag stamped before the
+    // checkpoint + a ≤P-row boundary map), the discrete percentiles via
     // [[DistRank.withGroupRank]] (per-type rank = global rank − group
-    // anchor, broadcast join; the per-type count rides the same anchors,
-    // replacing the unbounded count() window). Bit-identical: ranks over
-    // the strict (gap_us, event_id) order select the same value at each
-    // percentile position as the old orderBy(gap_us) window did (ties
-    // among equal gap VALUES are value-deterministic).
+    // anchor, from literal maps; the per-type count rides the same
+    // anchors, replacing the unbounded count() window). Bit-identical:
+    // ranks over the strict (gap_us, event_id) order select the same value
+    // at each percentile position as the old orderBy(gap_us) window did
+    // (ties among equal gap VALUES are value-deterministic). The output is
+    // one row per event_type, so it is ordered with orderedDomain.
     Q("events_inter_arrival",
       (s, dir) => {
         val gaps = DistRank.withGroupLag(
@@ -497,7 +498,7 @@ object EventOps {
             min(col("gap_us")).as("min_us"),
             max(col("gap_us")).as("max_us"),
             count(lit(1)).as("n_gaps"))
-          .orderBy(col("event_type"))
+          .transform(df => Det.orderedDomain(df, col("event_type")))
       },
       Some(sql(s"""WITH e AS (
         |  SELECT event_type, ${sqlMicros("ts")} AS ts_us, event_id

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * desc then lexicographically smallest (l, r); greedy leftmost
   * non-overlapping rewrite) at ANY round count, and the full trainer must
   * not scale Spark jobs with R. */
-class BpeTrainSpec extends AnyFunSuite {
+class BpeTrainSpec extends AnyFunSuite with TempDirs {
   import operators.Bpe.{bpeTrainLocal, bpeMerges, BPE_MAX_TYPES}
 
   /** The naive reference: the exact algorithm of preflight.py's bpe_ref,
@@ -119,8 +119,7 @@ class BpeTrainSpec extends AnyFunSuite {
     // A FRESH memo key (the cache is keyed by dir string), so this is a
     // genuine training run even when another suite already trained on
     // TestSpark.sf in this JVM: copy the documents fixture to a temp dir.
-    val tmp = java.nio.file.Files.createTempDirectory("bpe_jobs").toFile
-    tmp.deleteOnExit()
+    val tmp = tempDir("bpe_jobs").toFile
     val src = new java.io.File(s"${TestSpark.sf}/documents.parquet")
     val dst = new java.io.File(tmp, "documents.parquet")
     java.nio.file.Files.copy(src.toPath, dst.toPath)

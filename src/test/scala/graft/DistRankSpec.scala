@@ -251,6 +251,68 @@ class DistRankSpec extends AnyFunSuite {
     assert(tinyGot.forall(_.isNullAt(tinyGot.head.fieldIndex("px"))))
   }
 
+  test("group lag and running sums plan no window and no exchange") {
+    import spark.implicits._
+    // Both partition-local columns are stamped before the checkpoint, so
+    // the returned frames read the pinned blocks through projections only.
+    val df = (1 to 2001).map(i => (s"t${i % 3}", i.toLong, (i % 11).toLong))
+      .toDF("g", "ord", "x")
+    val lagged = DistRank.withGroupLag(df, $"g", Seq($"ord".asc), "x", "px")
+    val summed = DistRank.withRankAndCum(df, Seq($"x".desc, $"ord".asc),
+      "rank", Seq("x" -> "cx")).df
+    Seq(lagged, summed).foreach { f =>
+      f.collect()
+      val p = f.queryExecution.executedPlan.toString
+      assert(!p.contains("Window") && !p.contains("Exchange"), p.take(3000))
+    }
+  }
+
+  test("running sum with NULL src at partition starts == per-partition " +
+      "window form") {
+    import spark.implicits._
+    // Only every 400th row has a value, so nearly every partition starts
+    // with a NULL run. The per-partition window the stamped sum replaces
+    // is NULL until the partition's first value and adds the earlier
+    // partitions' sums; the window form is rebuilt over the pinned
+    // partitions (spark_partition_id of the exchange-free result frame).
+    val df = (1 to 2000).map { i =>
+      (i.toLong, if (i % 400 == 0) Some(i.toLong) else None)
+    }.toDF("id", "x")
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, "false") // keep all 4 range partitions
+    val r =
+      try DistRank.withRankAndCum(df, Seq($"id".asc), "rank", Seq("x" -> "cx"))
+      finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val got = r.df.withColumn("pid", spark_partition_id())
+    val inPart = Window.partitionBy($"pid").orderBy($"rank")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val upTo = Window.orderBy($"rank")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val x0 = coalesce($"x", lit(0L))
+    val rows = got.withColumn("want",
+        sum(x0).over(upTo) - sum(x0).over(inPart) + sum($"x").over(inPart))
+      .select($"pid", $"rank", $"x", $"cx", $"want").collect()
+      .sortBy(_.getLong(1))
+    assert(rows.length === 2000)
+    rows.foreach { w =>
+      assert(Option(w.get(3)) === Option(w.get(4)), w.toString)
+    }
+    // the case is really exercised: a later partition starts with NULLs
+    // while the rows before it have a sum
+    val starts = rows.indices.filter(i => i > 0 &&
+      rows(i).getInt(0) != rows(i - 1).getInt(0)).map(rows(_))
+    assert(starts.exists(w => w.isNullAt(2) && w.isNullAt(3)),
+      rows.map(_.getInt(0)).distinct.mkString(","))
+    assert(r.totals("x") === (1 to 5).map(_ * 400L).sum)
+    // an overflowing running sum raises, as ANSI sum does
+    val big = Seq((1L, Long.MaxValue), (2L, 1L)).toDF("id", "x")
+    intercept[Exception] {
+      DistRank.withRankAndCum(big, Seq($"id".asc), "rank",
+        Seq("x" -> "cx")).df.collect()
+    }
+  }
+
   test("quartile-from-rank matches ntile(4) at awkward row counts") {
     import spark.implicits._
     // The events_rfm bucket formula: boundary(i) = i*(n/4) + min(i, n%4),

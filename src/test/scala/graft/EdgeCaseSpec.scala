@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Hand-built micro-fixtures for the semantics corners the SF fixtures
   * can't isolate (SURVEY §5.3): null join keys, frame edges, exact session
   * thresholds, decimal-sum exactness, null propagation in the native dot. */
-class EdgeCaseSpec extends AnyFunSuite {
+class EdgeCaseSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
@@ -292,7 +292,7 @@ class EdgeCaseSpec extends AnyFunSuite {
       }
     // a dir new to this application (so the first build must write),
     // holding copies of the two tables the key reads
-    val dir = Files.createTempDirectory("graft_bucket_src")
+    val dir = tempDir("graft_bucket_src")
     Seq("customer", "orders").foreach(t => Files.copy(
       Paths.get(s"$sf/$t.parquet"), dir.resolve(s"$t.parquet")))
     val warehouse = Paths.get(java.net.URI.create(

@@ -19,7 +19,7 @@ object TestSpark {
 
 /** Every registered query runs, is non-empty (R6), and re-runs identically
   * (total order ⇒ rerun-stable). */
-class RegistrySpec extends AnyFunSuite {
+class RegistrySpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   test("registry has no duplicate keys and covers the SURVEY inventory") {
@@ -132,8 +132,7 @@ class RegistrySpec extends AnyFunSuite {
     // this branch to be pinned too so a future generator flip in either
     // direction is provably covered. Built from the live fixture's own
     // ts_us so the expected values need no second source of truth.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tz_events").toString
+    val dir = tempDir("graft_tz_events").toString
     val src = Tables.events(spark, sf)
     src.withColumn("ts", col("ts_t")).drop("ts_us", "ts_t")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * set; positive scalings of one vector), plus a degenerate bucket past
   * it and graded near-dups, so an off-by-one cap, a pair emitted out of
   * order, or a changed drop rule moves a digest. */
-class NearDupPinSpec extends AnyFunSuite {
+class NearDupPinSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import ScaleGuardSpec.{writeDocs, writeEmbeddings}
   import LshSpec.refVec
@@ -28,7 +28,7 @@ class NearDupPinSpec extends AnyFunSuite {
   }
 
   private lazy val planted: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pin").toString
+    val dir = tempDir("graft_pin").toString
     val rnd = new scala.util.Random(17)
     val vocab = (0 until 60).map(i => s"w$i")
     def words(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size)))

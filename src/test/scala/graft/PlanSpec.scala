@@ -45,6 +45,14 @@ class PlanSpec extends AnyFunSuite {
     assert(planOf("join_sort_merge").contains("SortMergeJoin"))
   }
 
+  test("join_asof reduces each event's orders with a hash aggregate") {
+    // max_by over two long buffers is fixed-width; a max over a struct is
+    // not and plans a SortAggregate that sorts the event x order fan-out
+    val p = finalPlanOf(Registry.queries("join_asof")(spark, sf))
+    assert(p.contains("HashAggregate") && !p.contains("SortAggregate"),
+      p.take(3000))
+  }
+
   test("join_cross_theta is the intended BroadcastNestedLoopJoin") {
     assert(planOf("join_cross_theta").contains("BroadcastNestedLoopJoin"))
   }

@@ -17,12 +17,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * come through, so a guard can never pass by silently emptying the
   * output.
   */
-class ScaleGuardSpec extends AnyFunSuite {
+class ScaleGuardSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import ScaleGuardSpec._
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String): String = tempDir(prefix).toString
 
   test("shingle-df cap bounds text_ngram_jaccard candidates under a stop-shingle flood") {
     // 1200 docs all opening with the same 3-word "stop-shingle" — the
@@ -334,7 +333,7 @@ class ScaleGuardSpec extends AnyFunSuite {
     assert(Sessions.initialPartitions("/nonexistent_graft_dir", 32, adv)
       === 256)
     // synthetic footprints (sparse files: length() reports logical size)
-    val dir = java.nio.file.Files.createTempDirectory("graft_footprint")
+    val dir = tempDir("graft_footprint")
     def sized(gib: Long): String = {
       val f = new java.io.RandomAccessFile(
         dir.resolve("t.parquet").toFile, "rw")
@@ -358,7 +357,7 @@ class ScaleGuardSpec extends AnyFunSuite {
     // cwd; assert the detail routes to bench_detail_partial.json
     // (filtered, never the tracked anchor) and _meta records the confs
     // the session really used.
-    val cwd = java.nio.file.Files.createTempDirectory("graft_benchenv")
+    val cwd = tempDir("graft_benchenv")
     val mx = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments
     import scala.jdk.CollectionConverters._

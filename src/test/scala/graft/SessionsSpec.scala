@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one session factory and the diagnostic main built on it. */
-class SessionsSpec extends AnyFunSuite {
+class SessionsSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   private val pinned = Map(
@@ -31,7 +31,7 @@ class SessionsSpec extends AnyFunSuite {
 
   test("Diag.run: one phase JSON line per run and a three-section plan " +
       "file per key") {
-    val dir = Files.createTempDirectory("graft_diag")
+    val dir = tempDir("graft_diag")
     val keys = Seq("agg_hash_groupby", "join_sort_merge")
     val lines = Diag.run(spark, keys, sf, 2, Some(dir.toString))
     assert(lines.size === 4)

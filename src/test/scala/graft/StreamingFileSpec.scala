@@ -62,7 +62,7 @@ object StreamTestUtil {
   * source/sink/checkpoint/RocksDB-timer machinery against real
   * parquet-derived input: the sessionizer and the funnel detector run on
   * the sf0.01 event fixture, in order and scrambled). */
-class StreamingFileSpec extends AnyFunSuite {
+class StreamingFileSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
@@ -75,7 +75,7 @@ class StreamingFileSpec extends AnyFunSuite {
       .write.mode("append").parquet(src)
 
   test("parquet->parquet streaming is exactly-once across restart") {
-    val base = java.nio.file.Files.createTempDirectory("graft_stream")
+    val base = tempDir("graft_stream")
     val (src, out, ckpt) = (s"$base/src", s"$base/out", s"$base/ckpt")
     val events = Tables.table(spark, sf, "events")
       .select("event_id", "ts_us", "user_id", "event_type", "value")
@@ -123,7 +123,7 @@ class StreamingFileSpec extends AnyFunSuite {
 
   test("file-source timer sessionizer matches batch on sf0.01 events") {
     StreamTestUtil.withRocksDb(spark) {
-      val base = java.nio.file.Files.createTempDirectory("graft_ftws")
+      val base = tempDir("graft_ftws")
       val src = s"$base/src"
       val ev = Tables.table(spark, sf001, "events")
         .select("event_id", "ts_us", "user_id", "event_type", "value")
@@ -166,7 +166,7 @@ class StreamingFileSpec extends AnyFunSuite {
 
   test("file-source funnel detector matches batch events_funnel on sf0.01") {
     StreamTestUtil.withRocksDb(spark) {
-      val base = java.nio.file.Files.createTempDirectory("graft_ffun")
+      val base = tempDir("graft_ffun")
       val src = s"$base/src"
       val ev = Tables.table(spark, sf001, "events")
         .select("event_id", "ts_us", "user_id", "event_type", "value")
@@ -210,7 +210,7 @@ class StreamingFileSpec extends AnyFunSuite {
 
   test("buffered sessionizer matches batch on an OUT-OF-ORDER replay") {
     StreamTestUtil.withRocksDb(spark) {
-      val base = java.nio.file.Files.createTempDirectory("graft_bsess")
+      val base = tempDir("graft_bsess")
       val src = s"$base/src"
       val ev = Tables.table(spark, sf001, "events")
         .select("event_id", "ts_us", "user_id", "event_type", "value")
@@ -257,7 +257,7 @@ class StreamingFileSpec extends AnyFunSuite {
     // (shared column algebra) + first-arrival exact dedup. Replayed in
     // doc_id order, the stream must admit exactly one row per gated
     // content hash, covering exactly the batch gate's hash set.
-    val base = java.nio.file.Files.createTempDirectory("graft_admit")
+    val base = tempDir("graft_admit")
     val src = s"$base/src"
     val docs = Tables.table(spark, sf001, "documents")
     val rows = docs.collect().toSeq.sortBy(_.getAs[Long]("doc_id"))
@@ -297,7 +297,7 @@ class StreamingFileSpec extends AnyFunSuite {
     // corpus; after a stop/restart from the same checkpoint, 30 admitted
     // documents are re-offered VERBATIM under fresh doc_ids — the
     // recovered state must reject every one.
-    val base = java.nio.file.Files.createTempDirectory("graft_admit2")
+    val base = tempDir("graft_admit2")
     val (src, out, ckpt) = (s"$base/src", s"$base/out", s"$base/ckpt")
     val docs = Tables.table(spark, sf001, "documents")
     val rows = docs.collect().toSeq.sortBy(_.getAs[Long]("doc_id"))
@@ -362,7 +362,7 @@ class StreamingFileSpec extends AnyFunSuite {
     // re-offered content. The kill is simulated deterministically by
     // deleting the newest commits/<n> entry from the checkpoint — the
     // exact on-disk state a kill -9 in that window leaves behind.
-    val base = java.nio.file.Files.createTempDirectory("graft_admit3")
+    val base = tempDir("graft_admit3")
     val (src, out, ckpt) = (s"$base/src", s"$base/out", s"$base/ckpt")
     val docs = Tables.table(spark, sf001, "documents")
     val rows = docs.collect().toSeq.sortBy(_.getAs[Long]("doc_id"))
@@ -426,7 +426,7 @@ class StreamingFileSpec extends AnyFunSuite {
     // deterministic scramble the sessionizer/funnel OOO tests use must
     // yield output EXACTLY equal to the batch key — nothing is dropped
     // because the 40-day horizon exceeds the fixture's event-time span.
-    val base = java.nio.file.Files.createTempDirectory("graft_slide")
+    val base = tempDir("graft_slide")
     val src = s"$base/src"
     val ev = Tables.table(spark, sf001, "events")
       .select("event_id", "ts_us", "user_id", "event_type", "value")
@@ -471,7 +471,7 @@ class StreamingFileSpec extends AnyFunSuite {
 
   test("watermarked funnel matches batch on an OUT-OF-ORDER replay") {
     StreamTestUtil.withRocksDb(spark) {
-      val base = java.nio.file.Files.createTempDirectory("graft_wfun")
+      val base = tempDir("graft_wfun")
       val src = s"$base/src"
       val ev = Tables.table(spark, sf001, "events")
         .select("event_id", "ts_us", "user_id", "event_type", "value")

@@ -6,12 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Property tests on CONTROLLED synthetic tables written to temp parquet
   * and fed through the same registered query entry points (SURVEY §5.4) —
   * the fixtures can't isolate known-Jaccard pairs or known session gaps. */
-class SyntheticPropertySpec extends AnyFunSuite {
+class SyntheticPropertySpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
-  private def tmpSf(): String =
-    java.nio.file.Files.createTempDirectory("graft_synth").toString
+  private def tmpSf(): String = tempDir("graft_synth").toString
 
   test("minhash candidates track constructed shingle-Jaccard pairs") {
     val rnd = new scala.util.Random(42)
