@@ -313,6 +313,33 @@ class DistRankSpec extends AnyFunSuite {
     }
   }
 
+  test("group lag across 4 pinned range partitions == partitioned lag " +
+      "window") {
+    import spark.implicits._
+    // At test sizes AQE coalesces the range exchange to ONE partition, so
+    // the lag test above never reaches the pid->(last group, last value)
+    // boundary map. With coalescing off for the build, 4 partitions meet
+    // it, with group changes inside and at partition starts.
+    val df = (1 to 3001).map { i =>
+      (s"t${i % 3}", i.toLong * 7,
+        if (i % 97 == 0) None else Some(i.toLong * 13))
+    }.toDF("g", "ord", "x")
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    val lagged =
+      try DistRank.withGroupLag(df, $"g", Seq($"ord".asc), "x", "px")
+      finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val parts = lagged.select(spark_partition_id()).distinct().count()
+    assert(parts > 1, s"$parts partition(s)")
+    val w = Window.partitionBy($"g").orderBy($"ord".asc)
+    def byKey(f: org.apache.spark.sql.DataFrame) = f
+      .select($"g", $"ord", $"px").collect()
+      .map(r => (r.getString(0), r.getLong(1)) ->
+        (if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
+    assert(byKey(lagged) === byKey(df.withColumn("px", lag($"x", 1).over(w))))
+  }
+
   test("quartile-from-rank matches ntile(4) at awkward row counts") {
     import spark.implicits._
     // The events_rfm bucket formula: boundary(i) = i*(n/4) + min(i, n%4),
