@@ -29,7 +29,8 @@ import org.apache.spark.sql.execution.aggregate.SortAggregateExec
   *    into the phases that can actually be attributed under AQE (Bench's
   *    toRdd "plan" time silently contains most of the execution, because
   *    toRdd materializes every intermediate query stage):
-  *      build    — the Q builder call (eager DistRank/training jobs land here)
+  *      build    — the Q builder call (eager checkpoint/training jobs
+  *                 land here; `build_jobs` counts them)
   *      analyze  — qe.analyzed
   *      optimize — qe.optimizedPlan
   *      plan     — qe.executedPlan (physical planning, pre-AQE)
@@ -119,8 +120,12 @@ object Diag {
     Sessions.releaseKeyState(spark)
     Sessions.drainListeners(spark)
     val (j0, s0, n0) = log.counts
+    val b0 = log.buildJobs.get
+    val sc = spark.sparkContext
+    sc.addJobTag(StageLog.BuildTag)
     val t0 = System.nanoTime()
-    val qe = fn(spark, sfDir).queryExecution
+    val qe = try fn(spark, sfDir).queryExecution
+      finally sc.removeJobTag(StageLog.BuildTag)
     val t1 = System.nanoTime()
     qe.assertAnalyzed()
     val t2 = System.nanoTime()
@@ -140,6 +145,7 @@ object Diag {
       s""""optimize":${s(t2, t3)},"plan":${s(t3, t4)},""" +
       s""""toRdd":${s(t4, t5)},"count":${s(t5, t6)},""" +
       s""""total":${s(t0, t6)},"jobs":${j1 - j0},""" +
+      s""""build_jobs":${log.buildJobs.get - b0},""" +
       s""""stages":${s1 - s0},"tasks":${n1 - n0}}"""
   }
 

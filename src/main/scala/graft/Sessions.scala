@@ -154,9 +154,12 @@ object Sessions {
     * post-aggregate (PlanSpec's single-partition sweep is the
     * structural guarantee), yet WindowExec warns per plan —
     * hundreds of lines per Verify/test run that bury real warnings; the
-    * DistRank localCheckpoint unpersist warning is likewise by-design
-    * (each key rebuilds its own blocks). Log level only — no behavior
-    * change. Called by [[create]] after setLogLevel. */
+    * MapPartitionsRDD "locally checkpointed … cannot be recomputed after
+    * unpersisting" warning is likewise by-design: [[releaseKeyState]]
+    * unpersists the finished localCheckpoints of pipeline_pretokenize,
+    * the dedup supersteps and the count-min word counts, and each key
+    * rebuilds its own blocks. Log level only — no behavior change.
+    * Called by [[create]] after setLogLevel. */
   def quietBenignWarnings(): Unit =
     try {
       org.apache.logging.log4j.core.config.Configurator.setLevel(
@@ -175,8 +178,9 @@ object Sessions {
     * grown (vec_ann_ivfpq: 9.5 s suite-context vs 1.7 s isolated —
     * every new broadcast put had to disk-evict dead blocks first):
     *
-    *  - finished localCheckpoints (DistRank's range-sorted frames, the
-    *    dedup superstep cuts): each key rebuilds its own on the next
+    *  - finished localCheckpoints (pipeline_pretokenize's curated split
+    *    and word counts, the dedup superstep cuts, the count-min word
+    *    counts): each key rebuilds its own on the next
     *    invocation, so after the key's action returns they are dead
     *    weight — unpersist explicitly (non-blocking; removal overlaps
     *    the next key's planning).

@@ -12,6 +12,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   * [[clearStages]]. */
 final class StageLog extends SparkListener {
   val jobs, stages, tasks = new AtomicLong
+  /** Jobs started under the job tag [[StageLog.BuildTag]]. */
+  val buildJobs = new AtomicLong
   val shuffleWrite, shuffleRead, spilled = new AtomicLong
   val runTimes = new ConcurrentLinkedQueue[(Long, String)]
   val spills = new ConcurrentLinkedQueue[String]
@@ -19,8 +21,13 @@ final class StageLog extends SparkListener {
   def bytes: (Long, Long, Long) =
     (shuffleWrite.get, shuffleRead.get, spilled.get)
   def clearStages(): Unit = { runTimes.clear(); spills.clear() }
-  override def onJobStart(j: SparkListenerJobStart): Unit =
+  override def onJobStart(j: SparkListenerJobStart): Unit = {
     jobs.incrementAndGet()
+    // job tags travel as one comma-joined job property
+    if (Option(j.properties).exists(_.getProperty("spark.job.tags", "")
+        .split(",").contains(StageLog.BuildTag)))
+      buildJobs.incrementAndGet()
+  }
   override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
     val si = sc.stageInfo
     stages.incrementAndGet()
@@ -44,4 +51,9 @@ final class StageLog extends SparkListener {
           f"shufWrite=${m.shuffleWriteMetrics.bytesWritten / 1048576.0}%.1f MB")
     }
   }
+}
+
+object StageLog {
+  /** The job tag Diag sets around a key's builder call. */
+  val BuildTag = "graft-build"
 }

@@ -383,25 +383,6 @@ object Ann {
          |  j -> slice(v, j * (size(v) DIV $m) + 1, size(v) DIV $m))"""
         .stripMargin)).as(Seq("sub", "sv")))
 
-  private def pqCbFrame(s: SparkSession,
-      cb: Seq[(Int, Int, Seq[Double])]): DataFrame = {
-    import s.implicits._
-    cb.toDF("csub", "code", "cv")
-      .withColumn("cnorm2", dot(col("cv"), col("cv")))
-  }
-
-  /** Nearest centroid per (vector, subspace) against the broadcast
-    * codebook: min (cost, code) struct via hash agg, where
-    * cost = |c|² − 2x·c (equi-minimal with |x−c|²). */
-  private def pqAssign(sub: DataFrame, cbDf: DataFrame): DataFrame = {
-    sub.join(broadcast(cbDf), col("sub") === col("csub"))
-      .withColumn("cost", col("cnorm2") - lit(2.0) * dot(col("sv"), col("cv")))
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(min(struct(col("cost"), col("code"))).as("a"))
-      .select(col("vec_id"), col("sub"), col("a.code").as("code"),
-        col("a.cost").as("cost"))
-  }
-
   /** Trained per-subspace PQ codebooks (cached) — shared by
     * [[pqCodes]] and [[ivfpqSearch]]'s LUT construction. */
   private[graft] def pqCodebook(e0: DataFrame, m: Int, k: Int,
@@ -410,13 +391,13 @@ object Ann {
     pqMemo(s, (planKey(e0), m, k, iters))(TrainClock.timed("pq_codebook") {
       // Cap-bounded training subset (r16 — see [[trainSample]]): identity
       // at fixture SF; sizing count stays inside the memo+clock.
-      // PERSIST the sampled subvector frame (r16, the trainCoarse
-      // rationale): each iteration reads `sub` TWICE (pqAssign + the
-      // join back), so unpersisted Lloyd paid 2×iters full-corpus
-      // scan+filter+explode passes; cached it is ≤ ~cap × m subvector
-      // rows. Exact-decimal means ⇒ caching cannot change a value.
+      // PERSIST the sampled, widened vectors (r16, the trainCoarse
+      // rationale): unpersisted Lloyd paid iters full-corpus
+      // scan+filter passes; cached it is ≤ ~cap vectors. Exact-decimal
+      // means ⇒ caching cannot change a value.
       val eS = trainSample(e0)
-      val sub = subFrame(eS, m)
+      val emb = eS.select(col("vec_id"),
+          Det.widen(col("embedding")).as("embedding"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
       // Dense 0-based init: the first k vectors BY ORDER of vec_id seed
@@ -437,8 +418,13 @@ object Ann {
           (0 until k).map(code => (subId, code, rows(code % rows.length)._2))
         }.sortBy(t => (t._1, t._2))
       for (_ <- 1 to iters) {
-        val updated = pqAssign(sub, pqCbFrame(s, c))
-          .join(sub, Seq("vec_id", "sub"))
+        // assignment is the encoder's own map-side argmin (pqCodeCols);
+        // each vector then yields one (sub, code, subvector) row per
+        // subspace
+        val updated = pqCodeCols(emb, c, m, k)
+          .select(inline(array((0 until m).map(j => struct(
+            lit(j).as("sub"), col(s"c$j").as("code"),
+            subvec("embedding", j, m).as("sv"))): _*)))
           .select(col("sub"), col("code"),
             posexplode(col("sv")).as(Seq("pos", "x")))
           .groupBy(col("sub"), col("code"), col("pos"))
@@ -459,7 +445,7 @@ object Ann {
           (subId, code, updated.getOrElse((subId, code), cv)) }
       }
       c
-      } finally sub.unpersist(false)
+      } finally emb.unpersist(false)
     })
   }
 
@@ -468,12 +454,11 @@ object Ann {
     * per-subspace assignment is an argmin over k literal centroids — no
     * subvector explode, no broadcast join, no corpus shuffle (the
     * [[nearestListMap]] argument applied to the product quantizer; the
-    * old subFrame→pqAssign→pivot path exchanged m rows per corpus
-    * vector). `frame` must carry `embedding` as array<double>. |c|² is
-    * folded driver-side in the same left-to-right order as graft_dot, so
-    * every cost double is bit-identical to the join-based trainer's;
-    * tie-break matches pqAssign's min(struct(cost, code)): first
-    * (smallest) code among equal minima. */
+    * old subvector-explode→broadcast-join→pivot path exchanged m rows
+    * per corpus vector). `frame` must carry `embedding` as
+    * array<double>. |c|² is folded in the same left-to-right order as
+    * graft_dot; ties go to the first (smallest) code among equal minima.
+    * [[pqCodebook]]'s Lloyd rounds assign through it too. */
   private[operators] def pqCodeCols(frame: DataFrame,
       cb: Seq[(Int, Int, Seq[Double])], m: Int, k: Int): DataFrame = {
     val bySub = cb.groupBy(_._1)
@@ -821,7 +806,12 @@ object Ann {
     // per query (sorted by csub·k+code, so collect order cannot matter):
     // scoring is then ONE broadcast join plus one graft_adc loop, not m
     // chained joins.
-    val lutArr = qs.crossJoin(broadcast(pqCbFrame(e.sparkSession, pqCb)))
+    val cbDf = {
+      val s = qs.sparkSession
+      import s.implicits._
+      pqCb.toDF("csub", "code", "cv")
+    }
+    val lutArr = qs.crossJoin(broadcast(cbDf))
       .withColumn("lutval", dot(subvec("qu", "csub", m), col("cv")))
       .groupBy(col("q_id"))
       .agg(expr(s"""transform(

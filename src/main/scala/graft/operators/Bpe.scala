@@ -25,8 +25,8 @@ object Bpe {
     * Ranked via [[DistRank]] (r12, VERDICT r11 task 1): vocabulary grows
     * with the corpus (Heaps' law — ~10⁸⁺ types at 100 TB), so the old
     * unpartitioned `row_number` window was a single-task global sort; the
-    * two-phase rank is bit-identical ((cnt desc, word) is a strict total
-    * order — word is unique) with no single-partition exchange. */
+    * range-partitioned rank is bit-identical ((cnt desc, word) is a strict
+    * total order — word is unique) with no single-partition exchange. */
   private[graft] def vocabOf(tokens: DataFrame): DataFrame =
     vocabOfCounts(tokens.groupBy(col("word")).agg(count(lit(1)).as("cnt")))
 

@@ -210,7 +210,7 @@ object Curate {
         // curate chain (documents gates + sha256 canonical agg + the SRP
         // band window + pair join over embeddings: 15 parquet scans and
         // 41 Exchanges in the one main plan, plus the same chain twice
-        // again inside the eager rank). One eager localCheckpoint
+        // again inside the rank). One eager localCheckpoint
         // materializes the (doc_id, text) survivors and every pass reads
         // the pinned blocks — at 100 TB the curated corpus is stored
         // once (MEMORY_AND_DISK, spills gracefully; a production

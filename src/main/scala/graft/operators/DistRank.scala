@@ -1,515 +1,175 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, classic}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType}
+import graft.plans.GlobalRank
 
 /** Distributed global row_number — the 100 TB replacement for
   * `row_number().over(Window.orderBy(...))`, whose unpartitioned window is
-  * a single-task global sort (the r11 VERDICT's two `weak` sites: the
-  * full-vocabulary rank in [[Bpe.vocabOf]] and events_rfm's three
-  * ntile axes — both domains grow with the corpus).
+  * a single-task global sort (the full-vocabulary rank in [[Bpe.vocabOf]]
+  * and events_rfm's ntile axes — both domains grow with the corpus), and
+  * for `partitionBy(group)` windows over a small group domain, which cap
+  * parallelism at the domain.
   *
-  * Two-phase recipe (the classic zipWithIndex shape, kept in DataFrame
-  * land so downstream stays codegen'd):
-  *
-  *  1. global range sort (`orderBy`) — a parallel exchange
-  *     (`rangepartitioning`, never `SinglePartition`), so every partition
-  *     holds a contiguous, internally sorted slice of the total order.
-  *     The exchange is planner-inserted (ENSURE_REQUIREMENTS), so AQE
-  *     coalesces it to the advisory size: fixture SFs run ~data/1 MB
-  *     tasks instead of the initialPartitionNum ceiling (r16 find: the
-  *     old explicit `repartitionByRange(numShufflePartitions, …)` read
-  *     the AQE-inflated conf — 256 at 8×cpus — and explicit repartitions
-  *     are exempt from coalescing, so every downstream stage of every
-  *     rank dragged 256 tasks over sub-MB data), while grown SFs still
-  *     split to the 16 MB advisory that keeps reduce-side sorts
-  *     spill-free (same protection as before, now data-derived);
-  *  2. stamp `monotonically_increasing_id()` (partitionId·2³³ + local
-  *     ordinal), plus any partition-local column (the in-partition lag
-  *     predecessor of [[withGroupLag]], the in-partition running sums of
-  *     [[withRankAndCum]]) in one scan of each partition in its sort
-  *     order, and `localCheckpoint()` — the checkpoint pins ONE physical
-  *     partitioning, because RangePartitioner samples its bounds (a
-  *     re-executed subtree could re-sample differently, and the offsets
-  *     collected in step 3 must describe the exact partitioning the final
-  *     plan reads), and it stores the partition-local columns, so no
-  *     later stage recomputes them;
-  *  3. collect the ≤P per-partition row counts (and optional column sums /
-  *     maxes / group runs / boundary rows) — P is the post-coalesce
-  *     partition count, i.e. task-count-sized, never corpus-sized — in
-  *     ONE narrow mapPartitions pass over the checkpointed blocks (r16:
-  *     the old `groupBy(pid).agg(...).collect()` paid a whole extra
-  *     shuffle + AQE stage per rank for the same ≤P rows), and broadcast
-  *     them back as literal pid→offset / pid→boundary maps:
-  *     rank = offset(pid) + local ordinal + 1, running sum = offset(pid) +
-  *     in-partition sum, lag = in-partition predecessor or, on a
-  *     partition's first row, the previous partition's last row — pure
-  *     map-side arithmetic, no exchange after the sort.
+  * Each entry point is a thin DataFrame wrapper over one
+  * [[graft.plans.GlobalRank]] plan node, so building a frame starts no
+  * job and every cost shows in the plan. Its exec requires the range
+  * distribution of `order`: the planner inserts the range exchange (never
+  * `SinglePartition`; AQE coalesces it), one stats job reads each
+  * partition's row count, group counts, sums and last row, and one sort
+  * per partition emits rank = offset(pid) + local ordinal + 1, running
+  * sums and lags — no window, no persist, no checkpoint.
   *
   * The output is bit-identical to the unpartitioned `row_number` whenever
-  * `order` is a strict total order (callers tie-break to uniqueness, same
-  * requirement the single-task form already had for determinism): range
-  * boundaries may fall anywhere without changing any rank, so AQE/sample
-  * variance cannot perturb results. DistRankSpec pins equivalence against
-  * the window form and that the lag and running-sum frames plan no window
-  * and no exchange over the pinned blocks; PlanSpec pins the
-  * no-`SinglePartition` shape of every consumer.
-  *
-  * The eager checkpoint+collect during construction follows the
-  * graph_pagerank / bpeMerges precedent; Bench times builders inside the
-  * sample, so the eager phase stays honestly measured.
-  */
+  * `order` is a strict total order (callers tie-break to uniqueness, the
+  * same requirement the window form has for determinism): range
+  * boundaries may fall anywhere without changing any rank. DistRankSpec
+  * pins equivalence against the window forms, PlanSpec the
+  * no-`SinglePartition` shape of every consumer. Output columns are
+  * nullable LONGs (the lag keeps its source's type) and must be fresh
+  * names. */
 object DistRank {
-  /** Low 33 bits of monotonically_increasing_id = ordinal within the
-    * partition (Spark's documented layout: partitionId << 33 | ordinal). */
-  private val LOCAL_MASK = (1L << 33) - 1
-
-  /** Result frame plus the collected scalars: `rows` = grand row count,
-    * `totals(src)` = grand sum of each `cum` source column, `maxes(c)` =
-    * grand max of each `maxCols` column — scalars a caller would
-    * otherwise need a second (subtree-duplicating or job-adding)
-    * aggregate to obtain; here they ride the same ≤P-row stats collect
-    * for free (events_rfm gets its global anchor this way instead of a
-    * separate checkpoint + aggregate job pair). */
-  final case class Ranked(df: DataFrame, rows: Long,
-      totals: Map[String, Long], maxes: Map[String, Long])
-
-  /** Per-partition statistics from ONE pass over the checkpointed sorted
-    * frame (driver-side, ≤P results — task-count-sized, never
-    * corpus-sized). `groups` holds the partition's contiguous
-    * (group-as-string, run length) runs in within-partition order (the
-    * frame is sorted by group first, so runs are exact group segments);
-    * `last*` describe the partition's final row (the lag boundary). */
-  private final case class PStats(pid: Long, n: Long, sums: Array[Long],
-      maxSeen: Array[Boolean], maxes: Array[Long],
-      groups: Array[(String, Long)],
-      lastGroup: String, lastSet: Boolean, lastVal: Long)
-
-  /** Range-sort `df` on `order`, stamp `__mono`, apply the
-    * partition-local `stamp` (see [[scanLocal]]) and pin the
-    * partitioning. The exchange is the planner's own (AQE-coalescible —
-    * see the class doc, step 1). */
-  private def sortedFrame(df: DataFrame, order: Seq[Column],
-      stamp: DataFrame => DataFrame = identity): DataFrame =
-    stamp(df.orderBy(order: _*)
-      .withColumn("__mono", monotonically_increasing_id()))
-      // LAZY output checkpoint: the stats pass right below is the first
-      // action, so one job pays shuffle + sort + mono-id + block storage
-      // + the stats scan together (an eager checkpoint would spend a
-      // whole extra driver round-trip per rank). The pass still
-      // materializes the blocks BEFORE the caller's plan can run, so
-      // every consumer reads the same pinned partitioning — the
-      // determinism argument is unchanged.
-      .localCheckpoint(eager = false)
-
-  /** `df` plus nullable LONG columns `out`, filled by ONE pass over each
-    * partition in its sort order: `newStep()` makes a partition's state,
-    * and the step maps a row's values of `in` to its values of `out`.
-    * Applied inside [[sortedFrame]] before the checkpoint, so the values
-    * are computed once and stored with the pinned blocks. */
-  private def scanLocal(df: DataFrame, in: Seq[Column], out: Seq[String])(
-      newStep: () => Seq[Any] => Seq[Any]): DataFrame = {
-    val base = df.columns.length
-    val withIn = in.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-      d.withColumn(s"__in$i", c)
-    }
-    val schema = StructType(df.schema.fields ++
-      out.map(StructField(_, LongType, nullable = true)))
-    withIn.mapPartitions { it =>
-      val step = newStep()
-      it.map { r =>
-        val v = r.toSeq
-        Row.fromSeq(v.take(base) ++ step(v.drop(base)))
-      }
-    }(Encoders.row(schema))
-  }
-
-  /** One narrow scan of the checkpointed blocks collecting, per nonempty
-    * partition: row count, per-`cumSrcs` non-null sums, per-`maxCols`
-    * non-null maxes, optional contiguous group runs (`groupStr`, as
-    * strings), optional last-row (group, `lagSrc`) for lag boundaries.
-    * Replaces the old per-rank `groupBy(pid).agg(...).collect()` — same
-    * ≤P rows, but no shuffle, no extra AQE stage: a single result-stage
-    * job over the blocks the checkpoint just pinned. Values are
-    * bit-identical: LONG count/sum/max are order-independent, and the
-    * within-partition iteration order IS the pinned sort order, so "last
-    * row seen" equals the old `max_by(..., __mono)`. */
-  private def collectPartStats(sorted: DataFrame, cumSrcs: Seq[String],
-      maxCols: Seq[String], groupStr: Option[Column], lagSrc: Option[String])
-      : Array[PStats] = {
-    val probeCols: Seq[Column] = (col("__mono") +:
-      (cumSrcs.map(col) ++ maxCols.map(col))) ++
-      groupStr.map(_.cast("string")).toSeq ++ lagSrc.map(col).toSeq
-    val probe = sorted.select(probeCols: _*)
-    val nCum = cumSrcs.size
-    val nMax = maxCols.size
-    val hasG = groupStr.isDefined
-    val hasL = lagSrc.isDefined
-    val gi = 1 + nCum + nMax
-    val li = gi + (if (hasG) 1 else 0)
-    probe.queryExecution.toRdd.mapPartitionsWithIndex { (_, it) =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        var pid = -1L
-        var n = 0L
-        val sums = new Array[Long](nCum)
-        val maxSeen = new Array[Boolean](nMax)
-        val maxes = new Array[Long](nMax)
-        val groups = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-        var curG: String = null
-        var curN = 0L
-        var lastG: String = null
-        var lastSet = false
-        var lastV = 0L
-        while (it.hasNext) {
-          val r = it.next()
-          if (pid < 0) pid = r.getLong(0) >>> 33
-          n += 1
-          var i = 0
-          while (i < nCum) {
-            if (!r.isNullAt(1 + i)) sums(i) += r.getLong(1 + i)
-            i += 1
-          }
-          i = 0
-          while (i < nMax) {
-            val j = 1 + nCum + i
-            if (!r.isNullAt(j)) {
-              val v = r.getLong(j)
-              if (!maxSeen(i) || v > maxes(i)) { maxSeen(i) = true; maxes(i) = v }
-            }
-            i += 1
-          }
-          if (hasG) {
-            // group keys are guarded non-null by every caller (raise_error
-            // in the sort key fires during the exchange above)
-            val g = r.getUTF8String(gi).toString
-            if (curG == null || curG != g) {
-              if (curG != null) groups += ((curG, curN))
-              curG = g
-              curN = 0L
-            }
-            curN += 1
-            lastG = g
-          }
-          if (hasL) {
-            if (r.isNullAt(li)) lastSet = false
-            else { lastSet = true; lastV = r.getLong(li) }
-          }
+  /** `df` plus the [[GlobalRank]] outputs named in `rank`, `count`,
+    * `lagOut` and `cumOut`, over `group` (guarded non-null, leading the
+    * sort) and `order`. */
+  private def globalRank(df: DataFrame, group: Option[Column],
+      order: Seq[Column], lag: Option[Column], cums: Seq[Column],
+      rank: Option[String], count: Option[String], lagOut: Option[String],
+      cumOut: Seq[String]): DataFrame = {
+    val names = rank.toSeq ++ count ++ lagOut ++ cumOut
+    require(names.distinct.size == names.size &&
+      !names.exists(n => df.columns.exists(_.equalsIgnoreCase(n))),
+      s"DistRank: output names [${names.mkString(", ")}] must be fresh " +
+        s"and distinct (input has [${df.columns.mkString(", ")}])")
+    // a NULL group cannot be anchored, only ranked wrongly: the guard
+    // fires in the range exchange
+    val guarded = group.map(g => when(g.isNull, raise_error(lit(
+      "DistRank: NULL group key — group must be non-null"))).otherwise(g))
+    val exprs = lag.toSeq ++ cums
+    // one analysis resolves the sort keys and the lag/sum expressions
+    // against `df`'s attributes
+    val (keys, resolved, child) =
+      df.orderBy(guarded.map(_.asc).toSeq ++ order: _*)
+        .select(col("*") +: exprs.zipWithIndex.map { case (e, i) =>
+          e.as(s"_$i") }: _*)
+        .queryExecution.analyzed match {
+          case Project(list, s: Sort) =>
+            (s.order, list.takeRight(exprs.size).map {
+              case a: Alias => a.child
+              case e => e
+            }, s.child)
         }
-        if (curG != null) groups += ((curG, curN))
-        Iterator.single(PStats(pid, n, sums, maxSeen, maxes,
-          groups.toArray, lastG, lastSet, lastV))
-      }
-    }.collect().sortBy(_.pid)
+    val (lagE, cumE) = resolved.splitAt(lag.size)
+    require(cumE.forall(_.dataType == LongType),
+      s"DistRank: running-sum sources must be LONG, got " +
+        cumE.map(_.dataType).mkString(", "))
+    def out(n: String, t: DataType = LongType) = AttributeReference(n, t)()
+    val node = GlobalRank(guarded.map(_ => keys.head.child), keys,
+      lagE.headOption, cumE, rank.map(out(_)), count.map(out(_)),
+      lagOut.map(out(_, lagE.head.dataType)), cumOut.map(out(_)), child)
+    new classic.Dataset[Row](
+      df.sparkSession.asInstanceOf[classic.SparkSession], node,
+      Encoders.row(node.schema))
   }
 
   /** `df` + a 1-based global-rank column over `order` (which must be a
     * strict total order — tie-break to uniqueness, e.g. with a key col). */
   def withRank(df: DataFrame, order: Seq[Column], rankCol: String): DataFrame =
-    withRankAndCum(df, order, rankCol, Nil).df
+    withRankAndCum(df, order, rankCol, Nil)
 
   /** As [[withRank]], plus for each `(src, dst)` in `cum` a running sum of
-    * long column `src` over the same total order, emitted as `dst`, plus
-    * the grand max of each long column in `maxCols`. The running sum is
-    * the partition's own prefix sum, stamped by the scan that runs before
-    * the checkpoint, plus the sum of the earlier partitions from the stats
-    * collect — no window and no exchange after the sort. It keeps the rules
-    * of the per-partition `sum` window it replaces: NULL until the
-    * partition's first non-null `src`, and a long overflow raises. */
+    * long column `src` over the same total order, emitted as `dst`. It
+    * keeps the rules of the per-partition `sum` window it replaces: NULL
+    * until the partition's first non-null `src`, plus the sum of the
+    * earlier partitions, and a long overflow raises. */
   def withRankAndCum(df: DataFrame, order: Seq[Column], rankCol: String,
-      cum: Seq[(String, String)], maxCols: Seq[String] = Nil): Ranked = {
-    val pid = shiftright(col("__mono"), 33)
-    // NOTE on the range exchange's double-compute: RangePartitioner's
-    // sampling pass computes the upstream chain once and the shuffle map
-    // stage computes it again — the same two-pass cost every Spark
-    // global sort (orderBy) pays. Checkpointing the input first was
-    // measured WORSE here (an AQE-backed Dataset's lazy localCheckpoint
-    // materializes its upstream stages eagerly at call time and lazy
-    // local checkpointing launches synchronous catch-up jobs — 5-16 s
-    // stalls at fixture scale); callers whose upstream is genuinely
-    // expensive should pass an already-checkpointed frame (events_rfm's
-    // chained ranks do exactly that — rank 2 reads rank 1's pinned
-    // blocks).
-    val localCum = cum.indices.map(i => s"__cum$i")
-    val sorted = sortedFrame(df, order, d =>
-      if (cum.isEmpty) d
-      else scanLocal(d, cum.map(c => col(c._1)), localCum) { () =>
-        val acc = new Array[Long](cum.size)
-        val seen = new Array[Boolean](cum.size)
-        vs => vs.indices.map { i =>
-          if (vs(i) != null) {
-            val v = vs(i).asInstanceOf[Long]
-            acc(i) = if (seen(i)) Math.addExact(acc(i), v) else v
-            seen(i) = true
-          }
-          if (seen(i)) acc(i) else null
-        }
-      })
-    val stats = collectPartStats(sorted, cum.map(_._1), maxCols, None, None)
-    var rows = 0L
-    val sums = scala.collection.mutable.Map(cum.map(_._1 -> 0L): _*)
-    val maxes = scala.collection.mutable.Map.empty[String, Long]
-    val rankOff = Map.newBuilder[Long, Long]
-    val cumOff = cum.map(_._1 -> Map.newBuilder[Long, Long]).toMap
-    stats.foreach { ps =>
-      rankOff += ps.pid -> rows
-      rows += ps.n
-      cum.map(_._1).zipWithIndex.foreach { case (src, i) =>
-        cumOff(src) += ps.pid -> sums(src)
-        sums(src) += ps.sums(i)
-      }
-      maxCols.zipWithIndex.foreach { case (c, i) =>
-        if (ps.maxSeen(i))
-          maxes(c) = math.max(maxes.getOrElse(c, Long.MinValue), ps.maxes(i))
-      }
-    }
-    def off(m: Map[Long, Long]): Column = element_at(typedLit(m), pid)
-    val local = col("__mono").bitwiseAND(lit(LOCAL_MASK))
-    val ranked = sorted.withColumn(rankCol,
-      off(rankOff.result()) + local + lit(1L))
-    val withCums = cum.zip(localCum).foldLeft(ranked) {
-      case (acc, ((src, dst), c)) =>
-        acc.withColumn(dst, off(cumOff(src).result()) + col(c))
-    }
-    Ranked(withCums.drop("__mono" +: localCum: _*), rows, sums.toMap,
-      maxes.toMap)
-  }
+      cum: Seq[(String, String)]): DataFrame =
+    globalRank(df, None, order, None, cum.map(c => col(c._1)), Some(rankCol),
+      None, None, cum.map(_._2))
 
   /** Per-group row_number (1-based within each `group` value over `order`)
-    * plus optionally the group's row count — the 100 TB replacement for
+    * plus optionally the group's row count — the replacement for
     * `row_number().over(Window.partitionBy(group).orderBy(order))` when
-    * `group`'s DOMAIN is small (event_type: 5 values, lang: 4): the window
-    * form hashes EVERY fact row into #domain reducers, capping parallelism
-    * at the key domain (the r13 VERDICT's remaining `weak` family — 5
-    * tasks each sorting ~20 TB at target scale), while this runs ONE
-    * global range-partitioned sort on (group +: order) across all P
-    * partitions and recovers the per-group rank as
-    * `global rank − group's first global rank + 1`.
-    *
-    * The group anchors (first global rank + row count per group) ride the
-    * SAME ≤P-row stats pass as the rank offsets (r16: they were a
-    * separate G-row aggregate + broadcast join — one whole extra shuffle
-    * + broadcast build per call for numbers the stats pass already
-    * walks): per-partition contiguous (group, run-length) segments —
-    * ≤ P + G − 1 entries total, domain-bounded by the caller's own
-    * premise — fold into gmin/count literal maps, and the rank is pure
-    * map-side arithmetic `element_at(gmin, group) …`, no join at all.
-    * The output rank column is LONG (the window form's row_number is INT
-    * — callers that compared against `.cast("long")` are unchanged).
-    *
-    * Contract: (group +: order) must be a strict total order (tie-break to
-    * uniqueness — same requirement as [[withRank]]), `group` must be
-    * non-null (enforced by a codegen-resident raise_error guard in the
-    * sort key: a NULL group must fail loudly, not silently mis-rank), and
-    * group values must be distinct under their string form (the literal
-    * maps key by `group.cast("string")`, same convention as
-    * [[withGroupLag]]'s boundary maps — trivially true for the callers'
-    * STRING keys).
-    */
+    * `group`'s domain is small (event_type: 5 values, lang: 4): the window
+    * form hashes every row into #domain reducers, while this runs one
+    * range-partitioned sort on (group +: order) across all partitions.
+    * The rank column is LONG (the window form's row_number is INT).
+    * Contract: (group +: order) must be a strict total order and `group`
+    * must be non-null (a NULL group raises). */
   def withGroupRank(df: DataFrame, group: Column, order: Seq[Column],
-      rankCol: String, cntCol: Option[String] = None): DataFrame = {
-    val reserved = Set("__gr", "__mono")
-    require(!df.columns.exists(reserved), s"withGroupRank: input must not " +
-      s"contain reserved columns ${reserved.mkString("/")}")
-    val guarded = when(group.isNull, raise_error(lit(
-      "withGroupRank: NULL group key — group must be non-null (a NULL " +
-      "group cannot be anchored, only ranked wrongly)")))
-      .otherwise(group)
-    val sorted = sortedFrame(df, guarded.asc +: order)
-    val stats = collectPartStats(sorted, Nil, Nil, Some(group), None)
-    val rankOff = Map.newBuilder[Long, Long]
-    val gmin = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val gcnt = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    var pos = 0L
-    stats.foreach { ps =>
-      rankOff += ps.pid -> pos
-      ps.groups.foreach { case (g, c) =>
-        if (!gmin.contains(g)) gmin(g) = pos + 1
-        gcnt(g) = gcnt.getOrElse(g, 0L) + c
-        pos += c
-      }
-    }
-    val pid = shiftright(col("__mono"), 33)
-    val local = col("__mono").bitwiseAND(lit(LOCAL_MASK))
-    val gr = element_at(typedLit(rankOff.result()), pid) + local + lit(1L)
-    val gs = group.cast("string")
-    val ranked = sorted.withColumn(rankCol,
-      gr - element_at(typedLit(gmin.toMap), gs) + lit(1L))
-    val named = cntCol.fold(ranked)(c =>
-      ranked.withColumn(c, element_at(typedLit(gcnt.toMap), gs)))
-    named.drop("__mono")
-  }
+      rankCol: String, cntCol: Option[String] = None): DataFrame =
+    globalRank(df, Some(group), order, None, Nil, Some(rankCol), cntCol,
+      None, Nil)
 
-  /** Per-group lag(1) of long column `lagSrc` over `order` — the 100 TB
-    * replacement for `lag(c).over(Window.partitionBy(group).orderBy(...))`
-    * on a domain-bounded `group` (see [[withGroupRank]] for why that window
-    * caps parallelism at the key domain). Rides the same range-partitioned
-    * global sort on (group +: order): within a physical partition each
-    * row's predecessor is stamped by the scan that runs before the
-    * checkpoint (the partition is contiguous and sorted, so the previous
-    * row in it IS the predecessor — no window, no exchange on the
-    * partition id); the ≤P boundary rows (local ordinal 0) read their
-    * predecessor from a pid→(last group, last value) literal map — the
-    * per-partition LAST row rides the same ≤P-row single-pass stats scan
-    * as [[withRankAndCum]]. A lag is NULL when the predecessor row
-    * (in-partition or across the boundary) belongs to a different group
-    * (compared by string form, as the boundary map is keyed), or the row
-    * is globally first — exactly the window form's semantics.
-    *
-    * Types are pinned by the literal maps: `group` must be STRING-typed
-    * and `lagSrc` LONG-typed (the two callers' shapes: event_type / epoch
-    * µs). Same strict-total-order + non-null-group contract as
-    * [[withGroupRank]].
-    */
+  /** Per-group lag(1) of column `lagSrc` over `order` — the replacement
+    * for `lag(c).over(Window.partitionBy(group).orderBy(...))` on a
+    * domain-bounded `group`, on the same sort as [[withGroupRank]]. A lag
+    * is NULL when the predecessor row (in the partition, or the previous
+    * partition's last row) belongs to a different group, or the row is
+    * globally first — the window form's semantics. Same strict-total-order
+    * and non-null-group contract as [[withGroupRank]]. */
   def withGroupLag(df: DataFrame, group: Column, order: Seq[Column],
-      lagSrc: String, lagDst: String): DataFrame = {
-    val reserved = Set("__mono", "__plag")
-    require(!df.columns.exists(reserved), s"withGroupLag: input must not " +
-      s"contain reserved columns ${reserved.mkString("/")}")
-    // Type contract enforced at the call site (ADVICE r14): the boundary
-    // maps are Map[Long, String] / Map[Long, Long] literals, so an INT
-    // lagSrc or a non-string-castable group used to surface as an opaque
-    // ClassCastException deep in the driver-side stats collect — fail
-    // with a named error here instead.
-    import org.apache.spark.sql.types.{LongType, ArrayType, MapType, StructType}
-    // Resolve lagSrc through the analyzer (ADVICE r15): a schema.fields
-    // name compare is case-SENSITIVE, diverging from Spark's resolution
-    // everywhere else in this method, and a missing column would read as
-    // the confusing "must be LONG-typed ... found null".
-    val lagType =
-      try Some(df.select(col(lagSrc)).schema.head.dataType)
-      catch {
-        case _: org.apache.spark.sql.AnalysisException => None
-      }
-    require(lagType.isDefined,
-      s"withGroupLag: lagSrc column '$lagSrc' not found in " +
-        s"[${df.columns.mkString(", ")}]")
-    require(lagType.contains(LongType),
-      s"withGroupLag: lagSrc '$lagSrc' must be LONG-typed (the boundary " +
-        s"map literal is Map[Long, Long]); found ${lagType.get}")
-    val groupType = df.select(group).schema.head.dataType
-    require(!groupType.isInstanceOf[ArrayType] &&
-        !groupType.isInstanceOf[MapType] &&
-        !groupType.isInstanceOf[StructType],
-      s"withGroupLag: group must be a string-castable atomic type (the " +
-        s"boundary map literal is Map[Long, String]); found $groupType")
-    val pid = shiftright(col("__mono"), 33)
-    val guarded = when(group.isNull, raise_error(lit(
-      "withGroupLag: NULL group key — group must be non-null")))
-      .otherwise(group)
-    val sorted = sortedFrame(df, guarded.asc +: order, d =>
-      scanLocal(d, Seq(group.cast("string"), col(lagSrc)), Seq("__plag")) {
-        () =>
-          var prevG: String = null
-          var prevV: Any = null
-          vs => {
-            val g = vs(0).asInstanceOf[String]
-            val out = if (g == prevG) prevV else null
-            prevG = g
-            prevV = vs(1)
-            Seq(out)
-          }
-      })
-    // ≤P results (task-count-sized): each nonempty partition's LAST
-    // (group, lagSrc) pair, keyed by pid — the boundary predecessors —
-    // from the same single-pass stats scan every rank uses (r16: this was
-    // a groupBy(pid).agg(max_by(...)) — a whole extra shuffle per call).
-    val stats = collectPartStats(sorted, Nil, Nil, Some(group), Some(lagSrc))
-    val prevGrp = Map.newBuilder[Long, String]
-    val prevVal = Map.newBuilder[Long, Long]
-    stats.sliding(2).foreach {
-      case Array(prev, cur) =>
-        prevGrp += cur.pid -> prev.lastGroup
-        if (prev.lastSet) prevVal += cur.pid -> prev.lastVal
-      case _ => () // 0 or 1 nonempty partitions: no boundaries to patch
-    }
-    val local = col("__mono").bitwiseAND(lit(LOCAL_MASK))
-    // element_at on a map literal returns NULL for absent keys — the
-    // globally-first partition has no predecessor entry, so its boundary
-    // row lags NULL, same as the window form's first row per group.
-    val pg = element_at(typedLit(prevGrp.result()), pid)
-    val pv = element_at(typedLit(prevVal.result()), pid)
-    sorted.withColumn(lagDst,
-      when(local > lit(0L), col("__plag"))
-      .otherwise(when(pg === group.cast("string"), pv)))
-      .drop("__mono", "__plag")
-  }
+      lagSrc: String, lagDst: String): DataFrame =
+    globalRank(df, Some(group), order, Some(col(lagSrc)), Nil, None, None,
+      Some(lagDst), Nil)
 
   /** Rank the SAME frame along several independent total orders in ONE
-    * two-phase pass (one exchange + one checkpoint + one ≤P-row stats
-    * collect, however many axes — each separate [[withRank]] call costs a
-    * whole driver job, which at fixture scale is pure dispatch-floor wall;
-    * events_rfm's recency+monetary axes fused this way cut the key from
-    * three rank jobs to two).
+    * pass (one exchange, one stats job, however many axes).
     *
-    * Shape: the frame is unioned once per axis with the axis index as the
-    * LEADING range key, so every axis-i row ranks before every axis-(i+1)
-    * row and rank-within-axis = global rank − i·n (n = rows per axis,
-    * read off the same stats collect). The per-axis ranks are then pivoted
-    * back onto the original row — `groupBy(key).agg(max(when(axis=i, …)))`
-    * — one hash exchange on the key domain, never a single partition; the
-    * non-key columns ride the pivot as `max` of identical copies.
+    * Shape: one `inline(array(struct(__axis, __skey), …))` tags each input
+    * row with every axis, so the input is evaluated once; the axis index
+    * is the group of one [[withGroupRank]], so each axis ranks on its own.
+    * The per-axis ranks are then pivoted back onto the original row —
+    * `groupBy(key).agg(max(when(__axis = i, …)))` — one hash exchange on
+    * the key domain, never a single partition; the non-key columns ride
+    * the pivot as `max` of identical copies.
     *
     * Each axis supplies `(skey, outCol)`: a sort column normalized to
-    * ASCENDING whose type is IDENTICAL across axes (the union must not
-    * coerce — callers encode descending order by negation, exact for
-    * finite doubles and in-range longs) and the output rank column name.
-    * Ties break on `key`, which must be unique per row — the same strict-
-    * total-order requirement every rank here has; enforced at runtime by
-    * a raise_error in the pivot aggregate (every key group must hold
-    * exactly axes.size rows), so a duplicated key fails instead of
-    * max-merging ranks. Output is bit-identical
-    * to axes.size separate unpartitioned `row_number` windows **provided
-    * every axis sort key is NON-NULL** — enforced at runtime by a
+    * ASCENDING whose type is identical across axes (callers encode
+    * descending order by negation, exact for finite doubles and in-range
+    * longs) and the output rank column name. Ties break on `key`, which
+    * must be unique per row — enforced at runtime by a raise_error in the
+    * pivot aggregate (every key group must hold exactly axes.size rows),
+    * so a duplicated key fails instead of max-merging ranks. Output is
+    * bit-identical to axes.size separate unpartitioned `row_number`
+    * windows **provided every axis sort key is NON-NULL** — enforced by a
     * per-row raise_error guard, because one fused sort cannot honor
     * per-axis null placement (`(-c).asc` puts NULLs FIRST while `c.desc`
-    * puts them LAST — the r12 ADVICE divergence). Callers with nullable
-    * keys encode the placement explicitly, e.g.
-    * `-coalesce(c, lit(Double.NegativeInfinity))` reproduces
-    * `c.desc_nulls_last` (all-NULL rows tie and fall to the `key`
-    * tie-break, same as both engines' window forms).
+    * puts them LAST). Callers with nullable keys encode the placement
+    * explicitly, e.g. `-coalesce(c, lit(Double.NegativeInfinity))`
+    * reproduces `c.desc_nulls_last` (all-NULL rows tie and fall to the
+    * `key` tie-break, same as both engines' window forms).
     *
-    * The trade, stated honestly: vs axes.size CHAINED [[withRank]] calls
-    * this exchanges ~2× the bytes for this segment (the union carries
-    * axes copies of the row through the range exchange, and the pivot
-    * re-exchanges them) but halves the sequential barrier rounds and
-    * driver jobs, and materializes ONE checkpoint instead of axes. Right
-    * when the frame is a narrow aggregate (events_rfm's per-user rows)
-    * where latency, not bytes, dominates; for a wide frame, chain
-    * [[withRank]] instead. Non-key columns must be max-orderable types
-    * (the pivot takes max over identical copies).
-    */
+    * The trade: vs axes.size chained [[withRank]] calls this exchanges
+    * ~2× the bytes for this segment (axes copies of each row cross the
+    * range exchange, and the pivot re-exchanges them) but runs one sort
+    * instead of axes. Right when the frame is a narrow aggregate
+    * (events_rfm's per-user rows); for a wide frame, chain [[withRank]].
+    * Non-key columns must be max-orderable types. */
   def withRanksPivoted(df: DataFrame, key: String,
       axes: Seq[(Column, String)]): DataFrame = {
-    // Guardrails (r12 ADVICE): the reserved working names must not collide
-    // with caller columns (the withColumn would silently overwrite them),
-    // and axis output names must be fresh too (the pivot agg would emit
-    // duplicate column names).
+    // the working names must not collide with caller columns, and axis
+    // output names must be fresh too (the pivot agg would emit duplicate
+    // column names)
     val reserved = Set("__axis", "__skey", "__g")
     require(!df.columns.exists(reserved), s"withRanksPivoted: input must " +
       s"not contain reserved columns ${reserved.mkString("/")}")
     require(axes.map(_._2).distinct.size == axes.size &&
       !axes.map(_._2).exists(df.columns.toSet),
       "withRanksPivoted: axis output names must be fresh and distinct")
-    val tagged = axes.zipWithIndex.map { case ((skey, _), i) =>
+    val tags = axes.zipWithIndex.map { case ((skey, _), i) =>
       // NULL axis keys are a contract violation (see docstring) — fail
-      // loudly per row instead of silently mis-ranking. raise_error stays
-      // inside whole-stage codegen; the branch is never taken on valid
-      // data so the hot path cost is one null check.
-      val guarded = when(skey.isNull, raise_error(lit(
+      // loudly per row instead of silently mis-ranking
+      struct(lit(i).as("__axis"), when(skey.isNull, raise_error(lit(
         s"withRanksPivoted: NULL sort key in axis $i — axis keys must be " +
         "non-null; encode null placement with coalesce (see docstring)")))
-        .otherwise(skey)
-      df.withColumn("__axis", lit(i)).withColumn("__skey", guarded)
-    }.reduce(_ unionAll _)
-    val r = withRankAndCum(tagged,
-      Seq(col("__axis").asc, col("__skey").asc, col(key).asc), "__g", Nil)
-    // Each axis carries one copy of every row, so the grand count must be
-    // an exact multiple — anything else means the union/tagging broke.
-    require(r.rows % axes.size == 0, s"withRanksPivoted: ${r.rows} ranked " +
-      s"rows is not a multiple of ${axes.size} axes")
-    val n = r.rows / axes.size
+        .otherwise(skey).as("__skey"))
+    }
+    val ranked = withGroupRank(df.select(col("*"), inline(array(tags: _*))),
+      col("__axis"), Seq(col("__skey").asc, col(key).asc), "__g")
     val attrs = df.columns.filterNot(_ == key)
     // `key` must be unique per input row or the pivot max-merges ranks
     // into silently wrong output: each key group must hold exactly one
@@ -518,11 +178,11 @@ object DistRank {
     val unique = count(lit(1)) === lit(axes.size.toLong)
     val aggs = attrs.map(c => max(col(c)).as(c)) ++
       axes.zipWithIndex.map { case ((_, out), i) =>
-        when(unique, max(when(col("__axis") === i, col("__g") - lit(i * n))))
+        when(unique, max(when(col("__axis") === i, col("__g"))))
           .otherwise(raise_error(lit(s"withRanksPivoted: key '$key' is " +
             "not unique per row")))
           .as(out)
       }
-    r.df.groupBy(col(key)).agg(aggs.head, aggs.tail: _*)
+    ranked.groupBy(col(key)).agg(aggs.head, aggs.tail: _*)
   }
 }

@@ -467,11 +467,12 @@ object EventOps {
     // domain (5 tasks each sorting ~20 TB at target scale; 19.0 s at 100×
     // grown vs 1.01 s at sf0.1). Both passes now ride DistRank's
     // range-partitioned global sort on (event_type, …) instead: the lag
-    // via [[DistRank.withGroupLag]] (partition-local lag stamped before the
-    // checkpoint + a ≤P-row boundary map), the discrete percentiles via
-    // [[DistRank.withGroupRank]] (per-type rank = global rank − group
-    // anchor, from literal maps; the per-type count rides the same
-    // anchors, replacing the unbounded count() window). Bit-identical:
+    // via [[DistRank.withGroupLag]] (the previous row in the sorted
+    // partition, or the previous partition's last row), the discrete
+    // percentiles via [[DistRank.withGroupRank]] (per-type rank from the
+    // per-partition group counts of the stats pass; the per-type count
+    // comes from the same counts, replacing the unbounded count()
+    // window). Bit-identical:
     // ranks over the strict (gap_us, event_id) order select the same value
     // at each percentile position as the old orderBy(gap_us) window did
     // (ties among equal gap VALUES are value-deterministic). The output is
@@ -588,13 +589,13 @@ object EventOps {
     // everything after runs on the per-user aggregate. The USER domain
     // grows with the corpus, so quartiles are NOT ntile windows (r12,
     // VERDICT r11 task 2 — the old three unpartitioned ntile sorts were a
-    // single-task ceiling at ~10^8 users): each axis gets a DistRank
-    // two-phase global rank (range-partitioned, checkpoint-pinned, no
-    // single-partition exchange; the scalar anchor and n ride the first
-    // rank's ≤P-row stats collect instead of an unpartitioned whole-frame
-    // window, and the recency+monetary axes fuse into one union-tagged
-    // pass — two rank jobs total), and the bucket is literal arithmetic
-    // on the rank:
+    // single-task ceiling at ~10^8 users): the three axes are ranked in
+    // ONE fused DistRank pass (range-partitioned, no single-partition
+    // exchange), n and the recency anchor come from a scalar subquery
+    // over the per-user aggregate (it reuses that aggregate's exchange,
+    // so events are scanned once, instead of an unpartitioned
+    // whole-frame window), and the bucket is column arithmetic on the
+    // rank and n:
     // SQL-standard ntile(4) over n rows puts boundary i at rank
     // i·(n DIV 4) + min(i, n MOD 4) — equal buckets, remainder to the
     // earlier ones — so bucket = 1 + Σᵢ [rank > boundary(i)], bit-equal
@@ -606,30 +607,30 @@ object EventOps {
     // cross-engine. Quartile 1 is always "best".
     Q("events_rfm",
       (s, dir) => {
+        // n and the recency anchor come from ONE scalar subquery over
+        // perUser, which AQE answers from perUser's own exchange only if
+        // both copies plan the same partial aggregate. So the anchor's max
+        // runs over a struct of every per-user column (a column-pruned
+        // copy would not match), and the aggregates are listed in the
+        // order the ranks' projection reads them (freq, monetary, then
+        // last_us inside rec_days; the optimizer folds that projection
+        // into the aggregate). PlanSpec pins the reuse.
         val perUser = Tables.table(s, dir, "events")
           .groupBy(col("user_id"))
-          .agg(max(col("ts_us")).as("last_us"),
-            count(lit(1)).as("freq"),
-            dsum(col("value"), 2).as("monetary"))
-        // The frequency rank goes first because it does not need the
-        // recency anchor — so n (rows) and the anchor (max last_us) ride
-        // its ≤P-row stats collect, and the per-user aggregate needs no
-        // separate checkpoint + aggregate job pair of its own (each
-        // driver-side job is pure dispatch-floor wall at fixture scale).
-        val r1 = DistRank.withRankAndCum(perUser,
-          Seq(col("freq").desc, col("user_id").asc), "__f_rank",
-          Nil, maxCols = Seq("last_us"))
-        val n = r1.rows
-        val anchor = r1.maxes.getOrElse("last_us", 0L)
-        val scored = r1.df.withColumn("rec_days",
-          expr(s"(${anchor}L - last_us) DIV 86400000000"))
-        // Recency + monetary fuse into ONE two-phase pass (r12: each
-        // separate rank is a whole driver job — pure dispatch-floor wall
-        // at fixture scale — so 3 rank jobs become 2; the freq axis
-        // cannot join the fusion because its stats collect produces the
-        // anchor that DEFINES the recency sort key). Both axes normalize
-        // to ascending doubles: rec_days is a small long (exact under
-        // cast) and monetary is a finite dsum double (negation exact).
+          .agg(count(lit(1)).as("freq"),
+            dsum(col("value"), 2).as("monetary"),
+            max(col("ts_us")).as("last_us"))
+        val totals = perUser.select(struct(count(lit(1)).as("n"),
+          max(struct(col("last_us"), col("freq"), col("monetary")))
+            .getField("last_us").as("anchor"))).scalar()
+        val (n, anchor) = (totals.getField("n"), totals.getField("anchor"))
+        val scored = perUser.withColumn("rec_days", call_function("div",
+          anchor - col("last_us"), lit(86400000000L)))
+        // The three axes fuse into ONE tagged pass (one sort instead of
+        // three). All normalize to ascending doubles: rec_days and freq
+        // are small longs (exact under cast, freq negated for its
+        // descending order) and monetary is a finite dsum double
+        // (negation exact).
         // monetary is NULL for a user whose values are all NULL; both
         // `monetary.desc` (Spark) and the oracle's `ORDER BY monetary
         // DESC` (DuckDB default null order) put NULLs LAST, so the
@@ -639,14 +640,20 @@ object EventOps {
         // hard-rejects NULL axis keys).
         val ranked = DistRank.withRanksPivoted(scored, "user_id", Seq(
           (col("rec_days").cast("double"), "__r_rank"),
+          ((-col("freq")).cast("double"), "__f_rank"),
           ((-coalesce(col("monetary"), lit(Double.NegativeInfinity)))
             .cast("double"), "__m_rank")))
-        def boundary(i: Long): Long = i * (n / 4) + math.min(i, n % 4)
+        // n is read from one column: each use of the scalar itself would
+        // be planned as its own subquery before reuse dedups them
+        def boundary(i: Long): Column =
+          lit(i) * call_function("div", col("__n"), lit(4L)) +
+            least(lit(i), col("__n") % 4)
         def quart(rank: Column): Column =
           (lit(1L) + when(rank > boundary(1), 1L).otherwise(0L)
             + when(rank > boundary(2), 1L).otherwise(0L)
             + when(rank > boundary(3), 1L).otherwise(0L)).cast("long")
         ranked
+          .withColumn("__n", n)
           .withColumn("r_q", quart(col("__r_rank")))
           .withColumn("f_q", quart(col("__f_rank")))
           .withColumn("m_q", quart(col("__m_rank")))

@@ -432,10 +432,10 @@ object PipelineOps {
     // (parallelism capped at the stratum count at 100 TB). Now the rank is
     // [[DistRank.withGroupRank]]'s range-partitioned global sort on
     // (lang, hk, doc_id) — P-way parallel, bit-identical ranks — and the
-    // per-stratum count rides the same domain-sized anchor aggregate, so
+    // per-stratum count comes from the same operator's stats pass, so
     // the separate quota aggregate (a second corpus scan) disappears:
     // quota = ceil(n/5) in exact integer arithmetic directly on the
-    // anchor count ((n+4) DIV 5 — n·0.2 in binary doubles can land an
+    // stratum count ((n+4) DIV 5 — n·0.2 in binary doubles can land an
     // ulp above the integer and ceil() would overshoot).
     Q("sample_stratified",
       (s, dir) => {

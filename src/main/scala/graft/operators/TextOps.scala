@@ -88,10 +88,10 @@ object TextOps {
     // coverage"). Rank + running sum via DistRank (r12, VERDICT r11 task
     // 1): the old unpartitioned window was a single-task sort over the
     // FULL vocabulary, which grows with the corpus (Heaps' law) — the
-    // two-phase rank range-partitions instead, and the whole-frame total
-    // comes back with the same ≤P-row offsets collect, so there is still
-    // no second consumer of `freq` re-tokenizing the corpus (the
-    // shared-subtree trap the old single-window shape existed to avoid).
+    // rank range-partitions instead. The whole-frame total is a scalar
+    // subquery over the same `freq`, whose aggregate exchange it reuses,
+    // so the corpus is still tokenized once (the shared-subtree trap the
+    // old single-window shape existed to avoid).
     // Every corpus-proportional step is a map-side partial count; counts
     // stay exact longs; the only double op is one long/long division
     // (exactly rounded IEEE on both engines) + round(…, 6).
@@ -101,14 +101,15 @@ object TextOps {
           .select(explode(split(col("text"), " ")).as("word"))
           .groupBy(col("word"))
           .agg(count(lit(1)).as("freq"))
-        val r = DistRank.withRankAndCum(freq,
-          Seq(col("freq").desc, col("word").asc), "rank",
-          Seq("freq" -> "cum_freq"))
-        r.df.filter(col("rank") <= 100)
+        val total = freq.agg(sum(col("freq"))).scalar()
+        // ranks are unique, so the top 100 by rank are ranks 1..100: a
+        // top-k (per-partition heaps, no range sort) takes them in order
+        DistRank.withRankAndCum(freq,
+            Seq(col("freq").desc, col("word").asc), "rank",
+            Seq("freq" -> "cum_freq"))
+          .orderBy(col("rank")).limit(100)
           .select(col("rank"), col("word"), col("freq"), col("cum_freq"),
-            round(col("cum_freq") / lit(r.totals("freq")), 6)
-              .as("coverage_r6"))
-          .orderBy(col("rank"))
+            round(col("cum_freq") / total, 6).as("coverage_r6"))
       },
       Some(sql("""WITH freq AS (
         |  SELECT word, count(*)::BIGINT AS freq

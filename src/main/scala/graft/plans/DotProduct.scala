@@ -71,11 +71,11 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 /** The one install point for graft's native extensions: the five native
-  * functions, the two optimizer rules and the [[TopKStrategy]] planner
-  * strategy, added to an already-running session. Idempotent, so callers
-  * install before every build: [[graft.Registry.queries]] wraps each
-  * key's build with it and [[graft.GraftSql.register]] calls it for the
-  * SQL facade. The rules run last (`experimental.extraOptimizations`),
+  * functions, the two optimizer rules and the [[TopKStrategy]] and
+  * [[GlobalRankStrategy]] planner strategies, added to an already-running
+  * session. Idempotent, so callers install before every build:
+  * [[graft.Registry.queries]] wraps each key's build with it and
+  * [[graft.GraftSql.register]] calls it for the SQL facade. The rules run last (`experimental.extraOptimizations`),
   * after Spark's own `InferWindowGroupLimit`, so [[RewriteTopKPerGroup]]
   * sees the `WindowGroupLimit` it rewrites. */
 object GraftFunctions {
@@ -114,7 +114,9 @@ object GraftFunctions {
       if (!exp.extraOptimizations.contains(rule))
         exp.extraOptimizations = exp.extraOptimizations :+ rule
     }
-    if (!exp.extraStrategies.contains(TopKStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ TopKStrategy
+    Seq(TopKStrategy, GlobalRankStrategy).foreach { strategy =>
+      if (!exp.extraStrategies.contains(strategy))
+        exp.extraStrategies = exp.extraStrategies :+ strategy
+    }
   }
 }

@@ -12,6 +12,19 @@ class DistRankSpec extends AnyFunSuite {
   import TestSpark._
   import operators.DistRank
 
+  /** Run `body` — builds AND actions — with AQE partition coalescing off
+    * (and `conf` set), so every range partition of the exchange exists
+    * when the plan runs. */
+  private def withoutCoalescing[T](conf: (String, String)*)(body: => T): T = {
+    val set = conf.toMap +
+      ("spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val was = set.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    set.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally was.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("rank == unpartitioned row_number on a skewed synthetic frame") {
     import spark.implicits._
     // Zipf-ish duplicate-heavy keys (the vocabOf shape: huge tie classes
@@ -42,11 +55,12 @@ class DistRankSpec extends AnyFunSuite {
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val r = DistRank.withRankAndCum(df,
       Seq($"freq".desc, $"word".asc), "rank", Seq("freq" -> "cum"))
-    val got = r.df.select($"word", $"rank", $"cum").collect()
+    val got = r.select($"word", $"rank", $"cum").collect()
       .map(x => x.getString(0) -> ((x.getLong(1), x.getLong(2)))).toMap
     assert(got === expected)
-    assert(r.rows === 997L)
-    assert(r.totals("freq") === (1 to 997).map(i => (i * 37 % 101 + 1).toLong).sum)
+    assert(got.size === 997)
+    assert(got.values.map(_._2).max ===
+      (1 to 997).map(i => (i * 37 % 101 + 1).toLong).sum)
   }
 
   test("ranked plan has no single-partition exchange") {
@@ -251,19 +265,22 @@ class DistRankSpec extends AnyFunSuite {
     assert(tinyGot.forall(_.isNullAt(tinyGot.head.fieldIndex("px"))))
   }
 
-  test("group lag and running sums plan no window and no exchange") {
+  test("group lag and running sums plan no window and one range exchange") {
     import spark.implicits._
-    // Both partition-local columns are stamped before the checkpoint, so
-    // the returned frames read the pinned blocks through projections only.
+    // Both partition-local columns come out of the GlobalRank operator's
+    // one sort, over the one range exchange the planner inserts.
     val df = (1 to 2001).map(i => (s"t${i % 3}", i.toLong, (i % 11).toLong))
       .toDF("g", "ord", "x")
     val lagged = DistRank.withGroupLag(df, $"g", Seq($"ord".asc), "x", "px")
     val summed = DistRank.withRankAndCum(df, Seq($"x".desc, $"ord".asc),
-      "rank", Seq("x" -> "cx")).df
+      "rank", Seq("x" -> "cx"))
     Seq(lagged, summed).foreach { f =>
       f.collect()
       val p = f.queryExecution.executedPlan.toString
-      assert(!p.contains("Window") && !p.contains("Exchange"), p.take(3000))
+      val fin = p.substring(0, math.max(0, p.indexOf("== Initial Plan ==")))
+      assert(!p.contains("Window") &&
+        "Exchange".r.findAllMatchIn(fin).size === 1 &&
+        fin.contains("Exchange rangepartitioning"), p.take(3000))
     }
   }
 
@@ -273,43 +290,42 @@ class DistRankSpec extends AnyFunSuite {
     // Only every 400th row has a value, so nearly every partition starts
     // with a NULL run. The per-partition window the stamped sum replaces
     // is NULL until the partition's first value and adds the earlier
-    // partitions' sums; the window form is rebuilt over the pinned
-    // partitions (spark_partition_id of the exchange-free result frame).
+    // partitions' sums; the window form is rebuilt over the range
+    // partitions (spark_partition_id of the ranked frame).
     val df = (1 to 2000).map { i =>
       (i.toLong, if (i % 400 == 0) Some(i.toLong) else None)
     }.toDF("id", "x")
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val was = spark.conf.getOption(key)
-    spark.conf.set(key, "false") // keep all 4 range partitions
-    val r =
-      try DistRank.withRankAndCum(df, Seq($"id".asc), "rank", Seq("x" -> "cx"))
-      finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    val got = r.df.withColumn("pid", spark_partition_id())
-    val inPart = Window.partitionBy($"pid").orderBy($"rank")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val upTo = Window.orderBy($"rank")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val x0 = coalesce($"x", lit(0L))
-    val rows = got.withColumn("want",
-        sum(x0).over(upTo) - sum(x0).over(inPart) + sum($"x").over(inPart))
-      .select($"pid", $"rank", $"x", $"cx", $"want").collect()
-      .sortBy(_.getLong(1))
-    assert(rows.length === 2000)
-    rows.foreach { w =>
-      assert(Option(w.get(3)) === Option(w.get(4)), w.toString)
+    // keep all 4 range partitions
+    withoutCoalescing() {
+      val r = DistRank.withRankAndCum(df, Seq($"id".asc), "rank",
+        Seq("x" -> "cx"))
+      val got = r.withColumn("pid", spark_partition_id())
+      val inPart = Window.partitionBy($"pid").orderBy($"rank")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val upTo = Window.orderBy($"rank")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val x0 = coalesce($"x", lit(0L))
+      val rows = got.withColumn("want",
+          sum(x0).over(upTo) - sum(x0).over(inPart) + sum($"x").over(inPart))
+        .select($"pid", $"rank", $"x", $"cx", $"want").collect()
+        .sortBy(_.getLong(1))
+      assert(rows.length === 2000)
+      rows.foreach { w =>
+        assert(Option(w.get(3)) === Option(w.get(4)), w.toString)
+      }
+      // the case is really exercised: a later partition starts with NULLs
+      // while the rows before it have a sum
+      val starts = rows.indices.filter(i => i > 0 &&
+        rows(i).getInt(0) != rows(i - 1).getInt(0)).map(rows(_))
+      assert(starts.exists(w => w.isNullAt(2) && w.isNullAt(3)),
+        rows.map(_.getInt(0)).distinct.mkString(","))
+      assert(rows.last.getLong(3) === (1 to 5).map(_ * 400L).sum)
     }
-    // the case is really exercised: a later partition starts with NULLs
-    // while the rows before it have a sum
-    val starts = rows.indices.filter(i => i > 0 &&
-      rows(i).getInt(0) != rows(i - 1).getInt(0)).map(rows(_))
-    assert(starts.exists(w => w.isNullAt(2) && w.isNullAt(3)),
-      rows.map(_.getInt(0)).distinct.mkString(","))
-    assert(r.totals("x") === (1 to 5).map(_ * 400L).sum)
     // an overflowing running sum raises, as ANSI sum does
     val big = Seq((1L, Long.MaxValue), (2L, 1L)).toDF("id", "x")
     intercept[Exception] {
       DistRank.withRankAndCum(big, Seq($"id".asc), "rank",
-        Seq("x" -> "cx")).df.collect()
+        Seq("x" -> "cx")).collect()
     }
   }
 
@@ -317,27 +333,24 @@ class DistRankSpec extends AnyFunSuite {
       "window") {
     import spark.implicits._
     // At test sizes AQE coalesces the range exchange to ONE partition, so
-    // the lag test above never reaches the pid->(last group, last value)
-    // boundary map. With coalescing off for the build, 4 partitions meet
-    // it, with group changes inside and at partition starts.
+    // the lag test above never reaches the previous partition's last row.
+    // With coalescing off, 4 partitions meet it, with group changes inside
+    // and at partition starts.
     val df = (1 to 3001).map { i =>
       (s"t${i % 3}", i.toLong * 7,
         if (i % 97 == 0) None else Some(i.toLong * 13))
     }.toDF("g", "ord", "x")
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val was = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    val lagged =
-      try DistRank.withGroupLag(df, $"g", Seq($"ord".asc), "x", "px")
-      finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    val parts = lagged.select(spark_partition_id()).distinct().count()
-    assert(parts > 1, s"$parts partition(s)")
-    val w = Window.partitionBy($"g").orderBy($"ord".asc)
-    def byKey(f: org.apache.spark.sql.DataFrame) = f
-      .select($"g", $"ord", $"px").collect()
-      .map(r => (r.getString(0), r.getLong(1)) ->
-        (if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
-    assert(byKey(lagged) === byKey(df.withColumn("px", lag($"x", 1).over(w))))
+    withoutCoalescing() {
+      val lagged = DistRank.withGroupLag(df, $"g", Seq($"ord".asc), "x", "px")
+      val parts = lagged.select(spark_partition_id()).distinct().count()
+      assert(parts > 1, s"$parts partition(s)")
+      val w = Window.partitionBy($"g").orderBy($"ord".asc)
+      def byKey(f: org.apache.spark.sql.DataFrame) = f
+        .select($"g", $"ord", $"px").collect()
+        .map(r => (r.getString(0), r.getLong(1)) ->
+          (if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
+      assert(byKey(lagged) === byKey(df.withColumn("px", lag($"x", 1).over(w))))
+    }
   }
 
   test("quartile-from-rank matches ntile(4) at awkward row counts") {
@@ -358,6 +371,78 @@ class DistRankSpec extends AnyFunSuite {
             + when($"r" > boundary(3), 1L).otherwise(0L)).cast("long"))
         .select($"u", $"q").collect().map(r => r.getString(0) -> r.getLong(1))
       assert(got.toMap === expected.toMap, s"n=$n")
+    }
+  }
+
+  test("building every entry point's frame starts no Spark job") {
+    import spark.implicits._
+    val df = (1 to 200)
+      .map(i => (s"u$i", s"t${i % 3}", i.toLong, (i % 7).toLong))
+      .toDF("u", "g", "ord", "x")
+    val log = new StageLog
+    spark.sparkContext.addSparkListener(log)
+    try {
+      Sessions.drainListeners(spark)
+      val j0 = log.jobs.get
+      DistRank.withRank(df, Seq($"ord".asc), "r")
+      DistRank.withRankAndCum(df, Seq($"ord".asc), "r", Seq("x" -> "cx"))
+      DistRank.withGroupRank(df, $"g", Seq($"ord".asc), "r", Some("n"))
+      DistRank.withGroupLag(df, $"g", Seq($"ord".asc), "x", "px")
+      DistRank.withRanksPivoted(df, "u", Seq(
+        ($"ord".cast("double"), "r1"), ((-$"x").cast("double"), "r2")))
+      Sessions.drainListeners(spark)
+      assert(log.jobs.get === j0)
+    } finally spark.sparkContext.removeSparkListener(log)
+  }
+
+  /** Each entry point on `df` (columns u, g, ord, x) against its window
+    * form, as sorted row strings. */
+  private def againstWindows(df: org.apache.spark.sql.DataFrame): Unit = {
+    import spark.implicits._
+    val all = Window.orderBy($"ord".asc, $"u".asc)
+    val inG = Window.partitionBy($"g").orderBy($"ord".asc, $"u".asc)
+    def rows(f: org.apache.spark.sql.DataFrame, cols: String*) =
+      f.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+    assert(rows(DistRank.withRankAndCum(df, Seq($"ord".asc, $"u".asc), "r",
+        Seq("x" -> "cx")), "u", "r", "cx") ===
+      rows(df.withColumn("r", row_number().over(all).cast("long"))
+        .withColumn("cx", sum($"x").over(all.rowsBetween(
+          Window.unboundedPreceding, Window.currentRow))), "u", "r", "cx"))
+    assert(rows(DistRank.withGroupRank(df, $"g", Seq($"ord".asc, $"u".asc),
+        "r", Some("n")), "u", "r", "n") ===
+      rows(df.withColumn("r", row_number().over(inG).cast("long"))
+        .withColumn("n", count(lit(1)).over(Window.partitionBy($"g"))),
+        "u", "r", "n"))
+    assert(rows(DistRank.withGroupLag(df, $"g", Seq($"ord".asc, $"u".asc),
+        "x", "px"), "u", "px") ===
+      rows(df.withColumn("px", lag($"x", 1).over(inG)), "u", "px"))
+    assert(rows(DistRank.withRanksPivoted(df, "u", Seq(
+        ($"ord".cast("double"), "r1"), ((-$"x").cast("double"), "r2"))),
+        "u", "r1", "r2") ===
+      rows(df.withColumn("r1", row_number().over(all).cast("long"))
+        .withColumn("r2", row_number().over(
+          Window.orderBy($"x".desc, $"u".asc)).cast("long")), "u", "r1", "r2"))
+  }
+
+  test("empty input == window forms") {
+    import spark.implicits._
+    againstWindows(Seq.empty[(String, String, Long, Long)]
+      .toDF("u", "g", "ord", "x"))
+  }
+
+  test("fewer rows than requested range partitions == window forms") {
+    import spark.implicits._
+    // 3 rows over 8 requested range partitions. The range partitioner
+    // never makes more partitions than it sampled distinct keys, so this
+    // is one row per partition: every row is its partition's first and
+    // last, and every rank, sum and lag crosses a partition boundary.
+    val df = Seq(("u1", "a", 3L, 5L), ("u2", "a", 1L, 7L), ("u3", "b", 2L, 9L))
+      .toDF("u", "g", "ord", "x")
+    withoutCoalescing("spark.sql.shuffle.partitions" -> "8") {
+      val parts = DistRank.withRank(df, Seq($"ord".asc, $"u".asc), "r")
+        .rdd.getNumPartitions
+      assert(parts === 3, s"$parts partition(s)")
+      againstWindows(df)
     }
   }
 }

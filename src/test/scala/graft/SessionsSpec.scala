@@ -42,10 +42,12 @@ class SessionsSpec extends AnyFunSuite with TempDirs {
       assert(l.startsWith(s"""{"key":"$k","""), l)
       val m = field.findAllMatchIn(l).map(x => x.group(1) -> x.group(2))
         .toMap
-      assert(m.keySet === (phases ++ Seq("jobs", "stages", "tasks")).toSet, l)
+      assert(m.keySet ===
+        (phases ++ Seq("jobs", "build_jobs", "stages", "tasks")).toSet, l)
       phases.foreach(p => assert(m(p).toDouble <= m("total").toDouble, l))
       assert(m("jobs").toLong >= 1 && m("tasks").toLong >= m("stages").toLong,
         l)
+      assert(m("build_jobs").toLong <= m("jobs").toLong, l)
     }
     keys.foreach { k =>
       val text = Files.readString(dir.resolve(s"$k.txt"))
