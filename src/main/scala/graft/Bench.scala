@@ -1,10 +1,12 @@
 package graft
+import scala.collection.immutable.ListMap
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main: wall-clock per declared query on SPARK_GRAFT_SF_DIR.
-  * A throwing query records -1.0 (never a fake elapsed time — VERDICT r1
-  * "What's wrong" #2), so a crash is always distinguishable from a fast
-  * pass in archive/BENCH_r*.json. */
+/** Benchmark main: wall-clock per declared query on SPARK_GRAFT_SF_DIR,
+  * each sample taken by [[StageLog#sample]] (the sampler Diag uses). A
+  * throwing query records -1.0, never a fake elapsed time, so a crash is
+  * always distinguishable from a fast pass in archive/BENCH_r*.json. */
 object Bench {
   /** Detail-file routing (VERDICT r13 task 3), exposed for ScaleGuardSpec:
     * GRAFT_BENCH_DETAIL overrides outright; a key-filtered run parks in
@@ -41,20 +43,23 @@ object Bench {
       detailPath.replaceFirst("bench_detail(?=[^/]*$)", "bench_line")
     else detailPath + ".line"
 
-  /** Key selection shared by Bench, Verify and Diag: the include filter,
-    * if any. Unknown names fail loudly, and so does a filter that selects
-    * zero keys — a run of nothing would exit 0 with a near-empty
-    * artifact. */
-  def selectKeys(all: Set[String], only: Option[Set[String]]): Set[String] = {
-    only.foreach { o =>
-      val unknown = o -- all
-      require(unknown.isEmpty,
-        s"key filter names unknown keys: ${unknown.mkString(", ")}")
-    }
-    val selected = all.filter(n => only.forall(_.contains(n)))
-    require(selected.nonEmpty, "key filter selects zero keys")
-    selected
+  /** Key selection shared by Bench, Verify and Diag: the keys named in
+    * `only` — a comma-separated list, names trimmed, empty and repeated
+    * names dropped — in the order given, or every key by name. Unknown
+    * names fail loudly, and so does a filter that selects zero keys — a
+    * run of nothing would exit 0 with a near-empty artifact. */
+  def selectKeys(all: Set[String], only: Option[String]): Seq[String] = {
+    val keys = only.fold(all.toSeq.sorted)(
+      _.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct)
+    val unknown = keys.filterNot(all)
+    require(unknown.isEmpty,
+      s"key filter names unknown keys: ${unknown.mkString(", ")}")
+    require(keys.nonEmpty, "key filter selects zero keys")
+    keys
   }
+
+  /** The core count every main sizes its session with. */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
   /** The warm-up Bench and Diag share, outside any timed region.
     *
@@ -97,42 +102,86 @@ object Bench {
     (trainWarmSec, trainWarmTrainSec, trainWarmPhases)
   }
 
+  /** Samples per key before stall retries. */
+  val Runs = 3
+
+  /** Seconds rounded to the millisecond, for stamps a reader compares by
+    * eye. */
+  def millis(sec: Double): Double = math.round(sec * 1000) / 1000.0
+
+  /** Stall-retry predicate: the host's roaming multi-second stall window
+    * (BASELINE.md) can cover 2 of 3 interleaved samples of one key —
+    * join_asof_tolerance read 12.28 s median / 0.90 s min in BENCH_r12
+    * while the isolated Explain re-pin showed exec 0.05 s. Rather than
+    * pay 2 more FULL suite passes, only keys
+    * whose median reads like a stall (median > 3× min AND a >1 s
+    * absolute gap — plain jitter on sub-second keys stays untouched) are
+    * re-sampled. A key with a failed sample is never retried. */
+  def stalled(samples: Seq[StageLog.Sample]): Boolean = {
+    val good = samples.filter(_.failure.isEmpty).map(_.total / 1e9).sorted
+    good.nonEmpty && good.size == samples.size && {
+      val med = good(good.size / 2)
+      med > 3 * good.head && med - good.head > 1.0
+    }
+  }
+
+  /** One key's bench_detail.json record from its samples.
+    *
+    * `sec` is the median total; a key that threw in ANY sample records
+    * -1.0 (never a fake elapsed time) and counts the throws in
+    * `failed_runs`. min/max/median/bytes only come from SUCCESSFUL
+    * samples: mixing the -1.0 sentinel into min_sec reads as a timing,
+    * and a failed sample's counters describe a PARTIAL run.
+    *
+    * `plan_sec` is build through toRdd, `exec_sec` the final count.
+    * `train_sec` is cache-miss training INSIDE the sample — expected 0
+    * after the pre-warm; nonzero means the memo missed in the timed
+    * region and `sec` includes training the production steady state
+    * would amortize away. `stall_retries` says the median
+    * was re-sampled because the first passes looked like a host stall,
+    * so an intermittent regression can be told apart from stall
+    * smoothing. Spill is the MAX over samples for the same reason: a
+    * retry that happened not to spill must not average away one that
+    * did. Shuffle bytes and the job/stage/task/build-job counts are the
+    * median sample's: they are plan properties. */
+  def record(samples: Seq[StageLog.Sample]): ListMap[String, Any] = {
+    val good = samples.filter(_.failure.isEmpty).sortBy(_.total)
+    val failed = samples.size - good.size
+    val med = good.lift(good.size / 2)
+    def timed(f: StageLog.Sample => Long) =
+      med.filter(_ => failed == 0).fold(-1.0)(f(_) / 1e9)
+    def medCount(f: StageLog.Sample => Long) = med.fold(-1L)(f)
+    ListMap(
+      "sec" -> timed(_.total),
+      "min_sec" -> good.headOption.fold(-1.0)(_.total / 1e9),
+      "max_sec" -> good.lastOption.fold(-1.0)(_.total / 1e9),
+      "failed_runs" -> failed,
+      "stall_retries" -> (samples.size - Runs),
+      "plan_sec" -> timed(s => s.total - s.count),
+      "exec_sec" -> timed(_.count),
+      "train_sec" -> timed(_.train),
+      "shuffle_write_bytes" -> medCount(_.shuffleWrite),
+      "shuffle_read_bytes" -> medCount(_.shuffleRead),
+      "disk_spill_bytes" -> good.map(_.spill).maxOption.getOrElse(-1L),
+      "jobs" -> medCount(_.jobs),
+      "stages" -> medCount(_.stages),
+      "tasks" -> medCount(_.tasks),
+      "build_jobs" -> medCount(_.buildJobs))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.create(sfDir, cpus.toInt)
+    val spark = Sessions.create(sfDir, cpus)
     // GRAFT_BENCH_ONLY=k1,k2 restricts to named keys for focused local
-    // iteration. Unknown names fail loudly — a typo that silently benched
-    // zero keys would exit 0 with an empty detail file. Parsed BEFORE the
-    // warmups so a focused run does not build (and eagerly train) the
-    // other 170+ queries it will never time.
+    // iteration. Parsed BEFORE the warmups so a focused run does not
+    // build (and eagerly train) the other 170+ queries it will never time.
     val only = sys.env.get("GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = selectKeys(SparkEntry.queries.keySet, only)
-    val keys = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => selected(n) }
+    val keys = selectKeys(SparkEntry.queries.keySet, only).sorted
+      .map(k => k -> SparkEntry.queries(k))
     val (trainWarmSec, trainWarmTrainSec, trainWarmPhases) =
       warm(spark, keys, sfDir)
-    // Per-query shuffle/spill accounting (written to bench_detail.json,
-    // NOT the driver's stdout line): the scale story is shuffle bytes as
-    // much as seconds.
-    val metrics = new StageLog
-    spark.sparkContext.addSparkListener(metrics)
-    // Each query runs RUNS times and reports the MEDIAN (min/max recorded
-    // in bench_detail.json): single-run numbers on this box swing up to
-    // 5x per query (VERDICT r3 task 5), which made round-over-round
-    // regression calls noise. A query that throws in ANY run records -1.0
-    // (never a fake elapsed time).
-    //
-    // Runs are PASS-MAJOR (VERDICT r7 task 3): the whole suite runs as
-    // RUNS interleaved passes (q1 q2 … qN, q1 q2 … qN, …), not RUNS
-    // back-to-back runs per key — so one key's samples are separated in
-    // time by a full suite pass and the host's roaming multi-second
-    // stall window (BASELINE.md) can no longer cover EVERY sample of a
-    // key and masquerade as a 9× per-key regression. min_sec is
-    // therefore a min ACROSS passes: a key whose min_sec is normal but
-    // whose median is inflated was stalled, not regressed.
-    val RUNS = 3
+    val log = new StageLog
+    spark.sparkContext.addSparkListener(log)
     val detailPath = detailPathFor(
       sys.env.get("GRAFT_BENCH_DETAIL"), only.nonEmpty, sfDir)
     // Dispatch-floor calibration probes (r15, VERDICT r14 task 4): this
@@ -162,151 +211,56 @@ object Bench {
       spark.sql(s"SELECT id % ${i + 1} AS k, count(*) FROM range(1000000) " +
           "GROUP BY k").queryExecution.toRdd.count())
     def sampleOnce(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, (Long, Long, Long), Double, Double, Double) = {
-      // Drop the previous key's block-manager litter (dead
-      // localCheckpoints, GC-pending broadcasts) OUTSIDE the timed
-      // region (r16, VERDICT r15 task 2): at 100× grown the litter made
-      // vec_ann_ivfpq pay 9.5 s suite-context vs 1.7 s isolated — every
-      // new broadcast put had to disk-evict dead blocks first.
-      Sessions.releaseKeyState(spark)
-      Sessions.drainListeners(spark)
-      metrics.clearStages() // Bench reads only the running byte totals
-      val before = metrics.bytes
-      val trainBefore = operators.PipelineOps.TrainClock.nanos
-      // Plan vs exec split (VERDICT r6 task 8): toRdd pays analysis +
-      // optimization + physical planning + codegen; count() pays the
-      // actual run. The split quantifies the per-query scheduling/plan
-      // floor, so cross-host comparisons can subtract it instead of
-      // guessing. toRdd executes THIS physical plan (sorts, projections
-      // and all); df.count() would let Catalyst prune the operator
-      // under test.
-      val t0 = System.nanoTime()
-      var t1 = t0
-      val ok = try {
-        val rdd = fn(spark, sfDir).queryExecution.toRdd
-        t1 = System.nanoTime()
-        rdd.count(); true
-      } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false }
-      val t2 = System.nanoTime()
-      Sessions.drainListeners(spark)
-      val after = metrics.bytes
-      (if (ok) (t2 - t0) / 1e9 else -1.0,
-        (after._1 - before._1, after._2 - before._2,
-          after._3 - before._3),
-        (t1 - t0) / 1e9, (t2 - t1) / 1e9,
-        (operators.PipelineOps.TrainClock.nanos - trainBefore) / 1e9)
+        fn: (SparkSession, String) => DataFrame): StageLog.Sample = {
+      log.clearStages() // Bench reads only the running totals
+      val s = log.sample(spark, fn, sfDir)
+      s.failure.foreach(m => System.err.println(s"[bench] $name failed: $m"))
+      s
     }
+    // Each query runs Runs times and reports the MEDIAN: single-run
+    // numbers on this box swing up to 5x per query.
+    //
+    // Runs are PASS-MAJOR: the whole suite runs as
+    // Runs interleaved passes (q1 q2 … qN, q1 q2 … qN, …), not Runs
+    // back-to-back runs per key — so one key's samples are separated in
+    // time by a full suite pass and the host's roaming multi-second
+    // stall window (BASELINE.md) can no longer cover EVERY sample of a
+    // key and masquerade as a 9× per-key regression. min_sec is
+    // therefore a min ACROSS passes: a key whose min_sec is normal but
+    // whose median is inflated was stalled, not regressed. Stalled keys
+    // are then re-sampled up to twice, separated in time by each other.
     val byKey = scala.collection.mutable.Map.empty[
-      String, Vector[(Double, (Long, Long, Long), Double, Double, Double)]]
-    for (_ <- 1 to RUNS; (name, fn) <- keys)
-      byKey(name) = byKey.getOrElse(name, Vector.empty) :+ sampleOnce(name, fn)
-    // Stall-retry passes (r13, VERDICT r12 task 3): the host's roaming
-    // multi-second stall window (BASELINE.md) can cover 2 of 3 interleaved
-    // samples of one key — join_asof_tolerance read 12.28 s median /
-    // 0.90 s min in BENCH_r12 while the isolated Explain re-pin showed
-    // exec 0.05 s. Rather than pay 2 more FULL suite passes, re-sample
-    // only the keys whose median reads like a stall (median > 3× min AND
-    // a >1 s absolute gap — plain jitter on sub-second keys stays
-    // untouched), up to twice, separated in time by each other. The
-    // median then reflects the key, not the stall; min_sec semantics are
-    // unchanged.
-    def stalled(samples: Vector[(Double, (Long, Long, Long),
-        Double, Double, Double)]): Boolean = {
-      val good = samples.map(_._1).filter(_ >= 0).sorted
-      good.nonEmpty && good.size == samples.size && {
-        val med = good(good.size / 2)
-        med > 3 * good.head && med - good.head > 1.0
-      }
-    }
-    for (_ <- 1 to 2) {
-      val suspects = keys.filter { case (n, _) => stalled(byKey(n)) }
-      suspects.foreach { case (name, fn) =>
-        byKey(name) = byKey(name) :+ sampleOnce(name, fn)
-      }
-    }
-    val detail = Seq.newBuilder[String]
-    val results = keys.map { case (name, _) =>
-      val samples = byKey(name)
-      // min/max/median/bytes only over SUCCESSFUL samples: mixing the
-      // -1.0 failure sentinel into min_sec reads as a timing (ADVICE r5),
-      // and a failed sample's byte counters describe a PARTIAL run
-      // (ADVICE r7) — the explicit failed_runs count carries the failure
-      // signal instead.
-      val good = samples.sortBy(_._1).filter(_._1 >= 0)
-      // count failures directly: stall-retry keys have > RUNS samples
-      val failed = samples.count(_._1 < 0)
-      val med = if (good.nonEmpty) good(good.size / 2)
-                else (-1.0, (-1L, -1L, -1L), -1.0, -1.0, -1.0)
-      val sec = if (failed > 0) -1.0 else med._1
-      val (minS, maxS) =
-        if (good.isEmpty) (-1.0, -1.0) else (good.head._1, good.last._1)
-      val (planS, execS) = if (sec < 0) (-1.0, -1.0) else (med._3, med._4)
-      // train_sec: cache-miss training wall-clock INSIDE this sample —
-      // expected 0 after the pre-warm above; nonzero means the memo
-      // missed in the timed region (cache regression) and `sec` includes
-      // training the production steady state would amortize away.
-      val trainS = if (sec < 0) -1.0 else med._5
-      // r14 (ADVICE r13 medium): stall retries are now visible per key —
-      // a nonzero count says the median was re-sampled because the first
-      // passes looked like a host stall, so a genuinely intermittent
-      // regression can be told apart from stall smoothing. Spill is gated
-      // on the MAX across samples for the same reason: a retry that
-      // happened to not spill must not average away a sample that did
-      // (shuffle bytes stay median-sample: they are plan properties and
-      // identical across samples).
-      val retries = samples.size - RUNS
-      val spillMax = if (good.isEmpty) -1L else good.map(_._2._3).max
-      detail += s"""  "$name": {"sec": $sec, """ +
-        s""""min_sec": $minS, "max_sec": $maxS, "failed_runs": $failed, """ +
-        s""""stall_retries": $retries, """ +
-        s""""plan_sec": $planS, "exec_sec": $execS, """ +
-        s""""train_sec": $trainS, """ +
-        s""""shuffle_write_bytes": ${med._2._1}, """ +
-        s""""shuffle_read_bytes": ${med._2._2}, """ +
-        s""""disk_spill_bytes": $spillMax}"""
-      name -> sec
-    }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.collect { case (_, v) if v >= 0 => v }.sum
+      String, Vector[StageLog.Sample]].withDefaultValue(Vector.empty)
+    for (_ <- 1 to Runs; (name, fn) <- keys)
+      byKey(name) :+= sampleOnce(name, fn)
+    for (_ <- 1 to 2; (name, fn) <- keys.filter(k => stalled(byKey(k._1))))
+      byKey(name) :+= sampleOnce(name, fn)
+    val records = keys.map { case (name, _) => name -> record(byKey(name)) }
+    val queries = ListMap(records.map { case (k, r) => k -> r("sec") }: _*)
+    val total = queries.values.collect { case v: Double if v >= 0 => v }.sum
     // _meta first: scripts/bench_budgets.py only enforces its sf0.1
     // budgets when the detail file actually came from an sf0.1 run.
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(detailPath),
-      // Locale.ROOT: a default-locale %.3f writes "0,123" on comma-decimal
-      // hosts — invalid JSON (code-review r10)
-      // advisory_mb / initial_partitions: the two data-sizing confs this
-      // run actually used (r16, VERDICT r15 tasks 3+7) — read back from
-      // the LIVE session, not re-derived, so a stale artifact can never
-      // claim a conf the run didn't have.
-      (Seq(s"""  "_meta": {"sf": "$sfDir", "cpus": $cpus, "runs": $RUNS, """ +
-        s""""advisory_mb": ${spark.conf
-          .get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-          .stripSuffix("m")}, """ +
-        s""""initial_partitions": ${spark.conf
-          .get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")}, """ +
-        "\"train_warm_sec\": %.3f, ".formatLocal(
-          java.util.Locale.ROOT, trainWarmSec) +
-        "\"train_warm_train_sec\": %.3f, ".formatLocal(
-          java.util.Locale.ROOT, trainWarmTrainSec) +
-        // per-phase training split: misses during THIS bench's pre-warm
-        // (cumulative counters diffed over the warm window above)
-        trainWarmPhases.toSeq.sorted.map { case (k, s) =>
-          "\"train_warm_%s_sec\": %.3f, ".formatLocal(
-            java.util.Locale.ROOT, k, s)
-        }.mkString +
-        "\"probe_empty_tasks_sec\": %.3f, ".formatLocal(
-          java.util.Locale.ROOT, probeTasks) +
-        "\"probe_sql_1stage_sec\": %.3f, ".formatLocal(
-          java.util.Locale.ROOT, probe1Stage) +
-        "\"probe_sql_2stage_sec\": %.3f}".formatLocal(
-          java.util.Locale.ROOT, probe2Stage))
-        ++ detail.result()).mkString("{\n", ",\n", "\n}\n"))
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    // advisory_mb / initial_partitions: the two data-sizing confs this
+    // run actually used — read back from
+    // the LIVE session, not re-derived, so a stale artifact can never
+    // claim a conf the run didn't have. The train_warm_<phase>_sec
+    // split covers misses during THIS bench's pre-warm.
+    val meta = ListMap("sf" -> sfDir, "cpus" -> cpus, "runs" -> Runs,
+      "advisory_mb" -> JavaUtils.byteStringAsMb(spark.conf
+        .get("spark.sql.adaptive.advisoryPartitionSizeInBytes")),
+      "initial_partitions" -> spark.conf
+        .get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+        .toInt,
+      "train_warm_sec" -> millis(trainWarmSec),
+      "train_warm_train_sec" -> millis(trainWarmTrainSec)) ++
+      trainWarmPhases.toSeq.sorted.map { case (k, s) =>
+        s"train_warm_${k}_sec" -> millis(s) } ++
+      Seq("probe_empty_tasks_sec" -> millis(probeTasks),
+        "probe_sql_1stage_sec" -> millis(probe1Stage),
+        "probe_sql_2stage_sec" -> millis(probe2Stage))
+    Verify.writeJson(detailPath, ListMap("_meta" -> meta) ++ records)
+    val line = Verify.toJson(ListMap("metric" -> "total", "value" -> total,
+      "unit" -> "sec", "queries" -> queries, "sf" -> sfDir))
     // The driver parses this line from stdout; r15's PERF comparison was
     // lost to a driver-side stdout-tail parse failure (VERDICT r16 task
     // 9), so ALSO write the line verbatim to a tracked file — a stdout

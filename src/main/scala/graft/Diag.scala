@@ -1,5 +1,5 @@
 package graft
-import java.util.Locale
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
@@ -25,18 +25,13 @@ import org.apache.spark.sql.execution.aggregate.SortAggregateExec
   *    functions (an aggregate whose buffer is not fixed-width sorts its
   *    whole input) — is written to `<planDir>/<key>.txt`, or printed when
   *    no planDir is given;
-  *  - `runs` samples, each printed as one JSON line that splits the wall
-  *    into the phases that can actually be attributed under AQE (Bench's
-  *    toRdd "plan" time silently contains most of the execution, because
-  *    toRdd materializes every intermediate query stage):
-  *      build    — the Q builder call (eager checkpoint/training jobs
-  *                 land here; `build_jobs` counts them)
-  *      analyze  — qe.analyzed
-  *      optimize — qe.optimizedPlan
-  *      plan     — qe.executedPlan (physical planning, pre-AQE)
-  *      toRdd    — AQE stage materialization + codegen of the final stage
-  *      count    — the terminal stage
-  *    plus the Spark jobs/stages/tasks launched inside the sample — at
+  *  - `runs` samples, taken by [[StageLog#sample]] exactly as Bench
+  *    takes them, each printed as one JSON line that splits the wall
+  *    into the phases that can actually be attributed under AQE (see
+  *    [[StageLog.Sample]]; Bench's `plan_sec` silently contains most of
+  *    the execution, because toRdd materializes every intermediate query
+  *    stage), plus the Spark jobs/stages/tasks launched inside the
+  *    sample and the jobs of its builder call (`build_jobs`) — at
   *    fixture SF each job is mostly dispatch floor, so jobs×floor is the
   *    first-order model of a key's fixture-scale cost;
   *  - the top stages by executor run time and the stages that spilled,
@@ -114,40 +109,15 @@ object Diag {
     out.result()
   }
 
-  /** One timed sample of `key` as a JSON line (phases in the header). */
-  private def sample(spark: SparkSession, log: StageLog, key: String,
-      fn: (SparkSession, String) => DataFrame, sfDir: String): String = {
-    Sessions.releaseKeyState(spark)
-    Sessions.drainListeners(spark)
-    val (j0, s0, n0) = log.counts
-    val b0 = log.buildJobs.get
-    val sc = spark.sparkContext
-    sc.addJobTag(StageLog.BuildTag)
-    val t0 = System.nanoTime()
-    val qe = try fn(spark, sfDir).queryExecution
-      finally sc.removeJobTag(StageLog.BuildTag)
-    val t1 = System.nanoTime()
-    qe.assertAnalyzed()
-    val t2 = System.nanoTime()
-    qe.optimizedPlan
-    val t3 = System.nanoTime()
-    qe.executedPlan
-    val t4 = System.nanoTime()
-    val rdd = qe.toRdd
-    val t5 = System.nanoTime()
-    rdd.count()
-    val t6 = System.nanoTime()
-    Sessions.drainListeners(spark)
-    val (j1, s1, n1) = log.counts
-    def s(a: Long, b: Long): String =
-      "%.3f".formatLocal(Locale.ROOT, (b - a) / 1e9)
-    s"""{"key":"$key","build":${s(t0, t1)},"analyze":${s(t1, t2)},""" +
-      s""""optimize":${s(t2, t3)},"plan":${s(t3, t4)},""" +
-      s""""toRdd":${s(t4, t5)},"count":${s(t5, t6)},""" +
-      s""""total":${s(t0, t6)},"jobs":${j1 - j0},""" +
-      s""""build_jobs":${log.buildJobs.get - b0},""" +
-      s""""stages":${s1 - s0},"tasks":${n1 - n0}}"""
-  }
+  /** One sample of `key` as a JSON line (phases in [[StageLog.Sample]]);
+    * a failed sample adds its message as `error`. */
+  private def line(key: String, s: StageLog.Sample): String = Verify.toJson(
+    ListMap("key" -> key) ++ Seq("build" -> s.build, "analyze" -> s.analyze,
+      "optimize" -> s.optimize, "plan" -> s.plan, "toRdd" -> s.toRdd,
+      "count" -> s.count, "total" -> s.total)
+      .map { case (k, v) => k -> Bench.millis(v / 1e9) } ++
+    Seq("jobs" -> s.jobs, "build_jobs" -> s.buildJobs, "stages" -> s.stages,
+      "tasks" -> s.tasks) ++ s.failure.map("error" -> _))
 
   /** Diagnose `keys` on `spark` (see the header); prints everything and
     * returns the JSON sample lines. Leaves the session running. */
@@ -171,9 +141,9 @@ object Diag {
         case None => print(report)
       }
       val lines = (1 to runs).map { _ =>
-        val line = sample(spark, log, k, fn, sfDir)
-        println(line)
-        line
+        val l = line(k, log.sample(spark, fn, sfDir))
+        println(l)
+        l
       }
       Sessions.drainListeners(spark)
       if (!log.spills.isEmpty) {
@@ -194,13 +164,9 @@ object Diag {
       "usage: graft.Diag <keys|all> [sfDir] [runs] [planDir]")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val runs = args.lift(2).fold(3)(_.toInt)
-    val all = SparkEntry.queries.keySet
-    val asked =
-      if (args(0) == "all") all.toSeq.sorted
-      else args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct
-    val keys = asked.filter(Bench.selectKeys(all, Some(asked.toSet)))
-    val spark = Sessions.create(sfDir,
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val keys = Bench.selectKeys(SparkEntry.queries.keySet,
+      Some(args(0)).filter(_ != "all"))
+    val spark = Sessions.create(sfDir, Bench.cpus)
     try run(spark, keys, sfDir, runs, args.lift(3))
     finally spark.stop()
   }

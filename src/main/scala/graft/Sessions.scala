@@ -193,8 +193,8 @@ object Sessions {
     *    full STW pause ×561 samples, and at fixture SF the litter never
     *    accumulates enough to matter (anchor timings stay untouched).
     *
-    * Runs OUTSIDE every timed region (Bench calls it before each
-    * sample's t0, Diag before each run; Verify between key writes).
+    * Runs OUTSIDE every timed region ([[StageLog#sample]] calls it
+    * before each sample's t0; Verify between key writes).
     */
   def releaseKeyState(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values

@@ -7,31 +7,31 @@ import scala.collection.immutable.{ListMap, TreeMap}
 object Verify {
   private val json = new ObjectMapper().registerModule(DefaultScalaModule)
 
-  /** Writes `value` (Scala maps, seqs, strings, booleans) to `path` as
-    * JSON; Jackson escapes every control character in SQL text. */
+  /** Writes `value` (Scala maps, seqs, strings, numbers, booleans) to
+    * `path` as JSON; Jackson escapes every control character in SQL text. */
   def writeJson(path: String, value: Any): Unit =
     json.writeValue(new java.io.File(path), value)
+
+  /** `value` as one line of JSON, written as [[writeJson]] writes it. */
+  def toJson(value: Any): String = json.writeValueAsString(value)
 
   def main(args: Array[String]): Unit = {
     // Optional 3rd arg: comma-separated key filter for fast local smokes
     // (`runMain graft.Verify <sf> <out> key1,key2`). The driver always
     // passes exactly two args → full dump; contract unchanged.
     val Array(sfDir, outDir) = args.take(2)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val only = args.lift(2)
     // A typo in the filter, or a filter that selects zero keys, fails
     // loudly: a dump of nothing exiting 0 would read downstream as a
     // (vacuously) clean run.
-    val selected = Bench.selectKeys(SparkEntry.queries.keySet, only)
-    val spark = Sessions.create(sfDir,
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val attempted = Bench.selectKeys(SparkEntry.queries.keySet, only).sorted
+    val spark = Sessions.create(sfDir, Bench.cpus)
     new java.io.File(outDir).mkdirs()
     // Key-set manifest (VERDICT r8 missing #2): r08's fixture drift made 19
     // keys throw at plan time; the per-key catch below kept the dump alive
     // but nothing downstream noticed the holes. Record registry/attempted/
     // failed so preflight.py can hard-fail when ANY registry key is absent
     // from the verified output instead of silently grading a subset.
-    val attempted = selected.toSeq.sorted
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     attempted.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -409,10 +409,18 @@ object Det {
   * retries; a racing session blocks on the bin lock until the writer
   * finishes. No session-bound object is cached (a cached DataFrame would
   * pin its SparkSession).
+  *
+  * Lifetime: every path handed out is deleted when the JVM exits, by one
+  * shutdown hook. A JVM killed with `kill -9` runs no hook and leaks its
+  * paths.
   */
 object Materialize {
   private val done =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private val handedOut =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  sys.addShutdownHook(handedOut.forEach(p =>
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))))
 
   /** md5 digest (12 hex) of the RAW dir string: the collision-proof part
     * of a dir-derived path or table name. */
@@ -424,8 +432,10 @@ object Materialize {
   def path(s: SparkSession, name: String, dir: String): String = {
     val safeDir = dir.replaceAll("[^A-Za-z0-9]", "_")
     val appId = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9-]", "_")
-    System.getProperty("java.io.tmpdir") +
+    val p = System.getProperty("java.io.tmpdir") +
       s"/graft_rt_${name}_${safeDir}_${digest(dir)}_$appId"
+    handedOut.add(p)
+    p
   }
 
   /** Runs `write` at [[path]] once per path and returns the path. */

@@ -307,14 +307,75 @@ class ScaleGuardSpec extends AnyFunSuite with TempDirs {
     // exit 0 with a near-empty artifact
     import graft.Bench.selectKeys
     val all = Set("a", "b", "text_ngram_jaccard")
-    assert(selectKeys(all, None) === all)
-    assert(selectKeys(all, Some(Set("a", "b"))) === Set("a", "b"))
+    assert(selectKeys(all, None) === Seq("a", "b", "text_ngram_jaccard"))
+    assert(selectKeys(all, Some("a,b")) === Seq("a", "b"))
+    // spaces around names, empty and repeated names: the list as written
+    assert(selectKeys(all, Some(" b, a,,b ")) === Seq("b", "a"))
     intercept[IllegalArgumentException] {
-      selectKeys(all, Some(Set("a", "text_ngram_jacard"))) // typo
+      selectKeys(all, Some("a,text_ngram_jacard")) // typo
     }
     intercept[IllegalArgumentException] {
-      selectKeys(all, Some(Set.empty))
+      selectKeys(all, Some(" , "))
     }
+  }
+
+  test("bench record and stall predicate over synthetic samples") {
+    import graft.Bench.{record, stalled}
+    def ns(sec: Double) = (sec * 1e9).round
+    def s(total: Double, count: Double = 0.1, spill: Long = 0,
+        write: Long = 100, failed: Boolean = false) =
+      StageLog.Sample(0, 0, 0, 0, ns(total - count), ns(count),
+        jobs = (total * 10).round, buildJobs = 1, stages = 2, tasks = 8,
+        shuffleWrite = write, shuffleRead = write + 1, spill = spill,
+        train = 0, failure = Option("boom").filter(_ => failed))
+    def close(a: Any, b: Double) =
+      assert(math.abs(a.asInstanceOf[Double] - b) < 1e-9, s"$a vs $b")
+
+    // median of the successful samples; bytes and counts are its own
+    val r = record(Seq(s(0.5, write = 5), s(0.3, write = 3),
+      s(0.9, spill = 7, write = 9)))
+    close(r("sec"), 0.5)
+    close(r("min_sec"), 0.3)
+    close(r("max_sec"), 0.9)
+    close(r("plan_sec"), 0.4)
+    close(r("exec_sec"), 0.1)
+    close(r("train_sec"), 0.0)
+    assert(r("failed_runs") === 0 && r("stall_retries") === 0)
+    assert(r("shuffle_write_bytes") === 5L && r("shuffle_read_bytes") === 6L)
+    assert(r("disk_spill_bytes") === 7L, "spill is the max, not the median's")
+    assert(Seq("jobs", "stages", "tasks", "build_jobs").map(r) ===
+      Seq(5L, 2L, 8L, 1L))
+    assert(r.keys.toSeq === Seq("sec", "min_sec", "max_sec", "failed_runs",
+      "stall_retries", "plan_sec", "exec_sec", "train_sec",
+      "shuffle_write_bytes", "shuffle_read_bytes", "disk_spill_bytes",
+      "jobs", "stages", "tasks", "build_jobs"))
+
+    // one failed sample: the sentinel, and min/max/spill only over the rest
+    val f = record(Seq(s(0.2), s(9.0, spill = 99, failed = true), s(0.4)))
+    Seq("sec", "plan_sec", "exec_sec", "train_sec").foreach(k =>
+      assert(f(k) === -1.0, k))
+    assert(f("failed_runs") === 1)
+    close(f("min_sec"), 0.2)
+    close(f("max_sec"), 0.4)
+    assert(f("disk_spill_bytes") === 0L)
+    // every sample failed: nothing to take a median of
+    val all = record(Seq.fill(3)(s(1.0, failed = true)))
+    assert(Seq("sec", "min_sec", "max_sec").map(all) === Seq(-1.0, -1.0, -1.0))
+    assert(all("failed_runs") === 3 && all("shuffle_write_bytes") === -1L &&
+      all("disk_spill_bytes") === -1L && all("jobs") === -1L)
+
+    // retries are the samples past Bench.Runs
+    assert(record(Seq(0.2, 4.0, 4.1, 0.3, 0.2).map(x => s(x)))(
+      "stall_retries") === 2)
+
+    // a 3x-median gap of more than 1 s is a stall
+    assert(stalled(Seq(s(0.4), s(4.0), s(4.2))))
+    // sub-second jitter is not, however large the ratio
+    assert(!stalled(Seq(s(0.15), s(0.6), s(0.7))))
+    // a large gap under 3x the min is not
+    assert(!stalled(Seq(s(2.0), s(5.0), s(5.5))))
+    // a key with a failed sample is never retried
+    assert(!stalled(Seq(s(0.4), s(4.0), s(4.2, failed = true))))
   }
 
   test("data-driven initialPartitionNum: 8*cpus floor at every fixture " +
@@ -358,44 +419,80 @@ class ScaleGuardSpec extends AnyFunSuite with TempDirs {
     // (filtered, never the tracked anchor) and _meta records the confs
     // the session really used.
     val cwd = tempDir("graft_benchenv")
-    val mx = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments
-    import scala.jdk.CollectionConverters._
-    val opens = mx.asScala.filter(a =>
-      a.startsWith("--add-opens") || a.startsWith("--add-exports") ||
-        a.startsWith("--enable-native-access"))
-    val cmd = (Seq("java", "-Xmx4g") ++ opens ++ Seq(
-      "-cp", System.getProperty("java.class.path"), "graft.Bench")).asJava
-    val pb = new ProcessBuilder(cmd)
-    pb.directory(cwd.toFile)
-    pb.redirectErrorStream(true)
-    val env = pb.environment()
-    env.put("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    env.put("SPARK_GRAFT_CPUS", "4")
-    env.put("GRAFT_BENCH_ONLY", "scan_parquet_count")
-    env.remove("GRAFT_BENCH_DETAIL") // routing itself is under test
-    val p = pb.start()
-    val outLog = new String(p.getInputStream.readAllBytes, "UTF-8")
-    assert(p.waitFor(600, java.util.concurrent.TimeUnit.SECONDS),
-      "subprocess bench did not finish in 10 min")
-    assert(p.exitValue == 0, s"bench exited ${p.exitValue}:\n" +
-      outLog.linesIterator.toSeq.takeRight(30).mkString("\n"))
+    val out = runMain("graft.Bench", cwd, Map(
+      "SPARK_GRAFT_SF_DIR" -> sf,
+      "SPARK_GRAFT_CPUS" -> "4",
+      "GRAFT_BENCH_ONLY" -> "scan_parquet_count"))
     val detail = cwd.resolve("bench_detail_partial.json")
     assert(java.nio.file.Files.exists(detail),
       s"filtered run must write bench_detail_partial.json; cwd has: " +
         cwd.toFile.list().mkString(", "))
-    val text = java.nio.file.Files.readString(detail)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val tree = json.readTree(detail.toFile)
+    val meta = tree.get("_meta")
     // _meta must record the conf the SESSION used (read back, not echoed)
-    assert(text.contains("\"advisory_mb\": 16"),
-      s"_meta must stamp advisory_mb=16; got: ${text.take(400)}")
+    assert(meta.get("advisory_mb").asInt === 16, s"_meta: $meta")
     // sf0.001 footprint is far below 8*cpus*advisory -> the derived
     // initialPartitionNum sits at the 8*cpus floor = 32 for cpus=4
-    assert(text.contains("\"initial_partitions\": 32"),
-      s"_meta must stamp the derived floor 8*cpus=32; got: ${text.take(400)}")
-    assert(text.contains("\"scan_parquet_count\""),
-      "the ONLY-selected key must be benched")
-    assert(!text.contains("\"project_arithmetic\""),
-      "a key outside ONLY must not appear in the artifact")
+    assert(meta.get("initial_partitions").asInt === 32, s"_meta: $meta")
+    import scala.jdk.CollectionConverters._
+    assert(tree.fieldNames.asScala.toSeq === Seq("_meta", "scan_parquet_count"),
+      "only the ONLY-selected key must be benched")
+    val rec = tree.get("scan_parquet_count")
+    Seq("jobs", "stages", "tasks", "build_jobs").foreach(k =>
+      assert(rec.has(k) && rec.get(k).isIntegralNumber, s"$k in $rec"))
+    assert(rec.get("failed_runs").asInt === 0, s"$rec")
+    // the line file holds exactly the line Bench prints to stdout
+    val line = java.nio.file.Files.readString(
+      cwd.resolve("bench_line_partial.json")).stripLineEnd
+    assert(line === out.linesIterator.filter(_.nonEmpty).toSeq.last)
+    assert(json.readTree(line).get("queries").get("scan_parquet_count")
+      .asDouble === rec.get("sec").asDouble)
+  }
+
+  test("build-time dirs are deleted when the JVM exits") {
+    // Materialize's shutdown hook: a Verify run over keys that write
+    // build-time datasets (partitioned docs, cluster labels, the csv
+    // round-trip) leaves no graft_rt_ dir in its java.io.tmpdir.
+    val tmpDir = tempDir("graft_tmpdir")
+    val outDir = tempDir("graft_rt_verify")
+    runMain("graft.Verify", outDir, Map("SPARK_GRAFT_CPUS" -> "4"),
+      args = Seq(sf, outDir.toString,
+        "sink_partitioned_pruning,source_csv_roundtrip,text_dedup_cluster"),
+      jvmArgs = Seq(s"-Djava.io.tmpdir=$tmpDir"))
+    val keys = java.nio.file.Files.readString(outDir.resolve("keys.json"))
+    assert(keys.contains("\"failed\":[]"), keys)
+    val left = tmpDir.toFile.list().filter(_.startsWith("graft_rt_"))
+    assert(left.isEmpty, s"left behind: ${left.mkString(", ")}")
+  }
+
+  /** Runs `main` in a fresh JVM on this classpath, in `cwd` with `env`
+    * added (GRAFT_BENCH_DETAIL removed: routing is under test), and
+    * returns its stdout; fails the test on a non-zero exit. */
+  private def runMain(main: String, cwd: java.nio.file.Path,
+      env: Map[String, String], args: Seq[String] = Nil,
+      jvmArgs: Seq[String] = Nil): String = {
+    import scala.jdk.CollectionConverters._
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filter(a =>
+        a.startsWith("--add-opens") || a.startsWith("--add-exports") ||
+          a.startsWith("--enable-native-access"))
+    val cmd = Seq("java", "-Xmx4g") ++ opens ++ jvmArgs ++ Seq(
+      "-cp", System.getProperty("java.class.path"), main) ++ args
+    val pb = new ProcessBuilder(cmd.asJava)
+    pb.directory(cwd.toFile)
+    val err = cwd.resolve("stderr.log").toFile
+    pb.redirectError(err)
+    pb.environment().putAll(env.asJava)
+    pb.environment().remove("GRAFT_BENCH_DETAIL")
+    val p = pb.start()
+    val out = new String(p.getInputStream.readAllBytes, "UTF-8")
+    assert(p.waitFor(600, java.util.concurrent.TimeUnit.SECONDS),
+      s"subprocess $main did not finish in 10 min")
+    assert(p.exitValue == 0, s"$main exited ${p.exitValue}:\n" +
+      java.nio.file.Files.readAllLines(err.toPath).asScala.takeRight(30)
+        .mkString("\n"))
+    out
   }
 
   test("per-shingle rank cap bounds mid-df jaccard candidates; planted " +
